@@ -16,7 +16,7 @@ from contextlib import contextmanager, nullcontext
 
 import corpus as gen
 from harness import Run
-from report import API_OPS, median, percentile
+from report import API_OPS, geomean, median, percentile
 from tracing import force_plan, plan_counts
 
 PAGE = 20
@@ -204,9 +204,11 @@ def measure(run: Run, corpus: gen.Corpus, root: str) -> None:
     if any(not v for v in lat.values()):
         raise RuntimeError("an API request type got no samples")
     run.detail["api_requests_per_s"] = len(results) / wall
+    run.metrics["latency_ms"] = geomean([median(v) for v in lat.values()]) * 1e3
     pooled = [x for v in lat.values() for x in v]
-    run.metrics["latency_p50_ms"] = median(pooled) * 1e3
-    # p90 with its sample count: too few samples beyond it for a gate
+    # pooled p50 and p90 with their sample count: too few samples beyond
+    # the p90 for a gate, and a pooled median jumps between request types
+    run.detail["latency_p50_ms"] = median(pooled) * 1e3
     run.detail["latency_p90_ms"] = percentile(pooled, 90) * 1e3
     run.detail["latency_n"] = len(pooled)
     run.detail["per_op"] = {

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import signal
+import subprocess
 import sys
 import tempfile
 import time
@@ -134,11 +136,94 @@ def start_session(run: Run):
 
 
 def stop_session(run: Run) -> None:
-    if run.spark is not None:
-        for q in run.spark.streams.active:
-            q.stop()
-        run.spark.stop()
+    """Stop the queries and the session, then the JVM behind it."""
+    try:
+        if run.spark is not None:
+            try:
+                for q in run.spark.streams.active:
+                    q.stop()
+            finally:
+                run.spark.stop()
+    finally:
         run.spark = None
+        stop_jvm()
+
+
+def _descendants(pid: int) -> dict[int, str]:
+    """pid -> start time of every live process below ``pid``."""
+    parent, start = {}, {}
+    for p in os.listdir("/proc"):
+        if not p.isdigit():
+            continue
+        try:
+            with open(f"/proc/{p}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        parent[int(p)] = int(fields[1])
+        start[int(p)] = fields[19]
+    out, todo = {}, [pid]
+    while todo:
+        ppid = todo.pop()
+        for p, pp in parent.items():
+            if pp == ppid and p not in out:
+                out[p] = start[p]
+                todo.append(p)
+    return out
+
+
+def _alive(pid: int, start: str) -> bool:
+    """Whether ``pid`` is still the process that started at ``start``
+    and has not exited (ours are reaped here; a zombie of another
+    parent runs nothing and does not count)."""
+    try:
+        os.waitpid(pid, os.WNOHANG)
+    except OSError:  # not our child
+        pass
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return False
+    return fields[19] == start and fields[0] not in ("Z", "X")
+
+
+def _wait_gone(procs: dict[int, str], timeout_s: float) -> dict[int, str]:
+    """Wait up to ``timeout_s`` for ``procs`` to end; the ones left."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        procs = {p: s for p, s in procs.items() if _alive(p, s)}
+        if not procs or time.monotonic() > deadline:
+            return procs
+        time.sleep(0.05)
+
+
+def stop_jvm(timeout_s: float = 30.0) -> None:
+    """End the JVM that pyspark launched and every process below this
+    one (Python workers included), and wait until each has ended. Left
+    alone, the JVM outlives this process: it only exits once it sees
+    its stdin close, and then runs its shutdown hooks."""
+    from pyspark import SparkContext
+
+    kids = _descendants(os.getpid())
+    proc = getattr(SparkContext._gateway, "proc", None)
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    if proc is not None:
+        try:
+            proc.stdin.close()  # the JVM exits at end of input
+            proc.wait(timeout_s)
+        except (OSError, subprocess.TimeoutExpired):
+            proc.kill()
+            proc.wait()
+    left = _wait_gone(kids, timeout_s)
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for p in left:
+            try:
+                os.kill(p, sig)
+            except OSError:
+                pass
+        left = _wait_gone(left, 10)
 
 
 def fresh_dir(path: str) -> str:

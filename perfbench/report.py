@@ -20,7 +20,7 @@ END_TO_END = {
     "setup_s": "s",
     "ok_op_share": "ratio",
     "throughput_per_s": "1/s",
-    "latency_p50_ms": "ms",
+    "latency_ms": "ms",
 }
 
 API_OPS = ("list", "detail", "chunk_range", "chart_blob")
@@ -95,6 +95,14 @@ def median(xs: list[float]) -> float:
     if not n:
         raise ValueError("median of no samples")
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+
+
+def geomean(xs: list[float]) -> float:
+    """Geometric mean: each request or query type weighs the same,
+    whatever its typical latency."""
+    if not xs:
+        raise ValueError("geometric mean of no samples")
+    return math.exp(sum(math.log(x) for x in xs) / len(xs))
 
 
 def percentile(xs: list[float], q: float) -> float:

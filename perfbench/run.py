@@ -25,11 +25,13 @@ End-to-end metrics, per workload (``WHY`` says why each exists):
 - ``throughput_per_s``: paper_path, documents per second of one batch
   ingest (median over ingests); registry_mix, heavy-set queries per
   second.
-- ``latency_p50_ms``: paper_path, all API requests (the four types in
-  equal numbers, so the draw cannot shift the mix); registry_mix, all
-  light-set query executions. The p90 and the sample count go to the
-  report file: a run holds tens of samples, too few for a p90 with ten
-  samples beyond it.
+- ``latency_ms``: the geometric mean, over request or query types, of
+  each type's median latency (so every type weighs the same and the
+  figure does not jump between types as a pooled median does):
+  paper_path, the four API request types; registry_mix, the light-set
+  queries. Pooled p50, p90 and the sample count go to the report file:
+  a run holds tens of samples, too few for a p90 with ten samples
+  beyond it.
 - ``ok_op_share``: operations and output checks that succeeded, over
   those attempted. Mutations lost across a reopen count as failed; the
   ``correct`` flag covers wrong answers only.
@@ -44,6 +46,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -60,8 +63,9 @@ SETUP_REPS = 3
 
 WHY = {
     "paper_path": "the paper's path in one session: batch ingest into the "
-                  "doc store, one-client API reads over it, uploads through "
-                  "the running watcher; per-request and per-file fixed cost",
+                  "doc store, then one-client API reads over it (the traced "
+                  "run adds uploads through the watcher); per-request and "
+                  "per-file fixed cost",
     "registry_mix": "light doc-store/parse and heavy text-analytics "
                     "registry queries in seeded order; construction, "
                     "planning and exchanges dominate",
@@ -143,8 +147,10 @@ def main(argv=None) -> int:
         measured = time.perf_counter() - t_measure
         shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     finally:
-        harness.stop_session(run)
-        shutil.rmtree(run.work_dir, ignore_errors=True)
+        try:
+            harness.stop_session(run)
+        finally:
+            shutil.rmtree(run.work_dir, ignore_errors=True)
     run.metrics["ok_op_share"] = (run.attempted - run.failed) / run.attempted
 
     meta = {
@@ -190,6 +196,8 @@ def main(argv=None) -> int:
 
 
 if __name__ == "__main__":
+    # a terminated run still stops its session and JVM (main's finally)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     try:
         sys.exit(main())
     except Exception:  # report and exit non-zero without a result line

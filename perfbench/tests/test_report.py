@@ -87,3 +87,28 @@ def test_corpus_is_seeded_and_expectations_follow_the_chunk_contract():
     assert min(a.n_chunks.values()) == 1
     assert all(v > 0 for v in a.entities.values())
     assert stats["charts_per_doc"] > 0
+
+
+def test_stop_jvm_ends_and_waits_for_every_child():
+    import subprocess
+    import time
+
+    import harness
+    import pytest
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None:
+        pytest.skip("stop_jvm would end the Spark session other tests share")
+    child = subprocess.Popen([sys.executable, "-c",
+                              "import time; time.sleep(120)"])
+    # a process two levels down, as Spark's Python workers are
+    shell = subprocess.Popen(["bash", "-c", "sleep 120 & wait"])
+    deadline = time.monotonic() + 10
+    while not harness._descendants(shell.pid):
+        assert time.monotonic() < deadline
+        time.sleep(0.01)
+    below = harness._descendants(os.getpid())
+    assert len(below) >= 3
+    harness.stop_jvm(timeout_s=0.2)
+    assert child.poll() is not None and shell.poll() is not None
+    assert not any(harness._alive(p, s) for p, s in below.items())

@@ -21,7 +21,7 @@ from contextlib import contextmanager, nullcontext
 
 import corpus as gen
 from harness import Run, fresh_dir
-from report import median, percentile
+from report import geomean, median, percentile
 from tracing import force_plan, plan_counts
 
 N_DOCS = 600
@@ -186,9 +186,11 @@ def measure(run: Run, sf_dir: str) -> None:
     if not all(light) or not all(times[n] for n in HEAVY):
         raise RuntimeError("a registry query never completed")
     run.metrics["throughput_per_s"] = len(HEAVY) / median(heavy_s)
+    run.metrics["latency_ms"] = geomean([median(v) for v in light]) * 1e3
     pooled = [x for v in light for x in v]
-    run.metrics["latency_p50_ms"] = median(pooled) * 1e3
-    # p90 with its sample count: too few samples beyond it for a gate
+    # pooled p50 and p90 with their sample count: too few samples beyond
+    # the p90 for a gate, and a pooled median jumps between query types
+    run.detail["latency_p50_ms"] = median(pooled) * 1e3
     run.detail["latency_p90_ms"] = percentile(pooled, 90) * 1e3
     run.detail["latency_n"] = len(pooled)
     run.detail.update({
