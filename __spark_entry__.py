@@ -30,99 +30,17 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 # query accumulates a hash-checked CORRECTNESS entry across rounds.
 # The full registry is locally hash-validated against DuckDB every
 # round via scripts/validate.py (results committed as VALIDATION.json).
-_DEFER: list[str] = []
-
-# Names whose oracle was ADDED or materially changed after a prior
-# rows-only / hash-pass record, mapped to the round the new oracle
-# landed: treat as fresh so the driver's 50-entry window re-verifies
-# them under the stronger oracle. The recheck EXPIRES once a
-# CORRECTNESS round >= the mapped round records a hash pass — without
-# the expiry these names would consume fresh-verification slots in
-# every future round forever.
-_RECHECK: dict[str, int] = {
-    "mm_image_pipeline": 6,
-    "mm_audio_features": 6,
-    "mm_video_frames": 6,
-    "q_kmeans_clusters": 6,
-    # round 7: rows-only -> full closed-form value oracle
-    "q_pca_projection": 7,
-    # round 8: rounded-double-comparison protocol sweep — medians of
-    # grid-valued columns re-rounded at the same grid sat exactly on
-    # the HALF_UP boundary where the engines diverge; both queries
-    # now use the integer micro/nano protocol (schema changed)
-    "q_embedding_norms": 8,
-    "q_dim_variance_prune": 8,
-    # round 12: front every cap-affected oracle (the engaged-caps
-    # change inlined _caps_sql into 26 oracles in round 11; the
-    # driver's r11 window only re-checked part of the family) plus
-    # the round-12 standing verified-candidate consumers — so the
-    # r12 window re-verifies all of them under the shared artifact
-    **{name: 12 for name in (
-        "q_degree_distribution", "q_graph_assortativity",
-        "q_powerlaw_alpha", "q_graph_modularity",
-        "q_dup_source_matrix", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "dedup_components",
-        "dedup_components_star", "dedup_simhash",
-        "q_dedup_method_agreement", "q_minhash_accuracy",
-        "q_edit_distance_pairs", "q_lsh_bucket_stats",
-        "q_incremental_dedup", "q_containment_pairs",
-        "q_neardup_materialize", "q_dedup_threshold_curve",
-        "q_dedup_cluster_sizes", "q_lsh_band_planner",
-        "q_cluster_density", "q_dup_rate_by_length",
-        "q_cluster_purity", "q_dedup_recall_capture",
-        "q_lsh_cap_planner", "q_manifest_bloom_planner",
-        "q_incremental_components",
-        # round 12: _NDOPT_FPB is now planner-derived (4 -> 1), which
-        # changes the optimize-cadence simulation's results
-        "q_index_optimize_planner",
-    )},
-    # round 14: front the round-13 OPTIMIZATION-touched families for
-    # driver re-verification (r13 verdict item 2) — the r13 window had
-    # rotated away from them, so the pointer-halving connected-
-    # components rewrite, the checkpoint restructures, and the
-    # spread_scan sites shipped with builder-side validation only.
-    # Results are unchanged by construction; this makes the driver
-    # hash-confirm that under the optimized plans.
-    **{name: 14 for name in (
-        "dedup_components", "dedup_components_star",
-        "q_incremental_components", "q_component_lookup",
-        "q_cluster_density", "q_cluster_purity",
-        "q_dedup_cluster_sizes", "q_degree_distribution",
-        "q_graph_assortativity", "q_graph_modularity",
-        "q_powerlaw_alpha", "q_neardup_materialize",
-        "q_sparse_sim_topk", "q_psi_drift", "q_bh_fdr",
-        "q_dedup_recall_capture", "q_pq_codebook_audit",
-        "q_winsorized_stats", "q_span_dedup", "q_span_longest_match",
-        "q_rake_keywords", "q_kneser_ney_bigram",
-        "q_setsim_prefix_join", "dedup_embedding", "q_semdedup",
-        "q_embedding_quantize", "q_shingle_novelty",
-        "q_naive_bayes_lang", "q_nb_calibration",
-        "q_kmeans_clusters", "q_basket_lift",
-        # round-14 optimization targets (multi-consumer
-        # materialization sweep + misc), fronted for the same reason
-        "q_markov_order_test", "q_hurst_exponent", "q_ess_dsir",
-        "q_source_surprisal_drift", "q_capture_recapture",
-        "q_linear_attribution", "q_binary_segmentation",
-        "q_tier_migration", "q_reciprocal_rank_fusion",
-        "q_incremental_dedup",
-    )},
-}
 
 
 def _checked_before() -> set[str]:
     """Names with a PASSING driver-correctness entry in any prior
     round: hash-verified, or rows-only with a recorded row count.
     Entries that errored or hash-mismatched rotate back to the front
-    so the next driver check re-verifies the fix. _RECHECK names count
-    as checked only once a round >= _RECHECK_SINCE recorded their pass
-    (i.e. a pass under the upgraded oracle)."""
+    so the next correctness check re-verifies the fix."""
     import glob
-    import re
 
-    last_pass: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
+    passed: set[str] = set()
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
         try:
             with open(path) as f:
                 data = json.load(f)
@@ -137,12 +55,8 @@ def _checked_before() -> set[str]:
                 )
             )
             if ok:
-                last_pass[name] = max(last_pass.get(name, 0), rnd)
-    return {
-        name
-        for name, rnd in last_pass.items()
-        if rnd >= _RECHECK.get(name, 0)
-    }
+                passed.add(name)
+    return passed
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -152,11 +66,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     checked = _checked_before()
-    defer = set(_DEFER)
-    fresh = [n for n in QUERIES if n not in checked and n not in defer]
-    deferred = [n for n in QUERIES if n in defer and n not in checked]
+    fresh = [n for n in QUERIES if n not in checked]
     prior = [n for n in QUERIES if n in checked]
-    return {n: QUERIES[n] for n in fresh + deferred + prior}
+    return {n: QUERIES[n] for n in fresh + prior}
 
 
 def oracle_sql() -> dict[str, str]:

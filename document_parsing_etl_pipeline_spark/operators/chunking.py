@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import parse
+
 DEFAULT_CHUNK_SIZE = 120
 DEFAULT_OVERLAP = 0
 DEFAULT_MIN_CHUNK = 20
@@ -48,9 +50,7 @@ def chunk_documents(
         f"substring({text_col}, chunk_index * {step} + 1, {chunk_size})"
     )
     # token = \S+ run (== Python str.split(); robust to tab/newline edges)
-    token_count = F.size(
-        F.regexp_extract_all(F.col("text_content"), F.lit(r"\S+"), 0)
-    )
+    token_count = F.size(parse.raw_tokens("text_content"))
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -80,7 +80,7 @@ def chunk_documents_by_tokens(
     one slice+join per chunk — JVM-side, shuffle-free.
     """
     t = tokens_per_chunk
-    words = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)
+    words = parse.raw_tokens(text_col)
     n_chunks = F.greatest(
         F.ceil(F.size(words) / F.lit(t)), F.lit(1)
     ).cast("int")

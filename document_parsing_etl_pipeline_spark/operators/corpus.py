@@ -15,28 +15,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import parse
 from .similarity import cosine_sim
 
 
 def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, term, tf) — term counts per document (all tokens,
     not the distinct set)."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("term"),
-    )
-    # Vacuously-true null guard (doc_id is the corpus key, term comes
-    # from regexp_extract_all — neither is ever null): it pins ONE
-    # filter set on every consumer branch of this aggregation, so the
-    # per-branch isnotnull predicates the optimizer infers from
-    # downstream joins no longer make the branches' exchange subtrees
-    # unequal — identical subtrees share a single reused exchange and
-    # the tokenize runs once per query instead of once per consumer.
-    return toks.where(
-        F.col("doc_id").isNotNull() & F.col("term").isNotNull()
-    ).groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    return parse.doc_terms(docs, "doc_id", text_col=text_col)
 
 
 def tfidf_top_terms(
@@ -182,7 +168,7 @@ def contamination_check(
     side is broadcastable (eval corpora are tiny) and the big side
     never shuffles.
     """
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
+    words = parse.tokens(text_col)
     pos = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= shingle_n)
@@ -239,15 +225,12 @@ def dsir_logweights(
     micro-nats (unigram_logprob's rule — no float rounding boundary
     can flip the hash)."""
     toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("term"),
+        "doc_id", F.explode(parse.tokens(text_col)).alias("term")
     )
     # null guard: vacuously true (doc_id is the corpus key; bucket is
     # pmod(md5) of a never-null token) — unifies the inferred filters
     # on the model branch and the scoring-join branch so both reuse
-    # ONE tokenize+bucket-count exchange (see term_frequencies)
+    # ONE tokenize+bucket-count exchange (see parse.doc_terms)
     feat = toks.select(
         "doc_id",
         F.pmod(
@@ -343,23 +326,14 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and rounded to 6 decimals BEFORE the exact decimal per-doc sum, so
     engine libm ulp differences in log2 cannot reach the value hash.
     """
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("tok"),
-    )
     # aggregate to per-(doc, token) term frequencies BEFORE the vocab
     # join: the scored table shrinks from total occurrences to distinct
     # terms per doc, and the inevitable hot keys ("the" is a few
     # percent of all tokens) contribute one row per document instead
-    # of one per occurrence — AQE skew-split covers the rest
-    # null guard: vacuously true (see term_frequencies) — unifies the
-    # inferred per-branch filters so vocab/total/the scoring join all
-    # reuse ONE tokenize+aggregation exchange
-    tf = toks.where(
-        F.col("doc_id").isNotNull() & F.col("tok").isNotNull()
-    ).groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
+    # of one per occurrence — AQE skew-split covers the rest. Every
+    # consumer (vocab, total, the scoring join) reads this one
+    # relation, so they share one exchange (see parse.doc_terms).
+    tf = parse.doc_terms(docs, "doc_id", text_col=text_col, term="tok")
     vocab = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
     total = tf.agg(F.sum("tf").alias("n_total"))
     surp = vocab.crossJoin(F.broadcast(total)).select(
@@ -521,9 +495,7 @@ def sparse_sim_topk(
 
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\S+"), 0
-        ).alias("ws"),
+        parse.tokens(text_col).alias("ws"),
     )
     # explode an index sequence + array indexing (codegen) — not a
     # transform() HOF (interpreted, SURVEY §4); guard size < n or

@@ -21,21 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import parse
+
 
 def _norm_tokens(text: Column) -> Column:
-    r"""Distinct lowercase word tokens (set semantics for Jaccard).
-    token = \S+ run (== Python str.split(); whitespace-only text has
-    zero tokens, not [''])."""
-    return F.array_distinct(
-        F.regexp_extract_all(F.lower(text), F.lit(r"\S+"), 0)
-    )
-
-
-def normalized_text(text: Column) -> Column:
-    """== ``" ".join(text.lower().split())``."""
-    return F.array_join(
-        F.regexp_extract_all(F.lower(text), F.lit(r"\S+"), 0), " "
-    )
+    """Distinct lowercase tokens (set semantics for Jaccard)."""
+    return F.array_distinct(parse.tokens(text))
 
 
 # ---------------------------------------------------------------- exact
@@ -49,7 +40,8 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     return (
         docs.select(
-            "doc_id", F.md5(normalized_text(F.col(text_col))).alias("content_hash")
+            "doc_id",
+            F.md5(parse.normalized_text(F.col(text_col))).alias("content_hash"),
         )
         .groupBy("content_hash")
         .agg(
@@ -1040,7 +1032,7 @@ def span_dedup_profile(
     """
     toks = docs.select(
         "doc_id",
-        F.expr(f"regexp_extract_all({text_col}, '\\\\S+', 0)").alias("tk"),
+        parse.raw_tokens(text_col).alias("tk"),
     )
     base = toks.select(
         "doc_id",
@@ -1141,7 +1133,7 @@ def span_longest_match(
 
     toks = docs.select(
         "doc_id",
-        F.expr(f"regexp_extract_all({text_col}, '\\\\S+', 0)").alias("tk"),
+        parse.raw_tokens(text_col).alias("tk"),
     )
     base = toks.select(
         "doc_id",
@@ -1209,9 +1201,7 @@ def _shingles(
     index."""
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\S+"), 0
-        ).alias("ws"),
+        parse.tokens(text_col).alias("ws"),
     )
     parts = [F.expr(f"ws[i + {j}]") for j in range(shingle_n)]
     return (

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import parse
+
 # persons: Capitalized bigrams ("Daniel Syahputra").
 RE_PERSON = r"[A-Z][a-z]+ [A-Z][a-z]+"
 # dates: ISO dates or slashed dates.
@@ -92,9 +94,7 @@ def gazetteer_join_entities(
     """
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("term"),
+        F.explode(parse.tokens(text_col)).alias("term"),
     )
     return (
         toks.join(F.broadcast(gazetteer), "term")

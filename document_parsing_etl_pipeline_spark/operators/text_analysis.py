@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import parse
+
 # Tiny per-language stopword gazetteers for the n-gram/stopword-ratio
 # language heuristic (public-knowledge lists).
 STOPWORDS = {
@@ -63,7 +65,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     across engines.
     """
     c = F.col(text_col)
-    words = F.regexp_extract_all(c, F.lit(r"\S+"), 0)
+    words = parse.raw_tokens(c)
     word_count = F.size(words)
     uniq = F.size(F.array_distinct(words))
     stop_hits = _stopword_hits(F.lower(c), "en")
@@ -88,7 +90,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens per document."""
     c = F.col(text_col)
-    ws_tokens = F.size(F.regexp_extract_all(c, F.lit(r"\S+"), 0))
+    ws_tokens = F.size(parse.raw_tokens(c))
     return docs.select(
         "doc_id",
         ws_tokens.alias("ws_tokens"),
@@ -129,7 +131,7 @@ def top_bigrams(docs: DataFrame, text_col: str = "text",
                 top_k: int = 20) -> DataFrame:
     """Corpus-wide top-k bigrams (explode positions → codegen'd
     concat → count, map-side partial; ties broken by bigram)."""
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
+    words = parse.tokens(text_col)
     base = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= 2)
@@ -155,7 +157,7 @@ def top_ngrams(docs: DataFrame, text_col: str = "text", n: int = 3,
     """Corpus-wide top-k word n-grams (the language-model count table
     builder). Same shape as top_bigrams: position explode → one
     slice+concat per n-gram, codegen'd, map-side partial agg."""
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
+    words = parse.tokens(text_col)
     base = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= n)
@@ -183,13 +185,8 @@ def repetition_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Two aggregations, both with map-side combine; the per-doc shuffle
     key is doc_id (already the natural partitioning)."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("t"),
-    )
-    tf = toks.groupBy("doc_id", "t").agg(F.count("*").alias("c"))
+    tf = parse.doc_terms(docs, "doc_id", text_col=text_col, term="t",
+                         count="c")
     agg = tf.groupBy("doc_id").agg(
         F.max("c").alias("max_tf"), F.sum("c").alias("n_tokens")
     )
@@ -214,7 +211,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text", n: int = 4) -> DataFram
         "doc_id", F.trim(F.lower(F.col(text_col))).alias("lt")
     ).select(
         "doc_id", "lt",
-        F.regexp_extract_all("lt", F.lit(r"\S+"), 0).alias("words"),
+        parse.raw_tokens("lt").alias("words"),
     )
     # explode shingle positions, then build each shingle with ONE
     # slice+concat_ws — no higher-order functions anywhere, so md5 +
@@ -251,7 +248,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     hash-checked ones).
     """
     t = F.col(text_col)
-    n_words = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), 0))
+    n_words = F.size(parse.raw_tokens(t))
     nw = F.greatest(n_words, F.lit(1)).cast("double")
     # sum of token lengths == chars left after removing all whitespace
     word_chars = F.length(F.regexp_replace(t, r"\s", ""))

@@ -3425,8 +3425,7 @@ def q_triangle_count(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        .alias("ws"),
+        parse.tokens("text").alias("ws"),
     )
     parts3 = [F.expr(f"ws[i + {j}]") for j in range(3)]
     # r14 (guide §2.3/§2.4): one term-keyed exchange for the whole
@@ -5100,10 +5099,7 @@ def q_term_entropy_by_source(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     tc = toks.groupBy("source", "tok").agg(
         F.count("*").cast("long").alias("c"))
@@ -5164,10 +5160,7 @@ def q_oov_rate(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     vocab = (
         toks.groupBy("tok").agg(F.count("*").alias("tf"))
@@ -5231,10 +5224,7 @@ def q_burstiness(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)
-        ).alias("tok"),
+        F.explode(parse.words("text")).alias("tok"),
     )
     n = docs.agg(F.count("*").cast("long").alias("n_docs"))
     percell = toks.groupBy("tok", "doc_id").agg(
@@ -5322,10 +5312,7 @@ def q_flesch_readability(spark, sf_dir):
     )
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)
-        ).alias("w"),
+        F.explode(parse.words("text")).alias("w"),
     )
     syl = words.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_words"),
@@ -5414,10 +5401,7 @@ def q_js_source_divergence(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     tc = toks.groupBy("source", "tok").agg(
         F.count("*").cast("long").alias("c"))
@@ -5792,10 +5776,7 @@ def q_simpson_diversity(spark, sf_dir):
     tc = (
         docs.select(
             "source",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")),
-                                     F.lit(r"\S+"), 0)
-            ).alias("tok"),
+            F.explode(parse.tokens("text")).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count("*").cast("long").alias("c"))
@@ -5859,10 +5840,7 @@ def q_heaps_law(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     firsts = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
     n = docs.agg(F.count("*").cast("long").alias("n_docs"))
@@ -5935,8 +5913,7 @@ def q_shingle_novelty(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")),
-                             F.lit(r"\S+"), 0).alias("ws"),
+        parse.tokens("text").alias("ws"),
     ).where(F.size("ws") >= 1)
     sh = toks.select(
         "doc_id",
@@ -6614,53 +6591,22 @@ def q_runs_test(spark, sf_dir):
     )
 
 
-@register("q_naive_bayes_lang", f"""
-WITH {_NB_CTES}
-SELECT d.lang AS true_lang, p.pred_lang, count(*)::BIGINT AS n_docs
-FROM documents d JOIN pred p USING (doc_id)
-GROUP BY 1, 2
-""")
-def q_naive_bayes_lang(spark, sf_dir):
-    """Multinomial Naive Bayes language identification TRAINED AND
-    SCORED entirely in the engine (Laplace-smoothed unigram
-    likelihoods + log priors, argmax per doc), reported as the
-    confusion matrix against the gold labels — the self-supervised
-    sanity loop for labeled corpora, and the proof case that a
-    trainable classifier is a closed-form SQL pipeline when the
-    model is counting (this is how large-scale lang-ID actually
-    runs: fastText-style linear models over count features). Parity:
-    every ln (likelihood, absent-token floor, prior) is rounded 6dp,
-    per-doc scores are exact decimal sums of (integer multiplicity x
-    6dp decimal) — absent tokens contribute via the (len - matched)
-    arithmetic identity, never as materialized zero cells — and
-    argmax ties break on lang. Scale shape: the model is the
-    vocab x |langs| relation (Zipf-broadcastable); the scoring join
-    is token-keyed against the doc-term relation, then one
-    |docs| x |langs| rollup; the confusion output is ≤ |langs|²
-    rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)
-        ).alias("tok"),
-    )
-    # r14 featurize-once (guide §2.4, r13 verdict item 5): aggregate
-    # the tokenize ONCE by (doc_id, lang, tok) — lang is functionally
-    # dependent on doc_id, so this is the old (doc_id, tok) relation
-    # with lang carried — and DERIVE dt, dlen, model and vocab from
-    # it. All four consumers now share one identical scan+partial-agg+
-    # Exchange subtree, which Spark plans as ReusedExchange: the
-    # regex tokenize and its shuffle run once instead of four inlined
-    # passes. Values are identities: m is unchanged, sum(m) per
-    # (lang, tok) == count(*) per (lang, tok) over toks, sum(m) per
-    # doc == token count per doc, distinct tok sets are equal.
-    dlt = toks.where(
-        F.col("doc_id").isNotNull() & F.col("lang").isNotNull()
-        & F.col("tok").isNotNull()
-    ).groupBy("doc_id", "lang", "tok").agg(
-        F.count("*").cast("long").alias("m"))
+def _nb_scores(docs):
+    """Featurize the corpus and score every (doc_id, lang) under the
+    in-engine multinomial Naive Bayes model — the chain both NB
+    queries share: (doc_id, lang, len, score). Column pruning drops len
+    where a caller does not read it.
+
+    Featurize once (r14): the tokenize is aggregated ONCE by (doc_id,
+    lang, tok) — lang is functionally dependent on doc_id, so this is
+    the (doc_id, tok) relation with lang carried — and dt, dlen, model
+    and vocab all DERIVE from it, so the four consumers share one
+    ReusedExchange (see parse.doc_terms) and the regex tokenize and
+    its shuffle run once. Values are identities: sum(m) per (lang,
+    tok) == count(*) per (lang, tok) over the tokens, sum(m) per doc
+    == token count per doc, distinct tok sets are equal."""
+    dlt = parse.doc_terms(docs, "doc_id", "lang", tokenize=parse.words,
+                          term="tok", count="m")
     dt = dlt.select("doc_id", "tok", "m")
     dlen = dlt.groupBy("doc_id").agg(F.sum("m").cast("long").alias("len"))
     model = dlt.groupBy("lang", "tok").agg(
@@ -6700,12 +6646,12 @@ def q_naive_bayes_lang(spark, sf_dir):
             F.sum("m").cast("long").alias("m_matched"),
         )
     )
-    scores = (
+    return (
         dlen.crossJoin(F.broadcast(params.select(
             "lang", "prior6", "ll0")))
         .join(matched, ["doc_id", "lang"], "left")
         .select(
-            "doc_id", "lang",
+            "doc_id", "lang", "len",
             F.expr(
                 "coalesce(s_match, CAST(0 AS DECIMAL(18,6)))"
                 " + (len - coalesce(m_matched, 0))"
@@ -6714,6 +6660,34 @@ def q_naive_bayes_lang(spark, sf_dir):
             ).alias("score"),
         )
     )
+
+
+@register("q_naive_bayes_lang", f"""
+WITH {_NB_CTES}
+SELECT d.lang AS true_lang, p.pred_lang, count(*)::BIGINT AS n_docs
+FROM documents d JOIN pred p USING (doc_id)
+GROUP BY 1, 2
+""")
+def q_naive_bayes_lang(spark, sf_dir):
+    """Multinomial Naive Bayes language identification TRAINED AND
+    SCORED entirely in the engine (Laplace-smoothed unigram
+    likelihoods + log priors, argmax per doc), reported as the
+    confusion matrix against the gold labels — the self-supervised
+    sanity loop for labeled corpora, and the proof case that a
+    trainable classifier is a closed-form SQL pipeline when the
+    model is counting (this is how large-scale lang-ID actually
+    runs: fastText-style linear models over count features). Parity:
+    every ln (likelihood, absent-token floor, prior) is rounded 6dp,
+    per-doc scores are exact decimal sums of (integer multiplicity x
+    6dp decimal) — absent tokens contribute via the (len - matched)
+    arithmetic identity, never as materialized zero cells — and
+    argmax ties break on lang. Scale shape: the model is the
+    vocab x |langs| relation (Zipf-broadcastable); the scoring join
+    is token-keyed against the doc-term relation, then one
+    |docs| x |langs| rollup; the confusion output is ≤ |langs|²
+    rows."""
+    docs = load_table(spark, sf_dir, "documents")
+    scores = _nb_scores(docs)
     pred = (
         scores.withColumn(
             "r",
@@ -6948,10 +6922,7 @@ def q_rake_keywords(spark, sf_dir):
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)
-        ).alias("pos0", "tok"),
+        F.posexplode(parse.words("text")).alias("pos0", "tok"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
     stop = (
         toks.groupBy("tok").agg(F.count("*").alias("c"))
@@ -7528,8 +7499,7 @@ def q_code_like_score(spark, sf_dir):
         .cast("long").alias("n_sym"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[0-9]"), 0))
         .cast("long").alias("n_dig"),
-        F.size(F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit(r"[a-z]+"), 0))
+        F.size(parse.words("text"))
         .cast("long").alias("n_words"),
     )
     return feats.select(
@@ -7585,15 +7555,13 @@ def q_dedup_token_savings(spark, sf_dir):
         F.md5(
             F.coalesce(
                 F.array_join(
-                    F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(r"\S+"), 0),
+                    parse.tokens("text"),
                     " ",
                 ),
                 F.lit(""),
             )
         ).alias("h"),
-        F.size(F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit(r"\S+"), 0))
+        F.size(parse.tokens("text"))
         .cast("long").alias("n_toks"),
     )
     canon = toks.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
@@ -7673,10 +7641,7 @@ def q_kneser_ney_bigram(spark, sf_dir):
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)
-        ).alias("pos0", "tok"),
+        F.posexplode(parse.words("text")).alias("pos0", "tok"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
     a = toks.select("doc_id", "pos", F.col("tok").alias("w1"))
     b = toks.select(
@@ -7686,7 +7651,7 @@ def q_kneser_ney_bigram(spark, sf_dir):
     # never null) pins one filter set on all four consumer branches
     # (uni, cont, btypes, scored), so their copies of this aggregation
     # share ONE reused exchange instead of four inlined tokenize +
-    # positional-self-join subtrees (same recipe as term_frequencies).
+    # positional-self-join subtrees (same recipe as parse.doc_terms).
     bg = (
         a.join(b, ["doc_id", "pos"])
         .where(F.col("w1").isNotNull() & F.col("w2").isNotNull())
@@ -11697,70 +11662,7 @@ def q_nb_calibration(spark, sf_dir):
     |docs| x |langs| score relation is doc-keyed aggregation; output
     <= 10 rows."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"[a-z]+"), 0)).alias("tok"),
-    )
-    # r14 featurize-once: same shared-exchange shape as
-    # q_naive_bayes_lang (see the comment there) — one (doc_id, lang,
-    # tok) aggregation feeds dt, dlen, model and vocab via
-    # ReusedExchange; every derived value is an exact identity.
-    dlt = toks.where(
-        F.col("doc_id").isNotNull() & F.col("lang").isNotNull()
-        & F.col("tok").isNotNull()
-    ).groupBy("doc_id", "lang", "tok").agg(
-        F.count("*").cast("long").alias("m"))
-    dt = dlt.select("doc_id", "tok", "m")
-    dlen = dlt.groupBy("doc_id").agg(F.sum("m").cast("long").alias("len"))
-    model = dlt.groupBy("lang", "tok").agg(
-        F.sum("m").cast("long").alias("c"))
-    lt = model.groupBy("lang").agg(F.sum("c").cast("long").alias("t_l"))
-    # m >= 1 is vacuously true — anti-pruning guard, see
-    # q_naive_bayes_lang
-    vocab = dlt.where(F.col("m") >= 1).agg(
-        F.countDistinct("tok").cast("long").alias("v"))
-    priors = docs.groupBy("lang").agg(
-        F.count("*").cast("long").alias("nd"))
-    nn = docs.agg(F.count("*").cast("long").alias("n_docs"))
-    params = (
-        lt.join(priors, "lang")
-        .crossJoin(F.broadcast(nn)).crossJoin(F.broadcast(vocab))
-        .select(
-            "lang", "t_l", "v",
-            F.expr("round(ln(CAST(nd AS DOUBLE) / n_docs), 6)")
-            .alias("prior6"),
-            F.expr("round(ln(CAST(1.0 AS DOUBLE) / (t_l + v)), 6)").alias("ll0"),
-        )
-    )
-    matched = (
-        dt.join(F.broadcast(model), "tok")
-        # ^ vocab x langs: Zipf-bounded; broadcasting the model
-        # keeps the corpus-sized doc-term side unshuffled here
-
-        .join(F.broadcast(params), "lang")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.expr("sum(m * CAST(round(ln((c + CAST(1.0 AS DOUBLE)) / (t_l + v)), 6)"
-                   " AS DECIMAL(18,6)))").alias("s_match"),
-            F.sum("m").cast("long").alias("m_matched"),
-        )
-    )
-    scores = (
-        dlen.crossJoin(F.broadcast(params.select(
-            "lang", "prior6", "ll0")))
-        .join(matched, ["doc_id", "lang"], "left")
-        .select(
-            "doc_id", "lang", "len",
-            F.expr(
-                "coalesce(s_match, CAST(0 AS DECIMAL(18,6)))"
-                " + (len - coalesce(m_matched, 0))"
-                " * CAST(ll0 AS DECIMAL(18,6))"
-                " + CAST(prior6 AS DECIMAL(18,6))"
-            ).alias("score"),
-        )
-    )
+    scores = _nb_scores(docs)
     wdoc = Window.partitionBy("doc_id")
     ws = scores.select(
         "doc_id", "lang", "score", "len",

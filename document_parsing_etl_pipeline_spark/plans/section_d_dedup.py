@@ -78,7 +78,7 @@ def q_dedup_materialize(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id", "n_chars",
-        F.md5(dedup.normalized_text(F.col("text"))).alias("content_hash"),
+        F.md5(parse.normalized_text(F.col("text"))).alias("content_hash"),
     )
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (

@@ -131,7 +131,7 @@ def q_source_dup_rates(spark, sf_dir):
     hashed = docs.select(
         "doc_id", "source",
         F.md5(
-            F.coalesce(dedup.normalized_text(F.col("text")), F.lit(""))
+            F.coalesce(parse.normalized_text(F.col("text")), F.lit(""))
         ).alias("content_hash"),
     )
     w = Window.partitionBy("content_hash")
@@ -263,7 +263,7 @@ def q_quality_quantile_norm(spark, sf_dir):
     doc_id. Language-partitioned windows — group-sized, never a
     corpus-wide sort."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = parse.raw_tokens("text")
     scored = docs.select(
         "doc_id", "lang",
         (
@@ -588,7 +588,7 @@ def q_docs_with_embeddings(spark, sf_dir):
         F.col("n_chars") >= 250
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    wc = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0))
+    wc = F.size(parse.raw_tokens("text"))
     return (
         docs.join(emb, docs.doc_id == emb.vec_id)
         .select(
@@ -1708,9 +1708,7 @@ def q_bpe_merge_step(spark, sf_dir):
     deterministic ties by symbol pair."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit(r"\S+"), 0)
-        ).alias("word")
+        F.explode(parse.tokens("text")).alias("word")
     )
     vocab = toks.groupBy("word").agg(F.count("*").alias("cnt"))
     # single-char words generate no pairs; the length filter also keeps
@@ -1846,9 +1844,7 @@ def q_pagerank_terms(spark, sf_dir):
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.explode(
-                F.expr("regexp_extract_all(text, '\\\\S+', 0)")
-            ).alias("ent"),
+            F.explode(parse.raw_tokens("text")).alias("ent"),
         )
         .distinct()
     )
@@ -1901,8 +1897,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
-        F.expr("size(regexp_extract_all(text, '\\\\S+', 0))")
-        .cast("long").alias("words"),
+        F.size(parse.raw_tokens("text")).cast("long").alias("words"),
         F.size(
             F.regexp_extract_all("text", F.lit(ta.RE_BPE_TOKEN), F.lit(0))
         ).cast("long").alias("toks"),
@@ -1965,9 +1960,7 @@ def q_term_assoc(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all("text", F.lit(r"\S+"), F.lit(0))
-        ).alias("t"),
+        F.explode(parse.raw_tokens("text")).alias("t"),
     ).distinct()
     n_t = docs.agg(F.count("*").cast("long").alias("n"))
     df_t = toks.groupBy("t").agg(F.count("*").cast("long").alias("dfreq"))
@@ -2045,9 +2038,7 @@ def q_spearman_rank_corr(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     m = docs.select(
         "doc_id", "n_chars",
-        F.size(F.array_distinct(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )).alias("n_distinct"),
+        F.size(F.array_distinct(parse.tokens("text"))).alias("n_distinct"),
     )
 
     def perm_rank(df, key, out):
@@ -2140,9 +2131,7 @@ def q_zipf_slope(spark, sf_dir):
     relation."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        ).alias("tok")
+        F.explode(parse.tokens("text")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count("*").cast("long").alias("cnt"))
     w = Window.orderBy(F.col("cnt").desc(), "tok")
@@ -2417,8 +2406,7 @@ def q_bigram_logprob(spark, sf_dir):
     the vocab size is a 1-row broadcast."""
     tk = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        .alias("ws"),
+        parse.tokens("text").alias("ws"),
     )
     big = (
         tk.where(F.size("ws") >= 2)
@@ -2607,10 +2595,7 @@ def q_token_coverage(spark, sf_dir):
     no k-table join, no repeated scans. Integer ppm output, 1 row."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"))
+        docs.select(F.explode(parse.tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -2826,10 +2811,7 @@ def q_lm_holdout_ppl(spark, sf_dir):
     )
     toks = docs.select(
         "source", fold.alias("fold"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     train = (
         toks.where(F.col("fold") != 0)
@@ -3053,9 +3035,7 @@ def q_unseen_mass_estimate(spark, sf_dir):
     once; f1/f2 are conditional sums over the Zipf-bounded vocab."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)).alias("tok"))
+        docs.select(F.explode(parse.tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("c"))
     )
@@ -3143,9 +3123,7 @@ def q_rank_overlap_rbo(spark, sf_dir):
     )
     toks = docs.select(
         fold.alias("fold"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)).alias("tok"),
+        F.explode(parse.tokens("text")).alias("tok"),
     )
     freq = toks.groupBy("fold", "tok").agg(
         F.count("*").cast("long").alias("c"))
@@ -3214,8 +3192,7 @@ def q_ttr_by_length(spark, sf_dir):
     One tokenize pass, domain-bounded bands (cap {_TTR_BAND_CAP}),
     all-integer truncating ppm."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")),
-                                F.lit(r"\S+"), 0)
+    toks = parse.tokens("text")
     per_doc = docs.select(
         F.size(toks).cast("long").alias("wc"),
         F.size(F.array_distinct(toks)).cast("long").alias("uniq"),
@@ -3282,9 +3259,7 @@ def q_coverage_knee(spark, sf_dir):
     Zipf-bounded vocab, never tokens."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)).alias("tok"))
+        docs.select(F.explode(parse.tokens("text")).alias("tok"))
         .groupBy("tok").agg(F.count("*").cast("long").alias("c"))
     )
     ranked = freq.select(
@@ -3352,9 +3327,7 @@ def q_vocab_gini(spark, sf_dir):
     fits BIGINT to ~10^9-type vocab x 10^9 tokens split."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)).alias("tok"))
+        docs.select(F.explode(parse.tokens("text")).alias("tok"))
         .groupBy("tok").agg(F.count("*").cast("long").alias("c"))
     )
     ff = freq.groupBy("c").agg(F.count("*").cast("long").alias("m"))

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import parse
+
 
 def shard_assignments(
     docs: DataFrame,
@@ -34,9 +36,7 @@ def shard_assignments(
     order — the two-level prefix-sum plan (see module docstring)."""
     toks = docs.select(
         "doc_id",
-        F.size(
-            F.regexp_extract_all(F.lower(text_col), F.lit(r"\S+"), 0)
-        ).cast("long").alias("n_tokens"),
+        F.size(parse.tokens(text_col)).cast("long").alias("n_tokens"),
         F.expr(f"doc_id div {int(bucket_size)}").alias("bucket"),
     )
     w_in = (

@@ -2,7 +2,13 @@
 against the optimized plans (pushed filters, broadcast joins, no
 Python in JVM-only pipelines)."""
 
+import os
+
+import pyarrow.parquet as pq
+import pytest
+
 from document_parsing_etl_pipeline_spark.plans.queries import QUERIES
+from perfbench.tracing import plan_counts
 
 from conftest import SF_DIR
 
@@ -417,3 +423,44 @@ def test_session7f_new_query_plan_shapes(spark):
     assert "CartesianProduct" not in plan
     plan = _executed(QUERIES["q_dedup_recall_capture"](spark, SF_DIR))
     assert "CartesianProduct" not in plan
+
+
+# Exchange reuse the shared token featurize carries (parse.doc_terms and
+# the guarded KN / shingle / DSIR aggregations): (max Exchange, min
+# ReusedExchange, max Scan) over the executed plan at sf0.001, measured
+# on local[4] with 8 shuffle partitions (identical over repeated runs).
+# Losing the null guard gives consumer branches unequal exchange
+# subtrees: reuse drops and the tokenize + scan run once per branch.
+_TOKEN_REUSE = {
+    "q_naive_bayes_lang": (24, 6, 6),
+    "q_nb_calibration": (24, 6, 6),
+    "q_kneser_ney_bigram": (10, 5, 1),
+    "q_bm25_scores": (10, 1, 3),
+    "q_unigram_logprob": (6, 2, 1),
+    "q_shingle_novelty": (3, 1, 1),
+    "q_triangle_count": (7, 7, 4),
+    "q_dsir_weights": (6, 2, 1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TOKEN_REUSE))
+def test_token_featurize_shares_one_exchange(spark, name):
+    max_ex, min_reused, max_scans = _TOKEN_REUSE[name]
+    df = QUERIES[name](spark, SF_DIR)
+    df.collect()
+    got = plan_counts(df)
+    assert got["exchanges"] <= max_ex, got
+    assert got["reused_exchanges"] >= min_reused, got
+    assert got["scans"] <= max_scans, got
+
+
+@pytest.mark.parametrize(
+    "sf_dir", [SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01")])
+def test_token_guard_columns_never_null(sf_dir):
+    """The data invariant that makes doc_terms' isNotNull guard (and
+    the NB (doc_id, lang) guard) exact rather than a filter."""
+    cols = pq.read_table(f"{sf_dir}/documents.parquet",
+                         columns=["doc_id", "lang"])
+    assert cols.num_rows > 0
+    assert {c: cols[c].null_count for c in cols.column_names} == {
+        "doc_id": 0, "lang": 0}

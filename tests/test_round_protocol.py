@@ -49,6 +49,8 @@ or any rounded transcendental carrying more than ~7 significant
 digits into a comparison.
 """
 
+import ast
+import pathlib
 import sys
 
 import pytest
@@ -349,3 +351,80 @@ def test_popcount_audit_crossings_pin_the_engaged_gate():
     ps = tf.bloom_positions(42)
     assert len(ps) == tf._BLOOM_K and all(0 <= p < tf._BLOOM_M
                                           for p in ps)
+
+
+# ------------------------------------------------------ one tokenizer
+
+_PKG = pathlib.Path(__file__).resolve().parents[1] / (
+    "document_parsing_etl_pipeline_spark")
+_TOKEN_PATTERNS = (r"\S+", "[a-z]+")
+
+
+def _call_name(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _string_parts(node: ast.AST) -> list[str]:
+    """Literal strings under ``node``; an f-string counts as the
+    concatenation of its literal parts."""
+    out = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.JoinedStr):
+            out.append("".join(v.value for v in n.values
+                               if isinstance(v, ast.Constant)))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.append(n.value)
+    return out
+
+
+def inline_tokenizer_sites(root: pathlib.Path = _PKG) -> list[str]:
+    """Spark-side tokenizer copies outside operators/parse.py: a
+    ``regexp_extract_all`` call, or an ``expr``/``selectExpr`` string
+    calling it, whose pattern is one of the tokenizer patterns. Oracle
+    SQL strings are not calls, so the reference SQL is ignored."""
+    sql_pats = [p.replace("\\", "\\\\") for p in _TOKEN_PATTERNS]
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "operators" / "parse.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = _call_name(node)
+            if name == "regexp_extract_all":
+                hit = any(s in _TOKEN_PATTERNS
+                          for a in [*node.args, *node.keywords]
+                          for s in _string_parts(a))
+            elif name in ("expr", "selectExpr"):
+                hit = any("regexp_extract_all" in s
+                          and any(p in s for p in (*_TOKEN_PATTERNS,
+                                                   *sql_pats))
+                          for s in _string_parts(node))
+            else:
+                continue
+            if hit:
+                sites.append(f"{path.relative_to(root)}:{node.lineno}")
+    return sites
+
+
+def test_no_inline_tokenizer_copies():
+    """Text becomes tokens only through operators/parse.py (its
+    column helpers or doc_terms): a new inline copy fails here."""
+    assert inline_tokenizer_sites() == []
+
+
+def test_tokenizer_lint_catches_each_spelling(tmp_path):
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "m.py").write_text(
+        'a = F.regexp_extract_all(F.lower(F.col("t")), F.lit(r"\\S+"), 0)\n'
+        'b = F.regexp_extract_all(F.col("t"), F.lit("[a-z]+"), 0)\n'
+        "c = F.expr(\"regexp_extract_all(t, '\\\\\\\\S+', 0)\")\n"
+        "d = F.expr(f\"regexp_extract_all({col}, '\\\\\\\\S+', 0)\")\n"
+        "ORACLE = \"SELECT regexp_extract_all(lower(t), '\\\\S+')\"\n"
+        'e = F.regexp_extract_all(F.col("t"), F.lit("[0-9]"), 0)\n'
+    )
+    (tmp_path / "operators" / "parse.py").write_text(
+        'x = F.regexp_extract_all(c, F.lit(r"\\S+"), 0)\n')
+    assert inline_tokenizer_sites(tmp_path) == [
+        "m.py:1", "m.py:2", "m.py:3", "m.py:4"]

@@ -1,10 +1,15 @@
+import re
+from collections import Counter
+
 from pyspark.sql import Row
 
-from document_parsing_etl_pipeline_spark.operators import entities
+from document_parsing_etl_pipeline_spark.operators import entities, parse
 from document_parsing_etl_pipeline_spark.operators import text_analysis as ta
 from document_parsing_etl_pipeline_spark.operators.parse import (
     document_metadata, normalize_documents,
 )
+
+from test_edge_data import EDGE_DOCS
 
 
 def _docs(spark, *texts):
@@ -14,9 +19,42 @@ def _docs(spark, *texts):
     )
 
 
+# the degenerate texts of the edge-parity corpus (empty, whitespace-
+# only, \t\n\r runs, unicode, ...) plus a null text
+_EDGE_TEXTS = [t for _, t, *_ in EDGE_DOCS] + [None]
+
+
 def test_normalize(spark):
     df = normalize_documents(_docs(spark, "  Hello   World\t! "))
     assert df.collect()[0].norm_text == "hello world !"
+    # every tokenizer helper against its Python definition
+    docs = spark.createDataFrame(
+        list(enumerate(_EDGE_TEXTS)), "doc_id long, text string")
+    got = docs.select(
+        "doc_id", parse.tokens("text").alias("tokens"),
+        parse.raw_tokens("text").alias("raw"),
+        parse.words("text").alias("words"),
+        parse.normalized_text("text").alias("norm"),
+    ).orderBy("doc_id").collect()
+    for r, s in zip(got, _EDGE_TEXTS):
+        if s is None:
+            assert (r.tokens, r.raw, r.words, r.norm) == (None,) * 4
+            continue
+        assert r.tokens == s.lower().split(), repr(s)
+        assert r.raw == s.split(), repr(s)
+        assert r.words == re.findall("[a-z]+", s.lower()), repr(s)
+        assert r.norm == " ".join(s.lower().split()), repr(s)
+    # doc_terms == a Python Counter per document; null and
+    # whitespace-only texts contribute no rows (never a null term)
+    terms = parse.doc_terms(docs, "doc_id").collect()
+    want = Counter()
+    for i, s in enumerate(_EDGE_TEXTS):
+        for t in (s or "").lower().split():
+            want[(i, t)] += 1
+    assert Counter({(r.doc_id, r.term): r.tf for r in terms}) == want
+    assert all(r.term is not None for r in terms)
+    empty = {i for i, s in enumerate(_EDGE_TEXTS) if not (s or "").split()}
+    assert len(empty) >= 4 and not empty & {r.doc_id for r in terms}
 
 
 def test_metadata_counts(spark):
