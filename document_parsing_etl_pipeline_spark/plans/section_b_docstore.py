@@ -66,7 +66,7 @@ WHERE doc_id = 7 AND chunk_index BETWEEN 0 AND 1
 def q_chunk_range(spark, sf_dir):
     """Chunk range scan through the store-table function
     (docstore.chunk_range) — doc_id + index predicates push to the
-    scan; bucket-pruned on the bucketed store."""
+    scan; on the doc store they skip row groups by min/max."""
     ch = chunking.chunk_documents(load_table(spark, sf_dir, "documents"))
     df = docstore.chunk_range(ch, doc_id=7, start=0, end=1)
     return _long(df, "chunk_index", "token_count")

@@ -2,18 +2,20 @@
 
 Reference parity: tables documents / document_chunks / chart_data
 (reference services/parser/src/database/schema.py:11-57) re-expressed
-as partitioned parquet datasets written by Spark. JSON columns become
+as parquet datasets written by Spark. JSON columns become
 typed structs; auto-increment ids become deterministic content-derived
 ids (idempotent re-ingest, no sequence bottleneck at 1000 executors).
 
-Layout (under a root path):
-    documents/   — bucketed by doc_id hash (``bucket`` partition col)
-    chunks/      — same bucketing → doc⋈chunks co-partitioned
-    charts/      — same bucketing
-
-Bucketing by the join key means the API-surface queries
-(detail/chunk-range/charts-by-doc) prune to one bucket and join
-without a shuffle of the big side.
+Layout (under a root path): one flat parquet directory per table —
+documents/, chunks/, charts/ — range-partitioned on doc_id and sorted
+within each file (chunks on doc_id, chunk_index). Each file covers a
+narrow, disjoint doc_id range and AQE coalescing sizes the file count
+from the data, so a small ingest writes one file per table and reads
+back with no partition discovery. Plain parquet prunes row groups,
+not files: a doc_id predicate skips row groups by their min/max
+statistics, but every file's footer is still opened. File-level
+pruning before any task launches needs per-file statistics in a
+manifest, which arrives with the table-format store.
 """
 
 from __future__ import annotations
@@ -26,8 +28,6 @@ from pyspark.sql import functions as F
 from ..operators.chunking import chunk_documents, chunk_stats
 from ..operators.charts import chart_inventory
 from ..operators.entities import extract_entities
-
-N_BUCKETS = 64
 
 # Deterministic ingest clock: created_at = INGEST_EPOCH_S + doc_id
 # seconds. The reference stamps wall-clock Jakarta time
@@ -44,12 +44,6 @@ UPDATE_BUMP = "INTERVAL 1 DAY"
 
 def _ingest_ts(id_col: str = "doc_id"):
     return F.timestamp_seconds(F.lit(INGEST_EPOCH_S) + F.col(id_col))
-
-
-def _with_bucket(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(id_col)), F.lit(N_BUCKETS))
-    )
 
 
 def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
@@ -125,9 +119,10 @@ def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
 
 def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
     for name, df in tables.items():
-        (_with_bucket(df)
+        keys = ("doc_id", "chunk_index") if name == "chunks" else ("doc_id",)
+        (df.repartitionByRange("doc_id")
+         .sortWithinPartitions(*keys)
          .write.mode("overwrite")
-         .partitionBy("bucket")
          .parquet(os.path.join(root, name)))
 
 
@@ -165,11 +160,12 @@ def document_detail(documents: DataFrame, chunks: DataFrame) -> DataFrame:
     """GET /documents/{id} parity (reference api.py:37-40,
     repository.py:45-80): document fields + timestamps joined to the
     doc's chunks — as a function over STORE TABLES, so the same plan
-    serves the inline pipeline and the bucketed catalog. Over tables
-    written by write_bucketed_tables the doc_id join runs with ZERO
-    exchange (both sides co-bucketed+sorted — plan-asserted in
-    tests/test_docstore_api.py); over raw frames it is one doc_id
-    shuffle."""
+    serves the inline pipeline, the range-clustered store and the
+    bucketed catalog. Over tables written by write_bucketed_tables the
+    doc_id join runs with ZERO exchange (both sides co-bucketed+sorted
+    — plan-asserted in tests/test_docstore_api.py); over raw frames or
+    the write_docstore store it is one doc_id shuffle, and a doc_id
+    filter on the store skips row groups, not files."""
     return (
         documents.select(
             "doc_id", "filename", "lang", "total_chunks",
@@ -190,8 +186,9 @@ def chunk_range(chunks: DataFrame, doc_id: int, start: int,
                 end: int) -> DataFrame:
     """GET /documents/{id}/chunks parity (reference api.py,
     repository.py:86-105): one doc's chunk_index range. Both
-    predicates push to the parquet scan; on the bucketed store the
-    doc_id filter prunes to one bucket's files."""
+    predicates push to the parquet scan; on the range-clustered store
+    they skip every row group whose doc_id / chunk_index min-max misses
+    the range, but each file's footer is still read."""
     return chunks.where(
         (F.col("doc_id") == doc_id)
         & F.col("chunk_index").between(start, end)
@@ -202,8 +199,8 @@ def upsert_documents(existing: DataFrame, updates: DataFrame,
                      key: str = "doc_id") -> DataFrame:
     """MERGE semantics: rows in ``updates`` replace same-key rows in
     ``existing``; new keys append. Expressed as anti-join + union —
-    the shuffle is on the key both sides, and with the bucketed store
-    layout the anti-join co-partitions without an exchange.
+    the shuffle is on the key both sides, and over write_bucketed_tables
+    tables the anti-join co-partitions without an exchange.
 
     (BaseRepository.update/create parity at dataset scale; on a real
     deployment this is the Delta/Iceberg MERGE INTO statement.)

@@ -101,17 +101,23 @@ def start_full_pipeline(spark: SparkSession, watch_dir: str, store_root: str,
     stream = watch_documents(spark, watch_dir)
 
     def _sink(batch_df, batch_id: int) -> None:
-        good = batch_df.where(F.col("doc_id").isNotNull())
-        bad = batch_df.where(F.col("doc_id").isNull())
-        if bad.isEmpty() is False:
-            bad.write.mode("overwrite").parquet(
-                os.path.join(store_root, "rejects", f"batch_id={batch_id}")
-            )
-        tables = build_docstore(good)
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(store_root, name, f"batch_id={batch_id}")
-            )
+        # the rejects check and the three table writes each scan the
+        # batch: cache it so the source files are read once
+        batch_df.persist()
+        try:
+            good = batch_df.where(F.col("doc_id").isNotNull())
+            bad = batch_df.where(F.col("doc_id").isNull())
+            if bad.isEmpty() is False:
+                bad.write.mode("overwrite").parquet(
+                    os.path.join(store_root, "rejects", f"batch_id={batch_id}")
+                )
+            tables = build_docstore(good)
+            for name, df in tables.items():
+                df.write.mode("overwrite").parquet(
+                    os.path.join(store_root, name, f"batch_id={batch_id}")
+                )
+        finally:
+            batch_df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(_sink)

@@ -78,13 +78,46 @@ def test_cascade_delete(tables):
 
 
 def test_docstore_roundtrip(tmp_path, spark, tables):
+    """The store is range-clustered on doc_id: flat table directories,
+    each file a disjoint doc_id range, rows sorted within each file.
+    AQE coalescing is off here so the small slice spans several files
+    (with it on, the whole slice lands in one file per table)."""
+    import os
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
     root = str(tmp_path / "store")
-    docstore.write_docstore(
-        {k: v.where(F.col("doc_id") < 20) for k, v in tables.items()}, root
-    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        docstore.write_docstore(
+            {k: v.where(F.col("doc_id") < 20) for k, v in tables.items()},
+            root,
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert not [d for _, dirs, _ in os.walk(root) for d in dirs
+                if d.startswith("bucket=")]
     back = docstore.read_docstore(spark, root)
     assert back["documents"].count() == 20
-    assert "bucket" in back["chunks"].columns  # bucketed layout survives
+    sort_keys = {"documents": ["doc_id"], "charts": ["doc_id"],
+                 "chunks": ["doc_id", "chunk_index"]}
+    for name, df in back.items():
+        ranges = sorted(
+            (r.lo, r.hi, r.f) for r in
+            df.groupBy(F.input_file_name().alias("f"))
+            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+            .collect()
+        )
+        assert len(ranges) > 1, name
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), name
+        for _, _, f in ranges:
+            rows = pq.read_table(urlparse(f).path,
+                                 columns=sort_keys[name]).to_pylist()
+            keys = [tuple(r.values()) for r in rows]
+            assert keys == sorted(keys), (name, f)
 
 
 def test_objectstore_roundtrip(tmp_path, spark):

@@ -73,3 +73,59 @@ def test_upload_document_lands_for_watcher(tmp_path, spark):
     assert chunks.where(chunks.doc_id == 7).count() >= 1
     # re-upload overwrites the same drop file (idempotent landing)
     assert proc.upload_document(7, "new body", watch) == path
+
+
+def test_reopened_store_answers_like_in_memory_tables(spark, tmp_path):
+    """A fresh processor over a root written by process_documents gives
+    the same API answers as the in-memory build_docstore tables: list
+    pages, detail, chunk ranges and chart + blob. The sf0.001 slice
+    holds a one-chunk doc (33) and a doc with no charts (37)."""
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR
+    from document_parsing_etl_pipeline_spark.catalog import load_table
+    from document_parsing_etl_pipeline_spark.sources import objectstore
+
+    docs = load_table(spark, SF_DIR, "documents").where(
+        F.col("doc_id").between(30, 39))
+    root = str(tmp_path / "store")
+    mem = DocumentProcessor(spark)
+    charts = mem.process_documents(docs)["charts"]
+    DocumentProcessor(spark, store_root=root).process_documents(docs)
+    objectstore.write_blobs(
+        charts.select("image_path").distinct().select(
+            "image_path", F.encode("image_path", "utf-8").alias("content"),
+            F.lit("image/png").alias("content_type")),
+        root)
+    disk = DocumentProcessor(spark, store_root=root)
+
+    def rows(df):
+        return [r.asDict(recursive=True) for r in df.collect()]
+
+    def detail(p, doc_id):
+        info = p.get_document_info(doc_id)
+        info["charts"] = sorted(info["charts"], key=repr)
+        return info
+
+    for after, limit in ((-1, 100), (29, 4), (33, 4), (37, 4)):
+        assert (rows(disk.get_documents(after, limit))
+                == rows(mem.get_documents(after, limit)))
+    counts = {r.doc_id: r.total_chunks
+              for r in mem.get_documents().collect()}
+    assert counts[33] == 1
+    assert detail(disk, 37)["charts"] == []
+    for doc_id in range(30, 40):
+        assert detail(disk, doc_id) == detail(mem, doc_id)
+        for start, end in ((None, None), (0, 0), (1, 2), (3, None)):
+            assert (rows(disk.get_document_chunks(doc_id, start, end))
+                    == rows(mem.get_document_chunks(doc_id, start, end)))
+    assert disk.get_chart_with_image(37, 1) is None
+    for r in charts.select("doc_id", "image_path").distinct().collect():
+        chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
+        got = disk.get_chart_with_image(r.doc_id, chart_id)
+        want = mem.get_chart_with_image(r.doc_id, chart_id)
+        assert got.pop("image_data") == r.image_path.encode()
+        assert got.pop("content_type") == "image/png"
+        same_path = [c for c in detail(mem, r.doc_id)["charts"]
+                     if c["image_path"] == r.image_path]
+        assert want in same_path and got in same_path
