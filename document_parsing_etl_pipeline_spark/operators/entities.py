@@ -50,18 +50,19 @@ def extract_entities(
     organizations, dates, locations, misc (numbers).
     """
     c = F.col(text_col)
-    out = df
-    for name, pattern in (
-        ("persons", RE_PERSON),
-        ("organizations", RE_ORG),
-        ("dates", RE_DATE),
-        ("locations", RE_LOC),
-        ("misc", RE_NUMBER),
-    ):
-        out = out.withColumn(name, F.regexp_extract_all(c, F.lit(pattern), 0))
-    for name in ("persons", "organizations", "dates", "locations", "misc"):
-        out = out.withColumn(f"n_{name}", F.size(F.col(name)))
-    return out
+    patterns = {
+        "persons": RE_PERSON,
+        "organizations": RE_ORG,
+        "dates": RE_DATE,
+        "locations": RE_LOC,
+        "misc": RE_NUMBER,
+    }
+    # two projections, not ten: each withColumn re-analyzes the plan
+    out = df.withColumns({
+        name: F.regexp_extract_all(c, F.lit(pattern), 0)
+        for name, pattern in patterns.items()
+    })
+    return out.withColumns({f"n_{name}": F.size(name) for name in patterns})
 
 
 def entity_counts(df: DataFrame, text_col: str = "text_content") -> DataFrame:

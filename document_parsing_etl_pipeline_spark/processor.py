@@ -35,11 +35,19 @@ class DocumentProcessor:
     # ------------------------------------------------------ ingest
 
     def process_documents(self, docs: DataFrame) -> dict[str, DataFrame]:
-        """Run the full parse pipeline; persists if store_root set."""
+        """Run the full parse pipeline; persists if store_root set.
+
+        With a store_root, the three tables are written as concurrent
+        jobs over one chunk + NER pass (``docstore.write_docstore``)
+        and the returned tables read the written store back with the
+        schemas they were written with, so the read-back runs no job.
+        A failed write raises here."""
         self._tables = docstore.build_docstore(docs)
         if self.store_root:
             docstore.write_docstore(self._tables, self.store_root)
-            self._tables = docstore.read_docstore(self.spark, self.store_root)
+            self._tables = docstore.read_docstore(
+                self.spark, self.store_root,
+                {name: df.schema for name, df in self._tables.items()})
         return self._tables
 
     def upload_document(self, doc_id: int, text: str, watch_dir: str,
@@ -98,10 +106,13 @@ class DocumentProcessor:
         if not row:
             return None
         info = row[0].asDict()
-        info["chunks"] = [
-            r.asDict()
-            for r in self.get_document_chunks(doc_id).collect()
-        ]
+        # one doc's chunks are a bounded list: sort it here, not with a
+        # global orderBy (a range-sample job and an exchange)
+        chunks = self.tables["chunks"].where(F.col("doc_id") == doc_id)
+        info["chunks"] = sorted(
+            (r.asDict() for r in chunks.collect()),
+            key=lambda c: c["chunk_index"],
+        )
         info["charts"] = [
             r.asDict()
             for r in self.get_document_charts(doc_id).collect()

@@ -16,14 +16,25 @@ not files: a doc_id predicate skips row groups by their min/max
 statistics, but every file's footer is still opened. File-level
 pruning before any task launches needs per-file statistics in a
 manifest, which arrives with the table-format store.
+
+One ingest evaluates chunking + NER once: ``write_docstore`` caches
+the chunks table, whose plan the documents table's ``chunk_stats``
+subtree repeats, so both writes read the cached pass. The three table
+writes run as concurrent Spark jobs — each is a range-sample job, a
+map stage and a write stage of a few tasks, so driver-side fixed cost,
+not executor work, is what overlaps. The store is read back with the
+schemas of the frames just written, with no schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.chunking import chunk_documents, chunk_stats
 from ..operators.charts import chart_inventory
@@ -118,12 +129,36 @@ def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
 
 
 def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
-    for name, df in tables.items():
+    """Write each table to ``root/<name>``, range-clustered on doc_id.
+
+    The chunks table is cached for the call, so the chunks write and
+    the documents write (whose ``chunk_stats`` is the same plan) share
+    one chunk + NER evaluation; the cache is dropped on return, also
+    when a write fails. The writes run as concurrent jobs, one thread
+    per table; the threads inherit the caller's job group and local
+    properties. The first failed write is raised once all have ended.
+    """
+
+    def write(name: str, df: DataFrame) -> None:
         keys = ("doc_id", "chunk_index") if name == "chunks" else ("doc_id",)
         (df.repartitionByRange("doc_id")
          .sortWithinPartitions(*keys)
          .write.mode("overwrite")
          .parquet(os.path.join(root, name)))
+
+    chunks = tables["chunks"].persist()
+    spark = chunks.sparkSession
+    try:
+        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+            # one wrap per table: each copies the caller's local
+            # properties, and the threads must not share that copy
+            futures = [pool.submit(inheritable_thread_target(spark)(write),
+                                   name, df)
+                       for name, df in tables.items()]
+        for f in futures:
+            f.result()
+    finally:
+        chunks.unpersist()
 
 
 def write_bucketed_tables(
@@ -149,9 +184,15 @@ def write_bucketed_tables(
          .saveAsTable(f"{database}.{name}"))
 
 
-def read_docstore(spark: SparkSession, root: str) -> dict[str, DataFrame]:
+def read_docstore(spark: SparkSession, root: str,
+                  schemas: dict[str, StructType] | None = None
+                  ) -> dict[str, DataFrame]:
+    """Open the three tables under ``root``. With ``schemas`` (the
+    schemas the tables were written with) no schema-inference job runs;
+    without, each table's schema is read from its parquet footers."""
     return {
-        name: spark.read.parquet(os.path.join(root, name))
+        name: (spark.read.schema(schemas[name]) if schemas else spark.read)
+        .parquet(os.path.join(root, name))
         for name in ("documents", "chunks", "charts")
     }
 

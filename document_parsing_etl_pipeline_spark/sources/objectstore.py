@@ -42,9 +42,10 @@ def write_blobs(blobs: DataFrame, root: str) -> None:
 
 def read_blob(spark: SparkSession, root: str, doc_id: int,
               chart_id: int) -> DataFrame:
-    """Point read — parquet predicate pushdown on image_path."""
+    """Point read — parquet predicate pushdown on image_path. The
+    schema is given, so the read runs no schema-inference job."""
     return (
-        spark.read.parquet(os.path.join(root, "blobs"))
+        spark.read.schema(BLOB_SCHEMA).parquet(os.path.join(root, "blobs"))
         .where(F.col("image_path") == object_path(doc_id, chart_id))
     )
 

@@ -129,3 +129,135 @@ def test_reopened_store_answers_like_in_memory_tables(spark, tmp_path):
         same_path = [c for c in detail(mem, r.doc_id)["charts"]
                      if c["image_path"] == r.image_path]
         assert want in same_path and got in same_path
+
+
+def _slice(spark):
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR
+    from document_parsing_etl_pipeline_spark.catalog import load_table
+
+    return load_table(spark, SF_DIR, "documents").where(
+        F.col("doc_id").between(30, 39))
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_writes_over_one_cached_chunk_pass(spark, tmp_path,
+                                                  monkeypatch):
+    """One store ingest: the write jobs run in the caller's job group,
+    the documents write reads the chunk relation from the cache the
+    chunks write fills, the read-back runs no Spark job (no schema
+    inference), and nothing stays cached afterwards."""
+    import uuid
+
+    from document_parsing_etl_pipeline_spark.sources import docstore
+
+    sc = spark.sparkContext
+    root = str(tmp_path / "store")
+    group = uuid.uuid4().hex
+    read = docstore.read_docstore
+    counted = []
+
+    def counting_read(*a, **kw):
+        out, n = _jobs_in_group(spark, f"readback-{group}",
+                                lambda: read(*a, **kw))
+        counted.append(n)
+        return out
+
+    monkeypatch.setattr(docstore, "read_docstore", counting_read)
+    cached = sc._jsc.getPersistentRDDs().size()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    tables, n_ingest = _jobs_in_group(
+        spark, f"ingest-{group}",
+        lambda: DocumentProcessor(spark, store_root=root).process_documents(
+            _slice(spark)))
+    assert n_ingest > 0
+    # the status store drops its oldest jobs in a long session: look
+    # only for ungrouped jobs that are new
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    assert counted == [0]
+    assert sc._jsc.getPersistentRDDs().size() == cached
+    assert tables["documents"].count() == 10
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = spark._jsparkSession.sharedState().statusStore().executionsList()
+    it = plans.iterator()
+    documents_writes = []
+    while it.hasNext():
+        plan = it.next().physicalPlanDescription()
+        if ("InsertIntoHadoopFsRelationCommand" in plan
+                and f"{root}/documents," in plan):
+            documents_writes.append(plan)
+    assert len(documents_writes) == 1
+    assert "InMemoryTableScan" in documents_writes[0]
+
+
+def test_failed_store_write_raises_and_leaves_nothing_cached(
+        spark, tmp_path, monkeypatch):
+    """A write that fails in one of the concurrent table jobs raises
+    out of process_documents, and the chunk cache is still dropped."""
+    from pyspark.sql import functions as F
+
+    from document_parsing_etl_pipeline_spark.sources import docstore
+
+    build = docstore.build_docstore
+
+    def failing_charts(docs):
+        tables = build(docs)
+        tables["charts"] = tables["charts"].withColumn(
+            "chart_type", F.raise_error(F.lit("charts write fails")))
+        return tables
+
+    monkeypatch.setattr(docstore, "build_docstore", failing_charts)
+    sc = spark.sparkContext
+    cached = sc._jsc.getPersistentRDDs().size()
+    proc = DocumentProcessor(spark, store_root=str(tmp_path / "store"))
+    with pytest.raises(Exception, match="charts write fails"):
+        proc.process_documents(_slice(spark))
+    assert sc._jsc.getPersistentRDDs().size() == cached
+
+
+def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
+    """Over a reopened store, detail runs its three collects as three
+    jobs (the chunk list is sorted on the driver, not by a global
+    orderBy) and chart + blob runs two (the blob read infers no
+    schema)."""
+    from pyspark.sql import functions as F
+
+    from document_parsing_etl_pipeline_spark.sources import objectstore
+
+    root = str(tmp_path / "store")
+    charts = DocumentProcessor(spark, store_root=root).process_documents(
+        _slice(spark))["charts"]
+    objectstore.write_blobs(
+        charts.select("image_path", F.encode("image_path", "utf-8")
+                      .alias("content"), F.lit("image/png")
+                      .alias("content_type")),
+        root)
+    r = charts.select("doc_id", "image_path").orderBy("doc_id").first()
+    chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
+    disk = DocumentProcessor(spark, store_root=root)
+    disk.tables  # noqa: B018  (reopen: infers the three schemas)
+    info, n_detail = _jobs_in_group(
+        spark, "api-detail", lambda: disk.get_document_info(r.doc_id))
+    assert [c["chunk_index"] for c in info["chunks"]] == list(
+        range(info["total_chunks"]))
+    assert n_detail <= 3
+    chart, n_chart = _jobs_in_group(
+        spark, "api-chart",
+        lambda: disk.get_chart_with_image(r.doc_id, chart_id))
+    assert chart["image_data"] == r.image_path.encode()
+    assert n_chart <= 2
