@@ -16,13 +16,25 @@ src/database/base.py, api.py):
 A reference user switches by constructing DocumentProcessor over a
 SparkSession instead of POSTing to the API; every method returns
 DataFrames (lazily) or plain dicts for point lookups.
+
+A point read costs fixed driver-side work per Spark job (planning, code
+generation, scheduling), not scan work, so a request that needs more
+than one read builds and runs them as concurrent jobs through
+``session.concurrently``: detail runs its documents, chunks and charts
+reads as 3 concurrent jobs, chart + blob its row lookup and blob read
+as 2. A chunk range is 1 job with no exchange. A processor opened over
+an existing ``store_root`` reopens the store on first use, inferring
+the three table schemas as 3 concurrent jobs.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import concurrently
 from .sources import docstore, objectstore
 
 
@@ -71,16 +83,21 @@ class DocumentProcessor:
             "doc_id": doc_id, "text": text, "lang": lang,
             "source": source, "n_chars": len(text),
         }
-        tmp = path + ".tmp"
+        # hidden temp name: the file source skips names starting with
+        # "." or "_", so it never lists the temp; the atomic rename
+        # means it never sees a half-written drop either (the reference
+        # moves uploads into place the same way)
+        tmp = os.path.join(watch_dir, f".upload_doc_{doc_id}.json.tmp")
         with open(tmp, "w") as f:
             f.write(json.dumps(rec) + "\n")
-        # atomic rename: the file source must never see a half-written
-        # drop (the reference moves uploads into place the same way)
         os.replace(tmp, path)
         return path
 
     @property
     def tables(self) -> dict[str, DataFrame]:
+        """The store's three tables; on first use over a ``store_root``
+        nothing was processed into, the store is reopened and its three
+        schemas are inferred as concurrent jobs."""
         if self._tables is None:
             if not self.store_root:
                 raise RuntimeError("no documents processed and no store_root")
@@ -101,57 +118,72 @@ class DocumentProcessor:
         )
 
     def get_document_info(self, doc_id: int) -> dict | None:
-        docs = self.tables["documents"].where(F.col("doc_id") == doc_id)
-        row = docs.collect()
-        if not row:
+        """The document's row, its chunks ordered by ``chunk_index`` and
+        its charts: three ``doc_id`` reads, each built and collected in
+        its own thread, so the three jobs run concurrently. One doc's
+        chunks are a bounded list, sorted here rather than by a global
+        ``orderBy`` (a range-sample job and an exchange)."""
+        tables = self.tables
+
+        def rows(name: str) -> list[dict]:
+            return [r.asDict() for r in
+                    tables[name].where(F.col("doc_id") == doc_id).collect()]
+
+        docs, chunks, charts = concurrently(
+            self.spark,
+            [partial(rows, name) for name in ("documents", "chunks", "charts")])
+        if not docs:
             return None
-        info = row[0].asDict()
-        # one doc's chunks are a bounded list: sort it here, not with a
-        # global orderBy (a range-sample job and an exchange)
-        chunks = self.tables["chunks"].where(F.col("doc_id") == doc_id)
-        info["chunks"] = sorted(
-            (r.asDict() for r in chunks.collect()),
-            key=lambda c: c["chunk_index"],
-        )
-        info["charts"] = [
-            r.asDict()
-            for r in self.get_document_charts(doc_id).collect()
-        ]
+        info = docs[0]
+        info["chunks"] = sorted(chunks, key=lambda c: c["chunk_index"])
+        info["charts"] = charts
         return info
 
     def get_document_chunks(self, doc_id: int,
                             start_chunk: int | None = None,
                             end_chunk: int | None = None) -> DataFrame:
-        ch = self.tables["chunks"].where(F.col("doc_id") == doc_id)
+        """One document's chunks in ``[start_chunk, end_chunk]``, ordered
+        by ``chunk_index``. The rows are one document's, so one
+        partition sorted in place is a total order: one job, with no
+        range-sample job and no exchange."""
+        pred = F.col("doc_id") == doc_id
         if start_chunk is not None:
-            ch = ch.where(F.col("chunk_index") >= start_chunk)
+            pred &= F.col("chunk_index") >= start_chunk
         if end_chunk is not None:
-            ch = ch.where(F.col("chunk_index") <= end_chunk)
-        return ch.orderBy("chunk_index")
+            pred &= F.col("chunk_index") <= end_chunk
+        return (self.tables["chunks"].where(pred)
+                .coalesce(1).sortWithinPartitions("chunk_index"))
 
     def get_document_charts(self, doc_id: int) -> DataFrame:
         return self.tables["charts"].where(F.col("doc_id") == doc_id)
 
     def get_chart_with_image(self, doc_id: int, chart_id: int) -> dict | None:
-        chart = (
-            self.tables["charts"]
-            .where(
+        """The chart row with its image bytes, or ``None`` when the row
+        is missing. The blob key derives from ``(doc_id, chart_id)``, so
+        with a ``store_root`` the row lookup and the blob read run as
+        concurrent jobs."""
+        charts = self.tables["charts"]
+
+        def chart() -> list:
+            return charts.where(
                 (F.col("doc_id") == doc_id)
                 & (F.col("image_path")
                    == objectstore.object_path(doc_id, chart_id))
-            )
-            .collect()
-        )
-        if not chart:
-            return None
-        out = chart[0].asDict()
-        if self.store_root:
-            blob = objectstore.read_blob(
-                self.spark, self.store_root, doc_id, chart_id
             ).collect()
-            if blob:
-                out["image_data"] = bytes(blob[0].content)
-                out["content_type"] = blob[0].content_type
+
+        def blob() -> list:
+            return objectstore.read_blob(
+                self.spark, self.store_root, doc_id, chart_id).collect()
+
+        found, *blobs = concurrently(
+            self.spark, [chart, blob] if self.store_root else [chart])
+        if not found:
+            return None
+        out = found[0].asDict()
+        if blobs and blobs[0]:
+            image = blobs[0][0]
+            out["image_data"] = bytes(image.content)
+            out["content_type"] = image.content_type
         return out
 
     # ------------------------------------------------------ mutation

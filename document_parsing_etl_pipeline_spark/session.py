@@ -9,8 +9,14 @@ enabled for the few Pandas-UDF boundaries.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CONF = {
     # AQE: runtime re-plan (coalesce post-shuffle partitions, skew joins).
@@ -62,3 +68,21 @@ def get_spark(app_name: str = "document-parsing-etl-spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def concurrently(spark: SparkSession,
+                 calls: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each zero-argument callable in its own thread, so the Spark
+    jobs they submit run concurrently; return their results in order.
+
+    Each target is wrapped in its own
+    ``pyspark.inheritable_thread_target(spark)``, so every thread
+    inherits the caller's job group and local properties. One wrap per
+    call, because ``setLocalProperties`` installs the copied
+    ``Properties`` object itself and SQL executions write their
+    execution id into it. Every call runs to its end; then the first
+    failure, in call order, is raised."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c))
+                   for c in calls]
+    return [f.result() for f in futures]

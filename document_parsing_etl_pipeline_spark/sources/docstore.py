@@ -20,18 +20,19 @@ manifest, which arrives with the table-format store.
 One ingest evaluates chunking + NER once: ``write_docstore`` caches
 the chunks table, whose plan the documents table's ``chunk_stats``
 subtree repeats, so both writes read the cached pass. The three table
-writes run as concurrent Spark jobs — each is a range-sample job, a
-map stage and a write stage of a few tasks, so driver-side fixed cost,
-not executor work, is what overlaps. The store is read back with the
-schemas of the frames just written, with no schema-inference job.
+writes run as concurrent Spark jobs (``session.concurrently``) — each
+is a range-sample job, a map stage and a write stage of a few tasks,
+so driver-side fixed cost, not executor work, is what overlaps. The
+store is read back with the schemas of the frames just written, with
+no schema-inference job; a reopen without them infers the three
+schemas as concurrent jobs.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -39,6 +40,7 @@ from pyspark.sql.types import StructType
 from ..operators.chunking import chunk_documents, chunk_stats
 from ..operators.charts import chart_inventory
 from ..operators.entities import extract_entities
+from ..session import concurrently
 
 # Deterministic ingest clock: created_at = INGEST_EPOCH_S + doc_id
 # seconds. The reference stamps wall-clock Jakarta time
@@ -135,8 +137,9 @@ def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
     the documents write (whose ``chunk_stats`` is the same plan) share
     one chunk + NER evaluation; the cache is dropped on return, also
     when a write fails. The writes run as concurrent jobs, one thread
-    per table; the threads inherit the caller's job group and local
-    properties. The first failed write is raised once all have ended.
+    per table (``session.concurrently``); the threads inherit the
+    caller's job group and local properties. The first failed write is
+    raised once all have ended.
     """
 
     def write(name: str, df: DataFrame) -> None:
@@ -147,16 +150,9 @@ def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
          .parquet(os.path.join(root, name)))
 
     chunks = tables["chunks"].persist()
-    spark = chunks.sparkSession
     try:
-        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-            # one wrap per table: each copies the caller's local
-            # properties, and the threads must not share that copy
-            futures = [pool.submit(inheritable_thread_target(spark)(write),
-                                   name, df)
-                       for name, df in tables.items()]
-        for f in futures:
-            f.result()
+        concurrently(chunks.sparkSession,
+                     [partial(write, name, df) for name, df in tables.items()])
     finally:
         chunks.unpersist()
 
@@ -189,12 +185,15 @@ def read_docstore(spark: SparkSession, root: str,
                   ) -> dict[str, DataFrame]:
     """Open the three tables under ``root``. With ``schemas`` (the
     schemas the tables were written with) no schema-inference job runs;
-    without, each table's schema is read from its parquet footers."""
-    return {
-        name: (spark.read.schema(schemas[name]) if schemas else spark.read)
-        .parquet(os.path.join(root, name))
-        for name in ("documents", "chunks", "charts")
-    }
+    without, each table's schema is read from its parquet footers, the
+    three inference jobs running concurrently."""
+    paths = {name: os.path.join(root, name)
+             for name in ("documents", "chunks", "charts")}
+    if schemas:
+        return {name: spark.read.schema(schemas[name]).parquet(path)
+                for name, path in paths.items()}
+    return dict(zip(paths, concurrently(
+        spark, [partial(spark.read.parquet, p) for p in paths.values()])))
 
 
 def document_detail(documents: DataFrame, chunks: DataFrame) -> DataFrame:

@@ -75,6 +75,42 @@ def test_upload_document_lands_for_watcher(tmp_path, spark):
     assert proc.upload_document(7, "new body", watch) == path
 
 
+def test_upload_temp_is_hidden_from_the_watcher(tmp_path, spark,
+                                                monkeypatch):
+    """upload_document writes its temp file under a hidden name before
+    the rename, and the watcher's file source never reads a hidden
+    leftover, such as the temp of an upload that died before its
+    rename."""
+    import json
+    import os
+    import uuid
+
+    from document_parsing_etl_pipeline_spark.streaming import watcher
+
+    watch = tmp_path / "drops"
+    watch.mkdir()
+    (watch / ".upload_doc_3.json.tmp").write_text(json.dumps({
+        "doc_id": 3, "text": "left over", "lang": "en", "source": "upload",
+        "n_chars": 9}) + "\n")
+    replace, renamed = os.replace, []
+
+    def recording_replace(src, dst):
+        renamed.append(os.path.basename(src))
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", recording_replace)
+    DocumentProcessor(spark).upload_document(2, "body two", str(watch))
+    assert renamed == [".upload_doc_2.json.tmp"]
+    assert sorted(os.listdir(watch)) == [".upload_doc_3.json.tmp",
+                                         "upload_doc_2.json"]
+    name = f"uploads_{uuid.uuid4().hex}"
+    q = (watcher.watch_documents(spark, str(watch)).writeStream
+         .format("memory").queryName(name)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert [r.doc_id for r in spark.table(name).collect()] == [2]
+
+
 def test_reopened_store_answers_like_in_memory_tables(spark, tmp_path):
     """A fresh processor over a root written by process_documents gives
     the same API answers as the in-memory build_docstore tables: list
@@ -230,11 +266,45 @@ def test_failed_store_write_raises_and_leaves_nothing_cached(
     assert sc._jsc.getPersistentRDDs().size() == cached
 
 
-def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
-    """Over a reopened store, detail runs its three collects as three
-    jobs (the chunk list is sorted on the driver, not by a global
-    orderBy) and chart + blob runs two (the blob read infers no
-    schema)."""
+def _job_spans(spark, group: str) -> list[tuple[int, int | None]]:
+    """(submission, completion) epoch milliseconds of each job group
+    ``group`` ran, read from the status store; completion is None for a
+    job still running."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    spans = []
+    for job_id in spark.sparkContext.statusTracker().getJobIdsForGroup(group):
+        job = store.job(job_id)
+        end = job.completionTime()
+        spans.append((job.submissionTime().get().getTime(),
+                      end.get().getTime() if end.isDefined() else None))
+    return spans
+
+
+def _overlapping(spans: list[tuple[int, int]]) -> bool:
+    """Two of the jobs were running at the same time."""
+    return any(s1 < e2 and s2 < e1
+               for i, (s1, e1) in enumerate(spans)
+               for s2, e2 in spans[i + 1:])
+
+
+def _plan_counts(df) -> dict:
+    """perfbench's plan-node counts for ``df``, loaded from its file:
+    perfbench is a script directory, not a package."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / (
+        "tracing.py")
+    spec = importlib.util.spec_from_file_location("perfbench_tracing", path)
+    tracing = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracing)
+    return tracing.plan_counts(df)
+
+
+def _reopened_store(spark, tmp_path):
+    """A store written from the sf0.001 slice with a blob per chart, a
+    processor reopened over it, and the store's (doc_id, image_path)
+    chart keys in doc_id order."""
     from pyspark.sql import functions as F
 
     from document_parsing_etl_pipeline_spark.sources import objectstore
@@ -247,17 +317,76 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
                       .alias("content"), F.lit("image/png")
                       .alias("content_type")),
         root)
-    r = charts.select("doc_id", "image_path").orderBy("doc_id").first()
-    chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
+    keys = charts.select("doc_id", "image_path").orderBy(
+        "doc_id", "image_path").collect()
     disk = DocumentProcessor(spark, store_root=root)
     disk.tables  # noqa: B018  (reopen: infers the three schemas)
-    info, n_detail = _jobs_in_group(
-        spark, "api-detail", lambda: disk.get_document_info(r.doc_id))
-    assert [c["chunk_index"] for c in info["chunks"]] == list(
-        range(info["total_chunks"]))
-    assert n_detail <= 3
-    chart, n_chart = _jobs_in_group(
-        spark, "api-chart",
-        lambda: disk.get_chart_with_image(r.doc_id, chart_id))
-    assert chart["image_data"] == r.image_path.encode()
-    assert n_chart <= 2
+    return root, disk, keys
+
+
+def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
+    """Over a reopened store, detail runs its three reads as three
+    concurrent jobs (the chunk list is sorted on the driver, not by a
+    global orderBy), chart + blob runs the row lookup and the blob read
+    as two concurrent jobs, and a chunk range is one job with no
+    exchange. Short concurrent jobs do not always overlap (each thread
+    still plans and compiles its read first), so overlap is asked of
+    one request of five; run one after another, no two ever do."""
+    import uuid
+
+    _, disk, keys = _reopened_store(spark, tmp_path)
+    group = uuid.uuid4().hex
+    detail_spans = []
+    for doc_id in range(30, 35):
+        g = f"api-detail-{doc_id}-{group}"
+        info, n_detail = _jobs_in_group(
+            spark, g, lambda: disk.get_document_info(doc_id))
+        assert [c["chunk_index"] for c in info["chunks"]] == list(
+            range(info["total_chunks"]))
+        assert n_detail == 3
+        detail_spans.append(_job_spans(spark, g))
+    assert any(map(_overlapping, detail_spans))
+    chart_spans = []
+    for r in keys[:5]:
+        chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
+        g = f"api-chart-{r.image_path}-{group}"
+        chart, n_chart = _jobs_in_group(
+            spark, g, lambda: disk.get_chart_with_image(r.doc_id, chart_id))
+        assert chart["image_data"] == r.image_path.encode()
+        assert n_chart == 2
+        chart_spans.append(_job_spans(spark, g))
+    assert len(chart_spans) == 5
+    assert any(map(_overlapping, chart_spans))
+    chunks = disk.get_document_chunks(30, 1, 3)
+    rows, n_range = _jobs_in_group(spark, f"api-range-{group}", chunks.collect)
+    assert [c.chunk_index for c in rows] == [1, 2, 3]
+    assert n_range == 1
+    assert _plan_counts(chunks)["exchanges"] == 0
+
+
+def test_detail_read_failure_raises_after_the_other_reads_end(
+        spark, tmp_path):
+    """When one of detail's concurrent reads fails (the chunks files
+    are gone after the reopen), the error raises out of
+    get_document_info, and only once the other reads have ended: the
+    charts read is slowed to outlast the failing one."""
+    import shutil
+    import time
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    root, disk, keys = _reopened_store(spark, tmp_path)
+    slow = F.udf(lambda d: time.sleep(1.0) is None, "boolean")
+    disk._tables["charts"] = disk.tables["charts"].where(slow("doc_id"))
+    shutil.rmtree(f"{root}/chunks")
+    group = f"api-detail-fails-{uuid.uuid4().hex}"
+    with pytest.raises(Exception, match="chunks"):
+        _jobs_in_group(spark, group,
+                       lambda: disk.get_document_info(keys[0].doc_id))
+    raised_ms = time.time() * 1e3
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    spans = _job_spans(spark, group)
+    assert len(spans) == 3
+    assert all(end is not None and end <= raised_ms for _, end in spans)
+    assert max(end for _, end in spans) - min(end for _, end in spans) >= 500

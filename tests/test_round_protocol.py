@@ -428,3 +428,66 @@ def test_tokenizer_lint_catches_each_spelling(tmp_path):
         'x = F.regexp_extract_all(c, F.lit(r"\\S+"), 0)\n')
     assert inline_tokenizer_sites(tmp_path) == [
         "m.py:1", "m.py:2", "m.py:3", "m.py:4"]
+
+
+# ------------------------------------------------- one concurrency helper
+
+_THREAD_NAMES = ("ThreadPoolExecutor", "inheritable_thread_target")
+
+
+def thread_helper_sites(root: pathlib.Path = _PKG) -> list[str]:
+    """References to ``ThreadPoolExecutor`` or
+    ``inheritable_thread_target`` (a name, an attribute or an imported
+    name) anywhere but the body of ``session.concurrently`` and
+    session.py's own module-level imports."""
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == root / "session.py":
+            for node in tree.body:
+                if (isinstance(node, (ast.Import, ast.ImportFrom))
+                        or (isinstance(node, ast.FunctionDef)
+                            and node.name == "concurrently")):
+                    allowed.update(map(id, ast.walk(node)))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if name in _THREAD_NAMES and id(node) not in allowed:
+                sites.append(f"{path.relative_to(root)}:{node.lineno}")
+    return sites
+
+
+def test_threads_only_in_session_concurrently():
+    """Concurrent Spark jobs are submitted only through
+    session.concurrently (one thread per call, each wrapped in its own
+    inheritable_thread_target): a second copy of the pattern fails
+    here."""
+    assert thread_helper_sites() == []
+
+
+def test_thread_helper_lint_catches_a_planted_copy(tmp_path):
+    (tmp_path / "session.py").write_text(
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "from pyspark import inheritable_thread_target\n"
+        "def concurrently(spark, calls):\n"
+        "    with ThreadPoolExecutor(len(calls)) as pool:\n"
+        "        return [pool.submit(inheritable_thread_target(spark)(c))\n"
+        "                for c in calls]\n"
+        "def other(spark, f):\n"
+        "    return inheritable_thread_target(spark)(f)\n")
+    (tmp_path / "m.py").write_text(
+        "from concurrent.futures import ThreadPoolExecutor as Pool\n"
+        "import concurrent.futures as cf\n"
+        "import pyspark\n"
+        "p = cf.ThreadPoolExecutor(3)\n"
+        "t = pyspark.inheritable_thread_target(spark)\n"
+        "from .session import concurrently\n")
+    assert thread_helper_sites(tmp_path) == [
+        "m.py:1", "m.py:4", "m.py:5", "session.py:8"]
