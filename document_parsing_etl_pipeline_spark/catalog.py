@@ -2,6 +2,15 @@
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file/dir per table under an sf dir.
+
+``load_table`` resolves each table's schema once per file version per
+Spark application: the first read of a path infers the schema (one
+Spark job over the parquet footers) and memoizes it; every later read
+of the same files is built with that schema and runs no job. The memo
+key is the application id, the absolute path and the name, size and
+mtime of every file under the path, so a rewritten table (a new part
+file, a new size or a new mtime) misses the memo and is inferred
+again: a rewrite cannot serve a stale schema.
 """
 
 from __future__ import annotations
@@ -9,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -18,13 +28,57 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# schema memo for load_table: (applicationId, absolute path, sorted
+# (file, size, mtime_ns) under the path) -> StructType
+_SCHEMA: dict = {}
+
 # decision memo for spread_scan: (applicationId, path-ish key) ->
 # bool, so the plan->RDD partition probe runs once per session per
 # relation, not once per query build
 _SPREAD_DECISION: dict = {}
 
 
+def _file_version(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under ``path`` (one file,
+    or a Spark-written directory), sorted; ``None`` when it cannot be
+    listed, so the read goes to Spark uncached and raises there."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        out = []
+        for d, _, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(d, f))
+                out.append((os.path.relpath(os.path.join(d, f), path),
+                            st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession,
+                  path: str) -> tuple[DataFrame, StructType]:
+    """A fresh relation over ``path`` (new attribute ids, so self-joins
+    stay unambiguous) and its schema. The schema comes from the memo
+    when this file version was read before in this application; only
+    a new version infers. A path that cannot be listed locally (a
+    remote URI) is read uncached."""
+    version = _file_version(path)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path), version)
+    schema = _SCHEMA.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), schema
+    df = spark.read.parquet(path)
+    if version is not None:
+        _SCHEMA[key] = df.schema
+    return df, df.schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``name`` under ``sf_dir`` as a new DataFrame. The schema of each
+    file version is inferred once per application (the module memo);
+    a repeat load of unchanged files runs no Spark job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
@@ -32,10 +86,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # across driver generations: TIMESTAMP(NANOS) (readable only as
         # long via the legacy conf) and TIMESTAMP(MICROS) (read as
         # TIMESTAMP_NTZ). All queries derive epoch micros with
-        # `ts div 1000`, so normalize both to nanos-as-long here.
+        # `ts div 1000`, so normalize both to nanos-as-long here. The
+        # conf is set before every read, memo hit or not: the scan of a
+        # NANOS column needs it, not only the schema inference.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        ts_type = df.schema["ts"].dataType.typeName()
+        df, schema = _read_parquet(
+            spark, os.path.join(sf_dir, "events.parquet"))
+        ts_type = schema["ts"].dataType.typeName()
         if ts_type == "timestamp_ntz":
             # NTZ wall-clock == UTC epoch for this data; DuckDB's
             # epoch_us(ts) reads the same wall clock, so oracles agree.
@@ -57,7 +114,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.unix_micros(F.col("ts")) * F.lit(1000)
             )
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))[0]
 
 
 def spread_scan(df: DataFrame, key: str = "doc_id") -> DataFrame:

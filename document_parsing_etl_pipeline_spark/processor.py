@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from functools import partial
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -161,7 +162,9 @@ class DocumentProcessor:
         """The chart row with its image bytes, or ``None`` when the row
         is missing. The blob key derives from ``(doc_id, chart_id)``, so
         with a ``store_root`` the row lookup and the blob read run as
-        concurrent jobs."""
+        concurrent jobs. A store with no ``blobs/`` directory (one
+        ``process_documents`` wrote) has no images: the row comes back
+        without ``image_data`` / ``content_type``."""
         charts = self.tables["charts"]
 
         def chart() -> list:
@@ -172,8 +175,13 @@ class DocumentProcessor:
             ).collect()
 
         def blob() -> list:
-            return objectstore.read_blob(
-                self.spark, self.store_root, doc_id, chart_id).collect()
+            try:
+                return objectstore.read_blob(
+                    self.spark, self.store_root, doc_id, chart_id).collect()
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
+                return []
 
         found, *blobs = concurrently(
             self.spark, [chart, blob] if self.store_root else [chart])

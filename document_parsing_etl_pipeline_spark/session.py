@@ -49,6 +49,16 @@ DEFAULT_CONF = {
     # (35.2/35.5/37.0s), and 300s still bounds block buildup across a
     # 322-query sweep.
     "spark.cleaner.periodicGC.interval": "300s",
+    # PySpark captures the Python call site of every F.col and Column
+    # method (an inspect stack walk plus extra py4j round trips) to
+    # attach a "DataFrame query context" (file:line) to errors. That is
+    # about half of a doc-store build's construction: 727 -> 347 py4j
+    # call commands with it off. The trade: an AnalysisException loses
+    # the Python file:line context; Spark's own error message and plan
+    # stay the same. PySpark reads this once per process, at the first
+    # Column call, so it must be in the session conf before then
+    # (get_spark sets it as the session is built).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -83,3 +83,16 @@ def spark():
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield s
+
+
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

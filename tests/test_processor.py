@@ -6,6 +6,8 @@ from pyspark.sql import Row
 
 from document_parsing_etl_pipeline_spark.processor import DocumentProcessor
 
+from conftest import jobs_in_group
+
 
 @pytest.fixture(scope="module")
 def proc(spark, tmp_path_factory):
@@ -167,6 +169,26 @@ def test_reopened_store_answers_like_in_memory_tables(spark, tmp_path):
         assert want in same_path and got in same_path
 
 
+def test_chart_without_blob_store_has_no_image(spark, tmp_path):
+    """process_documents writes no blobs/ directory. Chart + blob over
+    such a store answers as the in-memory tables do: the row without
+    image_data / content_type, and None for a missing row (doc 37 has
+    no charts)."""
+    import os
+
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(
+        _slice(spark))
+    assert not os.path.exists(os.path.join(root, "blobs"))
+    mem = DocumentProcessor(spark)
+    mem.process_documents(_slice(spark))
+    disk = DocumentProcessor(spark, store_root=root)
+    got = disk.get_chart_with_image(30, 1)
+    assert got is not None and "image_data" not in got
+    assert got == mem.get_chart_with_image(30, 1)
+    assert disk.get_chart_with_image(37, 1) is None
+
+
 def _slice(spark):
     from pyspark.sql import functions as F
 
@@ -175,19 +197,6 @@ def _slice(spark):
 
     return load_table(spark, SF_DIR, "documents").where(
         F.col("doc_id").between(30, 39))
-
-
-def _jobs_in_group(spark, group: str, fn):
-    """Run ``fn`` under job group ``group``; return its result and the
-    number of Spark jobs the group ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_ingest_writes_over_one_cached_chunk_pass(spark, tmp_path,
@@ -207,8 +216,8 @@ def test_ingest_writes_over_one_cached_chunk_pass(spark, tmp_path,
     counted = []
 
     def counting_read(*a, **kw):
-        out, n = _jobs_in_group(spark, f"readback-{group}",
-                                lambda: read(*a, **kw))
+        out, n = jobs_in_group(spark, f"readback-{group}",
+                               lambda: read(*a, **kw))
         counted.append(n)
         return out
 
@@ -216,7 +225,7 @@ def test_ingest_writes_over_one_cached_chunk_pass(spark, tmp_path,
     cached = sc._jsc.getPersistentRDDs().size()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
-    tables, n_ingest = _jobs_in_group(
+    tables, n_ingest = jobs_in_group(
         spark, f"ingest-{group}",
         lambda: DocumentProcessor(spark, store_root=root).process_documents(
             _slice(spark)))
@@ -339,7 +348,7 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     detail_spans = []
     for doc_id in range(30, 35):
         g = f"api-detail-{doc_id}-{group}"
-        info, n_detail = _jobs_in_group(
+        info, n_detail = jobs_in_group(
             spark, g, lambda: disk.get_document_info(doc_id))
         assert [c["chunk_index"] for c in info["chunks"]] == list(
             range(info["total_chunks"]))
@@ -350,7 +359,7 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     for r in keys[:5]:
         chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
         g = f"api-chart-{r.image_path}-{group}"
-        chart, n_chart = _jobs_in_group(
+        chart, n_chart = jobs_in_group(
             spark, g, lambda: disk.get_chart_with_image(r.doc_id, chart_id))
         assert chart["image_data"] == r.image_path.encode()
         assert n_chart == 2
@@ -358,7 +367,7 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     assert len(chart_spans) == 5
     assert any(map(_overlapping, chart_spans))
     chunks = disk.get_document_chunks(30, 1, 3)
-    rows, n_range = _jobs_in_group(spark, f"api-range-{group}", chunks.collect)
+    rows, n_range = jobs_in_group(spark, f"api-range-{group}", chunks.collect)
     assert [c.chunk_index for c in rows] == [1, 2, 3]
     assert n_range == 1
     assert _plan_counts(chunks)["exchanges"] == 0
@@ -382,8 +391,8 @@ def test_detail_read_failure_raises_after_the_other_reads_end(
     shutil.rmtree(f"{root}/chunks")
     group = f"api-detail-fails-{uuid.uuid4().hex}"
     with pytest.raises(Exception, match="chunks"):
-        _jobs_in_group(spark, group,
-                       lambda: disk.get_document_info(keys[0].doc_id))
+        jobs_in_group(spark, group,
+                      lambda: disk.get_document_info(keys[0].doc_id))
     raised_ms = time.time() * 1e3
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     spans = _job_spans(spark, group)
