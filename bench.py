@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from document_parsing_etl_pipeline_spark.plans.queries import QUERIES
-from document_parsing_etl_pipeline_spark.session import get_spark
+from document_parsing_etl_pipeline_spark.session import codegen_stats, get_spark
 
 from pyspark.sql import functions as F
 
@@ -616,6 +616,10 @@ def main():
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     stage_metrics: dict[str, dict] = {}
+    # classes Janino compiled and seconds it took, per timed run (two
+    # py4j reads around each run, no Spark job): a warm run that still
+    # compiles is re-generating code the codegen cache did not keep
+    codegen: dict[str, dict] = {}
     read_stages = _stage_metrics_reader(spark)
     # default 2 keeps the driver's per-round run inside its time
     # budget at 169 queries; the committed BENCH_LOCAL_r06.json was
@@ -633,15 +637,21 @@ def main():
     for name in names:
         fn = QUERIES[name]
         durations = []
+        compiles: list[int] = []
+        compile_s: list[float] = []
         pre_max = -1
         try:
             for i in range(runs):  # best-of-N: steady state, not noise
                 if read_stages is not None and i == runs - 1:
                     pre_max = max(read_stages(), default=-1)
+                n0, c0 = codegen_stats(spark)
                 t0 = time.time()
                 fn(spark, sf_dir).write.mode("overwrite").format(
                     "noop").save()
                 durations.append(round(time.time() - t0, 3))
+                n1, c1 = codegen_stats(spark)
+                compiles.append(n1 - n0)
+                compile_s.append(round(c1 - c0, 3))
         except Exception as e:
             # record and keep going: one run should surface EVERY
             # failing query (ANSI overflows at scaled-up corpora come
@@ -651,6 +661,8 @@ def main():
             continue
         timings[name] = min(durations)
         all_runs[name] = durations
+        codegen[name] = {"codegen_compiles": compiles,
+                         "codegen_compile_s": compile_s}
         # Measurement hygiene (round 14, declared in
         # OPTIMIZATION_r14.md): queries that localCheckpoint a shared
         # intermediate leave dead RDD blocks behind once their
@@ -880,6 +892,7 @@ def main():
                        "runs_detail": all_runs, "meta": meta,
                        "streaming": streaming,
                        "stage_metrics": stage_metrics,
+                       "codegen": codegen,
                        "shuffle_regressions": shuffle_regressions,
                        "errors": errors,
                        "regressions": regressions}, f, indent=1)

@@ -182,8 +182,19 @@ _DOCSTORE_CTE = f"""
 """
 
 
-def _docstore_tables(spark, sf_dir):
-    return docstore.build_docstore(load_table(spark, sf_dir, "documents"))
+def _docstore_tables(spark, sf_dir, *names):
+    """The named doc-store tables over the sf documents table; a table
+    the query does not read is not built. The documents table
+    aggregates the chunks table, so naming it builds that plan too."""
+    docs = load_table(spark, sf_dir, "documents")
+    out = {}
+    if "chunks" in names or "documents" in names:
+        out["chunks"] = docstore.chunks_table(docs)
+    if "documents" in names:
+        out["documents"] = docstore.documents_table(docs, out["chunks"])
+    if "charts" in names:
+        out["charts"] = docstore.charts_table(docs)
+    return out
 
 
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")

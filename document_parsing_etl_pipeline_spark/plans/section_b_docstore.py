@@ -19,7 +19,7 @@ def q_documents_list(spark, sf_dir):
     """DocumentResponse parity: every list row carries metainfo +
     created_at/updated_at (reference api.py:15-21 DocumentResponse,
     schema.py Document.metainfo/created_at/updated_at)."""
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "documents")
     df = t["documents"].where((F.col("doc_id") >= 10) & (F.col("doc_id") < 60))
     return _long(
         df.select(
@@ -50,7 +50,7 @@ def q_document_detail(spark, sf_dir):
     function docstore.document_detail — the SAME plan runs
     exchange-free over write_bucketed_tables output (plan-asserted
     in tests/test_docstore_api.py)."""
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "documents", "chunks")
     df = docstore.document_detail(
         t["documents"].where(F.col("doc_id") < 20), t["chunks"]
     )
@@ -91,7 +91,7 @@ SELECT doc_id, chunk_index, token_count FROM chunks_f
 WHERE doc_id < 5 AND doc_id <> 3
 """)
 def q_doc_delete(spark, sf_dir):
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "chunks")
     deleted = docstore.delete_document(t, 3)
     df = deleted["chunks"].where(F.col("doc_id") < 5).select(
         "doc_id", "chunk_index", "token_count"
@@ -112,7 +112,7 @@ def q_doc_update(spark, sf_dir):
     """BaseRepository.update parity (reference base.py:38-53):
     update-then-read — doc 7's lang is overwritten and its updated_at
     bumps (onupdate), every other row unchanged."""
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "documents")
     updated = docstore.update_document_meta(t["documents"], 7, {"lang": "id"})
     return updated.where(F.col("doc_id") < 20).select(
         "doc_id", "filename", "lang",
@@ -153,7 +153,7 @@ def q_chunk_entities(spark, sf_dir):
     chunk (DocumentChunk.entities parity, reference schema.py:17) —
     the map is exploded to one row per entity type so the oracle can
     cross-check every array."""
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "chunks")
     df = (
         t["chunks"]
         .select(
@@ -183,7 +183,7 @@ def q_chart_info(spark, sf_dir):
     api.py:30-35 ChartResponse): the store's typed info struct
     (type, index, image_path, metadata.level/caption) projected
     flat, plus created_at."""
-    t = _docstore_tables(spark, sf_dir)
+    t = _docstore_tables(spark, sf_dir, "charts")
     df = t["charts"].select(
         "doc_id", "chart_type", "chart_index", "image_path",
         F.col("info.type").alias("info_type"),

@@ -4,6 +4,35 @@ Local testing runs on local[N]; the conf below is chosen so the same
 logical plans survive a 1000-executor cluster: AQE on (runtime skew-join
 + coalesce), broadcast threshold sized for dimension tables, Arrow
 enabled for the few Pandas-UDF boundaries.
+
+Generated code. Spark compiles each whole-stage-codegen stage and each
+generated projection / ordering into a Java class (Janino, about 9-16
+ms each) and keeps the compiled classes in one JVM-wide LRU cache keyed
+on the generated source. Measured working sets (distinct classes one
+pass compiles, 8 shuffle partitions, a cache too large to evict):
+``registry_mix``'s three heavy queries 120-129 after its light ones
+(``q_naive_bayes_lang`` alone 71-73; local[4]); the whole 322-query
+registry 3,545 at sf0.001 and 3,543 at sf0.01 (local[2]). Spark's
+default cache of 100 entries holds less than the heavy set, so a warm
+round of ``registry_mix``'s eight queries recompiled 151 classes (123
+of them heavy), and a warm second sweep of the registry at sf0.001
+recompiled 5,842 (52 s of Janino). ``DEFAULT_CONF`` sizes the cache at
+4,096, the next power of two, and keeps class names free of the
+codegen stage id: AQE re-optimizes after each finished stage,
+concurrent stages finish in a varying order, and a stage id in the
+class name turned unchanged code into a new cache key.
+
+The cost: cached classes stay in Metaspace. After a cold registry
+sweep at sf0.001 and a full GC the JVM held 210 MB of Metaspace with
+this cache and 182 MB with Spark's default, about 8 KB per cached class
+(a full 4,096-entry cache: about 33 MB). Stack traces name
+``GeneratedIterator``, not ``GeneratedIteratorForCodegenStage<N>``;
+``Dataset.debugCodegen`` still prints each class's ``codegenStageId``
+comment, which maps a frame to its stage. A warm pass still compiles
+code whose source differs from run to run, such as an inlined literal:
+37 classes in a warm registry sweep, and 2 per API read of a new
+``doc_id`` (6 for a detail request's three reads). ``codegen_stats``
+reads the JVM's compile count and compile seconds.
 """
 
 from __future__ import annotations
@@ -59,6 +88,20 @@ DEFAULT_CONF = {
     # Column call, so it must be in the session conf before then
     # (get_spark sets it as the session is built).
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Compiled generated classes kept (Spark's default: 100). The
+    # registry's working set is 3,545 classes at sf0.001 and 3,543 at
+    # sf0.01, registry_mix's heavy set 120-129 (module docstring);
+    # with 100 a warm heavy pass recompiled about 120 classes. Each
+    # cached class holds about 8 KB of Metaspace (a full cache: about
+    # 33 MB). A static conf: the JVM reads it once, when it compiles
+    # its first class.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # No codegen stage id in generated class names: AQE finishes
+    # concurrent stages in a varying order, so the same code got a new
+    # name, a new cache key and a new compile (q_naive_bayes_lang 10-18
+    # classes per warm run with the larger cache alone). Stack traces
+    # lose the stage suffix; debugCodegen still prints codegenStageId.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -78,6 +121,23 @@ def get_spark(app_name: str = "document-parsing-etl-spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) by Spark's code
+    generator in this JVM since it started: the count of Janino
+    compilations (``CodegenMetrics.METRIC_COMPILATION_TIME``, one
+    update per codegen-cache miss) and ``CodeGenerator.compileTime``
+    (nanoseconds). Take the difference of two reads to count one
+    query's compiles. In local mode the executors share the driver's
+    JVM, so every compile is counted; on a cluster this is the
+    driver's share."""
+    jvm = spark._jvm
+    compiles = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount())
+    nanos = (jvm.org.apache.spark.sql.catalyst.expressions.codegen
+             .CodeGenerator.compileTime())
+    return int(compiles), nanos / 1e9
 
 
 def concurrently(spark: SparkSession,

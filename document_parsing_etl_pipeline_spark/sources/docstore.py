@@ -62,15 +62,20 @@ def _ingest_ts(id_col: str = "doc_id"):
 def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
     """Run the full parse pipeline and produce the three store tables.
 
-    Column parity with the reference schema (schema.py:11-57):
-    documents carry created_at / updated_at timestamps and a
-    ``metainfo`` map (Document.metainfo JSON); chunks carry a typed
-    ``entities`` map<string,array<string>> (DocumentChunk.entities)
-    plus ``chunk_metadata`` (token_count, as pdf_parser.py
-    _create_chunk_data builds it) and created_at; charts carry the
-    ``info`` struct (ChartData.info: type/index/image_path/metadata)
-    and created_at.
-    """
+    Column parity with the reference schema (schema.py:11-57) is kept
+    by the per-table builders below; a reader of one or two tables
+    builds only those. The documents table aggregates the chunks frame
+    built here, so ``write_docstore``'s cached chunks serve both."""
+    chunks = chunks_table(docs)
+    return {"documents": documents_table(docs, chunks), "chunks": chunks,
+            "charts": charts_table(docs)}
+
+
+def documents_table(docs: DataFrame, chunks: DataFrame) -> DataFrame:
+    """The documents table: created_at / updated_at timestamps, a
+    ``metainfo`` map (Document.metainfo JSON) and the chunk rollup
+    (``chunk_stats``) of ``chunks``, the frame ``chunks_table`` built
+    over the same ``docs``."""
     documents = docs.select(
         "doc_id",
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string"), F.lit(".txt")).alias(
@@ -85,10 +90,20 @@ def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
         _ingest_ts().alias("created_at"),
         _ingest_ts().alias("updated_at"),
     )
+    return documents.join(chunk_stats(chunks), "doc_id", "left").fillna(
+        {"total_chunks": 0, "total_tokens": 0}
+    )
+
+
+def chunks_table(docs: DataFrame) -> DataFrame:
+    """The chunks table: a typed ``entities``
+    map<string,array<string>> (DocumentChunk.entities) plus
+    ``chunk_metadata`` (token_count, as pdf_parser.py
+    _create_chunk_data builds it) and created_at."""
     chunks = extract_entities(
         chunk_documents(docs), text_col="text_content"
     )
-    chunks = chunks.select(
+    return chunks.select(
         "doc_id", "chunk_index", "text_content", "token_count",
         # typed entity map, mirroring DocumentChunk.entities JSON keys
         # (reference pdf_parser.py:89-107)
@@ -106,11 +121,12 @@ def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
         "n_persons", "n_organizations", "n_dates", "n_locations", "n_misc",
         _ingest_ts().alias("created_at"),
     )
-    stats = chunk_stats(chunks)
-    documents = documents.join(stats, "doc_id", "left").fillna(
-        {"total_chunks": 0, "total_tokens": 0}
-    )
-    charts = chart_inventory(docs).select(
+
+
+def charts_table(docs: DataFrame) -> DataFrame:
+    """The charts table: the ``info`` struct (ChartData.info:
+    type/index/image_path/metadata) and created_at."""
+    return chart_inventory(docs).select(
         "doc_id", "chart_type", "chart_index", "image_path",
         # ChartData.info parity (reference pdf_parser.py:235-239):
         # {type, index, image_path, metadata:{level, caption}}. Layout
@@ -127,7 +143,6 @@ def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
         ).alias("info"),
         _ingest_ts().alias("created_at"),
     )
-    return {"documents": documents, "chunks": chunks, "charts": charts}
 
 
 def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
