@@ -22,18 +22,28 @@ generation, scheduling), not scan work, so a request that needs more
 than one read builds and runs them as concurrent jobs through
 ``session.concurrently``: detail runs its documents, chunks and charts
 reads as 3 concurrent jobs, chart + blob its row lookup and blob read
-as 2. A chunk range is 1 job with no exchange. A processor opened over
-an existing ``store_root`` reopens the store on first use, inferring
-the three table schemas as 3 concurrent jobs.
+as 2. A chunk range is 1 job with no exchange.
+
+With a ``store_root``, every API read goes through one opener,
+``docstore.open_store``: the tables (and ``blobs/`` when it exists) are
+served from in-memory snapshots keyed on the files' version, shared by
+every processor of the application and materialized once, on the first
+read. Each request checks the version again (a directory listing), so
+a rewritten store is read afresh, and no request decodes parquet. Every
+key and bound goes through ``docstore.key_predicate``, which keeps it
+out of the generated code: a read with a new key compiles no class.
+``update_document`` / ``delete_document`` change this processor's plans
+only, replayed over the snapshot on each read; they never reach the
+shared snapshot or the files, so a fresh processor does not see them.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import partial
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .session import concurrently
 from .sources import docstore, objectstore
@@ -43,7 +53,10 @@ class DocumentProcessor:
     def __init__(self, spark: SparkSession, store_root: str | None = None):
         self.spark = spark
         self.store_root = store_root
+        # the tables process_documents built, read when no store_root
         self._tables: dict[str, DataFrame] | None = None
+        # update / delete plans, applied in order over the tables read
+        self._mutations: list[Callable[[dict], dict]] = []
 
     # ------------------------------------------------------ ingest
 
@@ -54,14 +67,18 @@ class DocumentProcessor:
         jobs over one chunk + NER pass (``docstore.write_docstore``)
         and the returned tables read the written store back with the
         schemas they were written with, so the read-back runs no job.
-        A failed write raises here."""
-        self._tables = docstore.build_docstore(docs)
-        if self.store_root:
-            docstore.write_docstore(self._tables, self.store_root)
-            self._tables = docstore.read_docstore(
-                self.spark, self.store_root,
-                {name: df.schema for name, df in self._tables.items()})
-        return self._tables
+        They are not this processor's read path: API reads open the
+        store's snapshot (``tables``). A failed write raises here.
+        Earlier updates and deletes are dropped."""
+        tables = docstore.build_docstore(docs)
+        self._mutations = []
+        if not self.store_root:
+            self._tables = tables
+            return tables
+        docstore.write_docstore(tables, self.store_root)
+        return docstore.read_docstore(
+            self.spark, self.store_root,
+            {name: df.schema for name, df in tables.items()})
 
     def upload_document(self, doc_id: int, text: str, watch_dir: str,
                         lang: str = "en", source: str = "upload") -> str:
@@ -96,14 +113,21 @@ class DocumentProcessor:
 
     @property
     def tables(self) -> dict[str, DataFrame]:
-        """The store's three tables; on first use over a ``store_root``
-        nothing was processed into, the store is reopened and its three
-        schemas are inferred as concurrent jobs."""
-        if self._tables is None:
-            if not self.store_root:
-                raise RuntimeError("no documents processed and no store_root")
-            self._tables = docstore.read_docstore(self.spark, self.store_root)
-        return self._tables
+        """The store's three tables with this processor's updates and
+        deletes applied. Over a ``store_root`` they are the snapshot of
+        the files as they are now (``docstore.open_store``; the first
+        read of a file version materializes it, as concurrent jobs);
+        without one, the tables ``process_documents`` built."""
+        if self.store_root:
+            tables = docstore.open_store(self.spark, self.store_root)
+            tables.pop("blobs", None)
+        elif self._tables is None:
+            raise RuntimeError("no documents processed and no store_root")
+        else:
+            tables = self._tables
+        for mutate in self._mutations:
+            tables = mutate(tables)
+        return tables
 
     # ------------------------------------------------------ queries
 
@@ -113,7 +137,7 @@ class DocumentProcessor:
         page and that row is not repeated."""
         return (
             self.tables["documents"]
-            .where(F.col("doc_id") > after_id)
+            .where(docstore.key_predicate("doc_id", ">", after_id))
             .orderBy("doc_id")
             .limit(limit)
         )
@@ -125,10 +149,11 @@ class DocumentProcessor:
         chunks are a bounded list, sorted here rather than by a global
         ``orderBy`` (a range-sample job and an exchange)."""
         tables = self.tables
+        key = docstore.key_predicate("doc_id", "==", doc_id)
 
         def rows(name: str) -> list[dict]:
             return [r.asDict() for r in
-                    tables[name].where(F.col("doc_id") == doc_id).collect()]
+                    tables[name].where(key).collect()]
 
         docs, chunks, charts = concurrently(
             self.spark,
@@ -147,16 +172,17 @@ class DocumentProcessor:
         by ``chunk_index``. The rows are one document's, so one
         partition sorted in place is a total order: one job, with no
         range-sample job and no exchange."""
-        pred = F.col("doc_id") == doc_id
+        pred = docstore.key_predicate("doc_id", "==", doc_id)
         if start_chunk is not None:
-            pred &= F.col("chunk_index") >= start_chunk
+            pred &= docstore.key_predicate("chunk_index", ">=", start_chunk)
         if end_chunk is not None:
-            pred &= F.col("chunk_index") <= end_chunk
+            pred &= docstore.key_predicate("chunk_index", "<=", end_chunk)
         return (self.tables["chunks"].where(pred)
                 .coalesce(1).sortWithinPartitions("chunk_index"))
 
     def get_document_charts(self, doc_id: int) -> DataFrame:
-        return self.tables["charts"].where(F.col("doc_id") == doc_id)
+        return self.tables["charts"].where(
+            docstore.key_predicate("doc_id", "==", doc_id))
 
     def get_chart_with_image(self, doc_id: int, chart_id: int) -> dict | None:
         """The chart row with its image bytes, or ``None`` when the row
@@ -169,9 +195,10 @@ class DocumentProcessor:
 
         def chart() -> list:
             return charts.where(
-                (F.col("doc_id") == doc_id)
-                & (F.col("image_path")
-                   == objectstore.object_path(doc_id, chart_id))
+                docstore.key_predicate("doc_id", "==", doc_id)
+                & docstore.key_predicate(
+                    "image_path", "==",
+                    objectstore.object_path(doc_id, chart_id))
             ).collect()
 
         def blob() -> list:
@@ -196,11 +223,18 @@ class DocumentProcessor:
 
     # ------------------------------------------------------ mutation
 
+    # Both change this processor's reads only: the files and the shared
+    # snapshot stay as they are, so a fresh processor does not see them.
+
     def update_document(self, doc_id: int, updates: dict) -> None:
-        self._tables = dict(self.tables)
-        self._tables["documents"] = docstore.update_document_meta(
-            self._tables["documents"], doc_id, updates
-        )
+        updates = dict(updates)
+
+        def update(tables: dict) -> dict:
+            return {**tables, "documents": docstore.update_document_meta(
+                tables["documents"], doc_id, updates)}
+
+        self._mutations.append(update)
 
     def delete_document(self, doc_id: int) -> None:
-        self._tables = docstore.delete_document(self.tables, doc_id)
+        self._mutations.append(
+            partial(docstore.delete_document, doc_id=doc_id))

@@ -29,10 +29,13 @@ this cache and 182 MB with Spark's default, about 8 KB per cached class
 ``GeneratedIterator``, not ``GeneratedIteratorForCodegenStage<N>``;
 ``Dataset.debugCodegen`` still prints each class's ``codegenStageId``
 comment, which maps a frame to its stage. A warm pass still compiles
-code whose source differs from run to run, such as an inlined literal:
-37 classes in a warm registry sweep, and 2 per API read of a new
-``doc_id`` (6 for a detail request's three reads). ``codegen_stats``
-reads the JVM's compile count and compile seconds.
+code whose source differs from run to run, such as an inlined numeric
+literal: 37 classes in a warm registry sweep. API reads keep their keys
+out of the source (``docstore.key_predicate`` passes each key as an
+array literal, a reference object), so a read of a new ``doc_id``
+compiles nothing; with a plain ``doc_id == <key>`` it compiled 2
+classes, and a detail request's three reads 6. ``codegen_stats`` reads
+the JVM's compile count and compile seconds.
 """
 
 from __future__ import annotations

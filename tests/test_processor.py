@@ -159,9 +159,8 @@ def test_reopened_store_answers_like_in_memory_tables(spark, tmp_path):
                     == rows(mem.get_document_chunks(doc_id, start, end)))
     assert disk.get_chart_with_image(37, 1) is None
     for r in charts.select("doc_id", "image_path").distinct().collect():
-        chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
-        got = disk.get_chart_with_image(r.doc_id, chart_id)
-        want = mem.get_chart_with_image(r.doc_id, chart_id)
+        got = disk.get_chart_with_image(r.doc_id, _chart_id(r.image_path))
+        want = mem.get_chart_with_image(r.doc_id, _chart_id(r.image_path))
         assert got.pop("image_data") == r.image_path.encode()
         assert got.pop("content_type") == "image/png"
         same_path = [c for c in detail(mem, r.doc_id)["charts"]
@@ -296,9 +295,9 @@ def _overlapping(spans: list[tuple[int, int]]) -> bool:
                for s2, e2 in spans[i + 1:])
 
 
-def _plan_counts(df) -> dict:
-    """perfbench's plan-node counts for ``df``, loaded from its file:
-    perfbench is a script directory, not a package."""
+def _tracing():
+    """perfbench's tracing module, loaded from its file: perfbench is a
+    script directory, not a package."""
     import importlib.util
     import pathlib
 
@@ -307,7 +306,21 @@ def _plan_counts(df) -> dict:
     spec = importlib.util.spec_from_file_location("perfbench_tracing", path)
     tracing = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tracing)
-    return tracing.plan_counts(df)
+    return tracing
+
+
+def _plan_counts(df) -> dict:
+    """perfbench's plan-node counts for ``df``."""
+    return _tracing().plan_counts(df)
+
+
+def _scan_nodes(df) -> list[str]:
+    """Names of the scan nodes ``df``'s executed plan reads: parquet
+    file scans and in-memory table scans (not the plan a cached
+    relation was built from)."""
+    nodes = _tracing().plan_nodes(df._jdf.queryExecution().executedPlan())
+    return [name for name in (n.nodeName() for n in nodes)
+            if name.startswith("Scan") or name == "InMemoryTableScan"]
 
 
 def _reopened_store(spark, tmp_path):
@@ -329,8 +342,12 @@ def _reopened_store(spark, tmp_path):
     keys = charts.select("doc_id", "image_path").orderBy(
         "doc_id", "image_path").collect()
     disk = DocumentProcessor(spark, store_root=root)
-    disk.tables  # noqa: B018  (reopen: infers the three schemas)
+    disk.tables  # noqa: B018  (reopen: materializes the store's snapshot)
     return root, disk, keys
+
+
+def _chart_id(image_path: str) -> int:
+    return int(image_path.rsplit("/", 1)[1].split(".")[0])
 
 
 def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
@@ -339,11 +356,14 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     global orderBy), chart + blob runs the row lookup and the blob read
     as two concurrent jobs, and a chunk range is one job with no
     exchange. Short concurrent jobs do not always overlap (each thread
-    still plans and compiles its read first), so overlap is asked of
-    one request of five; run one after another, no two ever do."""
+    still plans its read first), so overlap is asked of one request of
+    five; run one after another, no two ever do. Every read scans the
+    in-memory snapshot, never a parquet file."""
     import uuid
 
-    _, disk, keys = _reopened_store(spark, tmp_path)
+    from document_parsing_etl_pipeline_spark.sources import objectstore
+
+    root, disk, keys = _reopened_store(spark, tmp_path)
     group = uuid.uuid4().hex
     detail_spans = []
     for doc_id in range(30, 35):
@@ -357,7 +377,7 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     assert any(map(_overlapping, detail_spans))
     chart_spans = []
     for r in keys[:5]:
-        chart_id = int(r.image_path.rsplit("/", 1)[1].split(".")[0])
+        chart_id = _chart_id(r.image_path)
         g = f"api-chart-{r.image_path}-{group}"
         chart, n_chart = jobs_in_group(
             spark, g, lambda: disk.get_chart_with_image(r.doc_id, chart_id))
@@ -371,26 +391,40 @@ def test_reopened_store_point_reads_run_few_jobs(spark, tmp_path):
     assert [c.chunk_index for c in rows] == [1, 2, 3]
     assert n_range == 1
     assert _plan_counts(chunks)["exchanges"] == 0
+    page = disk.get_documents(30, 3)
+    blob = objectstore.read_blob(spark, root, keys[0].doc_id,
+                                 _chart_id(keys[0].image_path))
+    for df in (chunks, page, blob):
+        assert _scan_nodes(df) == ["InMemoryTableScan"]
 
 
 def test_detail_read_failure_raises_after_the_other_reads_end(
-        spark, tmp_path):
-    """When one of detail's concurrent reads fails (the chunks files
-    are gone after the reopen), the error raises out of
-    get_document_info, and only once the other reads have ended: the
-    charts read is slowed to outlast the failing one."""
-    import shutil
+        spark, tmp_path, monkeypatch):
+    """When one of detail's concurrent reads fails (a task of the
+    chunks read raises), the error raises out of get_document_info, and
+    only once the other reads have ended: the charts read is slowed to
+    outlast the failing one."""
     import time
     import uuid
 
     from pyspark.sql import functions as F
 
-    root, disk, keys = _reopened_store(spark, tmp_path)
+    from document_parsing_etl_pipeline_spark.sources import docstore
+
+    _, disk, keys = _reopened_store(spark, tmp_path)
     slow = F.udf(lambda d: time.sleep(1.0) is None, "boolean")
-    disk._tables["charts"] = disk.tables["charts"].where(slow("doc_id"))
-    shutil.rmtree(f"{root}/chunks")
+    open_store = docstore.open_store
+
+    def failing_chunks(*a):
+        tables = open_store(*a)
+        return {**tables,
+                "chunks": tables["chunks"].withColumn(
+                    "text_content", F.raise_error(F.lit("chunks read fails"))),
+                "charts": tables["charts"].where(slow("doc_id"))}
+
+    monkeypatch.setattr(docstore, "open_store", failing_chunks)
     group = f"api-detail-fails-{uuid.uuid4().hex}"
-    with pytest.raises(Exception, match="chunks"):
+    with pytest.raises(Exception, match="chunks read fails"):
         jobs_in_group(spark, group,
                       lambda: disk.get_document_info(keys[0].doc_id))
     raised_ms = time.time() * 1e3
@@ -399,3 +433,166 @@ def test_detail_read_failure_raises_after_the_other_reads_end(
     assert len(spans) == 3
     assert all(end is not None and end <= raised_ms for _, end in spans)
     assert max(end for _, end in spans) - min(end for _, end in spans) >= 500
+
+
+def test_point_reads_of_new_keys_compile_nothing(spark, tmp_path):
+    """Over a reopened store, once each request type has run, a request
+    with a key or bound not used before compiles no Java class: every
+    key reaches generated code as a reference object
+    (``docstore.key_predicate``), never as source text."""
+    from document_parsing_etl_pipeline_spark.session import codegen_stats
+
+    _, disk, keys = _reopened_store(spark, tmp_path)
+    first, last = keys[0], keys[-1]
+    assert first.doc_id != last.doc_id
+    requests = {
+        "list": [lambda: disk.get_documents(29, 3).collect(),
+                 lambda: disk.get_documents(34, 3).collect()],
+        "detail": [lambda: disk.get_document_info(30),
+                   lambda: disk.get_document_info(36)],
+        "chunk_range": [
+            lambda: disk.get_document_chunks(30, 0, 1).collect(),
+            lambda: disk.get_document_chunks(38, 1, 2).collect()],
+        "chart_blob": [
+            lambda: disk.get_chart_with_image(
+                first.doc_id, _chart_id(first.image_path)),
+            lambda: disk.get_chart_with_image(
+                last.doc_id, _chart_id(last.image_path))],
+    }
+    compiles = {}
+    for name, (warm, new_key) in requests.items():
+        warm()
+        before = codegen_stats(spark)[0]
+        got = new_key()
+        compiles[name] = codegen_stats(spark)[0] - before
+        assert got, name
+    assert compiles == dict.fromkeys(requests, 0)
+
+
+def test_key_predicate_selects_what_the_plain_comparison_selects(spark):
+    """For each operator and each key, including the long extremes and
+    a null row, ``key_predicate`` keeps exactly the rows the plain
+    comparison keeps in a filter."""
+    import operator
+
+    from pyspark.sql import functions as F
+
+    from document_parsing_etl_pipeline_spark.sources import docstore
+
+    lo, hi = -(2 ** 63), 2 ** 63 - 1
+    keys = (-1, 0, 1, lo, hi)
+    df = spark.createDataFrame([(v,) for v in (None, *keys)], "k long")
+    ops = {"==": operator.eq, ">": operator.gt, ">=": operator.ge,
+           "<=": operator.le}
+    cols = []
+    for name, op in ops.items():
+        for v in keys:
+            for kind, pred in (("key", docstore.key_predicate("k", name, v)),
+                               ("plain", op(F.col("k"), F.lit(v)))):
+                cols.append(F.coalesce(pred, F.lit(False))
+                            .alias(f"{kind}|{name}|{v}"))
+    rows = df.select("k", *cols).collect()
+    assert len(rows) == 6
+    for name in ops:
+        for v in keys:
+            key = [r.k for r in rows if r[f"key|{name}|{v}"]]
+            plain = [r.k for r in rows if r[f"plain|{name}|{v}"]]
+            assert key == plain, (name, v)
+    paths = spark.createDataFrame([("a/1.png",), ("a/10.png",), (None,)],
+                                  "p string")
+    assert [r.p for r in paths.where(
+        docstore.key_predicate("p", "==", "a/1.png")).collect()] == [
+            "a/1.png"]
+
+
+def test_snapshot_follows_a_rewrite_of_the_store(spark, tmp_path):
+    """After process_documents rewrites a root with other documents, a
+    processor that already read the root and a fresh one both answer
+    from the new files."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(_slice(spark))
+    open_proc = DocumentProcessor(spark, store_root=root)
+    assert [r.doc_id for r in open_proc.get_documents().collect()] == list(
+        range(30, 40))
+    other = _slice(spark).where(F.col("doc_id") < 33).withColumn(
+        "doc_id", F.col("doc_id") + 100)
+    DocumentProcessor(spark, store_root=root).process_documents(other)
+    for proc in (open_proc, DocumentProcessor(spark, store_root=root)):
+        assert [r.doc_id for r in proc.get_documents().collect()] == [
+            130, 131, 132]
+        assert proc.get_document_info(30) is None
+        assert proc.get_document_info(131)["chunks"]
+        assert proc.get_document_chunks(30).count() == 0
+
+
+def test_snapshot_follows_files_replaced_outside_spark(spark, tmp_path):
+    """Table files replaced by another program (no Spark write, so
+    nothing tells Spark's cache) are read afresh by the next request."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    roots = [str(tmp_path / name) for name in ("a", "b")]
+    for root, pred in zip(roots, (F.col("doc_id") < 35,
+                                  F.col("doc_id") >= 35)):
+        DocumentProcessor(spark, store_root=root).process_documents(
+            _slice(spark).where(pred))
+    proc = DocumentProcessor(spark, store_root=roots[0])
+    assert [r.doc_id for r in proc.get_documents().collect()] == list(
+        range(30, 35))
+    for name in ("documents", "chunks"):
+        shutil.rmtree(f"{roots[0]}/{name}")
+        shutil.copytree(f"{roots[1]}/{name}", f"{roots[0]}/{name}")
+    assert [r.doc_id for r in proc.get_documents().collect()] == list(
+        range(35, 40))
+    assert [r.doc_id for r in proc.get_document_chunks(36).collect()]
+    assert proc.get_document_chunks(31).count() == 0
+
+
+def test_mutations_stay_private_to_their_processor(spark, tmp_path):
+    """An update and a delete change the reads of the processor that
+    made them; a fresh processor over the same root, which shares the
+    snapshot, still reads the files as written."""
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(_slice(spark))
+    proc = DocumentProcessor(spark, store_root=root)
+    lang = proc.get_document_info(31)["lang"]
+    proc.update_document(31, {"lang": "xx"})
+    proc.delete_document(32)
+    assert proc.get_document_info(31)["lang"] == "xx"
+    assert proc.get_document_info(32) is None
+    assert proc.get_document_chunks(32).count() == 0
+    fresh = DocumentProcessor(spark, store_root=root)
+    assert fresh.get_document_info(31)["lang"] == lang
+    assert fresh.get_document_info(32)["chunks"]
+    assert 32 in [r.doc_id for r in fresh.get_documents().collect()]
+
+
+def test_concurrent_first_opens_materialize_each_table_once(spark, tmp_path):
+    """Eight threads opening a store nobody has read yet, with a short
+    thread switch interval, get the same snapshot frame per table, and
+    each table is persisted once: the registry's check and update are
+    one step under its lock."""
+    import sys
+    from functools import partial
+
+    from document_parsing_etl_pipeline_spark.session import concurrently
+    from document_parsing_etl_pipeline_spark.sources import docstore
+
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(
+        _slice(spark))
+    sc = spark.sparkContext
+    cached = sc._jsc.getPersistentRDDs().size()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        opened = concurrently(
+            spark, [partial(docstore.open_store, spark, root)] * 8)
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(o.keys() == opened[0].keys() for o in opened)
+    assert all(o[n] is opened[0][n] for o in opened for n in o)
+    assert sc._jsc.getPersistentRDDs().size() == cached + 3

@@ -491,3 +491,93 @@ def test_thread_helper_lint_catches_a_planted_copy(tmp_path):
         "from .session import concurrently\n")
     assert thread_helper_sites(tmp_path) == [
         "m.py:1", "m.py:4", "m.py:5", "session.py:8"]
+
+
+# ------------------------------------------------- point-read keys
+
+# Column methods that compare their column with their arguments.
+_COMPARING_METHODS = {"between", "isin", "eqNullSafe", "like", "rlike",
+                      "ilike", "startswith", "endswith", "contains"}
+
+
+def bare_key_sites(path: pathlib.Path = _PKG / "processor.py") -> list[str]:
+    """Comparisons in ``path`` of a Spark column expression with a bare
+    Python value: a comparison operator with a column on one side and
+    no column on the other, or a comparing Column method called with
+    a bare argument. A column expression is one rooted at a
+    ``pyspark.sql.functions`` call (``F.col(...)``, ``col(...)``, and
+    method chains on them). Every key and bound of an API read goes
+    through ``docstore.key_predicate``, which keeps the value out of
+    generated code; a bare value is compiled into it."""
+    tree = ast.parse(path.read_text())
+    modules, names = set(), set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql":
+            modules.update(a.asname or a.name for a in node.names
+                           if a.name == "functions")
+        elif (isinstance(node, ast.ImportFrom)
+              and node.module == "pyspark.sql.functions"):
+            names.update(a.asname or a.name for a in node.names)
+        elif isinstance(node, ast.Import):
+            modules.update(a.asname for a in node.names
+                           if a.name == "pyspark.sql.functions" and a.asname)
+
+    def is_column(node) -> bool:
+        while True:
+            if isinstance(node, ast.Call):
+                node = node.func
+            elif isinstance(node, ast.Attribute):
+                if (isinstance(node.value, ast.Name)
+                        and node.value.id in modules):
+                    return True
+                node = node.value
+            elif isinstance(node, ast.Subscript):
+                node = node.value
+            elif isinstance(node, ast.UnaryOp):
+                node = node.operand
+            elif isinstance(node, ast.BinOp):
+                return is_column(node.left) or is_column(node.right)
+            else:
+                return isinstance(node, ast.Name) and node.id in names
+
+    sites = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Compare):
+            sides = [is_column(x) for x in (node.left, *node.comparators)]
+            if any(sides) and not all(sides):
+                sites.add(node.lineno)
+        elif (isinstance(node, ast.Call)
+              and isinstance(node.func, ast.Attribute)
+              and node.func.attr in _COMPARING_METHODS
+              and is_column(node.func.value)
+              and not all(map(is_column, node.args))):
+            sites.add(node.lineno)
+    return [f"{path.name}:{n}" for n in sorted(sites)]
+
+
+def test_point_read_keys_go_through_key_predicate():
+    """processor.py compares no column with a bare Python value: its
+    keys and bounds all go through docstore.key_predicate."""
+    assert bare_key_sites() == []
+
+
+def test_bare_key_lint_catches_a_planted_copy(tmp_path):
+    path = tmp_path / "processor.py"
+    path.write_text(
+        "from pyspark.sql import functions as F\n"
+        "from pyspark.sql.functions import col\n"
+        "import pyspark.sql.functions as sf\n"
+        "from .sources import docstore\n"
+        "a = t.where(F.col('doc_id') == doc_id)\n"
+        "b = t.where(F.col('chunk_index').cast('int') >= 3)\n"
+        "c = t.where(5 < col('doc_id'))\n"
+        "d = t.where(~(sf.col('image_path') != path))\n"
+        "e = t.where(F.col('chunk_index').between(lo, hi))\n"
+        "f = t.where(F.col('doc_id').isin([1, 2]))\n"
+        "g = t.where(docstore.key_predicate('doc_id', '==', doc_id))\n"
+        "h = t.where(F.col('a') == F.col('b') + 1)\n"
+        "i = e.getCondition() != 'PATH_NOT_FOUND'\n"
+        "j = sorted(rows, key=lambda r: r['chunk_index'] > 0)\n")
+    assert bare_key_sites(path) == [
+        "processor.py:5", "processor.py:6", "processor.py:7",
+        "processor.py:8", "processor.py:9", "processor.py:10"]
