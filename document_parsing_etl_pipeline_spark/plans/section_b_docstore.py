@@ -47,9 +47,7 @@ def q_document_detail(spark, sf_dir):
     """DocumentDetailResponse parity (reference api.py:37-40): doc
     fields incl. timestamps joined to its chunks (ChunkResponse
     carries created_at too). The join logic is the store-table
-    function docstore.document_detail — the SAME plan runs
-    exchange-free over write_bucketed_tables output (plan-asserted
-    in tests/test_docstore_api.py)."""
+    function docstore.document_detail."""
     t = _docstore_tables(spark, sf_dir, "documents", "chunks")
     df = docstore.document_detail(
         t["documents"].where(F.col("doc_id") < 20), t["chunks"]

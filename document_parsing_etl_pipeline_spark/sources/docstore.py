@@ -201,29 +201,6 @@ def write_docstore(tables: dict[str, DataFrame], root: str) -> None:
         chunks.unpersist()
 
 
-def write_bucketed_tables(
-    tables: dict[str, DataFrame],
-    database: str = "docstore",
-    n_buckets: int = 8,
-) -> None:
-    """Persist the store as bucketed+sorted catalog tables.
-
-    Hash-bucketing both sides of the doc_id join at write time means
-    the API-surface joins (documents⋈chunks⋈charts) run WITHOUT a
-    shuffle exchange — the physical property that matters most at
-    100 TB, where re-shuffling the chunk table per query would
-    dominate. Verified by plan assertion in tests.
-    """
-    spark = next(iter(tables.values())).sparkSession
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    for name, df in tables.items():
-        (df.write.mode("overwrite")
-         .bucketBy(n_buckets, "doc_id")
-         .sortBy("doc_id")
-         .format("parquet")
-         .saveAsTable(f"{database}.{name}"))
-
-
 def read_docstore(spark: SparkSession, root: str,
                   schemas: dict[str, StructType] | None = None
                   ) -> dict[str, DataFrame]:
@@ -336,13 +313,12 @@ def key_predicate(col: str, op: str, value) -> Column:
 def document_detail(documents: DataFrame, chunks: DataFrame) -> DataFrame:
     """GET /documents/{id} parity (reference api.py:37-40,
     repository.py:45-80): document fields + timestamps joined to the
-    doc's chunks — as a function over STORE TABLES, so the same plan
-    serves the inline pipeline, the range-clustered store and the
-    bucketed catalog. Over tables written by write_bucketed_tables the
-    doc_id join runs with ZERO exchange (both sides co-bucketed+sorted
-    — plan-asserted in tests/test_docstore_api.py); over raw frames or
-    the write_docstore store it is one doc_id shuffle, and a doc_id
-    filter on the store skips row groups, not files."""
+    doc's chunks, as a function over the store tables, so the same plan
+    serves the inline pipeline and the range-clustered store. The doc_id
+    join is planned like any other: a broadcast of a small side or one
+    doc_id shuffle. The API does not use it: a detail request reads the
+    document and its chunks as separate point reads
+    (``processor.DocumentProcessor.get_document_info``)."""
     return (
         documents.select(
             "doc_id", "filename", "lang", "total_chunks",
@@ -370,20 +346,6 @@ def chunk_range(chunks: DataFrame, doc_id: int, start: int,
         (F.col("doc_id") == doc_id)
         & F.col("chunk_index").between(start, end)
     ).select("doc_id", "chunk_index", "text_content", "token_count")
-
-
-def upsert_documents(existing: DataFrame, updates: DataFrame,
-                     key: str = "doc_id") -> DataFrame:
-    """MERGE semantics: rows in ``updates`` replace same-key rows in
-    ``existing``; new keys append. Expressed as anti-join + union —
-    the shuffle is on the key both sides, and over write_bucketed_tables
-    tables the anti-join co-partitions without an exchange.
-
-    (BaseRepository.update/create parity at dataset scale; on a real
-    deployment this is the Delta/Iceberg MERGE INTO statement.)
-    """
-    kept = existing.join(updates.select(key), key, "left_anti")
-    return kept.unionByName(updates.select(*existing.columns))
 
 
 # ----------------------------- repository-surface update/delete parity

@@ -1,13 +1,14 @@
-"""File ingest sources: binary documents (PDF-byte parity) and
-text/CSV/JSON document loaders.
+"""File ingest sources: binary documents (PDF-byte parity) and a
+quarantining JSON-lines reader.
 
 Reference parity: the watcher hands file paths to
 DocumentConverter.convert (reference services/parser/main.py:85-118,
 src/engine/pdf_parser.py:201-253). Here ingest is a DataFrame source:
 ``binaryFile`` for opaque document bytes (the 100 TB-scale path —
-bytes stay columnar, listing is distributed), plus schema'd readers
-for text-native drops. The PDF text-extraction step itself (docling)
-is stubbed deterministically; everything around it is real Spark.
+bytes stay columnar, listing is distributed), plus a schema'd
+JSON-lines reader that sets malformed records aside. The PDF
+text-extraction step itself (docling) is stubbed deterministically;
+everything around it is real Spark.
 """
 
 from __future__ import annotations
@@ -77,28 +78,6 @@ def to_documents(extracted: DataFrame) -> DataFrame:
         F.regexp_extract("path", r"([^/]+)$", 1).alias("source"),
         F.length("text").cast("long").alias("n_chars"),
     )
-
-
-def read_text_documents(spark: SparkSession, path: str) -> DataFrame:
-    """wholetext reader: one document per file."""
-    df = spark.read.format("text").option("wholetext", "true").load(path)
-    return df.select(
-        F.xxhash64(F.col("value")).alias("doc_id"),
-        F.col("value").alias("text"),
-    )
-
-
-def read_jsonl_documents(spark: SparkSession, path: str,
-                         schema: str | None = None) -> DataFrame:
-    """JSON-lines drops (the watcher's input format)."""
-    reader = spark.read
-    if schema:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_csv_documents(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("header", "true").csv(path)
 
 
 def read_jsonl_quarantine(

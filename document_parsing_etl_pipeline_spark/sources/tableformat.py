@@ -1,20 +1,21 @@
 """Snapshot-manifest table format: versioned parquet with MERGE,
 copy-on-write DELETE, time travel, and file-level min/max pruning.
 
-The round-4 verdict's standing gap: `upsert_documents` is a plain
-anti-join+union and `read_store_as_of` is batch_id partition pruning —
-correct, but a 100 TB deployment wants table-format semantics (Delta/
-Iceberg). This module implements the minimal open-table-format design
-on plain parquet + JSON manifests, so the repo's semantics match what
-the at-scale swap would provide:
+A 100 TB deployment wants table-format semantics (Delta/Iceberg) for
+its mutable tables. This module implements the minimal open-table-format
+design on plain parquet + JSON manifests, so the repo's semantics match
+what the at-scale swap would provide. Its callers are the streaming
+sinks (``streaming/table_sink``; ``streaming/neardup``, which commits
+through write-audit-publish stages), the artifact store
+(``sources/artifacts``) and ``bench.py``'s streaming merge legs:
 
 - a table is ``root/data/*.parquet`` plus ``root/_manifests/v{N}.json``;
   a manifest is the COMPLETE file list of that snapshot with per-file
   row counts and per-column min/max stats (the Iceberg manifest-entry
   shape, flattened);
 - every write is copy-on-write: new files + a new manifest; old
-  snapshots stay readable forever (time travel by version or
-  timestamp);
+  snapshots stay readable until ``expire_snapshots`` drops them (time
+  travel by version);
 - MERGE rewrites only the files that actually contain matched keys —
   candidate files come from manifest key-range pruning, confirmed
   membership from a semi-join, everything else is carried by
@@ -552,7 +553,7 @@ def _carry_meta(head: dict, row_preserving: bool = False) -> dict:
     """Manifest metadata every commit must propagate from its parent:
     the table schema, the streaming sink's exactly-once watermark
     (stream_batch_id), and — for ROW-PRESERVING maintenance commits
-    only (OPTIMIZE, branch create, fast-forward) — the artifact-store
+    only (OPTIMIZE) — the artifact-store
     source fingerprint. Without the watermark, a delete/optimize
     commit followed by expire_snapshots could erase the last recorded
     batch id and let a checkpoint replay re-apply a batch; without
@@ -584,8 +585,6 @@ def _merged_schema_json(head: dict, df: DataFrame) -> str:
     fields and the incoming ones (head order first, new fields
     appended). Appending a narrower DataFrame must NOT narrow the
     recorded schema — older files still carry the missing columns."""
-    from pyspark.sql.types import StructType
-
     if "schema" not in head:
         return df.schema.json()
     prior = StructType.fromJson(json.loads(head["schema"]))
@@ -615,29 +614,16 @@ def append(
 
 
 def read(
-    spark: SparkSession, root: str,
-    version: int | None = None, as_of_us: int | None = None,
+    spark: SparkSession, root: str, version: int | None = None,
 ) -> DataFrame:
-    """Time-travel read: snapshot by version, by commit timestamp, or
-    latest."""
-    versions = _versions(root)
-    if version is None and as_of_us is not None:
-        eligible = [
-            v for v in versions
-            if _load_manifest(root, v)["committed_us"] <= as_of_us
-        ]
-        if not eligible:
-            raise ValueError(f"no snapshot at or before {as_of_us}")
-        version = eligible[-1]
+    """Time-travel read: the snapshot at ``version``, or the latest."""
     if version is None:
-        version = versions[-1]
+        version = _versions(root)[-1]
     m = _load_manifest(root, version)
     if not m["files"]:
         # empty snapshot: the manifest records the table schema so an
         # empty table is still a TYPED relation (a hardcoded fallback
         # schema broke MERGE into freshly-created empty tables)
-        from pyspark.sql.types import StructType
-
         if "schema" in m:
             schema = StructType.fromJson(json.loads(m["schema"]))
         else:
@@ -997,7 +983,7 @@ def delete_where_dv(
     the DELETED rows (tombstones), not the resident rows of every
     touched file (the copy-on-write delete_where's cost). Files
     wholly inside [lo,hi] still drop by reference with zero I/O.
-    Reads anti-join the tombstones (read()/scan()/read_branch());
+    Reads anti-join the tombstones (read()/scan());
     optimize_table materializes them away. The merge-on-read
     trade-off is the standard one: cheaper deletes, one extra
     anti-join per read until the next OPTIMIZE."""
@@ -1059,317 +1045,6 @@ def delete_where_dv(
     })
 
 
-def _pair_update_images(
-    pre_raw: DataFrame, post_raw: DataFrame, key: str, cols: list[str],
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Per-key rank pairing of changed old/new rows (Delta CDF's
-    per-ROW update semantics): within each key, old and new rows are
-    ranked by full row content; matched ranks become the
-    update_preimage/update_postimage pair, surplus NEW rows are
-    inserts, surplus OLD rows deletes. With one row per side per key
-    (the common case) this is exactly the previous behavior; with 1
-    tombstone + N re-inserts it yields 1 update + (N-1) inserts
-    instead of an asymmetric 1-pre/N-post feed. Cost: two window
-    passes over the CHANGED rows only."""
-    from pyspark.sql.window import Window
-
-    # a table whose ONLY column is the key has no non-key columns to
-    # rank by; an empty orderBy raises at analysis, so fall back to
-    # the key itself (ranks are arbitrary-but-matched, which is all
-    # the pairing needs — the rows are indistinguishable anyway)
-    order_cols = [F.col(c) for c in cols if c != key] or [F.col(key)]
-    w = Window.partitionBy(key).orderBy(*order_cols)
-    n_post = post_raw.groupBy(key).agg(
-        F.count("*").alias("_n_other"))
-    n_pre = pre_raw.groupBy(key).agg(
-        F.count("*").alias("_n_other"))
-    pre_r = (
-        pre_raw.withColumn("_r", F.row_number().over(w))
-        .join(n_post, key, "left")
-        .withColumn("_n_other", F.coalesce("_n_other", F.lit(0)))
-    )
-    post_r = (
-        post_raw.withColumn("_r", F.row_number().over(w))
-        .join(n_pre, key, "left")
-        .withColumn("_n_other", F.coalesce("_n_other", F.lit(0)))
-    )
-    pre = pre_r.where(F.col("_r") <= F.col("_n_other")) \
-        .select(*cols).withColumn(
-            "_change_type", F.lit("update_preimage"))
-    surplus_del = pre_r.where(F.col("_r") > F.col("_n_other")) \
-        .select(*cols).withColumn("_change_type", F.lit("delete"))
-    post = post_r.where(F.col("_r") <= F.col("_n_other")) \
-        .select(*cols).withColumn(
-            "_change_type", F.lit("update_postimage"))
-    surplus_ins = post_r.where(F.col("_r") > F.col("_n_other")) \
-        .select(*cols).withColumn("_change_type", F.lit("insert"))
-    return pre, post, surplus_ins, surplus_del
-
-
-def table_changes(
-    spark: SparkSession, root: str, from_version: int, to_version: int,
-    key: str | None = None,
-) -> DataFrame:
-    """Change data feed (Delta CDF / Iceberg changelog parity):
-    row-level changes between two snapshots, derived from the
-    copy-on-write file sets — no change log is stored, the diff IS
-    computable from the manifests because every write path rewrites
-    whole files:
-
-    - files present in both manifests are UNCHANGED by construction
-      (copy-on-write never edits a file in place) and are never read;
-    - rows in to-only files are ``insert`` candidates, rows in
-      from-only files ``delete`` candidates;
-    - a row present in both sides (same full row, or same ``key``
-      when given) was merely REWRITTEN into a new file (e.g. a MERGE
-      rewrote its neighbor rows, or OPTIMIZE re-clustered it) and is
-      not a logical change. With ``key``, rows whose key survives on
-      both sides but whose content changed surface as
-      ``update_preimage`` / ``update_postimage`` (the Delta CDF
-      convention). Change types are WRITE-MODE INDEPENDENT: a
-      merge-on-read MERGE (DV tombstone + re-appended key) yields the
-      same feed as the equivalent copy-on-write MERGE — tombstone +
-      re-insert pairs of one key classify as updates, and identical
-      content cancels as a pure rewrite.
-
-    Only the DELTA files are scanned — the cost scales with the
-    changed data, not the table size (manifest set-difference is
-    driver-side KB of JSON)."""
-    mf = _load_manifest(root, from_version)
-    mt = _load_manifest(root, to_version)
-    pf = {e["path"] for e in mf["files"]}
-    pt = {e["path"] for e in mt["files"]}
-    only_f = sorted(pf - pt)
-    only_t = sorted(pt - pf)
-    cols = read(spark, root, to_version).columns
-    # Read delta files with the to-version's MANIFEST-recorded schema,
-    # not mergeSchema over the delta subset: if every from-only file
-    # predates a schema-evolution append, the merged subset schema
-    # would lack the added column and .select(*cols) would raise.
-    # The recorded schema fills pre-evolution files' missing columns
-    # with typed nulls, matching what read() gets from whole-snapshot
-    # mergeSchema.
-    rec = (
-        StructType.fromJson(json.loads(mt["schema"]))
-        if "schema" in mt else None
-    )
-
-    def _read(paths, m):
-        if not paths:
-            return (
-                read(spark, root, to_version).limit(0).select(*cols)
-            )
-        reader = spark.read
-        if rec is not None:
-            reader = reader.schema(rec)
-        else:  # legacy manifests without a recorded schema
-            reader = reader.option("mergeSchema", "true")
-        # each side's deletion vectors apply to ITS snapshot: a row
-        # tombstoned at from_version was not live then and must not
-        # surface as a delete again; a to-only file whose rows were
-        # tombstoned within the span must not surface them as inserts
-        return _read_live(
-            spark, root, m, [os.path.join(root, p) for p in paths],
-            reader=reader,
-        ).select(*cols)
-
-    old = _read(only_f, mf)
-    new = _read(only_t, mt)
-
-    # DV-only deletes: tombstone sidecars added between the versions
-    # whose files are in BOTH manifests (file-diff can't see them —
-    # the file set is unchanged). Cost scales with the tombstones:
-    # only the files the new sidecars actually reference are read.
-    dv_paths_f = {e["path"] for e in _dv_entries(mf)}
-    new_dv = [
-        e for e in _dv_entries(mt) if e["path"] not in dv_paths_f
-    ]
-    dv_deleted = None
-    if new_dv:
-        nd = spark.read.parquet(
-            *[os.path.join(root, e["path"]) for e in new_dv]
-        )
-        touched = {
-            r["_dv_file"] for r in nd.select("_dv_file").distinct()
-            .collect()
-        }
-        common_hit = [
-            p for p in sorted(pf & pt)
-            if os.path.basename(p) in touched
-        ]
-        if common_hit:
-            reader = (
-                spark.read.schema(rec) if rec is not None
-                else spark.read.option("mergeSchema", "true")
-            )
-            raw = reader.parquet(
-                *[os.path.join(root, p) for p in common_hit]
-            )
-            dv_deleted = (
-                _with_pos(raw)
-                .join(
-                    nd,
-                    (F.col("_dv_fname") == nd["_dv_file"])
-                    & (F.col("_dv_rowpos") == nd["_dv_pos"]),
-                    "semi",
-                )
-                .select(*cols)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-    if key is None:
-        # full-row identity: rewritten-but-identical rows cancel out.
-        # DV tombstones participate in the cancellation too, so a
-        # merge-on-read pure rewrite (tombstone + identical re-append)
-        # nets to zero changes exactly like a copy-on-write rewrite.
-        if dv_deleted is not None:
-            dv_plain = dv_deleted.drop("_change_type")
-            ins = new.exceptAll(old).exceptAll(dv_plain).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            dels = (
-                old.unionByName(dv_plain).exceptAll(new)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        else:
-            ins = new.exceptAll(old).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            dels = old.exceptAll(new).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        return ins.unionByName(dels)
-    ko = old.select(F.col(key).alias("_k")).distinct()
-    kn = new.select(F.col(key).alias("_k")).distinct()
-    ins = new.join(ko, new[key] == ko["_k"], "anti").drop("_k")
-    dels = old.join(kn, old[key] == kn["_k"], "anti").drop("_k") \
-        .withColumn("_change_type", F.lit("delete"))
-    # keys on both sides: emit pre/post images only when the row
-    # content actually differs (pure rewrites cancel), PAIRED per key
-    # by rank — Delta CDF updates are per-ROW, so 1 old + N new rows
-    # of one key is 1 update pair + (N-1) inserts, never an
-    # asymmetric 1-preimage/N-postimage feed (and symmetrically for
-    # shrinking keys)
-    both_old = old.join(kn, old[key] == kn["_k"], "semi")
-    both_new = new.join(ko, new[key] == ko["_k"], "semi")
-    pre, post, pair_ins, pair_del = _pair_update_images(
-        both_old.exceptAll(both_new), both_new.exceptAll(both_old),
-        key, cols,
-    )
-    if dv_deleted is None:
-        return (
-            ins.withColumn("_change_type", F.lit("insert"))
-            .unionByName(dels).unionByName(pre).unionByName(post)
-            .unionByName(pair_ins).unionByName(pair_del)
-        )
-    # Merge-on-read update parity: a MoR MERGE updates a key by DV-
-    # tombstoning the old row inside a carried file and appending the
-    # new row to a to-only file — the file-diff sees an insert and the
-    # DV scan a delete, but the identical copy-on-write MERGE reports
-    # update_preimage/update_postimage. Reclassify tombstone+re-insert
-    # pairs of the same key the same way, with identical content
-    # cancelling exactly as CoW's exceptAll does for pure rewrites.
-    dv_plain = dv_deleted.drop("_change_type")
-    dvk = dv_plain.select(F.col(key).alias("_dk")).distinct()
-    ik = ins.select(F.col(key).alias("_ik")).distinct()
-    dv_pre_raw = dv_plain.join(
-        ik, dv_plain[key] == ik["_ik"], "semi")
-    dv_del = dv_plain.join(
-        ik, dv_plain[key] == ik["_ik"], "anti"
-    ).withColumn("_change_type", F.lit("delete"))
-    ins_post_raw = ins.join(dvk, ins[key] == dvk["_dk"], "semi")
-    ins_new = ins.join(dvk, ins[key] == dvk["_dk"], "anti") \
-        .withColumn("_change_type", F.lit("insert"))
-    # same per-key rank pairing as the CoW path above: one tombstone
-    # plus N re-inserts of a key is 1 update pair + (N-1) inserts, so
-    # the MoR feed stays write-mode identical to CoW even on
-    # multi-insert-per-key spans
-    mor_pre, mor_post, mor_ins, mor_del = _pair_update_images(
-        dv_pre_raw.exceptAll(ins_post_raw),
-        ins_post_raw.exceptAll(dv_pre_raw),
-        key, cols,
-    )
-    return (
-        ins_new.unionByName(dels).unionByName(pre).unionByName(post)
-        .unionByName(pair_ins).unionByName(pair_del)
-        .unionByName(dv_del).unionByName(mor_pre).unionByName(mor_post)
-        .unionByName(mor_ins).unionByName(mor_del)
-    )
-
-
-def validate_expectations(
-    df: DataFrame, expectations: dict[str, str],
-) -> tuple[DataFrame, DataFrame]:
-    """Delta CHECK-constraint / DLT-expectations split: evaluate every
-    named SQL predicate against each row and return (clean, violations)
-    — clean rows satisfy ALL expectations; violating rows carry a
-    ``_violated`` array naming every failed expectation (DLT's
-    quarantine shape, so one bad row surfaces all its problems at
-    once). One projection, no shuffle; NULL predicate results count
-    as violations (a CHECK that can't evaluate true is not satisfied
-    — the SQL-standard CHECK treats NULL as pass, but a data
-    EXPECTATION must not wave unknowns through)."""
-    flags = F.array(*[
-        F.when(
-            ~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name)
-        ).otherwise(F.lit(None))
-        for name, pred in expectations.items()
-    ])
-    tagged = df.withColumn(
-        "_violated", F.filter(flags, lambda x: x.isNotNull())
-    )
-    clean = tagged.where(F.size("_violated") == 0).drop("_violated")
-    violations = tagged.where(F.size("_violated") > 0)
-    return clean, violations
-
-
-def append_with_expectations(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    expectations: dict[str, str],
-    quarantine_root: str | None = None,
-) -> dict:
-    """Gated append: rows satisfying every expectation commit to the
-    table; violating rows are quarantined (appended, with their
-    ``_violated`` reasons, to a side table created on first use) —
-    never silently dropped, never poisoning the main table. Returns
-    {version, n_clean, n_quarantined}. At 100 TB this is the DLT
-    expect_or_drop + quarantine-table pattern on the same
-    copy-on-write commits as every other write."""
-    clean, violations = validate_expectations(df, expectations)
-    viol = violations.withColumn(
-        "_violated", F.array_join("_violated", ",")
-    )
-    n_q = viol.count()
-    if n_q and quarantine_root:
-        if not _versions(quarantine_root):
-            create_table(
-                spark, viol, quarantine_root,
-                stats_cols=_load_manifest(
-                    root, _versions(root)[-1]
-                )["stats_cols"],
-            )
-        else:
-            append(spark, viol, quarantine_root)
-    # n_clean comes from the committed manifests' per-file row counts
-    # (delta of total rows across the append), not another full pass
-    # over df — the write already counted every row, and a
-    # non-deterministic df can't disagree with what actually landed
-    prev_rows = sum(
-        e["rows"]
-        for e in _load_manifest(root, _versions(root)[-1])["files"]
-    )
-    version = append(spark, clean, root)
-    new_rows = sum(
-        e["rows"] for e in _load_manifest(root, version)["files"]
-    )
-    return {
-        "version": version,
-        "n_clean": new_rows - prev_rows,
-        "n_quarantined": n_q,
-    }
-
-
 # ------------------------------------------------- write-audit-publish
 
 _STAGE_DIR = "_staged"
@@ -1389,8 +1064,9 @@ def stage_append(
     rows. The staged manifest records the base version it was built
     on; publish_stage refuses if main has advanced since (optimistic
     concurrency — re-stage on the new head instead of silently
-    dropping the interleaved commit's files). Returns
-    {stage, base_version, n_new_files}."""
+    dropping the interleaved commit's files). Step 2, the audit, is
+    the caller's: ``streaming/neardup`` runs its guard job between the
+    stage and the publish. Returns {stage, base_version, n_new_files}."""
     head = _load_manifest(root, _versions(root)[-1])
     # the data dir is keyed by (stage, base version): a published
     # stage's files live on under the old dir, and a discarded+
@@ -1447,29 +1123,6 @@ def stage_append(
         "base_version": head["version"],
         "n_new_files": len(entries),
     }
-
-
-def read_staged(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    """Audit view: the candidate snapshot (base + staged rows) as a
-    DataFrame — run expectations/row counts/drift checks against it
-    BEFORE anything is published. Pass the staged-delta files only
-    via read_staged_delta for checks scoped to the new rows."""
-    with open(_stage_path(root, stage)) as f:
-        m = json.load(f)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, e["path"]) for e in m["files"]]
-    )
-
-
-def read_staged_delta(
-    spark: SparkSession, root: str, stage: str,
-) -> DataFrame:
-    """Only the rows this stage would add."""
-    with open(_stage_path(root, stage)) as f:
-        m = json.load(f)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, p) for p in m["new_files"]]
-    )
 
 
 def publish_stage(root: str, stage: str) -> int:
@@ -1529,21 +1182,6 @@ def discard_stage(root: str, stage: str) -> int:
     return removed
 
 
-def history(root: str) -> list[dict]:
-    """Commit log: (version, operation, committed_us, n_files, rows)."""
-    out = []
-    for v in _versions(root):
-        m = _load_manifest(root, v)
-        out.append({
-            "version": v,
-            "operation": m["operation"],
-            "committed_us": m["committed_us"],
-            "n_files": len(m["files"]),
-            "rows": sum(e["rows"] for e in m["files"]),
-        })
-    return out
-
-
 def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     """Vacuum (Delta VACUUM / Iceberg expire_snapshots): drop all but
     the newest ``keep_last`` manifests, then delete every data file
@@ -1564,14 +1202,9 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     versions = _versions(root)
-    # ref reachability (Iceberg rule): tag-pinned versions are exempt
-    # from expiry, and files reachable from ANY branch manifest stay
-    # live — a branch or tag keeps its history readable until the ref
-    # itself is deleted.
-    ref_live, pinned = _ref_live_files(root)
-    keep = sorted(set(versions[-keep_last:]) | (pinned & set(versions)))
-    expire = [v for v in versions if v not in keep]
-    live: set[str] = set(ref_live)
+    keep = versions[-keep_last:]
+    expire = versions[:-keep_last]
+    live: set[str] = set()
     for v in keep:
         m = _load_manifest(root, v)
         # deletion-vector sidecars are snapshot content too: removing
@@ -1711,206 +1344,6 @@ def optimize_table(
     })
 
 
-# ------------------------------------------------------- branches/tags
-# Iceberg-style refs: a BRANCH is a named, writable snapshot lineage
-# that shares the table's data-file pool but advances its own head (an
-# isolated dev/backfill line that readers of main never see); a TAG is
-# an immutable named pointer to a main version (release pinning).
-# Branch manifests live under _manifests/branches/<name>/b{K}.json,
-# branch data under data/branch-<name>-b{K}/ — inside the same data
-# pool, so expire_snapshots() liveness (extended below) governs them:
-# files reachable from ANY ref are never vacuumed, the Iceberg rule.
-
-_BRANCH_DIR = os.path.join(_MANIFEST_DIR, "branches")
-_TAG_DIR = os.path.join(_MANIFEST_DIR, "tags")
-
-
-def _branch_dir(root: str, name: str) -> str:
-    return os.path.join(root, _BRANCH_DIR, name)
-
-
-def _branch_versions(root: str, name: str) -> list[int]:
-    d = _branch_dir(root, name)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for n in os.listdir(d):
-        if n.startswith("b") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _load_branch(root: str, name: str, bv: int) -> dict:
-    with open(os.path.join(_branch_dir(root, name), f"b{bv}.json")) as f:
-        return json.load(f)
-
-
-def create_branch(
-    root: str, name: str, version: int | None = None,
-) -> int:
-    """Branch off a main snapshot (default: head). b1 is a full copy
-    of the base manifest — file SHARING by reference, no data copy —
-    plus the base_version fast_forward later checks against."""
-    if _branch_versions(root, name):
-        raise ValueError(f"branch {name!r} already exists")
-    base_v = version if version is not None else _versions(root)[-1]
-    base = _load_manifest(root, base_v)
-    os.makedirs(_branch_dir(root, name), exist_ok=True)
-    b = {
-        "operation": "branch_create", "branch": name,
-        "branch_version": 1, "base_version": base_v,
-        "stats_cols": base["stats_cols"], "files": base["files"],
-        **_carry_meta(base, row_preserving=True),
-        "committed_us": time.time_ns() // 1_000,
-    }
-    path = os.path.join(_branch_dir(root, name), "b1.json")
-    fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    with os.fdopen(fd, "w") as f:
-        json.dump(b, f)
-    return 1
-
-
-def append_to_branch(
-    spark: SparkSession, df: DataFrame, root: str, name: str,
-) -> int:
-    """Copy-on-write append on the branch lineage: main's chain and
-    readers are untouched; the branch head advances under O_EXCL
-    (one winner per branch version)."""
-    bvs = _branch_versions(root, name)
-    if not bvs:
-        raise ValueError(f"no such branch: {name!r}")
-    head = _load_branch(root, name, bvs[-1])
-    bv = head["branch_version"] + 1
-    entries = _write_files(
-        spark, df, root, f"branch-{name}-b{bv}", head["stats_cols"],
-        _bcols(head))
-    b = {
-        "operation": "branch_append", "branch": name,
-        "branch_version": bv, "base_version": head["base_version"],
-        "stats_cols": head["stats_cols"],
-        "files": head["files"] + entries,
-        **_carry_meta(head),
-        "schema": _merged_schema_json(head, df),
-        "committed_us": time.time_ns() // 1_000,
-    }
-    path = os.path.join(_branch_dir(root, name), f"b{bv}.json")
-    fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    with os.fdopen(fd, "w") as f:
-        json.dump(b, f)
-    return bv
-
-
-def read_branch(
-    spark: SparkSession, root: str, name: str,
-    branch_version: int | None = None,
-) -> DataFrame:
-    """Read the branch head (or an earlier branch version — branches
-    time-travel too)."""
-    bvs = _branch_versions(root, name)
-    if not bvs:
-        raise ValueError(f"no such branch: {name!r}")
-    m = _load_branch(root, name, branch_version or bvs[-1])
-    if not m["files"]:
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        return spark.createDataFrame([], schema=schema)
-    paths = [os.path.join(root, e["path"]) for e in m["files"]]
-    return _read_live(spark, root, m, paths)
-
-
-def fast_forward(root: str, name: str) -> int:
-    """Merge the branch into main by fast-forward (Iceberg
-    fast_forward): allowed ONLY if main still sits at the branch's
-    base version — if main advanced, the histories diverged and a
-    fast-forward would silently drop main's commits, so this raises
-    (rebase: recreate the branch from the new head). The new main
-    manifest adopts the branch head's file set by REFERENCE (no data
-    movement) and records provenance."""
-    bvs = _branch_versions(root, name)
-    if not bvs:
-        raise ValueError(f"no such branch: {name!r}")
-    head = _load_branch(root, name, bvs[-1])
-    main_head = _versions(root)[-1]
-    if main_head != head["base_version"]:
-        raise RuntimeError(
-            f"fast_forward refused: main advanced to v{main_head} "
-            f"(branch {name!r} based on v{head['base_version']}); "
-            "recreate the branch from the new head"
-        )
-    return _commit(root, {
-        "operation": "fast_forward", "ff_branch": name,
-        "ff_branch_version": head["branch_version"],
-        "stats_cols": head["stats_cols"], "files": head["files"],
-        **_carry_meta(head, row_preserving=True),
-    })
-
-
-def delete_branch(root: str, name: str) -> dict:
-    """Drop the branch's manifests. Its unique data files lose their
-    last reference and the NEXT expire_snapshots reclaims them (same
-    deferred-reclaim model as main's copy-on-write history)."""
-    bvs = _branch_versions(root, name)
-    if not bvs:
-        raise ValueError(f"no such branch: {name!r}")
-    for bv in bvs:
-        os.remove(os.path.join(_branch_dir(root, name), f"b{bv}.json"))
-    os.rmdir(_branch_dir(root, name))
-    return {"branch": name, "removed_manifests": len(bvs)}
-
-
-def create_tag(root: str, name: str, version: int | None = None) -> int:
-    """Immutable named pointer to a main version (release pinning).
-    Tagged versions are exempt from expire_snapshots until the tag
-    is deleted."""
-    v = version if version is not None else _versions(root)[-1]
-    if v not in _versions(root):
-        raise ValueError(f"no such version: v{v}")
-    os.makedirs(os.path.join(root, _TAG_DIR), exist_ok=True)
-    path = os.path.join(root, _TAG_DIR, f"{name}.json")
-    fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    with os.fdopen(fd, "w") as f:
-        json.dump({"tag": name, "version": v,
-                   "committed_us": time.time_ns() // 1_000}, f)
-    return v
-
-
-def read_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
-    path = os.path.join(root, _TAG_DIR, f"{name}.json")
-    if not os.path.exists(path):
-        raise ValueError(f"no such tag: {name!r}")
-    with open(path) as f:
-        return read(spark, root, version=json.load(f)["version"])
-
-
-def delete_tag(root: str, name: str) -> None:
-    path = os.path.join(root, _TAG_DIR, f"{name}.json")
-    if not os.path.exists(path):
-        raise ValueError(f"no such tag: {name!r}")
-    os.remove(path)
-
-
-def list_refs(root: str) -> dict:
-    """{'branches': {name: head_branch_version}, 'tags': {name:
-    version}} — the refs table (Iceberg's refs metadata)."""
-    branches = {}
-    bdir = os.path.join(root, _BRANCH_DIR)
-    if os.path.isdir(bdir):
-        for name in sorted(os.listdir(bdir)):
-            bvs = _branch_versions(root, name)
-            if bvs:
-                branches[name] = bvs[-1]
-    tags = {}
-    tdir = os.path.join(root, _TAG_DIR)
-    if os.path.isdir(tdir):
-        for fn in sorted(os.listdir(tdir)):
-            if fn.endswith(".json"):
-                with open(os.path.join(tdir, fn)) as f:
-                    tags[fn[:-5]] = json.load(f)["version"]
-    return {"branches": branches, "tags": tags}
-
-
 def _entry_live_paths(root: str, e: dict):
     """Every on-disk path a manifest entry keeps alive: the data file
     itself plus any bloom SIDECAR it references — removing a live
@@ -1919,25 +1352,3 @@ def _entry_live_paths(root: str, e: dict):
     for b in (e.get("blooms") or {}).values():
         if "ref" in b:
             yield os.path.normpath(os.path.join(root, b["ref"]))
-
-
-def _ref_live_files(root: str) -> tuple[set[str], set[int]]:
-    """(files referenced by any branch manifest, main versions pinned
-    by tags) — the ref-reachability inputs expire_snapshots folds
-    into its liveness rule."""
-    live: set[str] = set()
-    bdir = os.path.join(root, _BRANCH_DIR)
-    if os.path.isdir(bdir):
-        for name in os.listdir(bdir):
-            for bv in _branch_versions(root, name):
-                b = _load_branch(root, name, bv)
-                for e in b["files"] + _dv_entries(b):
-                    live.update(_entry_live_paths(root, e))
-    pinned: set[int] = set()
-    tdir = os.path.join(root, _TAG_DIR)
-    if os.path.isdir(tdir):
-        for fn in os.listdir(tdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(tdir, fn)) as f:
-                    pinned.add(json.load(f)["version"])
-    return live, pinned

@@ -126,21 +126,3 @@ def start_full_pipeline(spark: SparkSession, watch_dir: str, store_root: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def read_store_as_of(spark, store_root: str, table: str,
-                     batch_id: int | None = None):
-    """Snapshot read of a streaming-sink table as of a micro-batch:
-    the ``batch_id=<n>`` directories read back as a partition column,
-    so the ``batch_id <= n`` predicate is PARTITION-pruned — newer
-    batch directories are never listed into the scan. This is the
-    poor-man's time travel the batch-scoped idempotent sink buys
-    (a table format — Delta/Iceberg — replaces this with snapshot ids
-    at scale).
-    """
-    import os
-
-    df = spark.read.parquet(os.path.join(store_root, table))
-    if batch_id is not None:
-        df = df.where(F.col("batch_id") <= batch_id)
-    return df

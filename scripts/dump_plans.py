@@ -1,8 +1,29 @@
-"""Regenerate PLANS.md: formatted explains of headline queries."""
+"""Formatted explains of registry queries.
 
+With no arguments, regenerate PLANS.md: the static plans of the
+headline queries in PICKS at sf0.1. With query names, write each named
+query's plan to ``<out>/<query>_<tag>.txt`` instead::
+
+    python scripts/dump_plans.py --out plans/r15 --tag before q_a q_b
+    python scripts/dump_plans.py --out plans/r15 --tag after --final q_a
+
+``--final`` collects the query first and writes the executed adaptive
+plan (``isFinalPlan=true``) to ``<query>_final_<tag>.txt``: exchanges
+that AQE reuses at run time show as ReusedExchange only there, while
+the static plan is AQE's initial one. Named queries read
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
+
+A query builder that calls ``.localCheckpoint()`` runs the upstream
+jobs while the plan is dumped, and its plan shows the checkpoint scan
+(``Scan ExistingRDD``) in place of the lineage above it.
+"""
+
+import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from document_parsing_etl_pipeline_spark.plans.queries import QUERIES
 from document_parsing_etl_pipeline_spark.session import get_spark
@@ -42,9 +63,44 @@ PICKS = {
 }
 
 
+def dump_named(spark, sf, names, out_dir, tag, final):
+    """Write each named query's formatted plan to
+    ``out_dir/<query>[_final]_<tag>.txt``."""
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    for name in names:
+        df = QUERIES[name](spark, sf)
+        if final:
+            df.collect()
+        plan = df._jdf.queryExecution().explainString(mode)
+        kind = "_final" if final else ""
+        path = os.path.join(out_dir, f"{name}{kind}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan.strip() + "\n")
+        print("wrote", path)
+
+
 def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*",
+                    help="registry queries to dump (none: regenerate PLANS.md)")
+    ap.add_argument("--out", default="plans", help="directory for named dumps")
+    ap.add_argument("--tag", help="file-name tag of named dumps")
+    ap.add_argument("--final", action="store_true",
+                    help="run each query and dump the executed adaptive plan")
+    args = ap.parse_args()
+    if args.queries and not args.tag:
+        ap.error("--tag is required with query names")
+    unknown = [q for q in args.queries if q not in QUERIES]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark("plans")
     sf = "/root/testdata/sf0.1"
+    if args.queries:
+        dump_named(spark, os.environ.get("SPARK_GRAFT_SF_DIR", sf),
+                   args.queries, args.out, args.tag, args.final)
+        return
     out = ["# PLANS — formatted explains of headline queries (sf0.1)",
            "",
            "Regenerate: `python scripts/dump_plans.py`. What to look for is",
@@ -56,7 +112,8 @@ def main():
         df = QUERIES[name](spark, sf)
         plan = df._jdf.queryExecution().explainString(mode)
         out.append(f"## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
-    open("/root/repo/PLANS.md", "w").write("\n".join(out))
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
+        f.write("\n".join(out))
 
 
 if __name__ == "__main__":

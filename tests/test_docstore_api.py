@@ -144,76 +144,6 @@ def test_sql_view_facade(spark):
     assert sum(r.n for r in out) == 500
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tables):
-    """Co-bucketed doc_id tables must join with no Exchange — the
-    write-time partitioning property that carries the API surface at
-    scale."""
-    small = {k: v.where(F.col("doc_id") < 50) for k, v in tables.items()
-             if k in ("documents", "chunks")}
-    docstore.write_bucketed_tables(small, database="store_t", n_buckets=4)
-    try:
-        d = spark.table("store_t.documents").hint("merge")
-        c = spark.table("store_t.chunks")
-        joined = d.join(c, "doc_id").select("doc_id", "chunk_index")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS store_t.documents")
-        spark.sql("DROP TABLE IF EXISTS store_t.chunks")
-        spark.sql("DROP DATABASE IF EXISTS store_t")
-
-
-def test_document_detail_runs_exchange_free_on_bucketed_store(spark, tables):
-    """The ACTUAL §B detail query (docstore.document_detail) over the
-    bucketed catalog: zero Exchange on the doc_id join path, and the
-    result matches the raw-frame run row for row."""
-    small = {k: v.where(F.col("doc_id") < 50) for k, v in tables.items()
-             if k in ("documents", "chunks")}
-    docstore.write_bucketed_tables(small, database="store_d", n_buckets=4)
-    try:
-        detail = docstore.document_detail(
-            spark.table("store_d.documents").hint("merge"),
-            spark.table("store_d.chunks"),
-        )
-        plan = detail._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        bucketed = sorted(map(tuple, detail.collect()))
-        raw = sorted(map(tuple, docstore.document_detail(
-            small["documents"], small["chunks"]
-        ).collect()))
-        assert bucketed == raw and len(bucketed) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS store_d.documents")
-        spark.sql("DROP TABLE IF EXISTS store_d.chunks")
-        spark.sql("DROP DATABASE IF EXISTS store_d")
-
-
-def test_upsert_merge_semantics(spark, tables):
-    from datetime import datetime, timezone
-
-    def ts(doc_id):
-        return datetime.fromtimestamp(
-            docstore.INGEST_EPOCH_S + doc_id, tz=timezone.utc
-        )
-
-    docs = tables["documents"].where(F.col("doc_id") < 10)
-    updates = spark.createDataFrame(
-        [(3, "doc_3_v2.txt", "fr", "src3", 999,
-          {"lang": "fr", "source": "src3"}, ts(3), ts(3), 1, 10, 10),
-         (100, "doc_100.txt", "en", "new", 5,
-          {"lang": "en", "source": "new"}, ts(100), ts(100), 1, 2, 2)],
-        docs.schema,
-    )
-    merged = docstore.upsert_documents(docs, updates)
-    assert merged.count() == 11  # 10 existing, 1 replaced, 1 new
-    by_id = {r.doc_id: r for r in merged.collect()}
-    assert by_id[3].filename == "doc_3_v2.txt" and by_id[3].lang == "fr"
-    assert by_id[100].source == "new"
-    assert by_id[2].filename == "doc_2.txt"  # untouched rows survive
-
-
 def test_load_table_infers_each_file_version_once(spark, tmp_path):
     """The schema of a table file is inferred on its first load only; a
     repeat load runs no Spark job and is a new relation. A rewrite with

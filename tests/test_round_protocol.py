@@ -581,3 +581,115 @@ def test_bare_key_lint_catches_a_planted_copy(tmp_path):
     assert bare_key_sites(path) == [
         "processor.py:5", "processor.py:6", "processor.py:7",
         "processor.py:8", "processor.py:9", "processor.py:10"]
+
+
+# ------------------------------------------------- store code has callers
+
+_STORE_MODULES = ("sources/tableformat.py", "sources/docstore.py")
+# Public store functions allowed to have no product caller: the doc
+# store's move onto the table format (ROADMAP Direction 1) calls them,
+# for durable cascade deletes and for store maintenance.
+_CALLER_KEEP = {"delete_where", "delete_where_dv", "expire_snapshots"}
+
+
+def _product_modules(root: pathlib.Path) -> list[pathlib.Path]:
+    """The non-test Python modules under ``root``: the package,
+    bench.py, __spark_entry__.py, scripts/ and perfbench/."""
+    paths = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("document_parsing_etl_pipeline_spark", "scripts", "perfbench"):
+        paths += (root / d).rglob("*.py")
+    return sorted(p for p in paths if p.is_file()
+                  and "tests" not in p.relative_to(root).parts)
+
+
+def uncalled_store_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
+    """Public top-level functions of the store modules that no product
+    module references by name. A reference is ``<alias>.<name>``, where
+    the alias is a name the store module is imported under anywhere in
+    the product (or the module's own name, for star re-exports), a
+    ``from <store module> import <name>``, or a use of the bare name in
+    the store module outside the function's own definition."""
+    modules = {p: ast.parse(p.read_text()) for p in _product_modules(root)}
+    out = []
+    for rel in _STORE_MODULES:
+        home = root / "document_parsing_etl_pipeline_spark" / rel
+        stem = home.stem
+        public = {n.name: n for n in modules[home].body
+                  if isinstance(n, ast.FunctionDef)
+                  and not n.name.startswith("_")}
+        aliases, used = {stem}, set()
+        for tree in modules.values():
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom):
+                    if (node.module or "").rsplit(".", 1)[-1] == stem:
+                        used.update(a.name for a in node.names)
+                    aliases.update(a.asname or a.name for a in node.names
+                                   if a.name == stem)
+                elif isinstance(node, ast.Import):
+                    aliases.update(a.asname for a in node.names if a.asname
+                                   and a.name.rsplit(".", 1)[-1] == stem)
+        for tree in modules.values():
+            used.update(n.attr for n in ast.walk(tree)
+                        if isinstance(n, ast.Attribute)
+                        and isinstance(n.value, ast.Name)
+                        and n.value.id in aliases)
+        for top in modules[home].body:
+            used.update(n.id for n in ast.walk(top)
+                        if isinstance(n, ast.Name)
+                        and public.get(n.id) is not top)
+        out += [f"{rel}:{name}" for name in sorted(public.keys() - used)]
+    return out
+
+
+def test_store_functions_have_product_callers():
+    """Every public function of the table format and the doc store is
+    called from product code, apart from the keep-list; a keep-list
+    entry that gains a caller (or goes) must leave the list."""
+    assert sorted(s.split(":")[1] for s in uncalled_store_functions()) \
+        == sorted(_CALLER_KEEP)
+
+
+def test_store_caller_lint_catches_a_planted_copy(tmp_path):
+    src = tmp_path / "document_parsing_etl_pipeline_spark" / "sources"
+    (src / "tests").mkdir(parents=True)
+    (tmp_path / "scripts").mkdir()
+    (src / "tableformat.py").write_text(
+        "def read(root):\n    return scan(root)\n"
+        "def scan(root):\n    return scan(root)\n"
+        "def history(root):\n    return history(root)\n"
+        "def _private(root):\n    pass\n")
+    (src / "docstore.py").write_text(
+        "def open_store(root):\n    pass\n"
+        "def key_predicate(col):\n    pass\n"
+        "def upsert(a, b):\n    pass\n"
+        "def write_bucketed(t):\n    pass\n")
+    (src / "sink.py").write_text(
+        "from . import tableformat as tf\n"
+        "from .docstore import key_predicate\n"
+        "rows = tf.read('t')\n"
+        "write_bucketed = 1\n"
+        "x.upsert(1, 2)\n")
+    (tmp_path / "scripts" / "probe.py").write_text(
+        "from document_parsing_etl_pipeline_spark.sources import docstore\n"
+        "docstore.open_store('r')\n")
+    (src / "tests" / "test_store.py").write_text(
+        "from .. import docstore\ndocstore.upsert(1, 2)\n")
+    assert uncalled_store_functions(tmp_path) == [
+        "sources/tableformat.py:history",
+        "sources/docstore.py:upsert", "sources/docstore.py:write_bucketed"]
+
+
+# ------------------------------------------------- exhaustive tier names
+
+def test_exhaustive_tier_names_are_tests():
+    """Every name in conftest's _EXHAUSTIVE is a test function under
+    tests/: a name left behind by a deleted or renamed test would skip
+    nothing and hide that the tier lost a test."""
+    from conftest import _EXHAUSTIVE
+
+    tests = pathlib.Path(__file__).resolve().parent
+    defined = {n.name for p in tests.rglob("test_*.py")
+               for n in ast.walk(ast.parse(p.read_text()))
+               if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+               and n.name.startswith("test_")}
+    assert sorted(_EXHAUSTIVE - defined) == []

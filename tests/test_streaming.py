@@ -143,7 +143,12 @@ def test_streaming_quality_gate_routes(tmp_path, spark):
     assert got == {1: "accept", 2: "reject:below_min", 3: "reject:null_value"}
 
 
-def test_store_as_of_prunes_batches(tmp_path, spark):
+def test_watcher_lands_each_doc_once_under_batch_dirs(tmp_path, spark):
+    """Two runs of the watcher over one checkpoint: each run's new file
+    lands in its own ``batch_id=<n>`` directories, and reading a table
+    back with ``spark.read.parquet`` yields every doc exactly once with
+    its ``batch_id`` column (the layout perfbench's watcher phase
+    reads)."""
     import os
     watch, store, ckpt = (str(tmp_path / d) for d in ("in2", "store2", "ck2"))
     (tmp_path / "in2").mkdir()
@@ -159,18 +164,18 @@ def test_store_as_of_prunes_batches(tmp_path, spark):
     q = watcher.start_full_pipeline(spark, watch, store, ckpt)
     q.awaitTermination(120)
 
-    batches = sorted(
-        int(p.split("=")[1])
-        for p in os.listdir(os.path.join(store, "documents"))
-        if p.startswith("batch_id=")
-    )
-    assert len(batches) >= 2
-    full = watcher.read_store_as_of(spark, store, "documents")
-    asof = watcher.read_store_as_of(spark, store, "documents", batches[0])
-    assert full.count() == 2 and asof.count() == 1
-    # the as-of predicate must prune partitions at the scan
-    plan = asof._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(batch_id" in plan
+    for name in ("documents", "chunks"):
+        assert all(p.startswith("batch_id=") for p in os.listdir(
+            os.path.join(store, name)) if not p.startswith(("_", ".")))
+    docs = spark.read.parquet(os.path.join(store, "documents"))
+    rows = sorted((r.doc_id, r.batch_id)
+                  for r in docs.select("doc_id", "batch_id").collect())
+    assert [doc for doc, _ in rows] == [1, 2]
+    assert rows[0][1] < rows[1][1]
+    # each doc's chunks sit in the batch that landed the doc
+    chunks = spark.read.parquet(os.path.join(store, "chunks"))
+    assert sorted(tuple(r) for r in chunks.select(
+        "doc_id", "batch_id").distinct().collect()) == rows
 
 
 def test_stream_merge_into_table_exactly_once(tmp_path, spark):

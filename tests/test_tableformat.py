@@ -24,10 +24,7 @@ def test_create_append_and_time_travel(spark, table):
     assert tf.read(spark, table).count() == 150
     # old snapshot still intact
     assert tf.read(spark, table, version=1).count() == 100
-    # timestamp travel: as-of v1's commit returns v1
-    h = tf.history(table)
-    assert [x["version"] for x in h] == [1, v2]
-    assert tf.read(spark, table, as_of_us=h[0]["committed_us"]).count() == 100
+    assert tf.read(spark, table, version=v2).count() == 150
 
 
 def test_merge_rewrites_only_hit_files(spark, table):
@@ -347,82 +344,6 @@ def test_interleave_bits_nd_matches_sql_oracle(spark):
     assert got == want
 
 
-def test_table_changes_merge_update_and_insert(spark, table):
-    upd = spark.createDataFrame(
-        [(3, "updated", 3), (999, "new", 5)],
-        "doc_id long, text string, grp long",
-    )
-    v2 = tf.merge_into(spark, upd, table, key="doc_id")
-    ch = tf.table_changes(spark, table, 1, v2, key="doc_id")
-    got = {(r._change_type, r.doc_id) for r in ch.collect()}
-    # neighbors rewritten into new files are NOT logical changes
-    assert got == {
-        ("insert", 999),
-        ("update_preimage", 3),
-        ("update_postimage", 3),
-    }
-    pre = {r.text for r in ch.where("_change_type = 'update_preimage'").collect()}
-    post = {r.text for r in ch.where("_change_type = 'update_postimage'").collect()}
-    assert pre == {"t3"} and post == {"updated"}
-
-
-def test_table_changes_delete_and_pure_rewrite(spark, tmp_path):
-    root = str(tmp_path / "cdf")
-    df = spark.range(0, 200).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartitionByRange(4, "doc_id")
-    tf.create_table(spark, df, root, stats_cols=["doc_id"])
-    v2 = tf.delete_where(spark, root, "doc_id", 0, 9)
-    ch = tf.table_changes(spark, root, 1, v2)
-    got = {(r._change_type, r.doc_id) for r in ch.collect()}
-    assert got == {("delete", i) for i in range(10)}
-    # OPTIMIZE rewrites every row into new files: zero logical changes
-    v3 = tf.optimize_table(spark, root, target_file_rows=100)
-    assert tf.table_changes(spark, root, v2, v3).count() == 0
-    # and across the whole history, deletes still surface
-    assert tf.table_changes(spark, root, 1, v3).count() == 10
-
-
-def test_expectations_split_and_quarantined_append(spark, table, tmp_path):
-    q_root = str(tmp_path / "quarantine")
-    batch = spark.createDataFrame(
-        [
-            (500, "fine text", 2),
-            (501, "", 3),            # fails nonempty_text
-            (502, "ok", None),       # fails grp_present (NULL != pass)
-            (503, "", None),         # fails both
-        ],
-        "doc_id long, text string, grp long",
-    )
-    out = tf.append_with_expectations(
-        spark, batch, table,
-        expectations={
-            "nonempty_text": "length(text) > 0",
-            "grp_present": "grp IS NOT NULL",
-        },
-        quarantine_root=q_root,
-    )
-    assert out["n_clean"] == 1 and out["n_quarantined"] == 3
-    cur = tf.read(spark, table)
-    assert cur.where("doc_id >= 500").count() == 1  # only 500 landed
-    q = {r.doc_id: r._violated for r in tf.read(spark, q_root).collect()}
-    assert q[501] == "nonempty_text"
-    assert q[502] == "grp_present"
-    assert q[503] == "nonempty_text,grp_present"
-    # second gated append APPENDS to the existing quarantine table
-    out2 = tf.append_with_expectations(
-        spark,
-        spark.createDataFrame(
-            [(504, "", 1)], "doc_id long, text string, grp long"
-        ),
-        table,
-        expectations={"nonempty_text": "length(text) > 0"},
-        quarantine_root=q_root,
-    )
-    assert out2["n_quarantined"] == 1
-    assert tf.read(spark, q_root).count() == 4
-
-
 def test_write_audit_publish_flow(spark, table):
     good = spark.createDataFrame(
         [(600, "staged row", 1)], "doc_id long, text string, grp long"
@@ -430,17 +351,15 @@ def test_write_audit_publish_flow(spark, table):
     out = tf.stage_append(spark, good, table, stage="nightly")
     # main is untouched while staged
     assert tf.read(spark, table).where("doc_id = 600").count() == 0
-    # audit sees the candidate snapshot AND the delta alone
-    assert tf.read_staged(spark, table, "nightly").count() == 101
-    delta = tf.read_staged_delta(spark, table, "nightly")
-    assert [r.doc_id for r in delta.collect()] == [600]
-    clean, viol = tf.validate_expectations(
-        delta, {"nonempty": "length(text) > 0"}
-    )
-    assert viol.count() == 0
     v = tf.publish_stage(table, "nightly")
-    assert tf.read(spark, table).where("doc_id = 600").count() == 1
-    assert tf.read(spark, table, version=out["base_version"]).count() == 100
+    assert v == out["base_version"] + 1
+    assert not os.path.exists(tf._stage_path(table, "nightly"))
+    # the published candidate is the base snapshot plus the staged rows
+    published = tf.read(spark, table, version=v)
+    base = tf.read(spark, table, version=out["base_version"])
+    assert published.count() == 101 and base.count() == 100
+    assert [tuple(r) for r in published.exceptAll(base).collect()] == [
+        (600, "staged row", 1)]
 
 
 def test_publish_refuses_on_base_drift_and_discard_removes_files(
@@ -467,119 +386,6 @@ def test_publish_refuses_on_base_drift_and_discard_removes_files(
     cur = tf.read(spark, table)
     assert cur.where("doc_id = 701").count() == 1
     assert cur.where("doc_id = 700").count() == 0
-
-
-def test_table_changes_across_schema_evolution_boundary(spark, tmp_path):
-    """Regression (round-7 advisor): a change feed whose from-only
-    files ALL predate a schema-evolution append must not raise — the
-    delta files are read with the manifest-recorded schema, so
-    pre-evolution files surface the added column as typed NULLs."""
-    root = str(tmp_path / "cdf_evo")
-    df = spark.range(0, 20).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).coalesce(1)
-    tf.create_table(spark, df, root, stats_cols=["doc_id"])        # v1
-    evolved = spark.range(100, 110).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text",
-        "cast(id AS double) / 1000 AS quality",
-    )
-    v2 = tf.append(spark, evolved, root)                            # v2
-    # delete rewrites the PRE-evolution v1 file; post-rewrite survivors
-    # carry the evolved schema, so only_f = pre-evolution files only
-    v3 = tf.delete_where(spark, root, "doc_id", 0, 4)
-    ch = tf.table_changes(spark, root, v2, v3)
-    assert "quality" in ch.columns
-    got = {(r._change_type, r.doc_id, r.quality) for r in ch.collect()}
-    assert got == {("delete", i, None) for i in range(5)}
-    # keyed variant across the same boundary also reads clean
-    chk = tf.table_changes(spark, root, v2, v3, key="doc_id")
-    assert {r.doc_id for r in chk.collect()} == set(range(5))
-
-
-def test_branch_isolated_from_main(spark, table):
-    """Branch appends never appear on main; main appends never appear
-    on the branch; both lineages time-travel independently."""
-    tf.create_branch(table, "dev")
-    dev_rows = spark.range(1000, 1020).selectExpr(
-        "id AS doc_id", "concat('d', id) AS text", "id % 7 AS grp")
-    tf.append_to_branch(spark, dev_rows, table, "dev")
-    assert tf.read_branch(spark, table, "dev").count() == 120
-    assert tf.read(spark, table).count() == 100       # main untouched
-    # branch time travel: b1 is the base snapshot
-    assert tf.read_branch(spark, table, "dev", branch_version=1).count() == 100
-    refs = tf.list_refs(table)
-    assert refs["branches"] == {"dev": 2}
-
-
-def test_fast_forward_merges_and_refuses_divergence(spark, table):
-    tf.create_branch(table, "dev")
-    tf.append_to_branch(
-        spark,
-        spark.range(1000, 1010).selectExpr(
-            "id AS doc_id", "concat('d', id) AS text", "id % 7 AS grp"),
-        table, "dev")
-    v = tf.fast_forward(table, "dev")
-    assert tf.read(spark, table).count() == 110
-    assert tf.read(spark, table, version=v - 1).count() == 100
-    # divergence: a branch based on the OLD head cannot fast-forward
-    tf.create_branch(table, "dev2", version=v - 1)
-    tf.append_to_branch(
-        spark,
-        spark.range(2000, 2005).selectExpr(
-            "id AS doc_id", "concat('x', id) AS text", "id % 7 AS grp"),
-        table, "dev2")
-    with pytest.raises(RuntimeError, match="fast_forward refused"):
-        tf.fast_forward(table, "dev2")
-
-
-def test_expire_respects_branch_and_tag_refs(spark, table):
-    """A tag pins its main version through expiry; branch-only files
-    survive vacuum while the branch exists and are reclaimed after
-    delete_branch."""
-    more = spark.range(100, 130).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp")
-    v2 = tf.append(spark, more, table)
-    tf.create_tag(table, "release-1", version=1)
-    tf.create_branch(table, "dev")
-    tf.append_to_branch(
-        spark,
-        spark.range(3000, 3010).selectExpr(
-            "id AS doc_id", "concat('b', id) AS text", "id % 7 AS grp"),
-        table, "dev")
-    tf.append(spark, spark.range(130, 140).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"),
-        table)
-    res = tf.expire_snapshots(table, keep_last=1)
-    # v1 pinned by the tag -> kept; v2 expired
-    assert 1 in res["kept_versions"] and v2 in res["expired_versions"]
-    assert tf.read_tag(spark, table, "release-1").count() == 100
-    # branch still fully readable (base v2's 130 rows + 10 branch
-    # rows): its unique files AND its base's files survived vacuum
-    # even though v2 itself was expired from main
-    assert tf.read_branch(spark, table, "dev").count() == 140
-    # drop the refs -> next expire reclaims what only they referenced
-    tf.delete_branch(table, "dev")
-    tf.delete_tag(table, "release-1")
-    res2 = tf.expire_snapshots(table, keep_last=1)
-    assert res2["removed_files"] > 0
-    with pytest.raises(ValueError):
-        tf.read_tag(spark, table, "release-1")
-
-
-def test_branch_schema_evolution_isolated(spark, table):
-    """A column added on a branch exists there (old rows NULL) and
-    does NOT leak into main until fast-forward."""
-    tf.create_branch(table, "schema-dev")
-    wider = spark.range(5000, 5005).selectExpr(
-        "id AS doc_id", "concat('w', id) AS text", "id % 7 AS grp",
-        "id * 2 AS extra")
-    tf.append_to_branch(spark, wider, table, "schema-dev")
-    bdf = tf.read_branch(spark, table, "schema-dev")
-    assert "extra" in bdf.columns
-    assert bdf.where("extra IS NOT NULL").count() == 5
-    assert "extra" not in tf.read(spark, table).columns
-    v = tf.fast_forward(table, "schema-dev")
-    assert "extra" in tf.read(spark, table, version=v).columns
 
 
 # ------------------------------------------------- deletion vectors
@@ -679,19 +485,6 @@ def test_vacuum_keeps_dv_sidecars_of_retained_snapshots(spark, dv_table):
     assert tf.read(spark, dv_table).count() == 50
 
 
-def test_table_changes_reports_dv_deletes(spark, dv_table):
-    """CDF across a DV commit reports exactly the tombstoned rows as
-    deletes; CDF across the materializing OPTIMIZE reports nothing
-    (the live rowset is unchanged)."""
-    v2 = tf.delete_where_dv(spark, dv_table, "doc_id", 95, 99)
-    ch = tf.table_changes(spark, dv_table, 1, v2)
-    rows = ch.collect()
-    assert {r._change_type for r in rows} == {"delete"}
-    assert sorted(r.doc_id for r in rows) == list(range(95, 100))
-    v3 = tf.optimize_table(spark, dv_table, target_file_rows=100)
-    assert tf.table_changes(spark, dv_table, v2, v3).count() == 0
-
-
 def test_merge_dv_matches_cow_merge_without_rewrites(spark, tmp_path):
     """merge_into_dv produces the SAME live relation as copy-on-write
     merge_into, while carrying every pre-existing data file by
@@ -729,118 +522,6 @@ def test_merge_dv_matches_cow_merge_without_rewrites(spark, tmp_path):
     assert sorted(map(tuple, tf.read(spark, mor).collect()))[0:0] == []
     assert tf.read(spark, mor).count() == 101
     assert tf._dv_entries(tf._load_manifest(mor, v3 + 1)) == []
-
-
-def test_table_changes_mor_merge_matches_cow_change_feed(spark, tmp_path):
-    """CDF semantics must not depend on the write mode (round-8 advisor
-    finding): a merge-on-read MERGE (DV tombstone + re-appended key)
-    must produce the SAME change feed as the identical copy-on-write
-    MERGE — update_preimage/update_postimage for updated keys, insert
-    for new keys — not a spurious delete+insert pair."""
-    df = spark.range(0, 100).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartitionByRange(4, "doc_id")
-    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
-    tf.create_table(spark, df, cow, stats_cols=["doc_id"])
-    tf.create_table(spark, df, mor, stats_cols=["doc_id"])
-    upd = spark.createDataFrame(
-        [(3, "updated"), (55, "also"), (999, "new")],
-        "doc_id long, text string",
-    )
-    vc = tf.merge_into(spark, upd, cow, key="doc_id")
-    vm = tf.merge_into_dv(spark, upd, mor, key="doc_id")
-    want = sorted(
-        (r._change_type, r.doc_id, r.text)
-        for r in tf.table_changes(spark, cow, 1, vc, key="doc_id")
-        .collect()
-    )
-    got = sorted(
-        (r._change_type, r.doc_id, r.text)
-        for r in tf.table_changes(spark, mor, 1, vm, key="doc_id")
-        .collect()
-    )
-    assert got == want
-    assert ("update_preimage", 3, "t3") in got
-    assert ("update_postimage", 3, "updated") in got
-    assert ("insert", 999, "new") in got
-    assert not any(ct == "delete" for ct, _, _ in got)
-
-    # a MoR merge that re-appends IDENTICAL content is a pure rewrite:
-    # zero logical changes, in key mode and full-row mode alike
-    same = spark.createDataFrame(
-        [(7, "t7")], "doc_id long, text string")
-    v3 = tf.merge_into_dv(spark, same, mor, key="doc_id")
-    assert tf.table_changes(spark, mor, vm, v3, key="doc_id").count() == 0
-    assert tf.table_changes(spark, mor, vm, v3).count() == 0
-
-    # DV-only deletes (no re-insert of the key) still surface as
-    # plain deletes in key mode
-    v4 = tf.delete_where_dv(spark, mor, "doc_id", 90, 92)
-    ch = tf.table_changes(spark, mor, v3, v4, key="doc_id")
-    assert {(r._change_type, r.doc_id) for r in ch.collect()} == {
-        ("delete", 90), ("delete", 91), ("delete", 92)}
-
-
-def test_table_changes_multi_insert_per_key_pairs_per_row(spark,
-                                                          tmp_path):
-    """Round-9 ADVICE item: a span with ONE tombstoned row of a key
-    and N>1 re-inserted rows of that key must feed the CDF as 1
-    update pair + (N-1) inserts (Delta's per-ROW update semantics),
-    not an asymmetric 1-preimage/N-postimage set — and the feed must
-    stay write-mode identical between MoR (DV tombstone + appends)
-    and CoW (file-rewrite delete + appends)."""
-    df = spark.range(0, 40).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartitionByRange(2, "doc_id")
-    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
-    tf.create_table(spark, df, cow, stats_cols=["doc_id"])
-    tf.create_table(spark, df, mor, stats_cols=["doc_id"])
-
-    # one key (7): tombstone its row, then re-insert TWO rows of it
-    dup = spark.createDataFrame(
-        [(7, "seven-a"), (7, "seven-b")], "doc_id long, text string")
-    tf.delete_where(spark, cow, "doc_id", 7, 7)
-    vc = tf.append(spark, dup, cow)
-    tf.delete_where_dv(spark, mor, "doc_id", 7, 7)
-    vm = tf.append(spark, dup, mor)
-
-    def feed(root, v):
-        return sorted(
-            (r._change_type, r.doc_id, r.text)
-            for r in tf.table_changes(spark, root, 1, v, key="doc_id")
-            .collect()
-        )
-
-    got_cow, got_mor = feed(cow, vc), feed(mor, vm)
-    assert got_mor == got_cow
-    types = [ct for ct, _, _ in got_cow]
-    assert types.count("update_preimage") == 1
-    assert types.count("update_postimage") == 1
-    assert types.count("insert") == 1
-    assert types.count("delete") == 0
-    assert ("update_preimage", 7, "t7") in got_cow
-    # the paired postimage and the surplus insert partition the two
-    # new rows (rank pairing is content-ordered and deterministic)
-    new_rows = {(ct, t) for ct, d, t in got_cow if d == 7
-                and ct in ("update_postimage", "insert")}
-    assert new_rows == {("update_postimage", "seven-a"),
-                        ("insert", "seven-b")}
-
-    # shrinking key: 2 old rows -> 1 new row is 1 update + 1 delete
-    shrink_src = spark.createDataFrame(
-        [(7, "seven-final")], "doc_id long, text string")
-    tf.delete_where(spark, cow, "doc_id", 7, 7)
-    vc2 = tf.append(spark, shrink_src, cow)
-    ch2 = sorted(
-        (r._change_type, r.doc_id, r.text)
-        for r in tf.table_changes(spark, cow, vc, vc2, key="doc_id")
-        .collect()
-    )
-    t2 = [ct for ct, _, _ in ch2]
-    assert t2.count("update_preimage") == 1
-    assert t2.count("update_postimage") == 1
-    assert t2.count("delete") == 1
-    assert t2.count("insert") == 0
 
 
 def test_scan_keys_prunes_on_clustered_table(spark, tmp_path):
@@ -940,25 +621,6 @@ def test_scan_degrades_to_full_read_without_stats(spark, tmp_path):
     tf.delete_where(spark, root, "v", 3, 3)
     assert tf.read(spark, root).where("v = 3").count() == 0
     assert tf.read(spark, root).count() == 90
-
-
-def test_table_changes_on_key_only_table(spark, tmp_path):
-    """Round-10 (r09 advisory): a table whose ONLY column is the key
-    has no non-key columns to rank _pair_update_images by; the CDF
-    must fall back instead of raising on an empty orderBy."""
-    root = str(tmp_path / "t")
-    df = spark.range(0, 10).selectExpr("id AS k")
-    tf.create_table(spark, df, root, stats_cols=["k"])
-    tf.merge_into(spark, spark.range(5, 15).selectExpr("id AS k"),
-                  root, "k")
-    ch = tf.table_changes(spark, root, 1, 2, key="k")
-    by_type = {r["_change_type"]: r["n"] for r in ch.groupBy(
-        "_change_type").count().withColumnRenamed(
-        "count", "n").collect()}
-    # keys 10-14 are inserts; keys 5-9 were rewritten identical (merge
-    # rewrote their file) and must NOT surface as changes
-    assert by_type.get("insert") == 5
-    assert "delete" not in by_type
 
 
 # ------------------------------------------------- per-file blooms
@@ -1285,8 +947,8 @@ def test_vacuum_keeps_pending_stage_files_live(spark, table):
     # orphans could go — but the staged files are NOT orphans anymore
     out = tf.expire_snapshots(table, keep_last=1)
     assert out["removed_files"] == 0
-    # audit + publish still function after the vacuum
-    assert tf.read_staged(spark, table, "slowaudit").count() == 101
+    # publish still functions after the vacuum, and every file the
+    # published snapshot references is readable
     tf.publish_stage(table, "slowaudit")
     cur = tf.read(spark, table)
     assert cur.count() == 101
