@@ -159,9 +159,3 @@ def spread_scan(df: DataFrame, key: str = "doc_id") -> DataFrame:
     if not need:
         return df
     return df.repartition(target, F.col(key))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -719,7 +719,7 @@ def pca_project(
     the d×d eigensolve is driver-side because d is small by
     construction (embedding dims, not corpus size). Iterative /
     eigendecomposition steps are not SQL-expressible — pytest-covered,
-    like kmeans_lloyd.
+    like the k-means loop (_kmeans_rounds).
     """
     import numpy as np
     import pandas as pd
@@ -880,7 +880,7 @@ def _spherical_vectors(embeddings: DataFrame, id_col: str) -> DataFrame:
     guard). Cosine is scale-invariant, so normalizing changes NO
     assignment; it changes the MEAN UPDATE into the spherical-k-means
     direction mean, which is what makes the sum-of-cosines objective
-    provably non-decreasing per round (see kmeans_lloyd)."""
+    provably non-decreasing per round (see _kmeans_rounds)."""
     from .similarity import norm
 
     return (
@@ -905,10 +905,17 @@ def _kmeans_rounds(
     max_iter: int,
     id_col: str = "vec_id",
 ):
-    """Shared spherical-k-means loop: returns (final scored relation
+    """Spherical k-means loop: returns (final scored relation
     [vec_id × centroid: all cosines of the LAST assignment round],
-    final assigned relation, per-round objective DataFrames). Each
-    round is: broadcast the ≤k centroids → assignment join → per-
+    final assigned relation, per-round objective DataFrames).
+    Deterministic seeding (first k vectors), cosine assignment,
+    direction-mean update (element-wise mean of the L2-NORMALIZED
+    vectors). The normalized-mean update makes this textbook
+    spherical k-means (Dhillon & Modha 2001): the assignment step
+    maximizes each vector's cosine given centroids, and the direction
+    mean maximizes the within-cluster cosine sum given assignments —
+    so the summed assignment cosine is non-decreasing every full
+    round, the contract kmeans_contract_audit pins. Each round is: broadcast the ≤k centroids → assignment join → per-
     cluster element-wise mean via posexplode + groupBy(cluster, dim)
     — two shuffles per round on tiny keys; the full vector set is
     never collected. Centroid lineage truncated per round
@@ -972,38 +979,6 @@ def _kmeans_rounds(
         # materialization was one extra action per round for nothing
         cents = new_cents
     return scored, assigned, objectives
-
-
-def kmeans_lloyd(
-    embeddings: DataFrame,
-    k: int = 8,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Iterative spherical k-means over the embedding column →
-    (vec_id, centroid_id, cosine). Deterministic seeding (first k
-    vectors), cosine assignment, direction-mean update (element-wise
-    mean of the L2-NORMALIZED vectors).
-
-    The normalized-mean update makes this textbook spherical k-means
-    (Dhillon & Modha 2001): the assignment step maximizes each
-    vector's cosine given centroids, and the direction mean maximizes
-    the within-cluster cosine sum given assignments — so the summed
-    assignment cosine is non-decreasing every full round, the
-    contract kmeans_contract_audit pins in its oracle. (Cosine is
-    scale-invariant, so normalization changes no individual
-    assignment decision — only the update's weighting.)
-
-    The iterates' centroid VALUES are non-SQL-expressible; the
-    assignment relation here is rows-only, and the hash-gated
-    contract over the same loop is kmeans_contract_audit.
-    """
-    _scored, assigned, _objs = _kmeans_rounds(
-        embeddings, k, max_iter, id_col
-    )
-    return assigned.select(
-        "vec_id", "centroid_id", F.round("cosine", 4).alias("cosine")
-    )
 
 
 def kmeans_contract_audit(

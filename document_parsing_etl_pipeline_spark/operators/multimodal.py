@@ -47,16 +47,6 @@ def _fake_feature(content: bytes, dim: int = 8) -> list[float]:
     return [b / total for b in buckets]
 
 
-def _fake_resize(content: bytes, target: int) -> tuple[int, int]:
-    """STUB: deterministic fake image resize (no PIL). Returns the
-    target box the real implementation would produce."""
-    w, h, _fmt = _fake_decode(content)
-    if w == 0 or h == 0:
-        return (0, 0)
-    scale = target / max(w, h)
-    return (max(1, int(w * scale)), max(1, int(h * scale)))
-
-
 def _fake_frame_sample(content: bytes, every_n: int = 10) -> list[int]:
     """STUB: deterministic fake video frame sampling (no ffmpeg):
     derives a frame count from content length and returns sampled
@@ -66,24 +56,6 @@ def _fake_frame_sample(content: bytes, every_n: int = 10) -> list[int]:
         return []
     n_frames = max(1, len(content) // 256)
     return list(range(0, n_frames, every_n))
-
-
-def resize_images(blobs: DataFrame, target: int = 224) -> DataFrame:
-    """image blobs → resized dimensions (224-box default, the common
-    vision-model input). Arrow-batched; binary stays columnar."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rs = pdf["content"].map(lambda c: _fake_resize(c, target))
-            yield pd.DataFrame({
-                "image_path": pdf["image_path"],
-                "resized_w": rs.map(lambda t: t[0]).astype("int32"),
-                "resized_h": rs.map(lambda t: t[1]).astype("int32"),
-            })
-
-    return blobs.mapInPandas(
-        _resize, schema="image_path string, resized_w int, resized_h int"
-    )
 
 
 def sample_video_frames(blobs: DataFrame, every_n: int = 10) -> DataFrame:

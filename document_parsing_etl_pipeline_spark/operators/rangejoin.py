@@ -14,66 +14,16 @@ a post-filter.
 Cost model: each left row lands in `(hi-lo)/bucket_width + 1` buckets
 (choose bucket_width ≈ window width → fanout ≈ 2); each right row
 lands in exactly ONE bucket, so a matched pair meets in exactly one
-bucket and needs no de-duplication. The shuffle key is the bucket id —
+bucket. The join here is a LEFT join with a per-left-row match count
+(`range_join_count`). The shuffle key is the bucket id —
 time-skewed workloads (a hot minute) show up as bucket skew, which AQE
 skew-join splitting handles because this is a plain equi shuffle join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    lo: int,
-    hi: int,
-    bucket_width: int,
-    how: str = "inner",
-    extra_cond: Column | None = None,
-) -> DataFrame:
-    """Join each left row to right rows with
-    `right_key ∈ [left_key + lo, left_key + hi)` (half-open, integer
-    keys — epoch micros in the event queries).
-
-    Inner join only — each matched pair meets in exactly one bucket,
-    so the output carries no duplicates and needs no DISTINCT. For
-    left-outer semantics use `range_join_count` (per-left-row match
-    counts), which handles the unmatched-row fanout correctly.
-    """
-    if how != "inner":
-        raise ValueError(
-            f"how must be 'inner' (use range_join_count for left "
-            f"semantics), got {how!r}"
-        )
-    lk = F.col(left_key)
-    # integer `div`, not float `/`: a double quotient within 1 ulp of
-    # an integer would floor to the wrong bucket after cast
-    lb = left.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.expr(f"({left_key} + ({lo})) div {bucket_width}"),
-                # hi is exclusive: the last contained key is hi-1
-                F.expr(f"({left_key} + ({hi}) - 1) div {bucket_width}"),
-            )
-        ),
-    )
-    rb = right.withColumn(
-        "__bucket", F.expr(f"{right_key} div {bucket_width}")
-    )
-    cond = (
-        (lb["__bucket"] == rb["__bucket"])
-        & (rb[right_key] >= lb[left_key] + F.lit(lo))
-        & (rb[right_key] < lb[left_key] + F.lit(hi))
-    )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return lb.join(rb, cond, "inner").drop("__bucket")
 
 
 def range_join_count(

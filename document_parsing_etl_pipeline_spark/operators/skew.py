@@ -1,39 +1,16 @@
-"""Skew handling: salted joins and skew diagnostics.
+"""Skew handling: profiled salted joins and skew diagnostics.
 
 AQE's skew-join split handles sort-merge skew at runtime; salting is
 the plan-level tool for the cases AQE can't fix (skewed broadcast-side
 misses, skewed aggregations). The salt fan-out trades small-side
-duplication (× salt) for even task sizes on the big side.
+duplication (× n_salts per hot key) for even task sizes on the big
+side; `salt_plan` measures each hot key's fan-out from the data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join with the big side salted into ``salt`` sub-keys.
-
-    The big side's salt is derived deterministically from the whole
-    row hash (uniform spread of a hot key across `salt` tasks); the
-    small side is exploded once per salt value. Result is identical to
-    the unsalted join.
-    """
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*big.columns), F.lit(salt)).cast("int")
-    )
-    small_s = small.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))),
-    )
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
 
 
 def salt_plan(
@@ -48,7 +25,7 @@ def salt_plan(
     tune. Returns (key, n_salts) for the top-k keys whose row count
     exceeds ``target_rows_per_task`` (n_salts = ceil(n/target), so
     each sub-key carries ~target rows); keys not in the plan default
-    to fanout 1 in apply_salt_plan. The plan is ≤ top rows —
+    to fanout 1 in salted_join_profiled. The plan is ≤ top rows —
     broadcastable at any data scale."""
     return (
         df.groupBy(key)
@@ -81,14 +58,16 @@ def _plan_map(plan: DataFrame):
     )
 
 
-def apply_salt_plan(big: DataFrame, plan: DataFrame, key: str) -> DataFrame:
-    """Attach a `_salt` column to the big side per the plan: a key
-    with n_salts in the plan spreads uniformly (row-hash modulo) over
+def _salt_big(big: DataFrame, m, key: str) -> DataFrame:
+    """``big`` with a `_salt` column per the plan map ``m``: a key with
+    n_salts in the plan spreads uniformly (row-hash modulo) over
     n_salts sub-keys; unlisted keys keep _salt = 0."""
-    m = _plan_map(plan)
-    ns = F.lit(1) if m is None else F.coalesce(m[F.col(key)], F.lit(1))
     return big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*big.columns), ns).cast("int")
+        "_salt",
+        F.pmod(
+            F.xxhash64(*big.columns),
+            F.coalesce(m[F.col(key)], F.lit(1)),
+        ).cast("int"),
     )
 
 
@@ -99,20 +78,14 @@ def salted_join_profiled(
     plan: DataFrame,
     how: str = "inner",
 ) -> DataFrame:
-    """salted_join with per-key fanout from a measured salt_plan:
-    only the keys the profile flagged pay any duplication of the
-    small side (explode × n_salts); every other key joins 1:1.
+    """Join with the big side salted per key by a measured salt_plan
+    (_salt_big): only the keys the profile flagged pay any duplication
+    of the small side (explode × n_salts); every other key joins 1:1.
     Result is identical to the plain join."""
     m = _plan_map(plan)
     if m is None:  # nothing hot — plain join
         return big.join(small, key, how)
-    big_s = big.withColumn(
-        "_salt",
-        F.pmod(
-            F.xxhash64(*big.columns),
-            F.coalesce(m[F.col(key)], F.lit(1)),
-        ).cast("int"),
-    )
+    big_s = _salt_big(big, m, key)
     small_s = (
         small.withColumn(
             "_salt",

@@ -53,9 +53,9 @@ def q_session_conversion(spark, sf_dir):
     start): sessions, click-sessions, converted click-sessions, and
     the integer-ppm conversion rate. Same shuffle shape as
     sessionize (per-user windows) plus one calendar-sized rollup —
-    and the session relation here is per-user-window derived, the
-    formulation that streams via session_window (parity proven by
-    q_session_window_native + the streaming test)."""
+    and the session relation here is per-user-window derived; the
+    session_window formulation of the same sessions is
+    q_session_window_native."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts_us", F.expr("ts div 1000")
     )
@@ -1024,9 +1024,8 @@ def q_kmeans_clusters(spark, sf_dir):
     partitions the embeddings table exactly (the oracle's row set IS
     the table). A broken argmax window, a mis-ordered update, or a
     lost/duplicated vector fails the hash gate. The assignment VALUES
-    (cluster ids) remain available via corpus.kmeans_lloyd and are
-    pytest-covered; one full Lloyd step is value-oracled by
-    cluster_assign. corpus.py:kmeans_contract_audit."""
+    (cluster ids) are not surfaced; one full Lloyd step is
+    value-oracled by cluster_assign. corpus.py:kmeans_contract_audit."""
     return corpus.kmeans_contract_audit(
         load_table(spark, sf_dir, "embeddings"), k=8, max_iter=3
     )
@@ -1539,10 +1538,8 @@ def q_shard_assignment(spark, sf_dir):
     buckets), (2) per-bucket totals — one tiny row per bucket —
     cumsummed and broadcast back as bucket offsets. global_before =
     bucket_offset + within_before. The only ordered window over a
-    single partition runs on #buckets rows, not #docs. The same
-    module's write_training_shards materializes the plan as one
-    sorted parquet file per shard. Oracle: the equivalent single
-    global window cumsum."""
+    single partition runs on #buckets rows, not #docs. Oracle: the
+    equivalent single global window cumsum."""
     from ..sources.shards import shard_assignments
 
     docs = load_table(spark, sf_dir, "documents")

@@ -89,9 +89,12 @@ class DocumentProcessor:
         next micro-batch and runs the same parse→chunk→store pipeline
         the reference's upload endpoint hands to its background worker.
         Returns the path of the landed drop file; the filename carries
-        the doc_id so re-uploads overwrite idempotently (primary-key
-        INSERT parity — the stream_dedup stateful operator additionally
-        guards exactly-once per doc_id across batches)."""
+        the doc_id, so a re-upload replaces a drop the watcher has not
+        read yet. Exactly-once into the store comes from
+        ``watcher.start_full_pipeline``'s sink: the checkpoint records
+        which files each micro-batch read, and a replayed batch
+        rewrites its own ``batch_id=<n>`` directories with
+        mode("overwrite"), so a replay lands no duplicate rows."""
         import json
         import os
 

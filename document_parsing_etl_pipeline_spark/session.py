@@ -51,10 +51,6 @@ from pyspark.sql import SparkSession
 T = TypeVar("T")
 
 DEFAULT_CONF = {
-    # AQE: runtime re-plan (coalesce post-shuffle partitions, skew joins).
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Dimension tables (region/nation/supplier/customer at test SF) are
     # broadcast; on a real cluster raise with data size, not hardcoded.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -63,8 +59,6 @@ DEFAULT_CONF = {
     # Deterministic session timezone: testdata timestamps are naive UTC.
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.shuffle.partitions": "32",
-    # Parquet scans: keep splits big enough to amortize footer reads.
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # Long-session hygiene (round 13): localCheckpoint blocks from

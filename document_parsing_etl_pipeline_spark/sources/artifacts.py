@@ -69,12 +69,13 @@ def fingerprint_parts(
     sf_dir: str, params: str,
     source_tables: Sequence[str] = ("documents",),
 ) -> list[str]:
-    """The per-file stat lines behind fingerprint(): one line per
-    DATA file of every source table (size + mtime_ns) plus the
-    build-parameter line. Metadata files (_SUCCESS, .crc, ...) are
-    excluded — they carry no row identity, and a writer touching
-    _SUCCESS on an append would otherwise make every append look like
-    an in-place rewrite and defeat append detection (round 13)."""
+    """The per-file stat lines an artifact's fingerprint (_digest)
+    hashes: one line per DATA file of every source table (size +
+    mtime_ns) plus the build-parameter line. Metadata files
+    (_SUCCESS, .crc, ...) are excluded — they carry no row identity,
+    and a writer touching _SUCCESS on an append would otherwise make
+    every append look like an in-place rewrite and defeat append
+    detection (round 13)."""
     parts = [f"params={params}"]
     for t in source_tables:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -101,18 +102,11 @@ def fingerprint_parts(
     return parts
 
 
-def fingerprint(
-    sf_dir: str, params: str,
-    source_tables: Sequence[str] = ("documents",),
-) -> str:
-    """Identity of an artifact build: the stat signature (size +
-    mtime_ns per file) of every source table the builder reads, plus
-    the build-parameter string. Cheap (no data read), and any
-    in-place corpus regeneration or parameter change flips it."""
-    return hashlib.md5(
-        "|".join(fingerprint_parts(sf_dir, params, source_tables))
-        .encode()
-    ).hexdigest()
+def _digest(parts: Sequence[str]) -> str:
+    """Identity of an artifact build: md5 over its fingerprint_parts
+    lines. Cheap (no data read), and any in-place corpus regeneration
+    or parameter change flips it."""
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def _append_delta(
@@ -296,7 +290,7 @@ def load_or_build(
     parts = fingerprint_parts(sf_dir, params, source_tables)
     _ensure_table(
         spark, root, builder,
-        hashlib.md5("|".join(parts).encode()).hexdigest(),
+        _digest(parts),
         parts=parts, sf_dir=sf_dir, refresher=refresher,
     )
     memo[memo_key] = tf.read(spark, root)
@@ -329,7 +323,7 @@ def _ensure_group(
     job, locally it is the session shuffle parallelism). Returns the
     member roots."""
     parts = fingerprint_parts(sf_dir, params, source_tables)
-    fp = hashlib.md5("|".join(parts).encode()).hexdigest()
+    fp = _digest(parts)
     meta = {"artifact_fingerprint": fp, "artifact_sources": parts}
     roots = [table_root(base, sf_dir, n) for n in names]
     stale = [
@@ -494,7 +488,7 @@ def scan_artifact_keys(
     parts = fingerprint_parts(sf_dir, params, source_tables)
     _ensure_table(
         spark, root, builder,
-        hashlib.md5("|".join(parts).encode()).hexdigest(),
+        _digest(parts),
         cluster=cluster, parts=parts, sf_dir=sf_dir,
         refresher=refresher,
     )

@@ -7,7 +7,7 @@ Spark re-expression: images are rows of a binary-column DataFrame
 (`image_path string, content binary, content_type string`) persisted
 as parquet — the pattern that scales to 100 TB of blobs (columnar
 batches, partition-pruned point reads) without an external object
-store in the test container. Put/get/delete are DataFrame ops.
+store in the test container. Write and point read are DataFrame ops.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType,
 )
@@ -30,10 +29,6 @@ BLOB_SCHEMA = StructType([
 def object_path(doc_id: int, chart_id: int) -> str:
     """MinIO key layout parity (src/storage/minio.py:45)."""
     return f"documents/{doc_id}/charts/{chart_id}.png"
-
-
-def put_images(spark: SparkSession, rows: list[tuple[str, bytes, str]]) -> DataFrame:
-    return spark.createDataFrame(rows, BLOB_SCHEMA)
 
 
 def write_blobs(blobs: DataFrame, root: str) -> None:
@@ -56,7 +51,3 @@ def read_blob(spark: SparkSession, root: str, doc_id: int,
     path = os.path.join(root, "blobs")
     return snapshots(spark, {path: BLOB_SCHEMA})[path].where(
         key_predicate("image_path", "==", object_path(doc_id, chart_id)))
-
-
-def delete_blob(blobs: DataFrame, doc_id: int, chart_id: int) -> DataFrame:
-    return blobs.where(F.col("image_path") != object_path(doc_id, chart_id))

@@ -1,10 +1,10 @@
-"""Event-stream analytics: watermarked windowed aggregation and
-stateful sessionization on a stream.
+"""Event-stream analytics: watermarked windowed aggregation and a
+stream-stream interval join.
 
-Batch equivalents (same semantics, oracle-checked) live in
-plans/queries.py as q_events_windowed / q_events_sessionize; these
-streaming versions add watermark-driven late-data handling, which has
-no single-shot SQL equivalent (rows-only checks).
+The batch equivalent of the windowed counts (same semantics,
+oracle-checked) is q_events_windowed in plans/; the streaming
+versions add watermark-driven late-data handling, which has no
+single-shot SQL equivalent (rows-only checks).
 """
 
 from __future__ import annotations
@@ -46,48 +46,6 @@ def windowed_counts(events: DataFrame, window: str = "5 minutes",
         .select(
             F.col("window.start").alias("window_start"),
             "event_type", "n_events", "sum_value",
-        )
-    )
-
-
-def enrich_with_dim(events: DataFrame, dim: DataFrame,
-                    key: str = "user_id") -> DataFrame:
-    """Stream-static join: enrich the event stream with a static
-    dimension (user/customer attributes). The static side is planned
-    per micro-batch — broadcast when small, and at scale the standard
-    pattern is a pre-bucketed dim so each batch joins without a
-    shuffle of the stream side."""
-    return events.join(F.broadcast(dim), key, "left")
-
-
-def streaming_quality_gate(events: DataFrame,
-                           min_value: float = 0.0) -> DataFrame:
-    """Route a stream into accepted/rejected with a reason column —
-    the streaming analog of the ingest-reject quarantine; downstream
-    writers fan out with .where() on `gate` (one source, two sinks).
-    """
-    return events.withColumn(
-        "gate",
-        F.when(F.col("value").isNull(), "reject:null_value")
-         .when(F.col("value") < min_value, "reject:below_min")
-         .otherwise("accept"),
-    )
-
-
-def sessionize(events: DataFrame, gap: str = "30 minutes",
-               watermark: str = "10 minutes") -> DataFrame:
-    """Gap-based session windows via the built-in session_window —
-    state is managed by Spark (no custom applyInPandasWithState
-    needed for gap sessions)."""
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap), "user_id")
-        .agg(F.count("*").alias("n_events"),
-             F.sum("value").alias("sum_value"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id", "n_events", "sum_value",
         )
     )
 

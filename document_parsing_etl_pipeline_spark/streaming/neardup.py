@@ -39,7 +39,6 @@ from .table_sink import last_committed_batch
 
 def _assert_ids_new(
     spark, bb: DataFrame, index_root: str, lo, hi, ids_fn,
-    stats: dict | None = None,
 ) -> None:
     """Enforce the append contract 'ingest doc_ids are new', in two
     driver-side manifest passes before any data is read:
@@ -59,22 +58,15 @@ def _assert_ids_new(
 
     Only files that survive BOTH passes pay the confirming semi-join.
     A violation raises instead of silently duplicating the
-    violator's bucket rows. ``stats`` (round 13, the promised probe
-    observability): filled with the per-pass file hit counts."""
-    if stats is None:
-        stats = {}
+    violator's bucket rows."""
     if lo is None:
         return
-    pruned, files_read, files_total = tf.scan(
-        spark, index_root, "doc_id", lo, hi)
-    stats["guard_range_files"] = files_read
-    stats["guard_files_total"] = files_total
+    pruned, files_read, _ = tf.scan(spark, index_root, "doc_id", lo, hi)
     if files_read == 0:
         return
     pruned, files_read, _ = tf.scan_membership(
         spark, index_root, "doc_id", ids_fn()
     )
-    stats["guard_bloom_files"] = files_read
     if files_read == 0:
         return
     hits = [
@@ -103,7 +95,6 @@ def ingest_batch(
     max_bucket: int = 50,
     validate_new_ids: bool = True,
     optimize_cadence: bool = True,
-    shuffle_partitions: int | None = None,
 ) -> bool:
     """Flag one micro-batch against the standing index, write the
     flags, and APPEND the batch's buckets to the index exactly once
@@ -118,7 +109,7 @@ def ingest_batch(
     per-batch FIXED latency, not data volume, is the whole cost."""
     if batch_id <= last_committed_batch(index_root):
         return False
-    with _aqe_disabled(spark, shuffle_partitions):
+    with _aqe_disabled(spark):
         return _ingest_batch_run(
             spark, batch_df, index_root, flags_root, batch_id,
             num_hashes, band_size, max_bucket, validate_new_ids,
@@ -153,18 +144,14 @@ _AQE_STATE: dict = {}  # id(spark) -> [depth, {key: saved_value}]
 # any trigger size, because ingest relations are bounded by the
 # TRIGGER, not the corpus (the standing index side is read pruned and
 # joined bucket-bounded). This is AQE's partition coalescing done
-# statically for plans AQE doesn't see; it scales with the trigger
-# (deployments with huge backfill triggers raise it via the
-# stream_neardup_ingest parameter), not with the core count.
-INGEST_SHUFFLE_PARTITIONS = int(os.environ.get(
-    "SPARK_GRAFT_ND_SHUFFLE_PARTITIONS", "8"))
+# statically for plans AQE doesn't see; it scales with the trigger,
+# not with the core count.
+INGEST_SHUFFLE_PARTITIONS = 8
 
 
 @_contextlib.contextmanager
-def _aqe_disabled(spark: SparkSession,
-                  shuffle_partitions: int | None = None):
+def _aqe_disabled(spark: SparkSession):
     sid = id(spark)
-    n_shuf = shuffle_partitions or INGEST_SHUFFLE_PARTITIONS
     with _AQE_LOCK:
         st = _AQE_STATE.setdefault(sid, [0, {}])
         if st[0] == 0:
@@ -173,7 +160,7 @@ def _aqe_disabled(spark: SparkSession,
                 _SHUF_KEY: spark.conf.get(_SHUF_KEY, "200"),
             }
             spark.conf.set(_AQE_KEY, "false")
-            spark.conf.set(_SHUF_KEY, str(n_shuf))
+            spark.conf.set(_SHUF_KEY, str(INGEST_SHUFFLE_PARTITIONS))
         st[0] += 1
     try:
         yield
@@ -199,20 +186,6 @@ def _ingest_batch_run(
     validate_new_ids: bool,
     optimize_cadence: bool,
 ) -> bool:
-    # phase timing diagnostic (SPARK_GRAFT_ND_TIMING=1): per-batch
-    # wall breakdown to stderr — the ingest is fixed-latency-bound at
-    # small triggers, so optimization targets the slowest PHASE, not
-    # guesses
-    import sys as _sys
-    import time as _time
-
-    _tm = os.environ.get("SPARK_GRAFT_ND_TIMING") == "1"
-    _t0 = _time.time()
-    _marks: list = []
-
-    def _mark(label: str) -> None:
-        if _tm:
-            _marks.append((label, round(_time.time() - _t0, 3)))
     # ONE localCheckpoint per batch (round 13; was two): the batch's
     # count/id-bounds Observation rides the BUCKET checkpoint's
     # action, so parse + bucket + count + bounds are a single job and
@@ -244,7 +217,6 @@ def _ingest_batch_run(
     # flag plan
     batch_ids = bb_all.where(F.col("band") == 0).select("doc_id")
     got = obs.get
-    _mark("bucket_checkpoint+observe")
     if got["cnt"] == 0:
         return False
     # ONE bounded collect (≤ bands × trigger-size rows off the local
@@ -331,14 +303,13 @@ def _ingest_batch_run(
     # join + write), one publish barrier; a guard violation still
     # discards the stage and raises before anything becomes visible.
     guard_err: list[BaseException] = []
-    probe_stats: dict = {}  # per-batch file-pruning observability
 
     def _run_guard() -> None:
         try:
             if validate_new_ids:
                 _assert_ids_new(
                     spark, bb, index_root, got["lo"], got["hi"],
-                    ids_fn=_batch_ids, stats=probe_stats,
+                    ids_fn=_batch_ids,
                 )
         except BaseException as e:  # surface at the publish barrier
             guard_err.append(e)
@@ -364,14 +335,10 @@ def _ingest_batch_run(
                 and (has_bh_bloom
                      or len(head["files"]) > PUSHDOWN_MIN_FILES)):
             keys = _batch_keys()
-            index, _fr, _ft = tf.scan_keys(
+            index, _, _ = tf.scan_keys(
                 spark, index_root, "bh", keys)
-            probe_stats["push_files_read"] = _fr
-            probe_stats["push_files_total"] = _ft
-            _mark("guard+scan_keys")
         else:
             index = tf.read(spark, index_root)
-            _mark("guard+full_read")
         # one-pass flagging against index AND own-batch smaller ids
         # (round-8: fuses the former two lsh_flag_against_index
         # actions + reconciliation join into a single action; round
@@ -415,7 +382,6 @@ def _ingest_batch_run(
         raise
     th.join()
     gth.join()
-    _mark("stage+flags_written")
     if guard_err or stage_err:
         if os.path.exists(
             os.path.join(index_root, tf._STAGE_DIR, f"{stage}.json")
@@ -437,7 +403,6 @@ def _ingest_batch_run(
             )
         raise (guard_err or stage_err)[0]
     tf.publish_stage(index_root, stage)
-    _mark("publish")
     # OPTIMIZE cadence (round 10): a driver-side manifest check per
     # batch, a bh re-cluster only when the planner rule says the
     # rewrite pays back (maybe_optimize_index docstring) — keeps the
@@ -445,13 +410,6 @@ def _ingest_batch_run(
     # re-introducing per-batch O(index) rewrites
     if optimize_cadence:
         maybe_optimize_index(spark, index_root)
-        _mark("optimize_cadence")
-    if _tm:
-        print(f"nd_timing batch={batch_id} cnt={got['cnt']} "
-              + " ".join(f"{l}={t}" for l, t in _marks)
-              + ("" if not probe_stats else " " + " ".join(
-                  f"{k}={v}" for k, v in sorted(probe_stats.items()))),
-              file=_sys.stderr)
     return True
 
 
@@ -591,7 +549,6 @@ def stream_neardup_ingest(
     max_bucket: int = 50,
     validate_new_ids: bool = True,
     optimize_cadence: bool = True,
-    shuffle_partitions: int | None = None,
 ):
     """Start the foreachBatch near-dup ingest over a document stream
     (needs doc_id + text columns). The index table must exist
@@ -612,7 +569,6 @@ def stream_neardup_ingest(
             num_hashes=num_hashes, band_size=band_size,
             max_bucket=max_bucket, validate_new_ids=validate_new_ids,
             optimize_cadence=optimize_cadence,
-            shuffle_partitions=shuffle_partitions,
         )
 
     writer = (

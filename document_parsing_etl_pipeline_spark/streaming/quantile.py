@@ -2,11 +2,11 @@
 log-bucket (HDR-histogram-style) summary per key, carried across
 micro-batches with applyInPandasWithState.
 
-The scale contract mirrors topk.py's: state per key is a histogram
-whose size is O(B * log(value range)) — independent of stream length
-— with a hard ``max_buckets`` cap enforced by deterministic
-resolution-halving (coarsening never needs the raw values because
-floor(idx/2) at resolution B IS the bucket at resolution B/2), and —
+The scale contract: state per key is a histogram whose size is
+O(B * log(value range)) — independent of stream length — with a hard
+``max_buckets`` cap enforced by deterministic resolution-halving
+(coarsening never needs the raw values because floor(idx/2) at
+resolution B IS the bucket at resolution B/2), and —
 once resolution bottoms out at one bucket per octave — by saturating
 the outermost octaves into edge buckets (a double's exponent range
 spans ~2100 octaves, so halving alone cannot hold the cap against an

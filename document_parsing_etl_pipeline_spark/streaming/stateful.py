@@ -1,12 +1,7 @@
-"""Custom stateful streaming: cross-batch exactly-once document
-dedup via applyInPandasWithState.
-
-The watcher pipeline (watcher.py) is exactly-once per *file*; this
-operator extends that to exactly-once per *document id* across
-micro-batches — the reference's primary-key INSERT semantics
-(reference src/database/repository.py:19-43) re-expressed as keyed
-stream state. State per key is one boolean (seen), so state size is
-O(distinct keys) and partitions by doc_id across executors.
+"""Custom stateful streaming operators on applyInPandasWithState:
+per-key CDC latest-state compaction and a token-bucket rate limiter.
+State per key is one fixed-size tuple, so state size is O(distinct
+keys) and partitions by key across executors.
 """
 
 from __future__ import annotations
@@ -17,56 +12,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUT_SCHEMA = "doc_id bigint, text string, n_chars bigint"
-STATE_SCHEMA = "seen boolean"
-
-
-def _dedup_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    seen = state.exists and state.get[0]
-    if seen:
-        return
-    first = None
-    for pdf in pdfs:
-        if len(pdf) and first is None:
-            first = pdf.iloc[[0]][["doc_id", "text", "n_chars"]]
-    if first is not None:
-        state.update((True,))
-        yield first
-
-
-def dedup_stream(stream: DataFrame) -> DataFrame:
-    """Emit each doc_id exactly once across the stream's lifetime."""
-    return stream.groupBy("doc_id").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def dedup_within_watermark_stream(
-    stream: DataFrame,
-    keys: tuple[str, ...] = ("event_id",),
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermark-bounded streaming dedup via the built-in
-    dropDuplicatesWithinWatermark (Spark 3.5+): a key's dedup state
-    lives only until the watermark passes its event time, so state is
-    BOUNDED by the watermark horizon — the production default for
-    at-least-once sources (Kafka redeliveries arrive within seconds,
-    not hours). Contrast with dedup_stream above, whose
-    applyInPandasWithState keeps every doc_id forever (exactly-once
-    across the stream's whole lifetime, unbounded state): same-key
-    rows WITHIN the horizon dedup; a recurrence after the watermark
-    has passed is emitted again by design. The stream needs an
-    ``event_time`` timestamp column."""
-    return stream.withWatermark(
-        "event_time", watermark
-    ).dropDuplicatesWithinWatermark(list(keys))
 
 
 # -------------------------------------------------------------------
@@ -215,231 +160,4 @@ def rate_limit_stream(
         stateStructType=RL_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# -------------------------------------------------------------------
-# timeout-flushed custom sessionization (the applyInPandasWithState
-# counterpart of session_window: same gap rule, but the SESSION CLOSE
-# is driven by a processing-time timeout instead of the watermark —
-# the shape custom session logic needs when the built-in aggregation
-# can't express the per-session payload)
-# -------------------------------------------------------------------
-
-SESS_OUT_SCHEMA = (
-    "user_id bigint, session_start_us bigint, session_end_us bigint, "
-    "n_events bigint, sum_value double"
-)
-SESS_STATE_SCHEMA = (
-    "start_us bigint, end_us bigint, n bigint, sv double"
-)
-
-
-def session_timeout_stream(
-    stream: DataFrame,
-    gap_us: int = 30 * 60 * 1_000_000,
-    idle_timeout_ms: int = 2_000,
-) -> DataFrame:
-    """Custom stateful sessionization with PROCESSING-TIME timeout
-    flushing (needs columns user_id, ts_us, value): events extend the
-    user's open session while their event-time gap stays within
-    ``gap_us``; an event beyond the gap EMITS the closed session and
-    opens a new one; and a user who simply goes quiet has the open
-    session flushed by the ProcessingTimeTimeout — the piece the
-    batch formulation cannot express and session_window handles via
-    watermark instead. This is the applyInPandasWithState shape for
-    session payloads the built-in aggregation can't carry (custom
-    per-session reductions, first/last event payloads, ...); state is
-    one fixed-size tuple per OPEN session: O(|active users|).
-
-    In-order caveat (same contract as rate_limit_stream): events are
-    folded in (ts_us) sort order WITHIN each batch, but a row arriving
-    batches late re-opens or extends sessions by arrival order — the
-    oracle for event-time-perfect sessionization is the batch
-    q_session_window_native; this operator is the low-latency
-    enforcement path."""
-
-    def sess_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                st = state.get
-                state.remove()
-                yield pd.DataFrame([{
-                    "user_id": key[0],
-                    "session_start_us": int(st[0]),
-                    "session_end_us": int(st[1]),
-                    "n_events": int(st[2]),
-                    "sum_value": float(st[3]),
-                }])
-            return
-        cur = list(state.get) if state.exists else None
-        closed = []
-        # Materialize the whole micro-batch group before sorting: Arrow
-        # delivers the group as multiple chunks (~10k rows each), and a
-        # later chunk can hold earlier timestamps — sorting per-chunk
-        # would fold those out of order and mis-split sessions.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        )
-        if len(batch):
-            for _, row in batch.sort_values("ts_us").iterrows():
-                ts = int(row["ts_us"])
-                v = float(row["value"]) if row["value"] is not None else 0.0
-                if cur is None:
-                    cur = [ts, ts, 1, v]
-                elif ts - cur[1] <= gap_us:
-                    cur[1] = max(cur[1], ts)
-                    cur[2] += 1
-                    cur[3] += v
-                else:
-                    closed.append(cur)
-                    cur = [ts, ts, 1, v]
-        if cur is not None:
-            state.update(tuple(cur))
-            state.setTimeoutDuration(idle_timeout_ms)
-        if closed:
-            yield pd.DataFrame([
-                {
-                    "user_id": key[0],
-                    "session_start_us": int(c[0]),
-                    "session_end_us": int(c[1]),
-                    "n_events": int(c[2]),
-                    "sum_value": float(c[3]),
-                }
-                for c in closed
-            ])
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        sess_fn,
-        outputStructType=SESS_OUT_SCHEMA,
-        stateStructType=SESS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-# -------------------------------------------------------------------
-# streaming ordered-step funnel: per-user signup -> view -> purchase
-# progression with a per-step horizon, completions emitted the moment
-# the last step lands (the low-latency twin of the batch
-# q_funnel_three_step / q_window_funnel readouts)
-# -------------------------------------------------------------------
-
-FUNNEL_STEPS = ("signup", "view", "purchase")
-FUNNEL_OUT_SCHEMA = (
-    "user_id bigint, start_us bigint, end_us bigint, latency_us bigint"
-)
-FUNNEL_STATE_SCHEMA = "stage bigint, stage_ts bigint, start_ts bigint"
-
-
-def funnel_stream(
-    stream: DataFrame,
-    steps: tuple = FUNNEL_STEPS,
-    step_horizon_us: int = 7 * 86_400_000_000,
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
-    """Streaming ordered-step funnel (needs columns user_id, ts_us,
-    event_type): one fixed-size state tuple per user tracks the
-    furthest step reached and its event time; an event matching the
-    NEXT expected step within ``step_horizon_us`` of the previous one
-    advances the funnel, the final step EMITS the completion row
-    (start, end, latency) immediately and clears the state, and an
-    expired horizon resets progress (the resetting event itself may
-    open a new funnel if it is the first step). Dormant users are
-    dropped by the ProcessingTimeTimeout, so state is O(|users active
-    inside the horizon|), never O(|all users ever seen|).
-
-    ``idle_timeout_ms`` must be sized to the step horizon: the timeout
-    is PROCESSING time, so an open funnel is dropped after that much
-    quiet WALL-CLOCK time even if later in-horizon steps would have
-    completed it — an undersized timeout silently undercounts
-    completions on gappy streams (round-8 advisor finding). The
-    default therefore derives from the horizon: on a live stream wall
-    time tracks event time, so the state must survive the same span
-    the horizon promises (7-day horizon -> 7-day idle timeout). Pass
-    an explicit smaller value only when state size matters more than
-    completeness (e.g. replay/backfill, where days of events drain in
-    wall-minutes and dormant state would otherwise linger).
-
-    In-order caveat (same contract as session_timeout_stream): events
-    fold in (ts_us) order WITHIN a micro-batch; rows arriving batches
-    late advance funnels in arrival order — event-time-perfect funnel
-    readouts are the batch queries; this is the low-latency trigger
-    path (alerting/activation nudges the moment a funnel completes).
-    """
-    if idle_timeout_ms is None:
-        # horizon is event-time µs, timeout is processing-time ms:
-        # µs -> ms keeps the SAME duration (live streams advance wall
-        # and event time together), floored at one minute
-        idle_timeout_ms = max(60_000, step_horizon_us // 1_000)
-    first, nsteps = steps[0], len(steps)
-    step_ix = {s: i for i, s in enumerate(steps)}
-
-    empty = pd.DataFrame({
-        "user_id": pd.Series([], dtype="int64"),
-        "start_us": pd.Series([], dtype="int64"),
-        "end_us": pd.Series([], dtype="int64"),
-        "latency_us": pd.Series([], dtype="int64"),
-    })
-
-    def funnel_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # dormant: progress expired, nothing to emit. NB: a typed
-            # EMPTY frame must still be yielded — a timed-out group
-            # whose handler returns a fully empty iterator crashes the
-            # PySpark worker (Arrow stream desync, observed on 4.1:
-            # "Python worker exited unexpectedly" with EOFException)
-            state.remove()
-            yield empty
-            return
-        cur = list(state.get) if state.exists else None
-        done = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if chunks
-            else pd.DataFrame()
-        )
-        if len(batch):
-            for _, row in batch.sort_values("ts_us").iterrows():
-                t, ts = row["event_type"], int(row["ts_us"])
-                if t not in step_ix:
-                    continue
-                if cur is not None and ts - cur[1] > step_horizon_us:
-                    cur = None  # horizon expired: reset progress
-                if cur is None:
-                    if t == first:
-                        cur = [1, ts, ts]
-                elif step_ix[t] == cur[0]:
-                    if cur[0] + 1 == nsteps:
-                        done.append((int(cur[2]), ts))
-                        cur = None
-                    else:
-                        cur = [cur[0] + 1, ts, cur[2]]
-        if cur is not None:
-            state.update(tuple(int(x) for x in cur))
-            state.setTimeoutDuration(idle_timeout_ms)
-        elif state.exists:
-            state.remove()
-        if done:
-            yield pd.DataFrame([
-                {
-                    "user_id": key[0],
-                    "start_us": s,
-                    "end_us": e,
-                    "latency_us": e - s,
-                }
-                for s, e in done
-            ])
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        funnel_fn,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )

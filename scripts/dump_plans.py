@@ -32,7 +32,7 @@ PICKS = {
     "q1_pricing_summary": "filter pushdown + column pruning + single decimal agg",
     "q3_shipping_priority": "broadcast dim join, shuffle only on l_orderkey",
     "q5_local_supplier": "all dims broadcast; one fact shuffle",
-    "dedup_minhash_lsh": "explode->codegen md5->partial min; bucket cap before pairing",
+    "dedup_minhash_lsh": "reads the localCheckpointed verified-candidate artifact: a Scan ExistingRDD here, its explode->md5->partial-min and bucket-capped pairing run while the plan is dumped",
     "knn_all_topk": "block matmul mapInPandas + global top-k window",
     "q_documents_list": "doc_id range pushed through explode+agg to both scans",
     "q8_market_share": "p_type filter pushed to part scan; hints only on nation dims, AQE on the rest",
@@ -43,13 +43,13 @@ PICKS = {
     "q_countmin_heavy_hitters": "sketch builds over the per-key pre-agg; d×w counter table broadcast to the top-k probes",
     "q_bloom_join_audit": "DISTINCT set-bits table broadcast to probes; probe side aggregates k rows/key, never shuffles raw",
     "q_sequence_pack": "MapInPandas recurrence over repartition(doc_id)+sort (one Arrow call per partition)",
-    "q_embedding_covariance": "pair fan-out parallelized by pinned repartition; decimal partial agg per core",
-    "q_unigram_logprob": "tf pre-agg shrinks the vocab join; 1-row total as broadcast NLJ",
+    "q_embedding_covariance": "pair fan-out parallelized by a repartition pinned to the core count (4 partitions on a 4-core box); decimal partial agg per core",
+    "q_unigram_logprob": "tf pre-agg shrinks the vocab join; 1-row total as broadcast NLJ; inferred isnotnull filters sit at the scans",
     "q_range_join_events": "bucketed interval join: bucket equi-key + range residual, no nested loop",
     "q_cdc_latest_state": "struct-max partial agg: ~one row per key shuffled, no window sort",
-    "q_dsir_weights": "single-pass dual bucket models; 256-row broadcast ratio dim; one (doc,bucket) shuffle",
-    "q_semdedup": "broadcast centroid assign; pair join shuffles once on centroid_id, quadratic stays in-cluster",
-    "q_setsim_prefix_join": "prefix-only shingle join + positional-filter agg; verification joins the |docs|-sized array relation, not re-exploded shingles",
+    "q_dsir_weights": "single-pass dual bucket models; 256-row broadcast ratio dim; one (doc,bucket) shuffle; inferred isnotnull filters sit at the scans",
+    "q_semdedup": "embeddings scans spread over the cores first (spread_scan: hash on vec_id); broadcast centroid assign; pair join shuffles once on centroid_id, quadratic stays in-cluster",
+    "q_setsim_prefix_join": "prefix-only shingle join; positional filter as a per-pair row_number window + min agg over one (doc_a, doc_b) repartition; verification joins the |docs|-sized array relation, not re-exploded shingles",
     "q_triangle_count": "localCheckpointed edge/oriented lists; wedge join + closure as equi-joins, no nested loop",
     "q_zorder_layout": "one fact scan -> z-interleave projection -> two layout aggs; bounds and box as 1-row broadcasts",
     "q_grouping_sets_profile": "pre-agg to base cells BEFORE Expand: the 4-set rollup expands 9 rows, not the fact table",

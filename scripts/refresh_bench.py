@@ -23,7 +23,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from document_parsing_etl_pipeline_spark.session import get_spark
 

@@ -31,10 +31,11 @@ until it is converted to the integer protocol or justified here.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _CMP_AFTER = re.compile(r"^\s*(>=|<=|<>|!=|=|>|<|\bBETWEEN\b|\bIN\b)",
                         re.IGNORECASE)

@@ -19,7 +19,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from document_parsing_etl_pipeline_spark.catalog import TABLES
 from document_parsing_etl_pipeline_spark.session import get_spark

@@ -32,9 +32,6 @@ _EXHAUSTIVE = {
     "test_cc_star_equals_propagation_on_random_graphs",
     "test_incremental_components_equals_from_scratch",
     "test_setsim_incremental_union_is_from_scratch",
-    "test_funnel_stream_completion_skip_and_order",
-    "test_funnel_stream_dormant_timeout",
-    "test_funnel_stream_horizon_reset_and_state_carry",
     "test_neardup_guard_bloom_prunes_shuffled_ids",
     "test_neardup_index_pushdown_prunes_and_matches_full_read",
     "test_neardup_optimize_cadence_preserves_flags_and_replay",

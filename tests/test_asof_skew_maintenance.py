@@ -1,15 +1,10 @@
-import json
-
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from document_parsing_etl_pipeline_spark.operators.asof import asof_join
+from document_parsing_etl_pipeline_spark.operators import skew
 from document_parsing_etl_pipeline_spark.operators.skew import (
-    apply_salt_plan, key_skew_profile, salt_plan, salted_join,
-    salted_join_profiled,
-)
-from document_parsing_etl_pipeline_spark.sources.maintenance import (
-    compact, file_stats,
+    key_skew_profile, salt_plan, salted_join_profiled,
 )
 
 
@@ -39,18 +34,6 @@ def test_asof_join_equal_timestamp(spark):
     assert ne.collect()[0].asof_v is None
 
 
-def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(
-        [Row(k=i % 3, payload=i) for i in range(100)]
-    )
-    small = spark.createDataFrame([Row(k=0, name="zero"), Row(k=1, name="one")])
-    plain = big.join(small, "k").select("k", "payload", "name")
-    salted = salted_join(big, small, "k", salt=4).select("k", "payload", "name")
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
 def test_salt_plan_fans_out_only_hot_keys(spark):
     big = spark.createDataFrame(
         [Row(k="hot", payload=i) for i in range(2000)]
@@ -70,7 +53,7 @@ def test_profiled_salting_equalizes_task_sizes(spark):
     plan = salt_plan(big, "k", target_rows_per_task=200)
     sizes = {
         (r.k, r._salt): r.n
-        for r in apply_salt_plan(big, plan, "k")
+        for r in skew._salt_big(big, skew._plan_map(plan), "k")
         .groupBy("k", "_salt").agg(F.count("*").alias("n")).collect()
     }
     hot = [n for (k, _), n in sizes.items() if k == "hot"]
@@ -105,59 +88,6 @@ def test_key_skew_profile(spark):
     )
     prof = key_skew_profile(df, "k").collect()
     assert prof[0].k == "hot" and prof[0].share == 0.9
-
-
-def test_compaction_reduces_files(tmp_path, spark):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    spark.range(10000).repartition(40).write.parquet(src)
-    assert file_stats(spark, src).count() == 40
-    compact(spark, src, dst, target_file_mb=128)
-    assert file_stats(spark, dst).count() == 1
-    assert spark.read.parquet(dst).count() == 10000
-
-
-def test_stateful_stream_dedup(tmp_path, spark):
-    from document_parsing_etl_pipeline_spark.streaming.stateful import (
-        dedup_stream,
-    )
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-    drop = tmp_path / "in"
-    drop.mkdir()
-    rows = [
-        {"doc_id": 1, "text": "a", "n_chars": 1},
-        {"doc_id": 1, "text": "a", "n_chars": 1},   # dup in same batch
-        {"doc_id": 2, "text": "b", "n_chars": 1},
-    ]
-    (drop / "f.json").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("n_chars", LongType()),
-    ])
-    out = str(tmp_path / "out")
-
-    def run_batch():
-        stream = spark.readStream.schema(schema).json(str(drop))
-        q = (dedup_stream(stream).writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run_batch()
-    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert got == [1, 2]
-
-    # second batch: doc 1 again + new doc 3 → only 3 is emitted
-    # (state recovered from the checkpoint)
-    (drop / "g.json").write_text(json.dumps(
-        {"doc_id": 1, "text": "a", "n_chars": 1}) + "\n" + json.dumps(
-        {"doc_id": 3, "text": "c", "n_chars": 1}))
-    run_batch()
-    got2 = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert got2 == [1, 2, 3]
 
 
 def test_interleave_bits_matches_python_morton(spark):

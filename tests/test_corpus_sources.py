@@ -1,7 +1,6 @@
 from pyspark.sql import Row
 
 from document_parsing_etl_pipeline_spark.operators import corpus
-from document_parsing_etl_pipeline_spark.sources import files
 
 
 def _docs(spark, *texts):
@@ -39,28 +38,6 @@ def test_centroid_assignment_is_self_for_centroids(spark):
     assert rows[2] == 0 and rows[3] == 1  # others to the nearest
 
 
-def test_binary_ingest_to_documents(tmp_path, spark):
-    (tmp_path / "a.pdf").write_bytes(b"%PDF-1.4 fake content " * 50)
-    (tmp_path / "b.pdf").write_bytes(b"%PDF-1.4 other " * 20)
-    (tmp_path / "skip.txt").write_text("not a pdf")
-    bins = files.read_binary_documents(spark, str(tmp_path))
-    assert bins.count() == 2  # glob filters the .txt
-    docs = files.to_documents(files.extract_text(bins))
-    rows = docs.collect()
-    assert len(rows) == 2
-    assert all(r.n_chars > 0 and r.doc_id is not None for r in rows)
-    assert {r.source for r in rows} == {"a.pdf", "b.pdf"}
-
-
-def test_binary_ingest_deterministic(tmp_path, spark):
-    (tmp_path / "x.pdf").write_bytes(b"same bytes every time")
-    one = files.extract_text(
-        files.read_binary_documents(spark, str(tmp_path))).collect()[0]
-    two = files.extract_text(
-        files.read_binary_documents(spark, str(tmp_path))).collect()[0]
-    assert one.text == two.text and one.n_pages == two.n_pages
-
-
 def test_contamination_finds_shared_shingles(spark):
     # doc 0 is "benchmark" (0 % 5 == 0); doc 1 copies its text, doc 2
     # is clean — only doc 1 flags.
@@ -96,7 +73,8 @@ def test_kmeans_lloyd_converges_on_separated_clusters(spark):
     emb = spark.createDataFrame(
         [Row(vec_id=i, embedding=v) for i, v in enumerate(pts)]
     )
-    out = corpus.kmeans_lloyd(emb, k=2, max_iter=3).collect()
+    _scored, assigned, _objs = corpus._kmeans_rounds(emb, 2, 3)
+    out = assigned.collect()
     by_id = {r.vec_id: r.centroid_id for r in out}
     assert len(by_id) == 8
     first = {by_id[i] for i in range(4)}
@@ -260,11 +238,12 @@ def test_kmeans_lloyd_normalization_does_not_change_assignments(spark):
         [Row(vec_id=i, embedding=[x * (10.0 if i % 2 else 0.1) for x in v])
          for i, v in enumerate(pts)]
     )
-    a = {r.vec_id: r.centroid_id
-         for r in corpus.kmeans_lloyd(emb, k=2, max_iter=3).collect()}
-    b = {r.vec_id: r.centroid_id
-         for r in corpus.kmeans_lloyd(scaled, k=2, max_iter=3).collect()}
-    assert a == b
+
+    def assign(df):
+        _scored, assigned, _objs = corpus._kmeans_rounds(df, 2, 3)
+        return {r.vec_id: r.centroid_id for r in assigned.collect()}
+
+    assert assign(emb) == assign(scaled)
 
 
 def test_pca_canonical_basis_deterministic(spark):

@@ -815,18 +815,20 @@ def test_fingerprint_walks_partitioned_source_recursively(tmp_path):
     inner = part / "part-000.parquet"
     inner.write_bytes(b"AAAA")
 
-    fp0 = artifacts.fingerprint(str(sf), "p")
+    def fingerprint(params):
+        return artifacts._digest(artifacts.fingerprint_parts(str(sf), params))
+
+    fp0 = fingerprint("p")
     # same-size in-place rewrite: bump mtime only (the subdir's entry
     # list and sizes are unchanged — exactly the flat-listdir blind
     # spot)
     st = os.stat(inner)
     os.utime(inner, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    assert artifacts.fingerprint(str(sf), "p") != fp0
+    assert fingerprint("p") != fp0
 
     # a NEW file deeper in the tree flips it too
     (part / "part-001.parquet").write_bytes(b"BBBB")
-    assert artifacts.fingerprint(str(sf), "p") not in (
-        fp0, artifacts.fingerprint(str(sf), "q"))
+    assert fingerprint("p") not in (fp0, fingerprint("q"))
 
 
 def test_verify_pairs_slicing_is_result_invariant(spark):

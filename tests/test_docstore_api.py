@@ -122,26 +122,13 @@ def test_docstore_roundtrip(tmp_path, spark, tables):
 
 def test_objectstore_roundtrip(tmp_path, spark):
     root = str(tmp_path / "blobs")
-    blobs = objectstore.put_images(
-        spark, [(objectstore.object_path(1, 1), b"\x89PNGdata", "image/png")]
-    )
+    blobs = spark.createDataFrame(
+        [(objectstore.object_path(1, 1), b"\x89PNGdata", "image/png")],
+        objectstore.BLOB_SCHEMA)
     objectstore.write_blobs(blobs, root)
     got = objectstore.read_blob(spark, root, 1, 1).collect()
     assert len(got) == 1 and bytes(got[0].content).startswith(b"\x89PNG")
-    assert objectstore.delete_blob(blobs, 1, 1).count() == 0
-
-
-def test_sql_view_facade(spark):
-    """The engine's tables register as temp views → spark.sql works
-    as a first-class query interface."""
-    from document_parsing_etl_pipeline_spark.catalog import register_views
-    register_views(spark, SF_DIR)
-    out = spark.sql("""
-        SELECT d.lang, count(*) AS n
-        FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        GROUP BY d.lang ORDER BY n DESC
-    """).collect()
-    assert sum(r.n for r in out) == 500
+    assert objectstore.read_blob(spark, root, 1, 2).count() == 0
 
 
 def test_load_table_infers_each_file_version_once(spark, tmp_path):

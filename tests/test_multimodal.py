@@ -1,7 +1,7 @@
 from pyspark.sql import Row
 
 from document_parsing_etl_pipeline_spark.operators.multimodal import (
-    decode_images, resize_images, sample_video_frames,
+    decode_images, sample_video_frames,
 )
 
 
@@ -24,11 +24,6 @@ def test_decode_images_typed_metadata(spark):
 def test_decode_empty_blob(spark):
     r = decode_images(_blobs(spark, b"")).collect()[0]
     assert (r.width, r.height, r.format) == (0, 0, "empty")
-
-
-def test_resize_bounded_by_target(spark):
-    rows = resize_images(_blobs(spark, b"\x89PNGxyz" * 40), target=224).collect()
-    assert all(max(r.resized_w, r.resized_h) == 224 for r in rows)
 
 
 def test_frame_sampling_stride(spark):

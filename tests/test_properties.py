@@ -196,25 +196,26 @@ def test_cc_star_equals_propagation_on_random_graphs(spark, edges):
 def test_range_join_equivalent_to_naive_filter(
     spark, lefts, rights, lo, width, bucket
 ):
-    """Bucketed range join ≡ cross-join + range filter for ANY window
-    [lo, lo+width) and ANY bucket width (bucket need not divide or
-    relate to the window at all)."""
+    """Bucketed range-join counts ≡ cross-join + range filter counts
+    for ANY window [lo, lo+width) and ANY bucket width (bucket need
+    not divide or relate to the window at all)."""
     from pyspark.sql import Row
 
     from document_parsing_etl_pipeline_spark.operators.rangejoin import (
-        range_join,
+        range_join_count,
     )
 
     hi = lo + width
     left = spark.createDataFrame([Row(lid=k, lk=k) for k in lefts])
     right = spark.createDataFrame([Row(rk=k) for k in rights])
     got = sorted(
-        (r["lid"], r["rk"])
-        for r in range_join(left, right, "lk", "rk", lo, hi, bucket)
+        (r["lid"], r["n_matches"])
+        for r in range_join_count(left, right, "lk", "rk", lo, hi, bucket,
+                                  left_id="lid")
         .collect()
     )
     want = sorted(
-        (lk, rk) for lk in lefts for rk in rights if lk + lo <= rk < lk + hi
+        (lk, sum(lk + lo <= rk < lk + hi for rk in rights)) for lk in lefts
     )
     assert got == want
 

@@ -55,7 +55,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from document_parsing_etl_pipeline_spark.plans.queries import ORACLES
 from scripts.round_lint import lint_oracles
@@ -583,87 +583,131 @@ def test_bare_key_lint_catches_a_planted_copy(tmp_path):
         "processor.py:8", "processor.py:9", "processor.py:10"]
 
 
-# ------------------------------------------------- store code has callers
+# ------------------------------------------------- package code has callers
 
-_STORE_MODULES = ("sources/tableformat.py", "sources/docstore.py")
-# Public store functions allowed to have no product caller: the doc
-# store's move onto the table format (ROADMAP Direction 1) calls them,
-# for durable cascade deletes and for store maintenance.
-_CALLER_KEEP = {"delete_where", "delete_where_dv", "expire_snapshots"}
+# Public functions allowed to have no product caller: the doc store's
+# move onto the table format (ROADMAP Direction 1) calls them, for
+# durable cascade deletes and for store maintenance.
+_CALLER_KEEP = {"sources/tableformat.py:delete_where",
+                "sources/tableformat.py:delete_where_dv",
+                "sources/tableformat.py:expire_snapshots"}
 
 
 def _product_modules(root: pathlib.Path) -> list[pathlib.Path]:
     """The non-test Python modules under ``root``: the package,
     bench.py, __spark_entry__.py, scripts/ and perfbench/."""
     paths = [root / "bench.py", root / "__spark_entry__.py"]
-    for d in ("document_parsing_etl_pipeline_spark", "scripts", "perfbench"):
+    for d in (_PKG.name, "scripts", "perfbench"):
         paths += (root / d).rglob("*.py")
     return sorted(p for p in paths if p.is_file()
                   and "tests" not in p.relative_to(root).parts)
 
 
-def uncalled_store_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
-    """Public top-level functions of the store modules that no product
-    module references by name. A reference is ``<alias>.<name>``, where
-    the alias is a name the store module is imported under anywhere in
-    the product (or the module's own name, for star re-exports), a
-    ``from <store module> import <name>``, or a use of the bare name in
-    the store module outside the function's own definition."""
-    modules = {p: ast.parse(p.read_text()) for p in _product_modules(root)}
+def _dotted(root: pathlib.Path, path: pathlib.Path) -> str:
+    parts = path.relative_to(root).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
+    """Public top-level functions of the package that no product
+    module uses, as ``<path in the package>:<name>``. A use of
+    ``name`` from module ``m`` is ``<alias>.name`` where the alias
+    names ``m`` (``from <pkg> import m [as alias]``, ``import m as
+    alias``, also when star-imported from the module that binds it);
+    ``from m import name``; a bare ``name`` in ``m`` outside the
+    function's own definition, or in a module that does
+    ``from m import *``; or an ``@register`` decorator on the function
+    (the query registry calls what it registers)."""
+    paths = _product_modules(root)
+    trees = {_dotted(root, p): ast.parse(p.read_text()) for p in paths}
+    aliases, stars, used = {}, {}, set()
+    for path in paths:
+        mod = _dotted(root, path)
+        package = mod.split(".")
+        if path.stem != "__init__":
+            package.pop()
+        aliases[mod], stars[mod] = {}, []
+        for node in ast.walk(trees[mod]):
+            if isinstance(node, ast.Import):
+                aliases[mod].update((a.asname, a.name) for a in node.names
+                                    if a.asname)
+            elif isinstance(node, ast.ImportFrom):
+                parts = package[:len(package) + 1 - node.level] \
+                    if node.level else []
+                if node.module:
+                    parts = parts + node.module.split(".")
+                base = ".".join(parts)
+                for a in node.names:
+                    if a.name == "*":
+                        stars[mod].append(base)
+                    elif f"{base}.{a.name}" in trees:
+                        aliases[mod][a.asname or a.name] = f"{base}.{a.name}"
+                    else:
+                        used.add((base, a.name))
+
+    def seen(mod, done=()):
+        """(alias map, star-imported modules) visible in ``mod``."""
+        amap, mods = dict(aliases[mod]), list(stars[mod])
+        for s in stars[mod]:
+            if s in trees and s not in done:
+                a, m = seen(s, (*done, mod))
+                amap, mods = {**a, **amap}, mods + m
+        return amap, mods
+
+    for mod, tree in trees.items():
+        amap, mods = seen(mod)
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+                    and n.value.id in amap):
+                used.add((amap[n.value.id], n.attr))
+            elif isinstance(n, ast.Name):
+                used.update((m, n.id) for m in mods)
     out = []
-    for rel in _STORE_MODULES:
-        home = root / "document_parsing_etl_pipeline_spark" / rel
-        stem = home.stem
-        public = {n.name: n for n in modules[home].body
+    for path in paths:
+        if path.relative_to(root).parts[0] != _PKG.name:
+            continue
+        mod = _dotted(root, path)
+        public = {n.name: n for n in trees[mod].body
                   if isinstance(n, ast.FunctionDef)
                   and not n.name.startswith("_")}
-        aliases, used = {stem}, set()
-        for tree in modules.values():
-            for node in ast.walk(tree):
-                if isinstance(node, ast.ImportFrom):
-                    if (node.module or "").rsplit(".", 1)[-1] == stem:
-                        used.update(a.name for a in node.names)
-                    aliases.update(a.asname or a.name for a in node.names
-                                   if a.name == stem)
-                elif isinstance(node, ast.Import):
-                    aliases.update(a.asname for a in node.names if a.asname
-                                   and a.name.rsplit(".", 1)[-1] == stem)
-        for tree in modules.values():
-            used.update(n.attr for n in ast.walk(tree)
-                        if isinstance(n, ast.Attribute)
-                        and isinstance(n.value, ast.Name)
-                        and n.value.id in aliases)
-        for top in modules[home].body:
-            used.update(n.id for n in ast.walk(top)
+        for top in trees[mod].body:
+            used.update((mod, n.id) for n in ast.walk(top)
                         if isinstance(n, ast.Name)
                         and public.get(n.id) is not top)
-        out += [f"{rel}:{name}" for name in sorted(public.keys() - used)]
+        for name, fn in public.items():
+            if any(isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                   and d.func.id == "register"
+                   for d in fn.decorator_list):
+                used.add((mod, name))
+        rel = path.relative_to(root / _PKG.name).as_posix()
+        out += [f"{rel}:{name}" for name in sorted(public)
+                if (mod, name) not in used]
     return out
 
 
-def test_store_functions_have_product_callers():
-    """Every public function of the table format and the doc store is
-    called from product code, apart from the keep-list; a keep-list
-    entry that gains a caller (or goes) must leave the list."""
-    assert sorted(s.split(":")[1] for s in uncalled_store_functions()) \
-        == sorted(_CALLER_KEEP)
+def test_package_functions_have_product_callers():
+    """Every public function of the package is called from product
+    code, apart from the keep-list; a keep-list entry that gains a
+    caller (or goes) must leave the list."""
+    assert uncalled_functions() == sorted(_CALLER_KEEP)
 
 
-def test_store_caller_lint_catches_a_planted_copy(tmp_path):
-    src = tmp_path / "document_parsing_etl_pipeline_spark" / "sources"
-    (src / "tests").mkdir(parents=True)
+def test_caller_lint_catches_a_planted_copy(tmp_path):
+    pkg = tmp_path / _PKG.name
+    for d in ("sources", "tests", "plans", "streaming"):
+        (pkg / d).mkdir(parents=True)
     (tmp_path / "scripts").mkdir()
-    (src / "tableformat.py").write_text(
+    (pkg / "sources" / "tableformat.py").write_text(
         "def read(root):\n    return scan(root)\n"
         "def scan(root):\n    return scan(root)\n"
         "def history(root):\n    return history(root)\n"
         "def _private(root):\n    pass\n")
-    (src / "docstore.py").write_text(
+    (pkg / "sources" / "docstore.py").write_text(
         "def open_store(root):\n    pass\n"
         "def key_predicate(col):\n    pass\n"
         "def upsert(a, b):\n    pass\n"
         "def write_bucketed(t):\n    pass\n")
-    (src / "sink.py").write_text(
+    (pkg / "sources" / "sink.py").write_text(
         "from . import tableformat as tf\n"
         "from .docstore import key_predicate\n"
         "rows = tf.read('t')\n"
@@ -672,11 +716,29 @@ def test_store_caller_lint_catches_a_planted_copy(tmp_path):
     (tmp_path / "scripts" / "probe.py").write_text(
         "from document_parsing_etl_pipeline_spark.sources import docstore\n"
         "docstore.open_store('r')\n")
-    (src / "tests" / "test_store.py").write_text(
-        "from .. import docstore\ndocstore.upsert(1, 2)\n")
-    assert uncalled_store_functions(tmp_path) == [
+    (pkg / "tests" / "test_store.py").write_text(
+        "from ..sources import docstore\ndocstore.upsert(1, 2)\n")
+    # plans/: a star-imported prelude whose names, and whose module
+    # aliases, a section module uses; queries registered by decorator
+    (pkg / "plans" / "_prelude.py").write_text(
+        "from ..streaming import events as ev\n"
+        "def register(name):\n    return lambda fn: fn\n"
+        "def helper():\n    pass\n"
+        "def unused_helper():\n    pass\n")
+    (pkg / "plans" / "section.py").write_text(
+        "from ._prelude import *\n"
+        "@register('q')\n"
+        "def q_one(spark):\n    return helper() or ev.window(spark)\n"
+        "def q_unregistered(spark):\n    pass\n")
+    (pkg / "streaming" / "events.py").write_text(
+        "def window(spark):\n    pass\n"
+        "def sessionize(spark):\n    pass\n")
+    assert uncalled_functions(tmp_path) == [
+        "plans/_prelude.py:unused_helper",
+        "plans/section.py:q_unregistered",
+        "sources/docstore.py:upsert", "sources/docstore.py:write_bucketed",
         "sources/tableformat.py:history",
-        "sources/docstore.py:upsert", "sources/docstore.py:write_bucketed"]
+        "streaming/events.py:sessionize"]
 
 
 # ------------------------------------------------- exhaustive tier names

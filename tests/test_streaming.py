@@ -54,28 +54,6 @@ def test_windowed_counts_with_watermark(tmp_path, spark):
     assert got[(5, "view")] == 1
 
 
-def test_sessionize_gap_windows(tmp_path, spark):
-    drop = tmp_path / "sess"
-    drop.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01T00:10:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-        # 2h gap → new session
-        {"event_id": 3, "ts": "2024-01-01T02:30:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-    ]
-    (drop / "e.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = ev.read_event_stream(spark, str(drop))
-    q = (ev.sessionize(stream).writeStream.format("memory")
-         .queryName("sess").outputMode("complete")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM sess ORDER BY session_start").collect()
-    assert [r.n_events for r in got] == [2, 1]
-
-
 def test_full_pipeline_writes_three_tables_and_rejects(tmp_path, spark):
     watch, store, ckpt = (str(tmp_path / d) for d in ("in", "store", "ck"))
     (tmp_path / "in").mkdir()
@@ -96,51 +74,6 @@ def test_full_pipeline_writes_three_tables_and_rejects(tmp_path, spark):
     assert chunks.where(chunks.doc_id == 5).count() == chunks.count()
     rejects = spark.read.parquet(str(tmp_path / "store" / "rejects"))
     assert rejects.count() >= 1  # malformed rows quarantined, not fatal
-
-
-def test_stream_static_enrichment_join(tmp_path, spark):
-    drop = tmp_path / "enr"
-    drop.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T00:01:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01T00:02:00", "user_id": 9,
-         "event_type": "view", "value": 2.0},
-    ]
-    (drop / "e.json").write_text("\n".join(json.dumps(r) for r in rows))
-    dim = spark.createDataFrame(
-        [(1, "gold")], "user_id long, tier string"
-    )
-    stream = ev.read_event_stream(spark, str(drop))
-    q = (ev.enrich_with_dim(stream, dim).writeStream.format("memory")
-         .queryName("enriched").outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.event_id: r.tier
-           for r in spark.sql("SELECT * FROM enriched").collect()}
-    assert got[1] == "gold"
-    assert got[2] is None  # left join keeps unmatched stream rows
-
-
-def test_streaming_quality_gate_routes(tmp_path, spark):
-    drop = tmp_path / "gate"
-    drop.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T00:01:00", "user_id": 1,
-         "event_type": "click", "value": 5.0},
-        {"event_id": 2, "ts": "2024-01-01T00:02:00", "user_id": 1,
-         "event_type": "click", "value": -1.0},
-        {"event_id": 3, "ts": "2024-01-01T00:03:00", "user_id": 1,
-         "event_type": "click", "value": None},
-    ]
-    (drop / "e.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = ev.read_event_stream(spark, str(drop))
-    q = (ev.streaming_quality_gate(stream).writeStream.format("memory")
-         .queryName("gated").outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.event_id: r.gate for r in spark.sql("SELECT * FROM gated").collect()}
-    assert got == {1: "accept", 2: "reject:below_min", 3: "reject:null_value"}
 
 
 def test_watcher_lands_each_doc_once_under_batch_dirs(tmp_path, spark):
@@ -247,63 +180,6 @@ def test_stream_merge_into_table_exactly_once(tmp_path, spark):
     q2.awaitTermination(120)
     got2 = {r.user_id: r.state for r in tf.read(spark, root).collect()}
     assert got2[2] == "b2" and table_sink.last_committed_batch(root) == 1
-
-
-def test_streaming_sessionize_matches_batch_session_window(tmp_path, spark):
-    """Parity of the streaming state-merge sessionization path
-    (events.sessionize → session_window over a watermarked stream)
-    with the oracle-verified batch answer (q_session_window_native)
-    on the SAME data: identical session boundaries, event counts, and
-    (to double-sum reassociation tolerance) value sums, row for row.
-    This is the round-6 gap named by SURVEY §7 / the round-5 verdict:
-    the batch formulation is hash-checked against DuckDB; this pins
-    the streaming state merge to the batch formulation."""
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.catalog import load_table
-    from document_parsing_etl_pipeline_spark.plans.queries import (
-        _SESSION_GAP_US, QUERIES,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    drop = tmp_path / "ev_sess"
-    drop.mkdir()
-    load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.date_format(
-            F.timestamp_micros(F.expr("ts div 1000")),
-            "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        ).alias("ts"),
-        "user_id", "event_type", "value",
-    ).repartition(4).write.mode("overwrite").json(str(drop))
-
-    stream = ev.read_event_stream(spark, str(drop))
-    q = (
-        ev.sessionize(stream, gap=f"{_SESSION_GAP_US + 1} microseconds")
-        .writeStream.format("memory").queryName("sess_parity")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r.user_id, r.start_us): (r.n_events, r.sum_value)
-        for r in spark.sql(
-            "SELECT user_id, unix_micros(session_start) AS start_us,"
-            "       n_events, sum_value FROM sess_parity"
-        ).collect()
-    }
-
-    batch = {
-        (r.user_id, r.session_start_us): (r.n_events, r.sum_value)
-        for r in QUERIES["q_session_window_native"](spark, sf_dir).collect()
-    }
-
-    assert set(streamed) == set(batch)  # same sessions, same boundaries
-    for key, (n_b, sum_b) in batch.items():
-        n_s, sum_s = streamed[key]
-        assert n_s == n_b, key
-        # batch sums via the exact-decimal money protocol, the stream
-        # via double accumulation: equal to reassociation tolerance
-        assert abs(sum_s - sum_b) < 1e-6, key
 
 
 def test_interval_join_keeps_colliding_ids_across_distinct_streams(
@@ -508,398 +384,12 @@ def test_interval_join_left_outer_emits_unmatched_after_watermark(
     assert got == [(1, 100), (2, None), (3, 101)]
 
 
-def test_dedup_within_watermark_bounds_state_by_horizon(tmp_path, spark):
-    """dropDuplicatesWithinWatermark: redeliveries inside the
-    watermark horizon dedup; a recurrence after the watermark passed
-    is emitted again (state is bounded by the horizon — the contrast
-    with the lifetime-exactly-once applyInPandasWithState dedup)."""
-    import time as _time
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "wmdd"
-    drop.mkdir()
-    (drop / "a.json").write_text("\n".join(json.dumps(r) for r in [
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-        {"event_id": 1, "ts": "2024-01-01T00:00:20", "user_id": 1,
-         "event_type": "click", "value": 1.0},   # redelivery, same batch
-        {"event_id": 2, "ts": "2024-01-01T00:00:40", "user_id": 2,
-         "event_type": "view", "value": 1.0},
-    ]))
-    _time.sleep(1.1)
-    (drop / "b.json").write_text("\n".join(json.dumps(r) for r in [
-        {"event_id": 2, "ts": "2024-01-01T00:01:00", "user_id": 2,
-         "event_type": "view", "value": 1.0},    # redelivery, next batch
-        # watermark pusher: completing this batch advances the
-        # watermark to 01:59, evicting both keys' dedup state
-        {"event_id": 3, "ts": "2024-01-01T02:00:00", "user_id": 3,
-         "event_type": "view", "value": 1.0},
-    ]))
-    _time.sleep(1.1)
-    # a second pusher batch: state eviction applies the watermark as
-    # of the PREVIOUS batch's commit, so the horizon must have passed
-    # one full batch before the recurrence arrives
-    (drop / "c.json").write_text(json.dumps(
-        {"event_id": 4, "ts": "2024-01-01T04:00:00", "user_id": 4,
-         "event_type": "view", "value": 1.0}
-    ))
-    _time.sleep(1.1)
-    # same key resurfacing HOURS later, in a batch that runs AFTER
-    # the watermark advanced — state evicted, fresh row by design
-    (drop / "d.json").write_text(json.dumps(
-        {"event_id": 1, "ts": "2024-01-01T05:00:00", "user_id": 1,
-         "event_type": "click", "value": 1.0}
-    ))
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_id long, ts string, user_id long,"
-                " event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(drop))
-        .withColumn("event_time", __import__("pyspark").sql.functions
-                    .to_timestamp("ts"))
-    )
-    out = stateful.dedup_within_watermark_stream(
-        stream, keys=("event_id",), watermark="1 minute"
-    )
-    q = (out.writeStream.format("memory").queryName("wmdd")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT event_id, ts FROM wmdd").collect()
-    got = sorted((r.event_id, r.ts) for r in rows)
-    assert got == [
-        (1, "2024-01-01T00:00:00"),
-        (1, "2024-01-01T05:00:00"),   # post-watermark recurrence emits
-        (2, "2024-01-01T00:00:40"),
-        (3, "2024-01-01T02:00:00"),
-        (4, "2024-01-01T04:00:00"),
-    ]
-
-
-def test_session_timeout_stream_gap_close_and_idle_flush(tmp_path, spark):
-    """Custom stateful sessionization: an over-gap event CLOSES the
-    previous session (emitted with its stats) and opens a new one;
-    a user who goes quiet has the open session flushed by the
-    ProcessingTimeTimeout without any further input."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "sess_to"
-    drop.mkdir()
-    gap_us = 30 * 60 * 1_000_000
-    (drop / "a.json").write_text("\n".join(json.dumps(r) for r in [
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01T00:10:00", "user_id": 1,
-         "event_type": "click", "value": 2.0},
-        # > 30 min gap: closes session 1 (2 events), opens session 2
-        {"event_id": 3, "ts": "2024-01-01T02:00:00", "user_id": 1,
-         "event_type": "click", "value": 4.0},
-    ]))
-    stream = (
-        ev.read_event_stream(spark, str(drop))
-        .select(
-            "user_id",
-            F.unix_micros("event_time").alias("ts_us"),
-            "value",
-        )
-    )
-    out = stateful.session_timeout_stream(
-        stream, gap_us=gap_us, idle_timeout_ms=1_000
-    )
-    # processing-time trigger so the timeout fires on later (empty)
-    # micro-batches; stop once the flush arrives
-    q = (out.writeStream.format("memory").queryName("sess_to")
-         .outputMode("append").trigger(processingTime="1 second").start())
-    deadline = _time.time() + 90
-    while _time.time() < deadline:
-        if spark.sql("SELECT count(*) c FROM sess_to").first().c >= 2:
-            break
-        _time.sleep(1)
-    q.stop()
-    rows = sorted(
-        spark.sql("SELECT * FROM sess_to").collect(),
-        key=lambda r: r.session_start_us,
-    )
-    assert len(rows) == 2
-    s1, s2 = rows
-    assert s1.n_events == 2 and s1.sum_value == 3.0
-    assert (s1.session_end_us - s1.session_start_us) == 10 * 60 * 1_000_000
-    # the idle-flushed open session: single event, zero width
-    assert s2.n_events == 1 and s2.sum_value == 4.0
-    assert s2.session_start_us == s2.session_end_us
-
-
-def test_session_timeout_stream_sorts_across_arrow_chunks(tmp_path, spark):
-    """Regression (round-7 advisor): a group's micro-batch arrives as
-    MULTIPLE Arrow chunks; a later chunk holding EARLIER timestamps
-    must still fold in (ts_us) order within the batch. With per-chunk
-    sorting, [02:00] then [00:00] would merge into one 2-event session
-    pinned at 02:00; the correct fold sees 00:00 first, gap-closes it,
-    and leaves 02:00 as the open session."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "sess_chunks"
-    drop.mkdir()
-    # out-of-order WITHIN one micro-batch file: later ts first
-    (drop / "a.json").write_text("\n".join(json.dumps(r) for r in [
-        {"event_id": 1, "ts": "2024-01-01T02:00:00", "user_id": 1,
-         "event_type": "click", "value": 4.0},
-        {"event_id": 2, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "click", "value": 1.0},
-    ]))
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        stream = (
-            ev.read_event_stream(spark, str(drop))
-            .coalesce(1)  # both rows in ONE group batch, 2 Arrow chunks
-            .select(
-                "user_id",
-                F.unix_micros("event_time").alias("ts_us"),
-                "value",
-            )
-        )
-        out = stateful.session_timeout_stream(
-            stream, gap_us=30 * 60 * 1_000_000, idle_timeout_ms=1_000
-        )
-        q = (out.writeStream.format("memory").queryName("sess_chunks")
-             .outputMode("append").trigger(processingTime="1 second")
-             .start())
-        deadline = _time.time() + 90
-        while _time.time() < deadline:
-            if spark.sql(
-                "SELECT count(*) c FROM sess_chunks"
-            ).first().c >= 2:
-                break
-            _time.sleep(1)
-        q.stop()
-    finally:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", old
-        )
-    rows = sorted(
-        spark.sql("SELECT * FROM sess_chunks").collect(),
-        key=lambda r: r.session_start_us,
-    )
-    assert [r.n_events for r in rows] == [1, 1]
-    assert [r.sum_value for r in rows] == [1.0, 4.0]
-
-
 def _drop_items(path, items, start_id=0, ts0=0):
     rows = [
         {"item": it, "ts_us": ts0 + i, "event_id": start_id + i}
         for i, it in enumerate(items)
     ]
     path.write_text("\n".join(json.dumps(r) for r in rows))
-
-
-def test_topk_stream_space_saving_bounds(tmp_path, spark):
-    """Space-Saving guarantees under capacity pressure: every item
-    with true count > n/m is tracked, and true <= count <= true+err
-    for every tracked item; state stays bounded at m counters."""
-    from collections import Counter
-
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from document_parsing_etl_pipeline_spark.streaming import topk
-
-    drop = tmp_path / "items"
-    drop.mkdir()
-    items = (["a"] * 50 + ["b"] * 20 + ["c"] * 6
-             + list("defghijk"))  # 8 singletons force evictions
-    _drop_items(drop / "x.json", items)
-    schema = StructType([
-        StructField("item", StringType()),
-        StructField("ts_us", LongType()),
-        StructField("event_id", LongType()),
-    ])
-    stream = spark.readStream.format("json").schema(schema).load(str(drop))
-    out = topk.topk_stream(stream, m=3, shards=1)
-    q = (out.writeStream.format("memory").queryName("topk1")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck1"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT * FROM topk1 WHERE seq = (SELECT max(seq) FROM topk1)"
-    ).collect()
-    true = Counter(items)
-    n = len(items)
-    emitted = {r.item: (r["count"], r.err) for r in got}
-    assert len(emitted) <= 3
-    assert all(r.n_processed == n for r in got)
-    # guarantee 1: every item above the n/m frequency bar is tracked
-    for it, c in true.items():
-        if c > n / 3:
-            assert it in emitted, f"heavy hitter {it} lost"
-    # guarantee 2: overestimate bounded by err
-    for it, (cnt, err) in emitted.items():
-        assert true[it] <= cnt <= true[it] + err, (it, cnt, err)
-
-
-def test_topk_stream_state_carries_across_runs(tmp_path, spark):
-    """The shard summary persists in keyed state across restarts
-    (same checkpoint): a second availableNow run folds new arrivals
-    onto the prior counters instead of starting from zero."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from document_parsing_etl_pipeline_spark.streaming import topk
-
-    drop = tmp_path / "items2"
-    drop.mkdir()
-    schema = StructType([
-        StructField("item", StringType()),
-        StructField("ts_us", LongType()),
-        StructField("event_id", LongType()),
-    ])
-    _drop_items(drop / "a.json", ["x"] * 5 + ["y"] * 2)
-
-    sink = str(tmp_path / "out2")
-
-    def run():
-        stream = (spark.readStream.format("json").schema(schema)
-                  .load(str(drop)))
-        out = topk.topk_stream(stream, m=4, shards=1)
-        q = (out.writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", str(tmp_path / "ck2"))
-             .outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run()
-    _drop_items(drop / "b.json", ["x"] * 3 + ["z"] * 4, start_id=100)
-    run()
-    res = spark.read.parquet(sink)
-    res.createOrReplaceTempView("topk2_out")
-    got = {r.item: r["count"] for r in spark.sql(
-        "SELECT * FROM topk2_out"
-        " WHERE seq = (SELECT max(seq) FROM topk2_out)"
-    ).collect()}
-    assert got == {"x": 8, "y": 2, "z": 4}
-
-
-def test_topk_stream_shards_partition_items_disjointly(tmp_path, spark):
-    """Hash-sharding routes each item to exactly one shard: the union
-    of shard summaries never double-counts an item."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from document_parsing_etl_pipeline_spark.streaming import topk
-
-    drop = tmp_path / "items3"
-    drop.mkdir()
-    _drop_items(drop / "a.json",
-                [f"t{i}" for i in range(20)] * 3)
-    schema = StructType([
-        StructField("item", StringType()),
-        StructField("ts_us", LongType()),
-        StructField("event_id", LongType()),
-    ])
-    stream = spark.readStream.format("json").schema(schema).load(str(drop))
-    out = topk.topk_stream(stream, m=50, shards=4)
-    q = (out.writeStream.format("memory").queryName("topk3")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck3"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM topk3").collect()
-    seen = [r.item for r in rows]
-    assert len(seen) == len(set(seen)) == 20
-    # ample capacity -> exact counts, zero err
-    assert all(r["count"] == 3 and r.err == 0 for r in rows)
-
-
-def test_ewma_anomaly_flags_spike_not_baseline(tmp_path, spark):
-    """A steady baseline never alarms; a single 10x spike after
-    warm-up does; the EWMA recovers (the spike inflates the mean only
-    by alpha) so the next normal value stays quiet."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from document_parsing_etl_pipeline_spark.streaming import topk
-
-    drop = tmp_path / "ewma"
-    drop.mkdir()
-    vals = [10.0, 10.5, 9.5, 10.2, 9.8, 10.1, 9.9, 100.0, 10.0]
-    rows = [
-        {"key": "m1", "event_id": i, "ts_us": i * 1000, "value": v}
-        for i, v in enumerate(vals)
-    ]
-    (drop / "a.json").write_text(
-        "\n".join(json.dumps(r) for r in rows))
-    schema = StructType([
-        StructField("key", StringType()),
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("value", DoubleType()),
-    ])
-    stream = spark.readStream.format("json").schema(schema).load(str(drop))
-    out = topk.ewma_anomaly_stream(stream, alpha=0.2, k_sigma=3.0,
-                                   min_n=5)
-    q = (out.writeStream.format("memory").queryName("ewma1")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.event_id: r.is_anomaly
-           for r in spark.sql("SELECT * FROM ewma1").collect()}
-    assert got[7] is True          # the 100.0 spike
-    flagged = [i for i, f in got.items() if f]
-    assert flagged == [7]          # nothing else alarms
-
-
-def test_ewma_anomaly_state_per_key_isolated(tmp_path, spark):
-    """Keys keep independent state: a spike on one key never flags
-    the other."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from document_parsing_etl_pipeline_spark.streaming import topk
-
-    drop = tmp_path / "ewma2"
-    drop.mkdir()
-    rows = []
-    for i in range(8):
-        rows.append({"key": "a", "event_id": i * 2,
-                     "ts_us": i * 1000, "value": 5.0 + (i % 2) * 0.1})
-        rows.append({"key": "b", "event_id": i * 2 + 1,
-                     "ts_us": i * 1000,
-                     "value": 50.0 if i == 7 else 1.0 + (i % 2) * 0.1})
-    (drop / "a.json").write_text(
-        "\n".join(json.dumps(r) for r in rows))
-    schema = StructType([
-        StructField("key", StringType()),
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("value", DoubleType()),
-    ])
-    stream = spark.readStream.format("json").schema(schema).load(str(drop))
-    out = topk.ewma_anomaly_stream(stream, min_n=5)
-    q = (out.writeStream.format("memory").queryName("ewma2")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows_out = spark.sql("SELECT * FROM ewma2").collect()
-    assert not any(r.is_anomaly for r in rows_out if r.key == "a")
-    assert any(r.is_anomaly for r in rows_out if r.key == "b")
 
 
 def test_quantile_stream_bounded_relative_error(tmp_path, spark):
@@ -1052,172 +542,6 @@ def test_quantile_stream_keys_isolated(tmp_path, spark):
     assert abs(got["hi"] - 1000.0) / 1000.0 < 0.10
 
 
-def test_funnel_stream_completion_skip_and_order(tmp_path, spark):
-    """Ordered-step funnel: only users who hit signup -> view ->
-    purchase IN ORDER complete (emitting start/end/latency the moment
-    the purchase lands); skipping a step or starting mid-funnel emits
-    nothing."""
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "funnel"
-    drop.mkdir()
-    (drop / "a.json").write_text("\n".join(json.dumps(r) for r in [
-        # user 1: full ordered funnel -> one completion, 20 min latency
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "signup", "value": 0.0},
-        {"event_id": 2, "ts": "2024-01-01T00:10:00", "user_id": 1,
-         "event_type": "view", "value": 0.0},
-        {"event_id": 3, "ts": "2024-01-01T00:20:00", "user_id": 1,
-         "event_type": "purchase", "value": 5.0},
-        # user 2: skips the view step -> no completion
-        {"event_id": 4, "ts": "2024-01-01T00:00:00", "user_id": 2,
-         "event_type": "signup", "value": 0.0},
-        {"event_id": 5, "ts": "2024-01-01T00:20:00", "user_id": 2,
-         "event_type": "purchase", "value": 5.0},
-        # user 3: starts mid-funnel -> no completion
-        {"event_id": 6, "ts": "2024-01-01T00:00:00", "user_id": 3,
-         "event_type": "view", "value": 0.0},
-        {"event_id": 7, "ts": "2024-01-01T00:20:00", "user_id": 3,
-         "event_type": "purchase", "value": 5.0},
-    ]))
-    stream = (
-        ev.read_event_stream(spark, str(drop))
-        .select("user_id", F.unix_micros("event_time").alias("ts_us"),
-                "event_type")
-    )
-    out = stateful.funnel_stream(stream)
-    q = (out.writeStream.format("memory").queryName("funnel_a")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM funnel_a").collect()
-    assert len(rows) == 1
-    assert rows[0].user_id == 1
-    assert rows[0].latency_us == 20 * 60 * 1_000_000
-
-
-def test_funnel_stream_horizon_reset_and_state_carry(tmp_path, spark):
-    """An over-horizon next-step event RESETS funnel progress (no
-    completion from stale signups), and open-funnel state survives
-    across micro-batches via the checkpoint: a signup in batch 1
-    completes with view+purchase arriving in batch 2."""
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "funnel_h"
-    drop.mkdir()
-    ckpt = str(tmp_path / "funnel_h_ckpt")
-    sink = str(tmp_path / "funnel_h_out")
-    horizon_us = 60 * 60 * 1_000_000  # 1 hour
-
-    def run():
-        stream = (
-            ev.read_event_stream(spark, str(drop))
-            .select("user_id",
-                    F.unix_micros("event_time").alias("ts_us"),
-                    "event_type")
-        )
-        # idle timeout far above the test's wall clock: the DORMANT
-        # drop path is test_funnel_stream_dormant_timeout below; here
-        # the open funnel must survive into run 2
-        out = stateful.funnel_stream(stream, step_horizon_us=horizon_us,
-                                     idle_timeout_ms=30 * 60 * 1000)
-        q = (out.writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    (drop / "a.json").write_text("\n".join(json.dumps(r) for r in [
-        # user 1: signup, then a view 2h later (over the 1h horizon):
-        # progress resets, so the later purchase completes NOTHING
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "signup", "value": 0.0},
-        {"event_id": 2, "ts": "2024-01-01T02:00:00", "user_id": 1,
-         "event_type": "view", "value": 0.0},
-        {"event_id": 3, "ts": "2024-01-01T02:10:00", "user_id": 1,
-         "event_type": "purchase", "value": 5.0},
-        # user 2: signup only — the open funnel must carry to batch 2
-        {"event_id": 4, "ts": "2024-01-01T00:00:00", "user_id": 2,
-         "event_type": "signup", "value": 0.0},
-    ]))
-    run()
-    (drop / "b.json").write_text("\n".join(json.dumps(r) for r in [
-        {"event_id": 5, "ts": "2024-01-01T00:30:00", "user_id": 2,
-         "event_type": "view", "value": 0.0},
-        {"event_id": 6, "ts": "2024-01-01T00:50:00", "user_id": 2,
-         "event_type": "purchase", "value": 5.0},
-    ]))
-    run()
-    # user 1's over-horizon progression completed nothing; user 2's
-    # funnel opened in run 1 and completed in run 2 (state carried)
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 1
-    assert rows[0].user_id == 2
-    assert rows[0].latency_us == 50 * 60 * 1_000_000
-
-
-def test_funnel_stream_dormant_timeout(tmp_path, spark):
-    """A dormant user's open funnel is dropped by the processing-time
-    timeout (state stays O(active users)) — and the timed-out handler
-    must not kill the worker (regression: a timed-out group yielding
-    a fully EMPTY iterator crashes the PySpark Arrow worker; the fix
-    yields a typed empty frame). After the drop, later steps within
-    the EVENT-time horizon complete nothing, and the query keeps
-    processing other users."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    drop = tmp_path / "funnel_d"
-    drop.mkdir()
-    (drop / "a.json").write_text(json.dumps(
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "signup", "value": 0.0}))
-    stream = (
-        ev.read_event_stream(spark, str(drop))
-        .select("user_id", F.unix_micros("event_time").alias("ts_us"),
-                "event_type")
-    )
-    out = stateful.funnel_stream(stream, idle_timeout_ms=1_000)
-    q = (out.writeStream.format("memory").queryName("funnel_d")
-         .outputMode("append").trigger(processingTime="1 second")
-         .start())
-    try:
-        _time.sleep(12)  # several empty batches: the timeout fires
-        assert q.exception() is None  # worker survived the timeout
-        # user 1's remaining steps (in-horizon by EVENT time) now
-        # complete nothing; user 9's fresh full funnel still does
-        (drop / "b.json").write_text("\n".join(json.dumps(r) for r in [
-            {"event_id": 2, "ts": "2024-01-01T00:10:00", "user_id": 1,
-             "event_type": "view", "value": 0.0},
-            {"event_id": 3, "ts": "2024-01-01T00:20:00", "user_id": 1,
-             "event_type": "purchase", "value": 5.0},
-            {"event_id": 4, "ts": "2024-01-01T00:00:00", "user_id": 9,
-             "event_type": "signup", "value": 0.0},
-            {"event_id": 5, "ts": "2024-01-01T00:01:00", "user_id": 9,
-             "event_type": "view", "value": 0.0},
-            {"event_id": 6, "ts": "2024-01-01T00:02:00", "user_id": 9,
-             "event_type": "purchase", "value": 5.0},
-        ]))
-        deadline = _time.time() + 90
-        while _time.time() < deadline:
-            if spark.sql(
-                "SELECT count(*) c FROM funnel_d"
-            ).first().c >= 1:
-                break
-            _time.sleep(1)
-        assert q.exception() is None
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM funnel_d").collect()
-    assert [r.user_id for r in rows] == [9]
-
-
 def test_stream_merge_mor_exactly_once_no_rewrites(tmp_path, spark):
     """The merge-on-read sink mode: same exactly-once + latest-state
     semantics as the CoW sink, but every pre-existing data file is
@@ -1317,26 +641,6 @@ def test_quantile_stream_cap_holds_on_adversarial_spread(tmp_path, spark):
     # p50 keeps the right SIGN and a sane central magnitude even with
     # saturated tails (2/3 of the mass is positive)
     assert r.p50_est > 0
-
-
-def test_funnel_idle_timeout_defaults_to_horizon():
-    """The default idle timeout must match the step horizon's span
-    (round-8 advisor finding): a 7-day event-time horizon paired with
-    a 60 s processing-time timeout silently dropped open funnels
-    after one quiet wall-minute. Pin the derivation (µs -> ms, 60 s
-    floor) without running a stream."""
-    import inspect
-
-    from document_parsing_etl_pipeline_spark.streaming import stateful
-
-    sig = inspect.signature(stateful.funnel_stream)
-    assert sig.parameters["idle_timeout_ms"].default is None
-    src = inspect.getsource(stateful.funnel_stream)
-    assert "step_horizon_us // 1_000" in src
-    # the derivation: default horizon (7 days of µs) -> 7 days of ms
-    assert max(60_000, 7 * 86_400_000_000 // 1_000) == 604_800_000
-    # a short horizon floors at one minute
-    assert max(60_000, 10_000_000 // 1_000) == 60_000
 
 
 def test_neardup_index_pushdown_prunes_and_matches_full_read(
