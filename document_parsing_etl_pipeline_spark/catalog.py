@@ -25,9 +25,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # schema memo for load_table: (applicationId, absolute path, sorted
 # (file, size, mtime_ns) under the path) -> StructType
 _SCHEMA: dict = {}

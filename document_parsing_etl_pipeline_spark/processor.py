@@ -32,14 +32,14 @@ read. Each request checks the version again (a directory listing), so
 a rewritten store is read afresh, and no request decodes parquet. Every
 key and bound goes through ``docstore.key_predicate``, which keeps it
 out of the generated code: a read with a new key compiles no class.
-``update_document`` / ``delete_document`` change this processor's plans
-only, replayed over the snapshot on each read; they never reach the
-shared snapshot or the files, so a fresh processor does not see them.
+``update_document`` / ``delete_document`` persist: each rewrites the
+file of each table that holds the document (``docstore.rewrite_document``),
+so every processor over the root, open or fresh, reads the change next.
+Without a ``store_root`` they change the in-memory tables.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from functools import partial
 
 from pyspark.errors import AnalysisException
@@ -55,8 +55,6 @@ class DocumentProcessor:
         self.store_root = store_root
         # the tables process_documents built, read when no store_root
         self._tables: dict[str, DataFrame] | None = None
-        # update / delete plans, applied in order over the tables read
-        self._mutations: list[Callable[[dict], dict]] = []
 
     # ------------------------------------------------------ ingest
 
@@ -68,10 +66,8 @@ class DocumentProcessor:
         and the returned tables read the written store back with the
         schemas they were written with, so the read-back runs no job.
         They are not this processor's read path: API reads open the
-        store's snapshot (``tables``). A failed write raises here.
-        Earlier updates and deletes are dropped."""
+        store's snapshot (``tables``). A failed write raises here."""
         tables = docstore.build_docstore(docs)
-        self._mutations = []
         if not self.store_root:
             self._tables = tables
             return tables
@@ -116,21 +112,18 @@ class DocumentProcessor:
 
     @property
     def tables(self) -> dict[str, DataFrame]:
-        """The store's three tables with this processor's updates and
-        deletes applied. Over a ``store_root`` they are the snapshot of
-        the files as they are now (``docstore.open_store``; the first
-        read of a file version materializes it, as concurrent jobs);
-        without one, the tables ``process_documents`` built."""
+        """The store's three tables. Over a ``store_root`` they are the
+        snapshot of the files as they are now (``docstore.open_store``;
+        the first read of a file version materializes it, as concurrent
+        jobs); without one, the tables ``process_documents`` built, with
+        later updates and deletes applied."""
         if self.store_root:
             tables = docstore.open_store(self.spark, self.store_root)
             tables.pop("blobs", None)
-        elif self._tables is None:
+            return tables
+        if self._tables is None:
             raise RuntimeError("no documents processed and no store_root")
-        else:
-            tables = self._tables
-        for mutate in self._mutations:
-            tables = mutate(tables)
-        return tables
+        return self._tables
 
     # ------------------------------------------------------ queries
 
@@ -226,18 +219,34 @@ class DocumentProcessor:
 
     # ------------------------------------------------------ mutation
 
-    # Both change this processor's reads only: the files and the shared
-    # snapshot stay as they are, so a fresh processor does not see them.
-
     def update_document(self, doc_id: int, updates: dict) -> None:
-        updates = dict(updates)
+        """Overwrite ``updates`` on the document's row and bump its
+        ``updated_at``; with a ``store_root``, by rewriting the
+        documents file that holds it."""
 
         def update(tables: dict) -> dict:
             return {**tables, "documents": docstore.update_document_meta(
                 tables["documents"], doc_id, updates)}
 
-        self._mutations.append(update)
+        self._persist(doc_id, update, [["documents"]])
 
     def delete_document(self, doc_id: int) -> None:
-        self._mutations.append(
-            partial(docstore.delete_document, doc_id=doc_id))
+        """Cascade delete. With a ``store_root`` the chunks and charts
+        files are rewritten as concurrent jobs, then the documents
+        file: a delete that dies part-way leaves the document listed,
+        and repeating it finishes the delete."""
+        self._persist(doc_id, partial(docstore.delete_document, doc_id=doc_id),
+                      [["chunks", "charts"], ["documents"]])
+
+    def _persist(self, doc_id: int, change, steps: list[list[str]]) -> None:
+        """Apply ``change`` (``{name: frame} -> {name: frame}``) to the
+        in-memory tables, or rewrite the store's files, one step of
+        tables after another and the tables of a step concurrently."""
+        if not self.store_root:
+            self._tables = change(self.tables)
+            return
+        for names in steps:
+            concurrently(self.spark, [
+                partial(docstore.rewrite_document, self.spark,
+                        self.store_root, name, doc_id, change)
+                for name in names])

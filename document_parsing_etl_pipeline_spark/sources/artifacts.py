@@ -25,7 +25,7 @@ format tables under ``<dir>/<corpus-slug>/<artifact>``:
   the table with a fresh build instead of silently serving stale
   rows; a table written before fingerprints existed counts as stale
   (fail loud on the side of rebuilding).
-- ``expire_snapshots`` / ``optimize_table`` apply like any table.
+- ``optimize_table`` applies like any table.
 
 Unset (the default, and what the driver's correctness/bench runs
 use), load_or_build falls back to the in-session localCheckpoint

@@ -12,10 +12,8 @@ within each file (chunks on doc_id, chunk_index). Each file covers a
 narrow, disjoint doc_id range and AQE coalescing sizes the file count
 from the data, so a small ingest writes one file per table and reads
 back with no partition discovery. Plain parquet prunes row groups,
-not files: a doc_id predicate skips row groups by their min/max
-statistics, but every file's footer is still opened. File-level
-pruning before any task launches needs per-file statistics in a
-manifest, which arrives with the table-format store.
+not files; API reads do not scan parquet at all (below), so no
+manifest of per-file statistics is kept.
 
 One ingest evaluates chunking + NER once: ``write_docstore`` caches
 the chunks table, whose plan the documents table's ``chunk_stats``
@@ -49,13 +47,20 @@ file did.
 
 Request keys go through ``key_predicate``, which keeps each key out of
 the generated Java source, so one compiled class serves every key.
+
+Updates and deletes persist (``rewrite_document``): a table's rows for
+one doc_id sit in one file, so a mutation rewrites that file and swaps
+it in over the old path. The swap changes the table's file version, so
+the next request of every processor reads the new files.
 """
 
 from __future__ import annotations
 
 import operator
 import os
+import shutil
 import threading
+import uuid
 from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -68,6 +73,7 @@ from ..operators.charts import chart_inventory
 from ..operators.entities import extract_entities
 from ..session import concurrently
 from .objectstore import BLOB_SCHEMA
+from .tableformat import _localpath
 
 # Deterministic ingest clock: created_at = INGEST_EPOCH_S + doc_id
 # seconds. The reference stamps wall-clock Jakarta time
@@ -354,7 +360,8 @@ def update_document_meta(documents: DataFrame, doc_id: int,
                          updates: dict) -> DataFrame:
     """BaseRepository.update parity (reference base.py:38-53):
     overwrite columns for one id — expressed as a declarative
-    projection (at scale this is a MERGE against the store).
+    projection, which ``rewrite_document`` persists by rewriting the
+    one documents file that holds the id.
 
     Bumps ``updated_at`` for the touched row by a deterministic delta
     (reference Document.updated_at has onupdate=get_jakarta_time;
@@ -383,3 +390,37 @@ def delete_document(tables: dict[str, DataFrame], doc_id: int) -> dict[str, Data
         name: df.where(F.col("doc_id") != doc_id)
         for name, df in tables.items()
     }
+
+
+def rewrite_document(spark: SparkSession, root: str, name: str,
+                     doc_id: int, change) -> None:
+    """Persist ``change`` (``{name: frame} -> {name: frame}``, as
+    ``delete_document``) for ``doc_id`` in table ``root/name``. One job
+    finds the files holding the id (one on the range-clustered store,
+    one per ``batch_id=`` directory on a watcher store); each is read,
+    changed, written as a single file into a scratch directory under
+    ``root`` (an empty result is a schema-only file) and swapped in
+    over the old path. A filter or projection keeps the row order, so
+    the file stays sorted. The old file's ``.crc`` sidecar goes before
+    the swap and the new one moves in after: a reader never checks the
+    new bytes against the old checksum."""
+    table = spark.read.parquet(os.path.join(root, name))
+    files = {_localpath(r.file_path) for r in table
+             .where(key_predicate("doc_id", "==", doc_id))
+             .select("_metadata.file_path").collect()}
+    for path in sorted(files):
+        scratch = os.path.join(root, f"_rewrite-{uuid.uuid4().hex}")
+        try:
+            frame = spark.read.parquet(path)
+            change({name: frame})[name].coalesce(1).write.parquet(scratch)
+            (new,) = (f for f in os.listdir(scratch) if f.endswith(".parquet"))
+            old_crc = os.path.join(os.path.dirname(path),
+                                   f".{os.path.basename(path)}.crc")
+            if os.path.exists(old_crc):
+                os.remove(old_crc)
+            os.replace(os.path.join(scratch, new), path)
+            new_crc = os.path.join(scratch, f".{new}.crc")
+            if os.path.exists(new_crc):
+                os.replace(new_crc, old_crc)
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)

@@ -1,5 +1,5 @@
 """Snapshot-manifest table format: versioned parquet with MERGE,
-copy-on-write DELETE, time travel, and file-level min/max pruning.
+time travel, and file-level min/max pruning.
 
 A 100 TB deployment wants table-format semantics (Delta/Iceberg) for
 its mutable tables. This module implements the minimal open-table-format
@@ -14,8 +14,8 @@ through write-audit-publish stages), the artifact store
   row counts and per-column min/max stats (the Iceberg manifest-entry
   shape, flattened);
 - every write is copy-on-write: new files + a new manifest; old
-  snapshots stay readable until ``expire_snapshots`` drops them (time
-  travel by version);
+  snapshots stay readable (time travel by version) and keep their
+  files: no caller needs a vacuum, so none is kept;
 - MERGE rewrites only the files that actually contain matched keys —
   candidate files come from manifest key-range pruning, confirmed
   membership from a semi-join, everything else is carried by
@@ -24,12 +24,10 @@ through write-audit-publish stages), the artifact store
   parquet (partition-pruning semantics without a partition layout);
 - commits are atomic via O_EXCL manifest creation (single winner per
   version; losers retry on a real system — here they raise);
-- row-level deletes come in BOTH open-table flavors: copy-on-write
-  (``delete_where`` rewrites boundary files) and merge-on-read
-  DELETION VECTORS (``delete_where_dv`` writes parquet tombstone
-  sidecars of (file, row position); readers anti-join them,
-  ``optimize_table`` materializes them, vacuum keeps sidecars of
-  retained snapshots alive).
+- ``merge_into_dv`` is the merge-on-read MERGE: matched rows become
+  DELETION VECTORS (parquet tombstone sidecars of (file, row
+  position)) that readers anti-join and ``optimize_table``
+  materializes.
 
 Everything data-sized runs in Spark (per-file stats are one
 ``input_file_name()`` aggregation); only manifest bookkeeping (file
@@ -421,9 +419,9 @@ def _write_files(
 
 # ------------------------------------------------- deletion vectors
 # Row-level deletes WITHOUT file rewrites (Delta deletion vectors /
-# Iceberg position deletes): a delete commit writes a parquet SIDECAR
-# of (file name, row position) tombstones and re-references every data
-# file unchanged; readers anti-join the tombstones against the hidden
+# Iceberg position deletes): a merge_into_dv commit writes a parquet
+# SIDECAR of (file name, row position) tombstones and re-references
+# every data file unchanged; readers anti-join the tombstones against the hidden
 # parquet (_metadata.file_path, _metadata.row_index) — positions are
 # stable because copy-on-write never edits a file in place. OPTIMIZE
 # materializes: it reads through read() (tombstones applied) and
@@ -521,7 +519,7 @@ def replace(
 ) -> int:
     """REPLACE TABLE: a new snapshot whose live file set is ONLY the
     new files (Iceberg's replace semantics). Prior snapshots stay
-    readable via time travel until expire_snapshots. Deletion vectors
+    readable via time travel. Deletion vectors
     are NOT carried — they reference replaced files. ``stats_cols`` /
     ``bloom_cols`` override the table's layout config for the new
     snapshot (round 13, advice: a full rebuild is the one commit that
@@ -554,12 +552,12 @@ def _carry_meta(head: dict, row_preserving: bool = False) -> dict:
     the table schema, the streaming sink's exactly-once watermark
     (stream_batch_id), and — for ROW-PRESERVING maintenance commits
     only (OPTIMIZE) — the artifact-store
-    source fingerprint. Without the watermark, a delete/optimize
-    commit followed by expire_snapshots could erase the last recorded
-    batch id and let a checkpoint replay re-apply a batch; without
+    source fingerprint. Without the watermark, a merge or optimize
+    commit would drop the last recorded batch id and let a checkpoint
+    replay re-apply a batch; without
     the fingerprint, an OPTIMIZE of an artifact table would falsely
     mark it stale and trigger a rebuild (sources/artifacts.py). A
-    ROW-MUTATING commit (append / merge / delete) must DROP the
+    ROW-MUTATING commit (append / merge) must DROP the
     fingerprint: the table's rows no longer equal the builder's
     output, so artifacts._ensure_table has to read it as stale and
     rebuild rather than silently serve mutated rows. A mutating
@@ -865,49 +863,6 @@ def merge_into(
     })
 
 
-def delete_where(
-    spark: SparkSession, root: str, col: str, lo, hi,
-) -> int:
-    """Copy-on-write range DELETE: files wholly inside [lo,hi] are
-    dropped without being read, files overlapping the boundary are
-    rewritten minus matching rows, disjoint files carry over."""
-    head = _load_manifest(root, _versions(root)[-1])
-    stats_cols = head["stats_cols"]
-    carried, rewrite, dropped = [], [], 0
-    for e in head["files"]:
-        # no stats for col (mixed stats_cols history) → must rewrite:
-        # the file may hold matching rows and only a read can tell
-        mn, mx = e["stats"].get(col) or [None, None]
-        if mn is None and e["stats"].get(col) is None:
-            rewrite.append(e)
-            continue
-        if mn is None or mx < lo or mn > hi:
-            carried.append(e)
-        elif lo <= mn and mx <= hi:
-            dropped += 1  # fully covered: drop by reference, zero I/O
-        else:
-            rewrite.append(e)
-    entries: list[dict] = []
-    if rewrite:
-        # apply outstanding deletion vectors so the rewrite doesn't
-        # resurrect tombstoned rows
-        df = _read_live(
-            spark, root, head,
-            [os.path.join(root, e["path"]) for e in rewrite],
-            reader=spark.read,
-        )
-        survivors = df.where(~F.col(col).between(lo, hi))
-        entries = _write_files(
-            spark, survivors, root,
-            f"v{head['version'] + 1}-del", stats_cols, _bcols(head),
-        )
-    return _commit(root, {
-        "operation": "delete", "stats_cols": stats_cols,
-        "files": carried + entries,
-        **_carry_meta(head),
-    })
-
-
 def merge_into_dv(
     spark: SparkSession, updates: DataFrame, root: str, key: str,
     extra_meta: dict | None = None,
@@ -973,78 +928,6 @@ def merge_into_dv(
     })
 
 
-def delete_where_dv(
-    spark: SparkSession, root: str, col: str, lo, hi,
-) -> int:
-    """Range DELETE via DELETION VECTORS (Delta DV / Iceberg position
-    deletes): boundary-overlapping files are NOT rewritten — their
-    matching row positions go into a parquet tombstone sidecar and
-    the files carry over by reference, so the write cost scales with
-    the DELETED rows (tombstones), not the resident rows of every
-    touched file (the copy-on-write delete_where's cost). Files
-    wholly inside [lo,hi] still drop by reference with zero I/O.
-    Reads anti-join the tombstones (read()/scan());
-    optimize_table materializes them away. The merge-on-read
-    trade-off is the standard one: cheaper deletes, one extra
-    anti-join per read until the next OPTIMIZE."""
-    head = _load_manifest(root, _versions(root)[-1])
-    stats_cols = head["stats_cols"]
-    carried, overlap = [], []
-    for e in head["files"]:
-        # no stats for col → treat as boundary-overlapping: carry the
-        # file and tombstone whatever rows actually match
-        mn, mx = e["stats"].get(col) or [None, None]
-        if mn is None and e["stats"].get(col) is None:
-            carried.append(e)
-            overlap.append(e)
-            continue
-        if mn is None or mx < lo or mn > hi:
-            carried.append(e)
-        elif lo <= mn and mx <= hi:
-            pass  # fully covered: drop the file itself, zero I/O
-        else:
-            carried.append(e)
-            overlap.append(e)
-    dvs = list(_dv_entries(head))
-    if overlap:
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(root, e["path"]) for e in overlap]
-        )
-        hits = (
-            _with_pos(raw)
-            .where(F.col(col).between(lo, hi))
-            .select(
-                F.col("_dv_fname").alias("_dv_file"),
-                F.col("_dv_rowpos").alias("_dv_pos"),
-            )
-        )
-        # don't re-tombstone rows an earlier DV already covers
-        prior = _dv_df(spark, root, head)
-        if prior is not None:
-            hits = hits.join(prior, ["_dv_file", "_dv_pos"], "anti")
-        tag = f"v{head['version'] + 1}-dv"
-        out_dir = os.path.join(root, "data", tag)
-        hits.write.mode("error").parquet(out_dir)
-        back = spark.read.parquet(out_dir)
-        rows = (
-            back.withColumn("_f", F.input_file_name())
-            .groupBy("_f").agg(F.count("*").alias("_rows")).collect()
-        )
-        dvs += [
-            {
-                "path": os.path.relpath(_localpath(r["_f"]), root),
-                "rows": r["_rows"],
-                "stats": {},
-            }
-            for r in rows
-        ]
-    return _commit(root, {
-        "operation": "delete_dv", "stats_cols": stats_cols,
-        "files": carried,
-        **{**_carry_meta(head), "delete_vectors": dvs},
-    })
-
-
 # ------------------------------------------------- write-audit-publish
 
 _STAGE_DIR = "_staged"
@@ -1104,7 +987,7 @@ def stage_append(
     }
     # atomic-exclusive stage publish (round 13, advice): json.dump
     # straight into an O_EXCL fd left a window where a concurrent
-    # vacuum could json.load a partially-written manifest and crash.
+    # reader could json.load a partially-written manifest and crash.
     # Write the full bytes to a tmp file first, then os.link() them
     # to the final name — link is atomic AND fails with FileExistsError
     # on an existing stage, so the exactly-one-winner contract of the
@@ -1182,84 +1065,6 @@ def discard_stage(root: str, stage: str) -> int:
     return removed
 
 
-def expire_snapshots(root: str, keep_last: int = 1) -> dict:
-    """Vacuum (Delta VACUUM / Iceberg expire_snapshots): drop all but
-    the newest ``keep_last`` manifests, then delete every data file
-    referenced by NO retained snapshot. Copy-on-write makes old files
-    immortal until this runs — vacuum is what bounds storage.
-
-    Safety properties: the retained snapshots are untouched (their
-    file sets are computed BEFORE anything is deleted, and a file
-    referenced by any retained manifest is never removed — files are
-    shared across snapshots by reference, so liveness is the union
-    over retained manifests); expired versions become unreadable by
-    manifest absence, not by dangling references. Driver-side file
-    listing is the manifest-bookkeeping path (KB of JSON; on a real
-    deployment this is the object-store listing Delta's VACUUM does).
-
-    Returns {expired_versions, removed_files, kept_versions}.
-    """
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    versions = _versions(root)
-    keep = versions[-keep_last:]
-    expire = versions[:-keep_last]
-    live: set[str] = set()
-    for v in keep:
-        m = _load_manifest(root, v)
-        # deletion-vector sidecars are snapshot content too: removing
-        # one would silently RESURRECT tombstoned rows of a retained
-        # snapshot; bloom sidecars likewise (a retained snapshot's
-        # membership pruning must survive vacuum)
-        for e in m["files"] + _dv_entries(m):
-            live.update(_entry_live_paths(root, e))
-    # pending Write-Audit-Publish stages are liveness roots too: a
-    # vacuum racing an in-flight stage must not delete the staged
-    # data files, their bloom sidecars, OR the base files the staged
-    # candidate still references (its base version may itself be
-    # expiring) — a later publish would otherwise promote a manifest
-    # with dangling refs whose scans/probes fail on missing files
-    sdir = os.path.join(root, _STAGE_DIR)
-    live_prefixes: list[str] = []
-    if os.path.isdir(sdir):
-        for fn in sorted(os.listdir(sdir)):
-            if not fn.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(sdir, fn)) as f:
-                    sm = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                # unreadable/corrupt stage manifest (stage_append now
-                # links stage JSONs atomically, so this is corruption,
-                # not a write race): conservatively treat the whole
-                # stage data dir family as live rather than vacuuming
-                # files a later repair might still reference
-                live_prefixes.append(os.path.normpath(os.path.join(
-                    root, "data", f"stage-{fn[:-5]}-v")))
-                continue
-            for e in sm["files"] + _dv_entries(sm):
-                live.update(_entry_live_paths(root, e))
-    removed = 0
-    data_dir = os.path.join(root, "data")
-    for dirpath, _dirs, files in os.walk(data_dir):
-        for fn in files:
-            if not (fn.endswith(".parquet")
-                    or fn.endswith("_blooms.json")):
-                continue
-            p = os.path.normpath(os.path.join(dirpath, fn))
-            if p in live or any(p.startswith(pre) for pre in live_prefixes):
-                continue
-            os.remove(p)
-            removed += 1
-    for v in expire:
-        os.remove(_manifest_path(root, v))
-    return {
-        "expired_versions": expire,
-        "removed_files": removed,
-        "kept_versions": keep,
-    }
-
-
 def optimize_table(
     spark: SparkSession,
     root: str,
@@ -1273,7 +1078,7 @@ def optimize_table(
     columns so file min/max stats become tight hyper-rectangles in
     EVERY z dimension — small-file compaction and multi-dim data
     skipping in one copy-on-write commit. Old snapshots stay readable
-    (time travel); expire_snapshots reclaims the pre-optimize files.
+    (time travel) and keep the pre-optimize files.
 
     The z path is the at-scale recipe stated in operators/layout.py,
     executed: normalize each column to ``bits`` levels by the
@@ -1342,13 +1147,3 @@ def optimize_table(
         **{**_carry_meta(head, row_preserving=True),
            "delete_vectors": []},
     })
-
-
-def _entry_live_paths(root: str, e: dict):
-    """Every on-disk path a manifest entry keeps alive: the data file
-    itself plus any bloom SIDECAR it references — removing a live
-    sidecar would break membership pruning of a retained snapshot."""
-    yield os.path.normpath(os.path.join(root, e["path"]))
-    for b in (e.get("blooms") or {}).values():
-        if "ref" in b:
-            yield os.path.normpath(os.path.join(root, b["ref"]))

@@ -539,7 +539,6 @@ def test_artifact_tables_survive_session_restart(spark, tmp_path, monkeypatch):
     # the artifact is a real table: snapshot maintenance applies
     tf.optimize_table(spark, roots["neardup_components"],
                       target_file_rows=1_000_000)
-    tf.expire_snapshots(roots["neardup_components"], keep_last=1)
     Q._NEARDUP_MEMO.clear()
     assert rows(Q.QUERIES["dedup_components"](spark, sf)) == want_comp
 
@@ -622,7 +621,7 @@ def test_artifact_fingerprint_invalidation(spark, tmp_path, monkeypatch):
     build-parameter string), not just the sf_dir slug. Regenerating
     the corpus in place must trigger a REPLACE rebuild that serves the
     new corpus; a pre-fingerprint table counts as stale; snapshot
-    maintenance (optimize/expire) must NOT trigger a rebuild."""
+    maintenance (optimize) must NOT trigger a rebuild."""
     import os
     import shutil
 

@@ -551,23 +551,119 @@ def test_snapshot_follows_files_replaced_outside_spark(spark, tmp_path):
     assert proc.get_document_chunks(31).count() == 0
 
 
-def test_mutations_stay_private_to_their_processor(spark, tmp_path):
-    """An update and a delete change the reads of the processor that
-    made them; a fresh processor over the same root, which shares the
-    snapshot, still reads the files as written."""
+def test_mutations_persist_for_open_and_fresh_processors(spark, tmp_path):
+    """An update and a cascade delete rewrite the store's files: the
+    processor that made them, one opened and warmed before them and a
+    fresh one all read the change in documents, chunks and charts. The
+    other documents read as before, the chunks file stays sorted on
+    (doc_id, chunk_index) and no scratch directory is left behind."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(_slice(spark))
+    warm = DocumentProcessor(spark, store_root=root)
+    before = {d: warm.get_document_info(d) for d in (31, 32, 33)}
+    assert before[32]["chunks"] and before[32]["charts"]
+    proc = DocumentProcessor(spark, store_root=root)
+    proc.update_document(31, {"lang": "xx"})
+    proc.delete_document(32)
+    for p in (proc, warm, DocumentProcessor(spark, store_root=root)):
+        info = p.get_document_info(31)
+        assert info.pop("lang") == "xx"
+        assert (info.pop("updated_at") - before[31]["updated_at"]).days == 1
+        assert info == {k: v for k, v in before[31].items()
+                        if k not in ("lang", "updated_at")}
+        assert p.get_document_info(32) is None
+        assert p.get_document_chunks(32).count() == 0
+        assert p.get_document_charts(32).count() == 0
+        assert 32 not in [r.doc_id for r in p.get_documents().collect()]
+        assert p.get_document_info(33) == before[33]
+    for path in glob.glob(os.path.join(root, "chunks", "*.parquet")):
+        keys = [(r["doc_id"], r["chunk_index"]) for r in pq.read_table(
+            path, columns=["doc_id", "chunk_index"]).to_pylist()]
+        assert keys == sorted(keys)
+    assert sorted(os.listdir(root)) == ["charts", "chunks", "documents"]
+
+
+def test_mutations_persist_on_a_watcher_store(spark, tmp_path):
+    """On a store the streaming watcher wrote (one ``batch_id=<n>``
+    directory per micro-batch and table), an update and a cascade
+    delete rewrite the file in the document's batch directory, and a
+    fresh processor reads both."""
+    import json
+    import os
+
+    from document_parsing_etl_pipeline_spark.streaming import watcher
+
+    watch, store, ckpt = (str(tmp_path / d) for d in ("in", "store", "ck"))
+    os.makedirs(watch)
+    for doc_id in (1, 2):
+        text = f"table vector words {doc_id} " * 30
+        with open(os.path.join(watch, f"d{doc_id}.json"), "w") as f:
+            f.write(json.dumps({"doc_id": doc_id, "text": text, "lang": "en",
+                                "source": "drop", "n_chars": len(text)}))
+        watcher.start_full_pipeline(spark, watch, store, ckpt) \
+            .awaitTermination(120)
+    proc = DocumentProcessor(spark, store_root=store)
+    assert proc.get_document_charts(2).count() > 0
+    proc.update_document(1, {"lang": "xx"})
+    proc.delete_document(2)
+    for p in (proc, DocumentProcessor(spark, store_root=store)):
+        assert [(r.doc_id, r.lang) for r in p.get_documents().collect()] == [
+            (1, "xx")]
+        assert p.get_document_chunks(2).count() == 0
+        assert p.get_document_charts(2).count() == 0
+        assert p.get_document_info(1)["chunks"]
+    for name in ("documents", "chunks", "charts"):
+        assert sorted(d for d in os.listdir(os.path.join(store, name))
+                      if not d.startswith(("_", "."))) == [
+                          "batch_id=0", "batch_id=1"]
+
+
+def test_repeated_rewrites_of_one_file_stay_readable(spark, tmp_path):
+    """Every rewrite of a file leaves it with its own checksum sidecar,
+    so a second and a third rewrite of the same documents file, and a
+    plain Spark read after them, pass the local file system's checksum
+    check."""
+    import os
+
     root = str(tmp_path / "store")
     DocumentProcessor(spark, store_root=root).process_documents(_slice(spark))
     proc = DocumentProcessor(spark, store_root=root)
-    lang = proc.get_document_info(31)["lang"]
     proc.update_document(31, {"lang": "xx"})
-    proc.delete_document(32)
-    assert proc.get_document_info(31)["lang"] == "xx"
-    assert proc.get_document_info(32) is None
-    assert proc.get_document_chunks(32).count() == 0
-    fresh = DocumentProcessor(spark, store_root=root)
-    assert fresh.get_document_info(31)["lang"] == lang
-    assert fresh.get_document_info(32)["chunks"]
-    assert 32 in [r.doc_id for r in fresh.get_documents().collect()]
+    proc.update_document(31, {"source": "yy"})
+    proc.delete_document(33)
+    rows = {r.doc_id: r for r in
+            spark.read.parquet(os.path.join(root, "documents")).collect()}
+    assert sorted(rows) == [30, 31, 32, 34, 35, 36, 37, 38, 39]
+    assert (rows[31].lang, rows[31].source) == ("xx", "yy")
+    assert (rows[31].updated_at - rows[31].created_at).days == 2
+    files = os.listdir(os.path.join(root, "documents"))
+    assert sorted(f for f in files if f.endswith(".crc")) == sorted(
+        f".{f}.crc" for f in files if not f.startswith("."))
+
+
+def test_deleting_every_document_leaves_a_readable_store(spark, tmp_path):
+    """Deleting both documents of a two-document store leaves each
+    table a schema-only file: list returns no rows, for the processor
+    that deleted them and for a fresh one."""
+    docs = spark.createDataFrame([
+        Row(doc_id=1, text="table data vector spark customer " * 10,
+            lang="en", source="s1", n_chars=330),
+        Row(doc_id=2, text="short one", lang="en", source="s2", n_chars=9),
+    ])
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(docs)
+    proc = DocumentProcessor(spark, store_root=root)
+    proc.delete_document(1)
+    proc.delete_document(2)
+    for p in (proc, DocumentProcessor(spark, store_root=root)):
+        assert p.get_documents().collect() == []
+        assert p.get_document_info(1) is None
+        assert p.get_document_chunks(1).count() == 0
 
 
 def test_concurrent_first_opens_materialize_each_table_once(spark, tmp_path):

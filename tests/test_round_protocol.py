@@ -585,14 +585,6 @@ def test_bare_key_lint_catches_a_planted_copy(tmp_path):
 
 # ------------------------------------------------- package code has callers
 
-# Public functions allowed to have no product caller: the doc store's
-# move onto the table format (ROADMAP Direction 1) calls them, for
-# durable cascade deletes and for store maintenance.
-_CALLER_KEEP = {"sources/tableformat.py:delete_where",
-                "sources/tableformat.py:delete_where_dv",
-                "sources/tableformat.py:expire_snapshots"}
-
-
 def _product_modules(root: pathlib.Path) -> list[pathlib.Path]:
     """The non-test Python modules under ``root``: the package,
     bench.py, __spark_entry__.py, scripts/ and perfbench/."""
@@ -608,14 +600,29 @@ def _dotted(root: pathlib.Path, path: pathlib.Path) -> str:
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
+def _public(tree: ast.Module) -> dict[str, ast.stmt]:
+    """A module's public top-level functions and upper-case constants
+    (``NAME = ...``), each with the statement that defines it."""
+    out = {}
+    for n in tree.body:
+        if isinstance(n, ast.FunctionDef):
+            out[n.name] = n
+        elif isinstance(n, (ast.Assign, ast.AnnAssign)):
+            targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+            out.update((t.id, n) for t in targets
+                       if isinstance(t, ast.Name) and t.id.isupper())
+    return {k: v for k, v in out.items() if not k.startswith("_")}
+
+
 def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
-    """Public top-level functions of the package that no product
-    module uses, as ``<path in the package>:<name>``. A use of
+    """Public top-level functions and upper-case constants of the
+    package that no product module uses, as
+    ``<path in the package>:<name>``. A use of
     ``name`` from module ``m`` is ``<alias>.name`` where the alias
     names ``m`` (``from <pkg> import m [as alias]``, ``import m as
     alias``, also when star-imported from the module that binds it);
     ``from m import name``; a bare ``name`` in ``m`` outside the
-    function's own definition, or in a module that does
+    statement that defines it, or in a module that does
     ``from m import *``; or an ``@register`` decorator on the function
     (the query registry calls what it registers)."""
     paths = _product_modules(root)
@@ -667,17 +674,16 @@ def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
         if path.relative_to(root).parts[0] != _PKG.name:
             continue
         mod = _dotted(root, path)
-        public = {n.name: n for n in trees[mod].body
-                  if isinstance(n, ast.FunctionDef)
-                  and not n.name.startswith("_")}
+        public = _public(trees[mod])
         for top in trees[mod].body:
             used.update((mod, n.id) for n in ast.walk(top)
                         if isinstance(n, ast.Name)
                         and public.get(n.id) is not top)
         for name, fn in public.items():
-            if any(isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
-                   and d.func.id == "register"
-                   for d in fn.decorator_list):
+            if isinstance(fn, ast.FunctionDef) and any(
+                    isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                    and d.func.id == "register"
+                    for d in fn.decorator_list):
                 used.add((mod, name))
         rel = path.relative_to(root / _PKG.name).as_posix()
         out += [f"{rel}:{name}" for name in sorted(public)
@@ -686,10 +692,9 @@ def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
 
 
 def test_package_functions_have_product_callers():
-    """Every public function of the package is called from product
-    code, apart from the keep-list; a keep-list entry that gains a
-    caller (or goes) must leave the list."""
-    assert uncalled_functions() == sorted(_CALLER_KEEP)
+    """Every public function and upper-case constant of the package is
+    used by product code."""
+    assert uncalled_functions() == []
 
 
 def test_caller_lint_catches_a_planted_copy(tmp_path):
@@ -703,13 +708,15 @@ def test_caller_lint_catches_a_planted_copy(tmp_path):
         "def history(root):\n    return history(root)\n"
         "def _private(root):\n    pass\n")
     (pkg / "sources" / "docstore.py").write_text(
-        "def open_store(root):\n    pass\n"
+        "TABLES = ('a',)\nLIMIT: int = 5\nMAX_ROWS = CAP = 10\n"
+        "_PRIVATE = 1\nlower = 2\n"
+        "def open_store(root):\n    return TABLES\n"
         "def key_predicate(col):\n    pass\n"
         "def upsert(a, b):\n    pass\n"
         "def write_bucketed(t):\n    pass\n")
     (pkg / "sources" / "sink.py").write_text(
         "from . import tableformat as tf\n"
-        "from .docstore import key_predicate\n"
+        "from .docstore import key_predicate, LIMIT\n"
         "rows = tf.read('t')\n"
         "write_bucketed = 1\n"
         "x.upsert(1, 2)\n")
@@ -736,6 +743,7 @@ def test_caller_lint_catches_a_planted_copy(tmp_path):
     assert uncalled_functions(tmp_path) == [
         "plans/_prelude.py:unused_helper",
         "plans/section.py:q_unregistered",
+        "sources/docstore.py:CAP", "sources/docstore.py:MAX_ROWS",
         "sources/docstore.py:upsert", "sources/docstore.py:write_bucketed",
         "sources/tableformat.py:history",
         "streaming/events.py:sessionize"]

@@ -67,25 +67,6 @@ def test_scan_prunes_files_by_manifest_stats(spark, tmp_path):
     assert zero_read == 0
 
 
-def test_delete_where_drops_covered_files_without_reading(spark, tmp_path):
-    root = str(tmp_path / "tbl3")
-    df = spark.range(0, 1000).selectExpr("id AS doc_id", "id * 2 AS v") \
-        .repartitionByRange(8, "doc_id")
-    tf.create_table(spark, df, root, stats_cols=["doc_id"])
-    v1_files = {e["path"] for e in tf._load_manifest(root, 1)["files"]}
-    tf.delete_where(spark, root, "doc_id", 0, 130)
-    head = tf._load_manifest(root, 2)
-    cur = tf.read(spark, root)
-    assert cur.count() == 1000 - 131
-    assert cur.agg({"doc_id": "min"}).first()[0] == 131
-    # the wholly-covered leading file(s) vanished by reference (no
-    # rewrite artifact), boundary file rewritten under -del
-    assert any("-del" in e["path"] for e in head["files"])
-    assert len({e["path"] for e in head["files"]} & v1_files) < len(v1_files)
-    # time travel unaffected
-    assert tf.read(spark, root, version=1).count() == 1000
-
-
 def test_commit_is_atomic_per_version(spark, table):
     # simulate a concurrent writer landing the same version number
     import json
@@ -94,53 +75,6 @@ def test_commit_is_atomic_per_version(spark, table):
         fd = os.open(tf._manifest_path(table, 1),
                      os.O_WRONLY | os.O_CREAT | os.O_EXCL)
         os.write(fd, json.dumps(m).encode())
-
-
-def test_expire_snapshots_vacuums_orphans_only(spark, table):
-    # build history: merge rewrites some v1 files, delete drops more —
-    # v1's original files become orphans of the head snapshot
-    upd = spark.createDataFrame(
-        [(3, "updated", 3)], "doc_id long, text string, grp long"
-    )
-    tf.merge_into(spark, upd, table, key="doc_id")
-    tf.delete_where(spark, table, "doc_id", 0, 10)
-    head_rows = tf.read(spark, table).collect()
-    head_files = {
-        os.path.normpath(os.path.join(table, e["path"]))
-        for e in tf._load_manifest(table, tf._versions(table)[-1])["files"]
-    }
-
-    out = tf.expire_snapshots(table, keep_last=1)
-    assert out["expired_versions"] == [1, 2]
-    assert out["kept_versions"] == [tf._versions(table)[-1]]
-    # retained snapshot reads identically after the vacuum
-    assert sorted(r.doc_id for r in tf.read(spark, table).collect()) == \
-        sorted(r.doc_id for r in head_rows)
-    # disk holds exactly the live file set — no orphans, nothing live
-    # was removed
-    on_disk = set()
-    for dirpath, _d, files in os.walk(os.path.join(table, "data")):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                on_disk.add(os.path.normpath(os.path.join(dirpath, fn)))
-    assert on_disk == head_files
-    assert out["removed_files"] > 0
-    # expired versions are gone (manifest absent)
-    with pytest.raises(FileNotFoundError):
-        tf._load_manifest(table, 1)
-
-
-def test_expire_keeps_shared_files_of_retained_snapshots(spark, table):
-    # append creates v2 sharing ALL of v1's files; keep_last=2 must
-    # not remove anything
-    more = spark.range(100, 120).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
-    )
-    tf.append(spark, more, table)
-    out = tf.expire_snapshots(table, keep_last=2)
-    assert out["expired_versions"] == [] and out["removed_files"] == 0
-    assert tf.read(spark, table, version=1).count() == 100
-    assert tf.read(spark, table).count() == 120
 
 
 def test_schema_evolution_append_new_column(spark, table):
@@ -235,22 +169,20 @@ def test_merge_batch_short_circuits_empty_batch(spark, table):
 
 
 def test_stream_batch_id_survives_maintenance_commits(spark, table):
-    # exactly-once watermark must ride along delete/optimize/append
-    # commits and survive expire_snapshots of the manifest that first
-    # recorded it
+    # exactly-once watermark must ride along merge/optimize/append
+    # commits after the one that first recorded it
     from document_parsing_etl_pipeline_spark.streaming import table_sink as ts
 
     upd = spark.createDataFrame(
         [(3, "u", 3)], "doc_id long, text string, grp long"
     )
     assert ts.merge_batch(spark, upd, table, "doc_id", "grp", 7) is True
-    tf.delete_where(spark, table, "doc_id", 0, 10)
+    tf.merge_into_dv(spark, upd, table, key="doc_id")
     tf.optimize_table(spark, table, target_file_rows=50)
     more = spark.range(500, 510).selectExpr(
         "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
     )
     tf.append(spark, more, table)
-    tf.expire_snapshots(table, keep_last=1)
     assert ts.last_committed_batch(table) == 7
     # a checkpoint replay of batch 7 is still skipped
     assert ts.merge_batch(spark, upd, table, "doc_id", "grp", 7) is False
@@ -403,86 +335,66 @@ def dv_table(spark, tmp_path):
 
 
 def test_delete_dv_tombstones_without_rewrite(spark, dv_table):
-    """delete_where_dv removes rows from reads WITHOUT rewriting the
-    overlapping files (their manifest paths carry over identically);
-    wholly-covered files still drop by reference; time travel to the
-    pre-delete snapshot resurrects everything."""
+    """Deletion-vector tombstones (here from merge_into_dv) remove the
+    matched rows from reads WITHOUT rewriting the files that hold them
+    (every v1 manifest path carries over); time travel to the earlier
+    snapshot reads the old rows again."""
     v1_files = {e["path"] for e in tf._load_manifest(dv_table, 1)["files"]}
-    v2 = tf.delete_where_dv(spark, dv_table, "doc_id", 10, 60)
+    upd = spark.createDataFrame(
+        [(d, "new") for d in range(10, 15)] + [(60, "new")],
+        "doc_id long, text string")
+    v2 = tf.merge_into_dv(spark, upd, dv_table, key="doc_id")
     head = tf._load_manifest(dv_table, v2)
-    # live rows: 0-9 and 61-99
-    got = sorted(r.doc_id for r in tf.read(spark, dv_table).collect())
-    assert got == list(range(0, 10)) + list(range(61, 100))
-    # no rewrite: every surviving file path existed in v1
-    assert {e["path"] for e in head["files"]} <= v1_files
-    # the wholly-covered middle file dropped by reference
-    assert len(head["files"]) == len(v1_files) - 1
-    assert tf._dv_entries(head)  # tombstones recorded
-    # tombstone count == rows deleted from carried files (10..24, 50..60)
-    assert sum(e["rows"] for e in tf._dv_entries(head)) == 15 + 11
-    # time travel: pre-delete snapshot unaffected
-    assert tf.read(spark, dv_table, version=1).count() == 100
+    rows = sorted(map(tuple, tf.read(spark, dv_table).collect()))
+    assert [d for d, _ in rows] == list(range(100))
+    assert {d for d, t in rows if t == "new"} == {10, 11, 12, 13, 14, 60}
+    # no rewrite: every v1 file is still in the head snapshot
+    assert v1_files <= {e["path"] for e in head["files"]}
+    # one tombstone per matched row, in two of the four files
+    assert sum(e["rows"] for e in tf._dv_entries(head)) == 6
+    # time travel: the earlier snapshot is unaffected
+    assert tf.read(spark, dv_table, version=1).where(
+        "text = 'new'").count() == 0
     # scan() applies the tombstones too
     df, _, _ = tf.scan(spark, dv_table, "doc_id", 0, 30)
-    assert sorted(r.doc_id for r in df.collect()) == list(range(0, 10))
+    got = sorted(map(tuple, df.collect()))
+    assert [d for d, _ in got] == list(range(0, 31))
+    assert [t for d, t in got if 10 <= d <= 14] == ["new"] * 5
 
 
 def test_delete_dv_stacks_and_merge_respects_tombstones(spark, dv_table):
-    """A second DV delete stacks onto the first; a MERGE touching a
-    tombstoned file neither resurrects tombstoned rows nor counts
-    them as matches."""
-    tf.delete_where_dv(spark, dv_table, "doc_id", 0, 3)
-    tf.delete_where_dv(spark, dv_table, "doc_id", 5, 6)
-    got = sorted(r.doc_id for r in tf.read(spark, dv_table).collect())
-    assert got == [4] + list(range(7, 100))
+    """A second commit's tombstones stack onto the first's; a
+    copy-on-write MERGE touching a tombstoned file neither resurrects
+    tombstoned rows nor counts them as matches."""
+    for ids, text in (((0, 1, 2, 3), "a"), ((5, 6), "b")):
+        tf.merge_into_dv(spark, spark.createDataFrame(
+            [(d, text) for d in ids], "doc_id long, text string"),
+            dv_table, key="doc_id")
+    head = tf._load_manifest(dv_table, tf._versions(dv_table)[-1])
+    assert sum(e["rows"] for e in tf._dv_entries(head)) == 6
     # MERGE updates doc_id 7 (same file as the tombstoned 0-6 rows)
     upd = spark.createDataFrame(
         [(7, "updated")], "doc_id long, text string")
     tf.merge_into(spark, upd, dv_table, key="doc_id")
-    cur = tf.read(spark, dv_table)
-    assert cur.count() == 94
-    assert cur.where("doc_id = 7").first().text == "updated"
+    cur = dict(map(tuple, tf.read(spark, dv_table).collect()))
+    assert tf.read(spark, dv_table).count() == len(cur) == 100
+    assert cur[7] == "updated" and cur[4] == "t4"
     # tombstoned rows stay gone after the rewrite
-    assert cur.where("doc_id <= 3 OR doc_id IN (5, 6)").count() == 0
-    assert cur.where("doc_id = 4").first().text == "t4"
+    assert [cur[d] for d in (0, 1, 2, 3, 5, 6)] == ["a"] * 4 + ["b"] * 2
 
 
-def test_optimize_materializes_dv_and_vacuum_reclaims(spark, dv_table):
-    """OPTIMIZE materializes tombstones (head carries an empty
-    delete_vectors list, reads unchanged); once the DV snapshots
-    expire, vacuum reclaims the sidecar files."""
-    tf.delete_where_dv(spark, dv_table, "doc_id", 10, 60)
-    before = sorted(r.doc_id for r in tf.read(spark, dv_table).collect())
+def test_optimize_materializes_dv(spark, dv_table):
+    """OPTIMIZE materializes tombstones: the head carries an empty
+    delete_vectors list and reads are unchanged."""
+    tf.merge_into_dv(spark, spark.createDataFrame(
+        [(d, "new") for d in range(10, 61)], "doc_id long, text string"),
+        dv_table, key="doc_id")
+    before = sorted(map(tuple, tf.read(spark, dv_table).collect()))
+    assert len(before) == 100
     v3 = tf.optimize_table(spark, dv_table, target_file_rows=50)
     head = tf._load_manifest(dv_table, v3)
     assert tf._dv_entries(head) == []
-    after = sorted(r.doc_id for r in tf.read(spark, dv_table).collect())
-    assert after == before
-    res = tf.expire_snapshots(dv_table, keep_last=1)
-    assert res["removed_files"] > 0  # pre-optimize data + dv sidecars
-    # no dv parquet remains anywhere under data/
-    leftover = [
-        os.path.join(dp, f)
-        for dp, _d, fs in os.walk(os.path.join(dv_table, "data"))
-        for f in fs if "-dv" in dp and f.endswith(".parquet")
-    ]
-    assert leftover == []
-    assert sorted(
-        r.doc_id for r in tf.read(spark, dv_table).collect()
-    ) == before
-
-
-def test_vacuum_keeps_dv_sidecars_of_retained_snapshots(spark, dv_table):
-    """A retained snapshot's tombstones are live content: vacuum must
-    not remove them (else its rows silently resurrect)."""
-    v2 = tf.delete_where_dv(spark, dv_table, "doc_id", 10, 60)
-    tf.append(spark, spark.createDataFrame(
-        [(200, "t200")], "doc_id long, text string"), dv_table)
-    tf.expire_snapshots(dv_table, keep_last=2)  # keeps v2 + v3
-    assert sorted(
-        r.doc_id for r in tf.read(spark, dv_table, version=v2).collect()
-    ) == list(range(0, 10)) + list(range(61, 100))
-    assert tf.read(spark, dv_table).count() == 50
+    assert sorted(map(tuple, tf.read(spark, dv_table).collect())) == before
 
 
 def test_merge_dv_matches_cow_merge_without_rewrites(spark, tmp_path):
@@ -588,12 +500,8 @@ def test_fingerprint_dropped_by_mutating_kept_by_maintenance(
 
     tf.replace(spark, df, root,
                extra_meta={"artifact_fingerprint": "fp2"})
-    tf.delete_where(spark, root, "doc_id", 0, 5)
-    assert "artifact_fingerprint" not in head()
-
-    tf.replace(spark, df, root,
-               extra_meta={"artifact_fingerprint": "fp3"})
-    tf.delete_where_dv(spark, root, "doc_id", 0, 5)
+    tf.merge_into_dv(spark, spark.createDataFrame(
+        [(3, "u")], "doc_id long, text string"), root, "doc_id")
     assert "artifact_fingerprint" not in head()
 
 
@@ -616,11 +524,6 @@ def test_scan_degrades_to_full_read_without_stats(spark, tmp_path):
     gk, frk, ftk = tf.scan_keys(spark, root, "v", [3])
     assert frk == ftk == 4
     assert gk.where("v = 3").count() == 10
-
-    # and delete_where on the stat-less column still deletes correctly
-    tf.delete_where(spark, root, "v", 3, 3)
-    assert tf.read(spark, root).where("v = 3").count() == 0
-    assert tf.read(spark, root).count() == 90
 
 
 # ------------------------------------------------- per-file blooms
@@ -851,44 +754,6 @@ def test_bloom_sidecar_corruption_refuses_to_prune(spark, tmp_path):
         tf.scan_membership(spark, root, "bh", ["zz"])
 
 
-def test_vacuum_keeps_live_bloom_sidecars_removes_orphaned(
-    spark, bloom_table
-):
-    """expire_snapshots must treat sidecars referenced by retained
-    snapshots as live content (pruning still works after vacuum) and
-    reclaim the ones only expired snapshots referenced."""
-    import glob
-    import os
-
-    more = spark.range(1000, 1100).selectExpr(
-        "id AS doc_id", "md5(cast(id AS string)) AS bh")
-    tf.append(spark, more, bloom_table)
-    tf.optimize_table(spark, bloom_table, 200, cluster_by="bh")
-    sidecars_before = set(glob.glob(
-        os.path.join(bloom_table, "data", "*", "_blooms.json")))
-    assert len(sidecars_before) >= 3  # create + append + optimize
-    out = tf.expire_snapshots(bloom_table, keep_last=1)
-    assert out["removed_files"] > 0
-    sidecars_after = set(glob.glob(
-        os.path.join(bloom_table, "data", "*", "_blooms.json")))
-    # only the optimize commit's files (and sidecar) are still live
-    assert len(sidecars_after) < len(sidecars_before)
-    head = tf._load_manifest(bloom_table, tf._versions(bloom_table)[-1])
-    live_refs = {
-        os.path.normpath(os.path.join(bloom_table, b["ref"]))
-        for e in head["files"] for b in e["blooms"].values()
-    }
-    assert live_refs <= {os.path.normpath(p) for p in sidecars_after}
-    # pruning still functions on the survivor
-    tf._SIDECAR_CACHE.clear()
-    _, fr, _ = tf.scan_membership(
-        spark, bloom_table, "doc_id", [424242])
-    assert fr == 0
-    got, fr, _ = tf.scan_membership(
-        spark, bloom_table, "doc_id", [1050])
-    assert fr >= 1 and got.where("doc_id = 1050").count() == 1
-
-
 def test_sidecar_cache_rechecks_sha_on_path_reuse(spark, tmp_path):
     """A cache hit must be honored only when the manifest ref's sha256
     matches the cached entry's verified sha: a sidecar path rewritten
@@ -932,27 +797,6 @@ def test_sidecar_cache_rechecks_sha_on_path_reuse(spark, tmp_path):
     tf._SIDECAR_CACHE.clear()
     with pytest.raises(ValueError, match="sidecar"):
         tf._load_bloom_sidecar(root, ref)
-
-
-def test_vacuum_keeps_pending_stage_files_live(spark, table):
-    """expire_snapshots must treat pending _staged manifests as
-    liveness roots: a vacuum run while a stage is pending must not
-    delete the staged data files (or the base files the candidate
-    still references) — the later publish must still be readable."""
-    staged = spark.createDataFrame(
-        [(800, "pending row", 1)], "doc_id long, text string, grp long"
-    ).coalesce(1)  # no empty part files: removed_files==0 stays strict
-    tf.stage_append(spark, staged, table, stage="slowaudit")
-    # vacuum while the stage is pending: base v1 is the head, so only
-    # orphans could go — but the staged files are NOT orphans anymore
-    out = tf.expire_snapshots(table, keep_last=1)
-    assert out["removed_files"] == 0
-    # publish still functions after the vacuum, and every file the
-    # published snapshot references is readable
-    tf.publish_stage(table, "slowaudit")
-    cur = tf.read(spark, table)
-    assert cur.count() == 101
-    assert cur.where("doc_id = 800").count() == 1
 
 
 def test_bloom_popcount_exact_prunability_on_key_repeating_table(
@@ -1018,39 +862,3 @@ def test_stage_json_write_is_atomic_and_exclusive(spark, table):
     with pytest.raises(RuntimeError, match="re-stage"):
         tf.publish_stage(table, "s1")  # base drifted (the append)
     tf.discard_stage(table, "s1")
-
-
-def test_vacuum_tolerates_corrupt_stage_json(spark, table):
-    """Round-13 advice: a corrupt _staged manifest must not crash the
-    vacuum, and the vacuum must conservatively keep that stage's data
-    dir family alive (prefix liveness) instead of reclaiming files a
-    repair might still reference."""
-    more = spark.range(100, 130).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
-    )
-    tf.stage_append(spark, more, table, "hurt")
-    sp = tf._stage_path(table, "hurt")
-    raw = open(sp).read()
-    with open(sp, "w") as f:
-        f.write(raw[: len(raw) // 2])  # truncated mid-object
-    stage_dirs = [
-        d for d in os.listdir(os.path.join(table, "data"))
-        if d.startswith("stage-hurt-")
-    ]
-    assert stage_dirs
-    n_stage_files = sum(
-        len(files) for d in stage_dirs
-        for _, _, files in os.walk(os.path.join(table, "data", d))
-    )
-    tf.append(spark, more.limit(1), table)  # give vacuum work to keep
-    res = tf.expire_snapshots(table, keep_last=1)
-    assert res["kept_versions"]
-    still = sum(
-        len(files) for d in stage_dirs
-        for _, _, files in os.walk(os.path.join(table, "data", d))
-    )
-    assert still == n_stage_files  # nothing under the stage reclaimed
-    # repair: restore the manifest, the stage publishes or discards
-    with open(sp, "w") as f:
-        f.write(raw)
-    assert tf.discard_stage(table, "hurt") >= 1
