@@ -400,25 +400,38 @@ def rewrite_document(spark: SparkSession, root: str, name: str,
     one per ``batch_id=`` directory on a watcher store); each is read,
     changed, written as a single file into a scratch directory under
     ``root`` (an empty result is a schema-only file) and swapped in
-    over the old path. A filter or projection keeps the row order, so
-    the file stays sorted. The old file's ``.crc`` sidecar goes before
-    the swap and the new one moves in after: a reader never checks the
-    new bytes against the old checksum."""
-    table = spark.read.parquet(os.path.join(root, name))
+    over the old path: one job per file. Both reads take the schema of
+    the table's held snapshot (``snapshots``), so no schema-inference
+    job runs; with no snapshot held, the table's schema is inferred
+    once. A file under ``k=v`` directories holds no ``k`` column, so
+    its schema is the table's without those partition columns. A
+    filter or projection keeps the row order, so the file stays sorted.
+    The old file's ``.crc`` sidecar goes before the swap and the new
+    one moves in after: a reader never checks the new bytes against
+    the old checksum."""
+    path = os.path.join(root, name)
+    held = _SNAPSHOTS.get((spark.sparkContext.applicationId,
+                           os.path.abspath(path)))
+    table = (spark.read.schema(held[1].schema) if held
+             else spark.read).parquet(path)
     files = {_localpath(r.file_path) for r in table
              .where(key_predicate("doc_id", "==", doc_id))
              .select("_metadata.file_path").collect()}
-    for path in sorted(files):
+    for file in sorted(files):
+        partitions = {d.split("=", 1)[0] for d in os.path.relpath(
+            os.path.dirname(file), path).split(os.sep) if "=" in d}
+        schema = StructType([f for f in table.schema
+                             if f.name not in partitions])
         scratch = os.path.join(root, f"_rewrite-{uuid.uuid4().hex}")
         try:
-            frame = spark.read.parquet(path)
+            frame = spark.read.schema(schema).parquet(file)
             change({name: frame})[name].coalesce(1).write.parquet(scratch)
             (new,) = (f for f in os.listdir(scratch) if f.endswith(".parquet"))
-            old_crc = os.path.join(os.path.dirname(path),
-                                   f".{os.path.basename(path)}.crc")
+            old_crc = os.path.join(os.path.dirname(file),
+                                   f".{os.path.basename(file)}.crc")
             if os.path.exists(old_crc):
                 os.remove(old_crc)
-            os.replace(os.path.join(scratch, new), path)
+            os.replace(os.path.join(scratch, new), file)
             new_crc = os.path.join(scratch, f".{new}.crc")
             if os.path.exists(new_crc):
                 os.replace(new_crc, old_crc)

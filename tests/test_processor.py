@@ -588,11 +588,41 @@ def test_mutations_persist_for_open_and_fresh_processors(spark, tmp_path):
     assert sorted(os.listdir(root)) == ["charts", "chunks", "documents"]
 
 
+def test_mutations_read_with_the_snapshot_schema(spark, tmp_path):
+    """A mutation runs no schema-inference job: with the store's
+    snapshot held, an update is at most 2 Spark jobs (find the file,
+    rewrite it) and a cascade delete at most 6 (the same for each of
+    the three tables). With no snapshot held, the table's schema is
+    inferred once: an update is at most 3 jobs."""
+    root = str(tmp_path / "store")
+    DocumentProcessor(spark, store_root=root).process_documents(_slice(spark))
+    proc = DocumentProcessor(spark, store_root=root)
+    proc.tables  # noqa: B018  (holds the snapshot the rewrites read with)
+    _, update = jobs_in_group(spark, "mutation-update",
+                              lambda: proc.update_document(31, {"lang": "xx"}))
+    _, delete = jobs_in_group(spark, "mutation-delete",
+                              lambda: proc.delete_document(32))
+    assert update <= 2 and delete <= 6
+    cold = str(tmp_path / "cold")
+    DocumentProcessor(spark, store_root=cold).process_documents(
+        spark.createDataFrame([Row(doc_id=1, text="table data " * 20,
+                                   lang="en", source="s1", n_chars=220)]))
+    _, update = jobs_in_group(
+        spark, "mutation-update-cold",
+        lambda: DocumentProcessor(spark, store_root=cold)
+        .update_document(1, {"lang": "xx"}))
+    assert update <= 3
+    assert [(r.doc_id, r.lang) for r in DocumentProcessor(
+        spark, store_root=cold).get_documents().collect()] == [(1, "xx")]
+
+
 def test_mutations_persist_on_a_watcher_store(spark, tmp_path):
     """On a store the streaming watcher wrote (one ``batch_id=<n>``
     directory per micro-batch and table), an update and a cascade
-    delete rewrite the file in the document's batch directory, and a
-    fresh processor reads both."""
+    delete rewrite the file in the document's batch directory, with the
+    snapshot's schema less the ``batch_id`` column (no schema-inference
+    job: one job per table to find the files, one per file rewritten),
+    and a fresh processor reads both."""
     import json
     import os
 
@@ -609,8 +639,15 @@ def test_mutations_persist_on_a_watcher_store(spark, tmp_path):
             .awaitTermination(120)
     proc = DocumentProcessor(spark, store_root=store)
     assert proc.get_document_charts(2).count() > 0
-    proc.update_document(1, {"lang": "xx"})
-    proc.delete_document(2)
+    held = sum(len({r.f for r in spark.read.parquet(os.path.join(store, n))
+                    .where("doc_id = 2").select("_metadata.file_path")
+                    .toDF("f").collect()})
+               for n in ("documents", "chunks", "charts"))
+    _, update = jobs_in_group(spark, "watcher-update",
+                              lambda: proc.update_document(1, {"lang": "xx"}))
+    _, delete = jobs_in_group(spark, "watcher-delete",
+                              lambda: proc.delete_document(2))
+    assert update <= 2 and delete <= 3 + held
     for p in (proc, DocumentProcessor(spark, store_root=store)):
         assert [(r.doc_id, r.lang) for r in p.get_documents().collect()] == [
             (1, "xx")]
