@@ -291,8 +291,8 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, dict]:
     """Rate/latency for the G-family streaming operators at the bench
     SF: rows/s and micro-batch latency through availableNow runs over
     the same tables the batch queries read (events → windowed agg and
-    stateful CDC compaction; documents → the watcher parse→chunk→
-    parquet pipeline, maxFilesPerTrigger-batched)."""
+    stateful CDC compaction; documents → the watcher's doc-store sink,
+    maxFilesPerTrigger-batched)."""
     import shutil
     import tempfile
 
@@ -383,11 +383,12 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, dict]:
             .trigger(availableNow=True).start()
         ))
 
-        # watcher parse→chunk→parquet (stream_watcher); 48 input files
-        # at maxFilesPerTrigger=16 → 3 micro-batches
-        run("stream_watcher", watcher.start_pipeline(
+        # watcher → doc store (stream_watcher): each micro-batch
+        # lands documents + chunks + charts; 48 input files at
+        # maxFilesPerTrigger=16 → 3 micro-batches
+        run("stream_watcher", watcher.start_full_pipeline(
             spark, doc_dir,
-            os.path.join(tmp, "chunks_out"),
+            os.path.join(tmp, "store_out"),
             os.path.join(tmp, "cp_watch"),
             available_now=True,
         ))
@@ -395,10 +396,10 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, dict]:
         # same pipeline at a 48-file trigger: records the documented
         # throughput/latency lever (fixed streaming overhead is ~36%
         # of a 16-file batch — bigger triggers amortize it toward the
-        # raw parse+chunk+write rate)
-        run("stream_watcher_mft48", watcher.start_pipeline(
+        # raw pipeline + write rate)
+        run("stream_watcher_mft48", watcher.start_full_pipeline(
             spark, doc_dir,
-            os.path.join(tmp, "chunks_out48"),
+            os.path.join(tmp, "store_out48"),
             os.path.join(tmp, "cp_watch48"),
             available_now=True,
             max_files_per_trigger=48,
@@ -434,19 +435,6 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, dict]:
             spark, cdc_stream, tbl_root, key="user_id", seq_col="seq",
             checkpoint_dir=os.path.join(tmp, "cp_merge"),
         ))
-
-        # the same CDC upsert through the MERGE-ON-READ sink
-        # (deletion vectors instead of file rewrites) — the
-        # write-amplification comparison point for stream_table_merge
-        tbl_root_m = os.path.join(tmp, "merge_tbl_mor")
-        tf.create_table(spark, seed, tbl_root_m, stats_cols=["user_id"])
-        run("stream_table_merge_mor",
-            table_sink.stream_merge_into_table(
-                spark, cdc_stream, tbl_root_m, key="user_id",
-                seq_col="seq",
-                checkpoint_dir=os.path.join(tmp, "cp_merge_mor"),
-                mode="mor",
-            ))
 
         # token-bucket admission control (stream_rate_limit): one
         # fixed-size state pair per user across the whole event drop

@@ -305,9 +305,9 @@ def q_zorder3_layout(spark, sf_dir):
     in date only. All integer (price via floor-to-cents — floor, not
     cast, because DuckDB's double→BIGINT cast rounds while Spark's
     truncates); both engines' z values come from ONE generator
-    (operators/layout.py:interleave_bits_nd[_sql]).
-    sources/tableformat.py:optimize_table is the write path that
-    applies this layout to real files."""
+    (operators/layout.py:interleave_bits_nd[_sql]). The layout is
+    audited, not written: no write path of the package z-clusters
+    files (tableformat.optimize_table clusters on one column)."""
     from ..operators.layout import interleave_bits_nd
 
     o = load_table(spark, sf_dir, "orders").select(

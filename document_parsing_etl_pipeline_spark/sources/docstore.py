@@ -392,6 +392,11 @@ def delete_document(tables: dict[str, DataFrame], doc_id: int) -> dict[str, Data
     }
 
 
+# rewrite_document's per-table locks: absolute table path -> Lock
+_REWRITE_LOCKS: dict = {}
+_REWRITE_LOCKS_GUARD = threading.Lock()
+
+
 def rewrite_document(spark: SparkSession, root: str, name: str,
                      doc_id: int, change) -> None:
     """Persist ``change`` (``{name: frame} -> {name: frame}``, as
@@ -408,32 +413,45 @@ def rewrite_document(spark: SparkSession, root: str, name: str,
     filter or projection keeps the row order, so the file stays sorted.
     The old file's ``.crc`` sidecar goes before the swap and the new
     one moves in after: a reader never checks the new bytes against
-    the old checksum."""
+    the old checksum.
+
+    The find, reads, writes and swaps run under a lock keyed on the
+    table's absolute path, so two mutations of one table in this
+    process run one after the other: each starts from the bytes the
+    other swapped in, and none is lost. Mutations of different tables
+    (a delete's chunks and charts) still run at the same time. Only
+    this process is covered: a rewrite by another process (no
+    cross-process file lock is taken) can still start from old bytes
+    and lose the other's write."""
     path = os.path.join(root, name)
-    held = _SNAPSHOTS.get((spark.sparkContext.applicationId,
-                           os.path.abspath(path)))
-    table = (spark.read.schema(held[1].schema) if held
-             else spark.read).parquet(path)
-    files = {_localpath(r.file_path) for r in table
-             .where(key_predicate("doc_id", "==", doc_id))
-             .select("_metadata.file_path").collect()}
-    for file in sorted(files):
-        partitions = {d.split("=", 1)[0] for d in os.path.relpath(
-            os.path.dirname(file), path).split(os.sep) if "=" in d}
-        schema = StructType([f for f in table.schema
-                             if f.name not in partitions])
-        scratch = os.path.join(root, f"_rewrite-{uuid.uuid4().hex}")
-        try:
-            frame = spark.read.schema(schema).parquet(file)
-            change({name: frame})[name].coalesce(1).write.parquet(scratch)
-            (new,) = (f for f in os.listdir(scratch) if f.endswith(".parquet"))
-            old_crc = os.path.join(os.path.dirname(file),
-                                   f".{os.path.basename(file)}.crc")
-            if os.path.exists(old_crc):
-                os.remove(old_crc)
-            os.replace(os.path.join(scratch, new), file)
-            new_crc = os.path.join(scratch, f".{new}.crc")
-            if os.path.exists(new_crc):
-                os.replace(new_crc, old_crc)
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
+    key = os.path.abspath(path)
+    with _REWRITE_LOCKS_GUARD:
+        lock = _REWRITE_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        held = _SNAPSHOTS.get((spark.sparkContext.applicationId, key))
+        table = (spark.read.schema(held[1].schema) if held
+                 else spark.read).parquet(path)
+        files = {_localpath(r.file_path) for r in table
+                 .where(key_predicate("doc_id", "==", doc_id))
+                 .select("_metadata.file_path").collect()}
+        for file in sorted(files):
+            partitions = {d.split("=", 1)[0] for d in os.path.relpath(
+                os.path.dirname(file), path).split(os.sep) if "=" in d}
+            schema = StructType([f for f in table.schema
+                                 if f.name not in partitions])
+            scratch = os.path.join(root, f"_rewrite-{uuid.uuid4().hex}")
+            try:
+                frame = spark.read.schema(schema).parquet(file)
+                change({name: frame})[name].coalesce(1).write.parquet(scratch)
+                (new,) = (f for f in os.listdir(scratch)
+                          if f.endswith(".parquet"))
+                old_crc = os.path.join(os.path.dirname(file),
+                                       f".{os.path.basename(file)}.crc")
+                if os.path.exists(old_crc):
+                    os.remove(old_crc)
+                os.replace(os.path.join(scratch, new), file)
+                new_crc = os.path.join(scratch, f".{new}.crc")
+                if os.path.exists(new_crc):
+                    os.replace(new_crc, old_crc)
+            finally:
+                shutil.rmtree(scratch, ignore_errors=True)

@@ -7,7 +7,7 @@ design on plain parquet + JSON manifests, so the repo's semantics match
 what the at-scale swap would provide. Its callers are the streaming
 sinks (``streaming/table_sink``; ``streaming/neardup``, which commits
 through write-audit-publish stages), the artifact store
-(``sources/artifacts``) and ``bench.py``'s streaming merge legs:
+(``sources/artifacts``) and ``bench.py``'s streaming merge leg:
 
 - a table is ``root/data/*.parquet`` plus ``root/_manifests/v{N}.json``;
   a manifest is the COMPLETE file list of that snapshot with per-file
@@ -24,10 +24,8 @@ through write-audit-publish stages), the artifact store
   parquet (partition-pruning semantics without a partition layout);
 - commits are atomic via O_EXCL manifest creation (single winner per
   version; losers retry on a real system — here they raise);
-- ``merge_into_dv`` is the merge-on-read MERGE: matched rows become
-  DELETION VECTORS (parquet tombstone sidecars of (file, row
-  position)) that readers anti-join and ``optimize_table``
-  materializes.
+- ``optimize_table`` compacts a snapshot into target-sized files,
+  optionally range-clustered on one column.
 
 Everything data-sized runs in Spark (per-file stats are one
 ``input_file_name()`` aggregation); only manifest bookkeeping (file
@@ -417,75 +415,6 @@ def _write_files(
     return entries
 
 
-# ------------------------------------------------- deletion vectors
-# Row-level deletes WITHOUT file rewrites (Delta deletion vectors /
-# Iceberg position deletes): a merge_into_dv commit writes a parquet
-# SIDECAR of (file name, row position) tombstones and re-references
-# every data file unchanged; readers anti-join the tombstones against the hidden
-# parquet (_metadata.file_path, _metadata.row_index) — positions are
-# stable because copy-on-write never edits a file in place. OPTIMIZE
-# materializes: it reads through read() (tombstones applied) and
-# commits rewritten files with an empty delete_vectors list.
-# File identity in the sidecar is the parquet BASENAME — Spark part
-# files embed a UUID, so basenames are unique across the table and
-# survive the root being a relative vs absolute path or a file: URI.
-
-def _dv_entries(m: dict) -> list[dict]:
-    return m.get("delete_vectors", [])
-
-
-def _dv_df(spark: SparkSession, root: str, m: dict) -> DataFrame | None:
-    """The manifest's tombstone relation (_dv_file, _dv_pos), or None."""
-    ents = _dv_entries(m)
-    if not ents:
-        return None
-    return spark.read.parquet(
-        *[os.path.join(root, e["path"]) for e in ents]
-    )
-
-
-def _with_pos(df: DataFrame) -> DataFrame:
-    """Attach (_dv_fname, _dv_rowpos) from the hidden parquet metadata
-    — must be selected directly on the scan relation."""
-    return df.select(
-        "*",
-        F.element_at(
-            F.split(F.col("_metadata.file_path"), "/"), -1
-        ).alias("_dv_fname"),
-        F.col("_metadata.row_index").alias("_dv_rowpos"),
-    )
-
-
-def _apply_dv(df_pos: DataFrame, dv: DataFrame | None) -> DataFrame:
-    """Filter tombstoned rows out of a (_dv_fname, _dv_rowpos)-carrying
-    relation; keeps the helper columns (caller drops them)."""
-    if dv is None:
-        return df_pos
-    return df_pos.join(
-        dv,
-        (df_pos["_dv_fname"] == dv["_dv_file"])
-        & (df_pos["_dv_rowpos"] == dv["_dv_pos"]),
-        "anti",
-    )
-
-
-def _read_live(
-    spark: SparkSession, root: str, m: dict, paths: list[str],
-    reader=None,
-) -> DataFrame:
-    """Read ``paths`` with the manifest's deletion vectors applied;
-    the DV scan+anti-join is skipped entirely when the manifest has
-    no tombstones (the common fast path reads plain parquet)."""
-    reader = reader or spark.read.option("mergeSchema", "true")
-    dv = _dv_df(spark, root, m)
-    if dv is None:
-        return reader.parquet(*paths)
-    cols = reader.parquet(*paths).columns
-    return _apply_dv(
-        _with_pos(reader.parquet(*paths)), dv
-    ).select(*cols)
-
-
 # ------------------------------------------------------------ public
 
 def create_table(
@@ -519,8 +448,7 @@ def replace(
 ) -> int:
     """REPLACE TABLE: a new snapshot whose live file set is ONLY the
     new files (Iceberg's replace semantics). Prior snapshots stay
-    readable via time travel. Deletion vectors
-    are NOT carried — they reference replaced files. ``stats_cols`` /
+    readable via time travel. ``stats_cols`` /
     ``bloom_cols`` override the table's layout config for the new
     snapshot (round 13, advice: a full rebuild is the one commit that
     may legitimately UPGRADE the layout — an artifact table created
@@ -565,7 +493,7 @@ def _carry_meta(head: dict, row_preserving: bool = False) -> dict:
     replace path) passes the new fingerprint via extra_meta, which
     merges after this and wins. bloom_cols is table CONFIG (like
     stats_cols) and rides every commit."""
-    keys = ("schema", "stream_batch_id", "delete_vectors", "bloom_cols")
+    keys = ("schema", "stream_batch_id", "bloom_cols")
     if row_preserving:
         keys += ("artifact_fingerprint",)
     return {k: head[k] for k in keys if k in head}
@@ -632,10 +560,8 @@ def read(
     # column was added (schema evolution) — union-by-name semantics,
     # old files surface the new column as NULL. Time travel to a
     # pre-evolution snapshot naturally lacks the column because its
-    # manifest references only pre-evolution files. Deletion vectors
-    # are per-manifest, so time travel to a pre-delete snapshot
-    # naturally resurrects the rows.
-    return _read_live(spark, root, m, paths)
+    # manifest references only pre-evolution files.
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
 def scan(
@@ -663,12 +589,9 @@ def scan(
     # mergeSchema for the same reason read() sets it: the surviving
     # file subset can mix pre/post-evolution footers, and without it
     # the picked schema is nondeterministic (and differs from the
-    # empty-prune branch above, which goes through read()). Stats
-    # pruning stays conservative under deletion vectors (a tombstoned
-    # row can widen a file's min/max — more files read, never fewer);
-    # the DV anti-join in _read_live enforces row-level correctness.
-    df = _read_live(
-        spark, root, m, [os.path.join(root, e["path"]) for e in keep]
+    # empty-prune branch above, which goes through read()).
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(root, e["path"]) for e in keep]
     )
     return df.where(F.col(col).between(lo, hi)), len(keep), len(m["files"])
 
@@ -723,8 +646,8 @@ def scan_keys(
     keep = [e for e in m["files"] if _hit(e)]
     if not keep:
         return read(spark, root, version).limit(0), 0, len(m["files"])
-    df = _read_live(
-        spark, root, m, [os.path.join(root, e["path"]) for e in keep]
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(root, e["path"]) for e in keep]
     )
     return df, len(keep), len(m["files"])
 
@@ -774,8 +697,8 @@ def scan_membership(
     ]
     if not keep:
         return read(spark, root, version).limit(0), 0, len(m["files"])
-    df = _read_live(
-        spark, root, m, [os.path.join(root, e["path"]) for e in keep]
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(root, e["path"]) for e in keep]
     )
     return df, len(keep), len(m["files"])
 
@@ -812,18 +735,9 @@ def merge_into(
     rewritten: list[dict] = []
     tag = f"v{head['version'] + 1}"
     if candidates:
-        cand_paths = [os.path.join(root, e["path"]) for e in candidates]
-        dv = _dv_df(spark, root, head)
-        # deletion vectors applied BEFORE hit detection and rewrite:
-        # a tombstoned row must neither count as a match nor be
-        # resurrected into the rewritten file. _src / the position
-        # helpers attach AT SCAN TIME (input_file_name and _metadata
-        # don't resolve on post-join relations).
-        cand_df = _apply_dv(
-            _with_pos(spark.read.parquet(*cand_paths))
-            .withColumn("_src", F.input_file_name()),
-            dv,
-        )
+        cand_df = spark.read.parquet(
+            *[os.path.join(root, e["path"]) for e in candidates]
+        ).withColumn("_src", F.input_file_name())
         # files that truly contain matched keys get rewritten; pruned-
         # in-name-only candidates carry over untouched
         hit_files = {
@@ -840,11 +754,8 @@ def merge_into(
         untouched += [e for e in candidates if not _is_hit(e)]
         hit = [e for e in candidates if _is_hit(e)]
         if hit:
-            hit_raw = spark.read.parquet(
+            hit_df = spark.read.parquet(
                 *[os.path.join(root, e["path"]) for e in hit]
-            )
-            hit_df = _apply_dv(_with_pos(hit_raw), dv).select(
-                *hit_raw.columns
             )
             survivors = hit_df.join(F.broadcast(keys_df), key, "anti")
             rewritten += _write_files(
@@ -859,71 +770,6 @@ def merge_into(
         "operation": "merge", "stats_cols": stats_cols,
         "files": untouched + rewritten + new_entries,
         **_carry_meta(head),
-        **(extra_meta or {}),
-    })
-
-
-def merge_into_dv(
-    spark: SparkSession, updates: DataFrame, root: str, key: str,
-    extra_meta: dict | None = None,
-) -> int:
-    """Merge-on-read MERGE (Iceberg merge-on-read write mode / Delta
-    DV-backed update): matched rows are TOMBSTONED via a deletion
-    vector and the update rows append as new files — no data file is
-    rewritten, so write cost is O(tombstones + update rows) instead
-    of copy-on-write's O(resident rows of every hit file). The read
-    path pays the one DV anti-join until OPTIMIZE materializes; the
-    result relation is identical to merge_into's (tested)."""
-    head = _load_manifest(root, _versions(root)[-1])
-    stats_cols = head["stats_cols"]
-    keys_df = updates.select(key).distinct()
-    k_lo, k_hi = keys_df.agg(F.min(key), F.max(key)).first()
-    tag = f"v{head['version'] + 1}"
-    dvs = list(_dv_entries(head))
-    candidates = [
-        e for e in head["files"]
-        if k_lo is not None
-        and e["stats"].get(key, [None, None])[0] is not None
-        and not (e["stats"][key][0] > k_hi or e["stats"][key][1] < k_lo)
-    ]
-    if candidates:
-        dv = _dv_df(spark, root, head)
-        cand = _apply_dv(
-            _with_pos(spark.read.parquet(
-                *[os.path.join(root, e["path"]) for e in candidates]
-            )),
-            dv,
-        )
-        hits = (
-            cand.join(F.broadcast(keys_df), key, "semi")
-            .select(
-                F.col("_dv_fname").alias("_dv_file"),
-                F.col("_dv_rowpos").alias("_dv_pos"),
-            )
-        )
-        out_dir = os.path.join(root, "data", f"{tag}-mdv")
-        hits.write.mode("error").parquet(out_dir)
-        back = spark.read.parquet(out_dir)
-        rows = (
-            back.withColumn("_f", F.input_file_name())
-            .groupBy("_f").agg(F.count("*").alias("_rows")).collect()
-        )
-        dvs += [
-            {
-                "path": os.path.relpath(_localpath(r["_f"]), root),
-                "rows": r["_rows"],
-                "stats": {},
-            }
-            for r in rows
-        ]
-    new_entries = _write_files(
-        spark, updates.select(*read(spark, root).columns), root,
-        f"{tag}-new", stats_cols, _bcols(head),
-    )
-    return _commit(root, {
-        "operation": "merge_dv", "stats_cols": stats_cols,
-        "files": head["files"] + new_entries,
-        **{**_carry_meta(head), "delete_vectors": dvs},
         **(extra_meta or {}),
     })
 
@@ -1069,69 +915,23 @@ def optimize_table(
     spark: SparkSession,
     root: str,
     target_file_rows: int,
-    zorder: tuple[str, ...] | None = None,
     cluster_by: str | None = None,
 ) -> int:
-    """OPTIMIZE (Delta OPTIMIZE [ZORDER BY] / Iceberg rewrite_data_
-    files): rewrite the current snapshot into ~target_file_rows-sized
-    files, optionally clustered along the Morton z-curve of 2+
-    columns so file min/max stats become tight hyper-rectangles in
-    EVERY z dimension — small-file compaction and multi-dim data
-    skipping in one copy-on-write commit. Old snapshots stay readable
-    (time travel) and keep the pre-optimize files.
-
-    The z path is the at-scale recipe stated in operators/layout.py,
-    executed: normalize each column to ``bits`` levels by the
-    snapshot's own min/max, interleave, ONE repartitionByRange on the
-    z value (the same cost as any sort-cluster pass), drop the helper
-    column at write. Quantization is floating-point-safe: the bucket
-    is least(2^bits-1, floor((x - lo) * 2^bits / range)) computed in
-    DOUBLE, so DOUBLE columns and sub-1.0 ranges quantize correctly
-    (the earlier integral `div` failed analysis on DOUBLE and
-    collapsed fractional ranges to one bucket). Constant columns
-    (range 0) map to bucket 0 via an epsilon floor on the range.
-    """
-    from ..operators.layout import interleave_bits_nd
-
+    """OPTIMIZE (Delta OPTIMIZE / Iceberg rewrite_data_files): rewrite
+    the current snapshot into ~target_file_rows-sized files in one
+    copy-on-write commit. With ``cluster_by`` the files take disjoint
+    ranges of that column (one repartitionByRange; works for STRING
+    keys), so scan()/scan_keys() prune on it — the maintenance pass
+    that keeps the streaming LSH index's bucket-key pushdown sharp as
+    appends accumulate. Old snapshots stay readable (time travel) and
+    keep the pre-optimize files."""
     head = _load_manifest(root, _versions(root)[-1])
     stats_cols = head["stats_cols"]
     df = read(spark, root)
     total = df.count()
     n_files = max(1, -(-total // target_file_rows))
     tag = f"v{head['version'] + 1}-opt"
-    if zorder is not None:
-        zcols = list(zorder)
-        bits = 8 if len(zcols) <= 3 else 62 // len(zcols)
-        levels = 1 << bits
-        b = df.agg(*[
-            a
-            for i, c in enumerate(zcols)
-            for a in (F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}"))
-        ])
-        z = df.crossJoin(F.broadcast(b))
-        qcols = []
-        for i, c in enumerate(zcols):
-            q = f"_q{i}"
-            z = z.withColumn(q, F.expr(
-                f"cast(least({levels - 1}, floor("
-                f"(cast({c} as double) - cast(_lo{i} as double)) * {levels}"
-                f" / greatest(cast(_hi{i} as double)"
-                f" - cast(_lo{i} as double), 1e-300))) as bigint)"
-            ))
-            qcols.append(q)
-        z = z.withColumn("_z", interleave_bits_nd(qcols, bits)).drop(
-            *qcols,
-            *[f"_lo{i}" for i in range(len(zcols))],
-            *[f"_hi{i}" for i in range(len(zcols))],
-        )
-        clustered = z.repartitionByRange(n_files, "_z").drop("_z")
-    elif cluster_by is not None:
-        # single-column range clustering (Delta OPTIMIZE ... ZORDER on
-        # one column degenerates to this; works for STRING keys the
-        # z-curve quantization can't take): disjoint per-file ranges
-        # of cluster_by, so scan()/scan_keys() prune on it — the
-        # maintenance pass that keeps the streaming LSH index's
-        # bucket-key pushdown sharp as appends accumulate
+    if cluster_by is not None:
         clustered = df.repartitionByRange(n_files, cluster_by)
     else:
         clustered = df.repartition(n_files)
@@ -1141,9 +941,5 @@ def optimize_table(
     return _commit(root, {
         "operation": "optimize", "stats_cols": stats_cols,
         "files": entries,
-        # read() applied the deletion vectors, so the rewritten files
-        # hold only live rows — OPTIMIZE is the DV materialization
-        # point and the new snapshot carries no tombstones
-        **{**_carry_meta(head, row_preserving=True),
-           "delete_vectors": []},
+        **_carry_meta(head, row_preserving=True),
     })

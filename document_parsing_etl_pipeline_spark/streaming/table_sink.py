@@ -1,17 +1,15 @@
 """Exactly-once streaming MERGE into the snapshot-manifest table
-format: the CDC-stream → table-format loop the batch-scoped parquet
-sink (watcher.start_full_pipeline) documents as its at-scale
-replacement.
+format: the CDC-stream → table-format loop, with one write path.
 
 foreachBatch gives at-least-once batch delivery: after a sink crash
 the checkpoint REPLAYS the last batch. The Delta/Iceberg idempotent-
 sink recipe makes the write exactly-once anyway — record the stream's
 batch_id in the committed snapshot (txnVersion), and skip any batch
 whose id is <= the last committed one. Replays become no-ops; the
-table never sees a batch twice. The merge itself is the table
-format's copy-on-write MERGE (manifest range pruning + semi-join file
-confirmation), so each micro-batch rewrites only the files its keys
-actually touch.
+table never sees a batch twice. The merge is the table format's
+copy-on-write MERGE (``merge_into``: manifest range pruning +
+semi-join file confirmation), so each micro-batch rewrites only the
+files its keys actually touch.
 
 Within a batch, rows are first reduced to the latest state per key
 (max_by over the sequence column) — CDC batches can carry multiple
@@ -38,18 +36,13 @@ def last_committed_batch(root: str) -> int:
 
 def merge_batch(
     spark: SparkSession, batch_df: DataFrame, root: str,
-    key: str, seq_col: str, batch_id: int, mode: str = "cow",
+    key: str, seq_col: str, batch_id: int,
 ) -> bool:
     """MERGE one micro-batch into the table, exactly once: a batch
     whose id is <= the last committed stream_batch_id is a checkpoint
     replay and is skipped (returns False). Rows are first reduced to
-    the latest state per key (max_by over ``seq_col``).
-
-    ``mode="cow"`` rewrites hit files (merge_into); ``mode="mor"``
-    tombstones matched rows via deletion vectors and only appends
-    (merge_into_dv) — the low write-amplification choice for
-    high-frequency CDC streams, at the cost of the read-side DV
-    anti-join until the next OPTIMIZE."""
+    the latest state per key (max_by over ``seq_col``) and merged
+    with the table format's copy-on-write ``merge_into``."""
     if batch_id <= last_committed_batch(root):
         return False
     # Structured Streaming delivers zero-row batches (no-data batches
@@ -70,8 +63,7 @@ def merge_batch(
         )
         .select(*batch_df.columns)
     )
-    merge = tf.merge_into_dv if mode == "mor" else tf.merge_into
-    merge(
+    tf.merge_into(
         spark, latest, root, key=key,
         extra_meta={"stream_batch_id": batch_id},
     )
@@ -86,7 +78,6 @@ def stream_merge_into_table(
     seq_col: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    mode: str = "cow",
 ):
     """Start a foreachBatch writer that MERGEs each micro-batch into
     the table at ``root`` exactly once (idempotent under checkpoint
@@ -94,8 +85,7 @@ def stream_merge_into_table(
     ``key``. Returns the StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(spark, batch_df, root, key, seq_col, batch_id,
-                    mode=mode)
+        merge_batch(spark, batch_df, root, key, seq_col, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(_sink)

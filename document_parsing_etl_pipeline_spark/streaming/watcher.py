@@ -7,6 +7,11 @@ services/parser/main.py:12-171) and the Airflow FileSensor DAG
 (dags/file_sensor.py:70-97). Spark's file streaming source IS the
 watcher: it discovers new files per micro-batch, exactly-once, and
 scales to a 1000-executor cluster where a watchdog thread cannot.
+
+One sink, ``start_full_pipeline``: whether a document arrives by
+upload (``processor.upload_document``) or in a batch drop, each
+micro-batch runs the whole ``process_document`` pipeline and lands
+the doc store's three tables, as the reference's watcher does.
 """
 
 from __future__ import annotations
@@ -16,8 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
-
-from ..operators.chunking import chunk_documents
 
 DOC_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
@@ -47,39 +50,14 @@ def watch_documents(spark: SparkSession, watch_dir: str,
     )
 
 
-def parse_stream(stream: DataFrame) -> DataFrame:
-    """Streaming parse→chunk stage (same operators as batch: the
-    chunker is a narrow projection, so it lifts to streaming as-is)."""
-    return chunk_documents(stream).withColumn(
-        "ingest_time", F.current_timestamp()
-    )
-
-
-def start_pipeline(spark: SparkSession, watch_dir: str, out_dir: str,
-                   checkpoint_dir: str, available_now: bool = True,
-                   max_files_per_trigger: int = 16):
-    """Wire watcher → parse → chunk → parquet sink with checkpointing
-    (the exactly-once replacement for the reference's Postgres
-    transaction per document)."""
-    chunks = parse_stream(watch_documents(
-        spark, watch_dir, max_files_per_trigger=max_files_per_trigger))
-    writer = (
-        chunks.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_full_pipeline(spark: SparkSession, watch_dir: str, store_root: str,
-                        checkpoint_dir: str, available_now: bool = True):
+                        checkpoint_dir: str, available_now: bool = True,
+                        max_files_per_trigger: int = 16):
     """Full process_document parity on a stream: each micro-batch
     lands documents + chunks + charts in the doc store together
     (reference pdf_parser.py:201-253 writes all three per document in
-    one transaction).
+    one transaction). ``max_files_per_trigger`` caps the drop files
+    one micro-batch reads (``watch_documents``).
 
     Idempotent replay: every table write goes to a
     ``batch_id=<n>`` subdirectory with mode("overwrite") scoped to
@@ -98,7 +76,8 @@ def start_full_pipeline(spark: SparkSession, watch_dir: str, store_root: str,
 
     from ..sources.docstore import build_docstore
 
-    stream = watch_documents(spark, watch_dir)
+    stream = watch_documents(
+        spark, watch_dir, max_files_per_trigger=max_files_per_trigger)
 
     def _sink(batch_df, batch_id: int) -> None:
         # the rejects check and the three table writes each scan the

@@ -36,19 +36,14 @@ _EXHAUSTIVE = {
     "test_neardup_index_pushdown_prunes_and_matches_full_read",
     "test_neardup_optimize_cadence_preserves_flags_and_replay",
     "test_neardup_replay_discards_orphaned_stage",
-    "test_stream_merge_mor_exactly_once_no_rewrites",
     "test_blooms_maintained_across_append_merge_optimize",
-    "test_delete_dv_stacks_and_merge_respects_tombstones",
     "test_fingerprint_dropped_by_mutating_kept_by_maintenance",
-    "test_merge_dv_matches_cow_merge_without_rewrites",
     "test_merge_into_empty_table_uses_recorded_schema",
     "test_merge_rewrites_only_hit_files",
-    "test_optimize_compacts_and_zorder_tightens_stats",
-    "test_optimize_materializes_dv",
+    "test_optimize_compacts_small_files",
     "test_scan_degrades_to_full_read_without_stats",
     "test_stream_batch_id_survives_maintenance_commits",
     "test_write_audit_publish_flow",
-    "test_zorder_on_double_and_three_dims",
     "test_verified_candidates_refresh_on_append_stable_caps",
 }
 

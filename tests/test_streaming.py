@@ -8,29 +8,6 @@ from document_parsing_etl_pipeline_spark.streaming import events as ev
 from document_parsing_etl_pipeline_spark.streaming import watcher
 
 
-def test_watcher_ingests_dropped_files(tmp_path, spark):
-    watch, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    (tmp_path / "in").mkdir()
-    doc = {"doc_id": 1, "text": "w " * 100, "lang": "en",
-           "source": "drop", "n_chars": 200}
-    (tmp_path / "in" / "a.json").write_text(json.dumps(doc))
-
-    q = watcher.start_pipeline(spark, watch, out, ckpt)
-    q.awaitTermination(120)
-    chunks = spark.read.parquet(out)
-    assert chunks.where(chunks.doc_id == 1).count() >= 1
-    assert "ingest_time" in chunks.columns
-
-    # second drop: only the new file is processed (exactly-once)
-    doc2 = dict(doc, doc_id=2)
-    (tmp_path / "in" / "b.json").write_text(json.dumps(doc2))
-    q2 = watcher.start_pipeline(spark, watch, out, ckpt)
-    q2.awaitTermination(120)
-    chunks = spark.read.parquet(out)
-    assert chunks.where(chunks.doc_id == 1).count() >= 1
-    assert chunks.where(chunks.doc_id == 2).count() >= 1
-
-
 def test_windowed_counts_with_watermark(tmp_path, spark):
     drop = tmp_path / "ev"
     drop.mkdir()
@@ -109,6 +86,29 @@ def test_watcher_lands_each_doc_once_under_batch_dirs(tmp_path, spark):
     chunks = spark.read.parquet(os.path.join(store, "chunks"))
     assert sorted(tuple(r) for r in chunks.select(
         "doc_id", "batch_id").distinct().collect()) == rows
+
+
+def test_full_pipeline_takes_one_file_per_trigger(tmp_path, spark):
+    """``max_files_per_trigger=1`` over three drop files runs three
+    micro-batches, and each doc lands in the store once."""
+    import os
+
+    watch, store, ckpt = (str(tmp_path / d) for d in ("in3", "st3", "ck3"))
+    os.makedirs(watch)
+    for doc_id in (1, 2, 3):
+        (tmp_path / "in3" / f"d{doc_id}.json").write_text(json.dumps({
+            "doc_id": doc_id, "text": f"words of doc {doc_id} " * 20,
+            "lang": "en", "source": "drop", "n_chars": 300}))
+    q = watcher.start_full_pipeline(spark, watch, store, ckpt,
+                                    max_files_per_trigger=1)
+    q.awaitTermination(120)
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 3
+    docs = spark.read.parquet(os.path.join(store, "documents"))
+    assert sorted(r.doc_id for r in docs.collect()) == [1, 2, 3]
+    chunks = spark.read.parquet(os.path.join(store, "chunks"))
+    assert sorted(r.doc_id for r in chunks.select(
+        "doc_id", "batch_id").distinct().collect()) == [1, 2, 3]
 
 
 def test_stream_merge_into_table_exactly_once(tmp_path, spark):
@@ -540,65 +540,6 @@ def test_quantile_stream_keys_isolated(tmp_path, spark):
         "SELECT * FROM qs4").collect()}
     assert abs(got["lo"] - 1.0) < 0.1
     assert abs(got["hi"] - 1000.0) / 1000.0 < 0.10
-
-
-def test_stream_merge_mor_exactly_once_no_rewrites(tmp_path, spark):
-    """The merge-on-read sink mode: same exactly-once + latest-state
-    semantics as the CoW sink, but every pre-existing data file is
-    carried by reference (matched rows tombstoned via deletion
-    vectors, update rows appended)."""
-    from document_parsing_etl_pipeline_spark.sources import (
-        tableformat as tf,
-    )
-    from document_parsing_etl_pipeline_spark.streaming import table_sink
-
-    root = str(tmp_path / "tblmor")
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 0), (3, "c", 0)],
-        "user_id long, state string, seq long",
-    )
-    tf.create_table(spark, base, root, stats_cols=["user_id"])
-    v1_paths = {e["path"] for e in tf._load_manifest(root, 1)["files"]}
-
-    drop = tmp_path / "cdcm"
-    drop.mkdir()
-    rows = [
-        {"user_id": 1, "state": "a1", "seq": 11},
-        {"user_id": 1, "state": "a2", "seq": 12},
-        {"user_id": 4, "state": "d", "seq": 10},
-    ]
-    (drop / "b1.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, state string, seq long")
-        .load(str(drop))
-    )
-    q = table_sink.stream_merge_into_table(
-        spark, stream, root, key="user_id", seq_col="seq",
-        checkpoint_dir=str(tmp_path / "ckptm"), mode="mor",
-    )
-    q.awaitTermination(120)
-    got = {
-        r.user_id: (r.state, r.seq)
-        for r in tf.read(spark, root).collect()
-    }
-    assert got == {
-        1: ("a2", 12), 2: ("b", 0), 3: ("c", 0), 4: ("d", 10),
-    }
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert v1_paths <= {e["path"] for e in head["files"]}  # no rewrite
-    assert sum(e["rows"] for e in tf._dv_entries(head)) == 1  # user 1
-    # replay is a no-op in MoR mode too
-    batch = spark.createDataFrame(
-        rows, "user_id long, state string, seq long")
-    assert table_sink.merge_batch(
-        spark, batch, root, key="user_id", seq_col="seq",
-        batch_id=0, mode="mor",
-    ) is False
-    assert {
-        r.user_id: (r.state, r.seq)
-        for r in tf.read(spark, root).collect()
-    } == got
 
 
 def test_quantile_stream_cap_holds_on_adversarial_spread(tmp_path, spark):

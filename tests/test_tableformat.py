@@ -92,7 +92,7 @@ def test_schema_evolution_append_new_column(spark, table):
     assert "quality" not in tf.read(spark, table, version=1).columns
 
 
-def test_optimize_compacts_and_zorder_tightens_stats(spark, tmp_path):
+def test_optimize_compacts_small_files(spark, tmp_path):
     root = str(tmp_path / "opt")
     base = spark.range(0, 200).selectExpr(
         "id AS doc_id", "concat('t', id) AS text", "(id * 37) % 100 AS grp"
@@ -101,9 +101,7 @@ def test_optimize_compacts_and_zorder_tightens_stats(spark, tmp_path):
     n_before = len(tf._load_manifest(root, 1)["files"])
     assert n_before >= 8  # many small files
 
-    v = tf.optimize_table(
-        spark, root, target_file_rows=25, zorder=("doc_id", "grp")
-    )
+    v = tf.optimize_table(spark, root, target_file_rows=25)
     head = tf._load_manifest(root, v)
     assert head["operation"] == "optimize"
     assert len(head["files"]) == 8  # 200 rows / 25 per file
@@ -111,18 +109,6 @@ def test_optimize_compacts_and_zorder_tightens_stats(spark, tmp_path):
     assert sorted(r.doc_id for r in tf.read(spark, root).collect()) == \
         list(range(200))
     assert tf.read(spark, root, version=1).count() == 200
-
-    # z-clustering makes doc_id file ranges narrow: a 10% doc_id box
-    # must prune most files via manifest stats
-    _df, files_read, files_total = tf.scan(spark, root, "doc_id", 40, 59)
-    assert files_total == 8
-    assert files_read < files_total
-    # and grp stats are tight too (each file spans far less than the
-    # full 0..99 domain on average)
-    spans = [
-        e["stats"]["grp"][1] - e["stats"]["grp"][0] for e in head["files"]
-    ]
-    assert sum(spans) / len(spans) < 99
 
 
 def test_merge_into_empty_table_uses_recorded_schema(spark, tmp_path):
@@ -177,7 +163,7 @@ def test_stream_batch_id_survives_maintenance_commits(spark, table):
         [(3, "u", 3)], "doc_id long, text string, grp long"
     )
     assert ts.merge_batch(spark, upd, table, "doc_id", "grp", 7) is True
-    tf.merge_into_dv(spark, upd, table, key="doc_id")
+    tf.merge_into(spark, upd, table, key="doc_id")
     tf.optimize_table(spark, table, target_file_rows=50)
     more = spark.range(500, 510).selectExpr(
         "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
@@ -221,33 +207,6 @@ def test_append_narrower_df_does_not_narrow_recorded_schema(spark, table):
     got = tf.read(spark, table)
     assert set(got.columns) == {"doc_id", "text", "grp"}
     assert got.where("doc_id = 305").first().grp is None
-
-
-def test_zorder_on_double_and_three_dims(spark, tmp_path):
-    # DOUBLE z-column with a sub-1.0 range used to fail analysis /
-    # collapse to one bucket; 3-dim interleave is the Delta claim
-    root = str(tmp_path / "zdbl")
-    base = spark.range(0, 400).selectExpr(
-        "id AS doc_id",
-        "cast((id * 37) % 100 AS double) / 1000 AS score",  # range 0.099
-        "(id * 13) % 50 AS grp",
-    ).repartition(8)
-    tf.create_table(spark, base, root, stats_cols=["doc_id", "score", "grp"])
-    v = tf.optimize_table(
-        spark, root, target_file_rows=50,
-        zorder=("doc_id", "score", "grp"),
-    )
-    head = tf._load_manifest(root, v)
-    assert len(head["files"]) == 8
-    assert sorted(r.doc_id for r in tf.read(spark, root).collect()) == \
-        list(range(400))
-    # clustering must be real in EVERY dimension: mean per-file span
-    # well under the full domain for all three columns
-    for col, domain in (("doc_id", 399), ("score", 0.099), ("grp", 49)):
-        spans = [
-            e["stats"][col][1] - e["stats"][col][0] for e in head["files"]
-        ]
-        assert sum(spans) / len(spans) < domain, col
 
 
 def test_interleave_bits_nd_matches_sql_oracle(spark):
@@ -320,122 +279,6 @@ def test_publish_refuses_on_base_drift_and_discard_removes_files(
     assert cur.where("doc_id = 700").count() == 0
 
 
-# ------------------------------------------------- deletion vectors
-
-@pytest.fixture()
-def dv_table(spark, tmp_path):
-    """Range-clustered table: 4 files with disjoint doc_id ranges
-    (~[0,24],[25,49],[50,74],[75,99])."""
-    root = str(tmp_path / "dvtbl")
-    df = spark.range(0, 100).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartitionByRange(4, "doc_id")
-    tf.create_table(spark, df, root, stats_cols=["doc_id"])
-    return root
-
-
-def test_delete_dv_tombstones_without_rewrite(spark, dv_table):
-    """Deletion-vector tombstones (here from merge_into_dv) remove the
-    matched rows from reads WITHOUT rewriting the files that hold them
-    (every v1 manifest path carries over); time travel to the earlier
-    snapshot reads the old rows again."""
-    v1_files = {e["path"] for e in tf._load_manifest(dv_table, 1)["files"]}
-    upd = spark.createDataFrame(
-        [(d, "new") for d in range(10, 15)] + [(60, "new")],
-        "doc_id long, text string")
-    v2 = tf.merge_into_dv(spark, upd, dv_table, key="doc_id")
-    head = tf._load_manifest(dv_table, v2)
-    rows = sorted(map(tuple, tf.read(spark, dv_table).collect()))
-    assert [d for d, _ in rows] == list(range(100))
-    assert {d for d, t in rows if t == "new"} == {10, 11, 12, 13, 14, 60}
-    # no rewrite: every v1 file is still in the head snapshot
-    assert v1_files <= {e["path"] for e in head["files"]}
-    # one tombstone per matched row, in two of the four files
-    assert sum(e["rows"] for e in tf._dv_entries(head)) == 6
-    # time travel: the earlier snapshot is unaffected
-    assert tf.read(spark, dv_table, version=1).where(
-        "text = 'new'").count() == 0
-    # scan() applies the tombstones too
-    df, _, _ = tf.scan(spark, dv_table, "doc_id", 0, 30)
-    got = sorted(map(tuple, df.collect()))
-    assert [d for d, _ in got] == list(range(0, 31))
-    assert [t for d, t in got if 10 <= d <= 14] == ["new"] * 5
-
-
-def test_delete_dv_stacks_and_merge_respects_tombstones(spark, dv_table):
-    """A second commit's tombstones stack onto the first's; a
-    copy-on-write MERGE touching a tombstoned file neither resurrects
-    tombstoned rows nor counts them as matches."""
-    for ids, text in (((0, 1, 2, 3), "a"), ((5, 6), "b")):
-        tf.merge_into_dv(spark, spark.createDataFrame(
-            [(d, text) for d in ids], "doc_id long, text string"),
-            dv_table, key="doc_id")
-    head = tf._load_manifest(dv_table, tf._versions(dv_table)[-1])
-    assert sum(e["rows"] for e in tf._dv_entries(head)) == 6
-    # MERGE updates doc_id 7 (same file as the tombstoned 0-6 rows)
-    upd = spark.createDataFrame(
-        [(7, "updated")], "doc_id long, text string")
-    tf.merge_into(spark, upd, dv_table, key="doc_id")
-    cur = dict(map(tuple, tf.read(spark, dv_table).collect()))
-    assert tf.read(spark, dv_table).count() == len(cur) == 100
-    assert cur[7] == "updated" and cur[4] == "t4"
-    # tombstoned rows stay gone after the rewrite
-    assert [cur[d] for d in (0, 1, 2, 3, 5, 6)] == ["a"] * 4 + ["b"] * 2
-
-
-def test_optimize_materializes_dv(spark, dv_table):
-    """OPTIMIZE materializes tombstones: the head carries an empty
-    delete_vectors list and reads are unchanged."""
-    tf.merge_into_dv(spark, spark.createDataFrame(
-        [(d, "new") for d in range(10, 61)], "doc_id long, text string"),
-        dv_table, key="doc_id")
-    before = sorted(map(tuple, tf.read(spark, dv_table).collect()))
-    assert len(before) == 100
-    v3 = tf.optimize_table(spark, dv_table, target_file_rows=50)
-    head = tf._load_manifest(dv_table, v3)
-    assert tf._dv_entries(head) == []
-    assert sorted(map(tuple, tf.read(spark, dv_table).collect())) == before
-
-
-def test_merge_dv_matches_cow_merge_without_rewrites(spark, tmp_path):
-    """merge_into_dv produces the SAME live relation as copy-on-write
-    merge_into, while carrying every pre-existing data file by
-    reference (tombstones + appended update files only)."""
-    df = spark.range(0, 100).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartitionByRange(4, "doc_id")
-    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
-    tf.create_table(spark, df, cow, stats_cols=["doc_id"])
-    tf.create_table(spark, df, mor, stats_cols=["doc_id"])
-    upd = spark.createDataFrame(
-        [(3, "updated"), (55, "also"), (999, "new")],
-        "doc_id long, text string",
-    )
-    tf.merge_into(spark, upd, cow, key="doc_id")
-    v2 = tf.merge_into_dv(spark, upd, mor, key="doc_id")
-    a = sorted(map(tuple, tf.read(spark, cow).collect()))
-    b = sorted(map(tuple, tf.read(spark, mor).collect()))
-    assert a == b and len(b) == 101
-    head = tf._load_manifest(mor, v2)
-    v1_paths = {e["path"] for e in tf._load_manifest(mor, 1)["files"]}
-    # every original file carried by reference; only new files added
-    assert v1_paths <= {e["path"] for e in head["files"]}
-    assert sum(e["rows"] for e in tf._dv_entries(head)) == 2  # 3, 55
-    # repeated MoR merge on the same key: no double-tombstoning, the
-    # previously-appended update row is tombstoned instead
-    upd2 = spark.createDataFrame(
-        [(3, "updated-again")], "doc_id long, text string")
-    v3 = tf.merge_into_dv(spark, upd2, mor, key="doc_id")
-    cur = tf.read(spark, mor)
-    assert cur.count() == 101
-    assert cur.where("doc_id = 3").first().text == "updated-again"
-    # OPTIMIZE materializes; relation unchanged
-    tf.optimize_table(spark, mor, target_file_rows=64)
-    assert sorted(map(tuple, tf.read(spark, mor).collect()))[0:0] == []
-    assert tf.read(spark, mor).count() == 101
-    assert tf._dv_entries(tf._load_manifest(mor, v3 + 1)) == []
-
-
 def test_scan_keys_prunes_on_clustered_table(spark, tmp_path):
     """scan_keys (round-9): manifest IN-list pruning on a clustered
     column — keys inside one file's range read just that file; keys
@@ -495,12 +338,6 @@ def test_fingerprint_dropped_by_mutating_kept_by_maintenance(
                extra_meta={"artifact_fingerprint": "fp1"})
     assert head().get("artifact_fingerprint") == "fp1"
     tf.merge_into(spark, spark.createDataFrame(
-        [(3, "u")], "doc_id long, text string"), root, "doc_id")
-    assert "artifact_fingerprint" not in head()
-
-    tf.replace(spark, df, root,
-               extra_meta={"artifact_fingerprint": "fp2"})
-    tf.merge_into_dv(spark, spark.createDataFrame(
         [(3, "u")], "doc_id long, text string"), root, "doc_id")
     assert "artifact_fingerprint" not in head()
 
