@@ -539,6 +539,21 @@ def append(
     })
 
 
+def _read_files(
+    spark: SparkSession, root: str, entries: list[dict],
+) -> DataFrame:
+    """The data files of manifest ``entries``, read with mergeSchema:
+    a snapshot, or the subset of it a scan keeps, may mix files written
+    before and after a column was added (schema evolution). Without it
+    the picked schema is nondeterministic; with it the read is
+    union-by-name and old files surface the new column as NULL. Time
+    travel to a pre-evolution snapshot lacks the column, because its
+    manifest references only pre-evolution files."""
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(root, e["path"]) for e in entries]
+    )
+
+
 def read(
     spark: SparkSession, root: str, version: int | None = None,
 ) -> DataFrame:
@@ -555,13 +570,7 @@ def read(
         else:
             schema = "doc_id long"  # legacy manifests
         return spark.createDataFrame([], schema=schema)
-    paths = [os.path.join(root, e["path"]) for e in m["files"]]
-    # mergeSchema: snapshots may mix files written before/after a
-    # column was added (schema evolution) — union-by-name semantics,
-    # old files surface the new column as NULL. Time travel to a
-    # pre-evolution snapshot naturally lacks the column because its
-    # manifest references only pre-evolution files.
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
+    return _read_files(spark, root, m["files"])
 
 
 def scan(
@@ -586,13 +595,7 @@ def scan(
     if not keep:
         empty = read(spark, root, version).limit(0)
         return empty.where(F.col(col).between(lo, hi)), 0, len(m["files"])
-    # mergeSchema for the same reason read() sets it: the surviving
-    # file subset can mix pre/post-evolution footers, and without it
-    # the picked schema is nondeterministic (and differs from the
-    # empty-prune branch above, which goes through read()).
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, e["path"]) for e in keep]
-    )
+    df = _read_files(spark, root, keep)
     return df.where(F.col(col).between(lo, hi)), len(keep), len(m["files"])
 
 
@@ -646,10 +649,7 @@ def scan_keys(
     keep = [e for e in m["files"] if _hit(e)]
     if not keep:
         return read(spark, root, version).limit(0), 0, len(m["files"])
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, e["path"]) for e in keep]
-    )
-    return df, len(keep), len(m["files"])
+    return _read_files(spark, root, keep), len(keep), len(m["files"])
 
 
 def scan_membership(
@@ -697,10 +697,7 @@ def scan_membership(
     ]
     if not keep:
         return read(spark, root, version).limit(0), 0, len(m["files"])
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, e["path"]) for e in keep]
-    )
-    return df, len(keep), len(m["files"])
+    return _read_files(spark, root, keep), len(keep), len(m["files"])
 
 
 def merge_into(
