@@ -22,10 +22,10 @@ TABLE_MARKER = r"\btable\b"
 FIGURE_MARKER = r"\bvector\b"
 
 
-def chart_inventory(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def chart_inventory(docs: DataFrame) -> DataFrame:
     """One row per detected table/figure with per-type 1-based index
     and object-store image path (MinIO layout parity)."""
-    c = F.col(text_col)
+    c = F.col("text")
     n_tables = F.size(F.regexp_extract_all(c, F.lit(TABLE_MARKER), 0))
     n_figures = F.size(F.regexp_extract_all(c, F.lit(FIGURE_MARKER), 0))
     counted = docs.select(
@@ -62,10 +62,10 @@ def chart_inventory(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def charts_per_document(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def charts_per_document(docs: DataFrame) -> DataFrame:
     """Rollup: chart counts per document and type."""
     return (
-        chart_inventory(docs, text_col)
+        chart_inventory(docs)
         .groupBy("doc_id", "chart_type")
         .agg(F.count("*").alias("n_charts"))
     )

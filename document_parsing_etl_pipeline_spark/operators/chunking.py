@@ -25,8 +25,6 @@ DEFAULT_MIN_CHUNK = 20
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     overlap: int = DEFAULT_OVERLAP,
     min_chunk: int = DEFAULT_MIN_CHUNK,
@@ -44,17 +42,17 @@ def chunk_documents(
     # division matches floor division (and the DuckDB oracle) even for
     # empty documents.
     last_idx = (
-        F.greatest(F.length(F.col(text_col)) - F.lit(1), F.lit(0)) / F.lit(step)
+        F.greatest(F.length(F.col("text")) - F.lit(1), F.lit(0)) / F.lit(step)
     ).cast("int")
     chunk_text = F.expr(
-        f"substring({text_col}, chunk_index * {step} + 1, {chunk_size})"
+        f"substring(text, chunk_index * {step} + 1, {chunk_size})"
     )
     # token = \S+ run (== Python str.split(); robust to tab/newline edges)
     token_count = F.size(parse.raw_tokens("text_content"))
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col),
+            "doc_id",
+            "text",
             F.explode(F.sequence(F.lit(0), last_idx)).alias("chunk_index"),
         )
         .withColumn("text_content", chunk_text)
@@ -62,14 +60,12 @@ def chunk_documents(
             (F.length("text_content") >= min_chunk) | (F.col("chunk_index") == 0)
         )
         .withColumn("token_count", token_count)
-        .drop(text_col)
+        .drop("text")
     )
 
 
 def chunk_documents_by_tokens(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     tokens_per_chunk: int = 30,
 ) -> DataFrame:
     """Token-budgeted chunking: fixed number of \\S+ tokens per chunk
@@ -80,12 +76,12 @@ def chunk_documents_by_tokens(
     one slice+join per chunk — JVM-side, shuffle-free.
     """
     t = tokens_per_chunk
-    words = parse.raw_tokens(text_col)
+    words = parse.raw_tokens("text")
     n_chunks = F.greatest(
         F.ceil(F.size(words) / F.lit(t)), F.lit(1)
     ).cast("int")
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         words.alias("words"),
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_index"),
     )

@@ -19,21 +19,19 @@ from . import parse
 from .similarity import cosine_sim
 
 
-def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def term_frequencies(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf) — term counts per document (all tokens,
     not the distinct set)."""
-    return parse.doc_terms(docs, "doc_id", text_col=text_col)
+    return parse.doc_terms(docs, "doc_id")
 
 
-def tfidf_top_terms(
-    docs: DataFrame, text_col: str = "text", top_k: int = 3
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF.
 
     idf = ln((N+1)/(df+1)) (smoothed); ties broken by term. The df
     table is tiny (vocab-sized) → broadcast back onto the tf table.
     """
-    tf = term_frequencies(docs, text_col)
+    tf = term_frequencies(docs)
     # N as a 1-row agg crossJoined into the plan (broadcast nested
     # loop of one row) — no separate docs.count() driver action/job.
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -62,7 +60,6 @@ def bm25_scores(
     terms: tuple[str, ...],
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """Okapi BM25 relevance against a fixed query term set — the
     classic retrieval scorer, and the ranking half of a corpus search
@@ -85,7 +82,7 @@ def bm25_scores(
     upstream of the rounding is per-row IEEE double arithmetic,
     engine-identical.
     """
-    tf_all = term_frequencies(docs, text_col)
+    tf_all = term_frequencies(docs)
     dl = tf_all.groupBy("doc_id").agg(
         F.sum("tf").cast("long").alias("dl")
     )
@@ -140,7 +137,7 @@ def bm25_scores(
     )
 
 
-def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_stats(docs: DataFrame) -> DataFrame:
     """Per-(lang, source) corpus rollup: doc counts + length stats."""
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
@@ -151,10 +148,7 @@ def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def contamination_check(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = 8,
-    bench_mod: int = 97,
+    docs: DataFrame, shingle_n: int = 8, bench_mod: int = 97,
 ) -> DataFrame:
     """Benchmark-contamination scan: flag training docs sharing any
     ``shingle_n``-token shingle with the held-out benchmark set
@@ -168,7 +162,7 @@ def contamination_check(
     side is broadcastable (eval corpora are tiny) and the big side
     never shuffles.
     """
-    words = parse.tokens(text_col)
+    words = parse.tokens("text")
     pos = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= shingle_n)
@@ -201,7 +195,6 @@ def dsir_logweights(
     docs: DataFrame,
     target_mod: int = 17,
     n_buckets: int = 256,
-    text_col: str = "text",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every document
@@ -225,7 +218,7 @@ def dsir_logweights(
     micro-nats (unigram_logprob's rule — no float rounding boundary
     can flip the hash)."""
     toks = docs.select(
-        "doc_id", F.explode(parse.tokens(text_col)).alias("term")
+        "doc_id", F.explode(parse.tokens("text")).alias("term")
     )
     # null guard: vacuously true (doc_id is the corpus key; bucket is
     # pmod(md5) of a never-null token) — unifies the inferred filters
@@ -311,7 +304,7 @@ def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """CCNet-style corpus-LM quality signal: per-doc mean unigram
     surprisal in bits (-log2 p(token) under the corpus unigram
     distribution). High bits/token = rare or garbled text; very low =
@@ -333,7 +326,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # of one per occurrence — AQE skew-split covers the rest. Every
     # consumer (vocab, total, the scoring join) reads this one
     # relation, so they share one exchange (see parse.doc_terms).
-    tf = parse.doc_terms(docs, "doc_id", text_col=text_col, term="tok")
+    tf = parse.doc_terms(docs, "doc_id", term="tok")
     vocab = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
     total = tf.agg(F.sum("tf").alias("n_total"))
     surp = vocab.crossJoin(F.broadcast(total)).select(
@@ -371,7 +364,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 per-vector quantization diagnostics:
     scale = max|v|/127, q = clamp(floor(v/scale + 0.5), ±127),
     reconstruction MSE + max abs error per vector — the audit pass
@@ -386,7 +379,7 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id") -> DataFr
     to zero) — still long-backed, still exact.
     """
     vals = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.posexplode("embedding").alias("dim", "v"),
     ).withColumn("v", F.col("v").cast("double"))
     scales = vals.groupBy("vec_id").agg(
@@ -428,7 +421,6 @@ def stratified_sample(
     docs: DataFrame,
     rates_permille: dict[str, int] | None = None,
     default_permille: int = 100,
-    stratum_col: str = "lang",
 ) -> DataFrame:
     """Deterministic stratified sampling — the corpus-mixing /
     reweighting step of training-data assembly: each stratum keeps a
@@ -443,7 +435,7 @@ def stratified_sample(
     spark = docs.sparkSession
     rates_df = spark.createDataFrame(
         [(k, v) for k, v in sorted(rates.items())],
-        f"{stratum_col} string, rate_permille int",
+        "lang string, rate_permille int",
     )
     h = (
         F.conv(
@@ -451,27 +443,25 @@ def stratified_sample(
         ).cast("long") % 1000
     )
     return (
-        docs.join(F.broadcast(rates_df), stratum_col, "left")
+        docs.join(F.broadcast(rates_df), "lang", "left")
         .withColumn(
             "rate_permille",
             F.coalesce(F.col("rate_permille"), F.lit(default_permille)),
         )
         .where(h < F.col("rate_permille"))
-        .select("doc_id", stratum_col, "rate_permille")
+        .select("doc_id", "lang", "rate_permille")
     )
 
 
 def sparse_sim_topk(
     docs: DataFrame,
-    text_col: str = "text",
     df_min: int = 2,
     df_max: int = 20,
     k: int = 3,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Related documents by SPARSE lexical similarity — the inverted-
     index sibling of embedding ANN (knn_*): idf-weighted cosine over
-    the DISTINCT word ``shingle_n``-gram sets, joined invertedly on
+    the DISTINCT word 3-gram sets, joined invertedly on
     DISCRIMINATIVE shingles only (document frequency in
     [df_min, df_max]). Shingles, not unigrams: word n-grams have the
     Zipf vocabulary unigram spaces lack (on narrow-vocabulary corpora
@@ -495,18 +485,18 @@ def sparse_sim_topk(
 
     toks = docs.select(
         "doc_id",
-        parse.tokens(text_col).alias("ws"),
+        parse.tokens("text").alias("ws"),
     )
     # explode an index sequence + array indexing (codegen) — not a
     # transform() HOF (interpreted, SURVEY §4); guard size < n or
     # sequence(0, negative) would generate a DESCENDING range
-    parts = [F.expr(f"ws[i + {j}]") for j in range(shingle_n)]
+    parts = [F.expr(f"ws[i + {j}]") for j in range(3)]
     sh = (
-        toks.where(F.size("ws") >= shingle_n)
+        toks.where(F.size("ws") >= 3)
         .select(
             "doc_id", "ws",
             F.explode(
-                F.sequence(F.lit(0), F.size("ws") - shingle_n)
+                F.sequence(F.lit(0), F.size("ws") - 3)
             ).alias("i"),
         )
         .select("doc_id", F.concat_ws(" ", *parts).alias("term"))
@@ -706,9 +696,7 @@ class PCAResult(NamedTuple):
     components: list | None = None
 
 
-def pca_project(
-    embeddings: DataFrame, k: int = 8, id_col: str = "vec_id"
-) -> PCAResult:
+def pca_project(embeddings: DataFrame, k: int = 8) -> PCAResult:
     """Distributed PCA: per-partition numpy partials (count, sum
     vector, X^T X) → driver combine + eigh on the tiny d×d matrix →
     broadcast components → Arrow-batched projection.
@@ -724,7 +712,7 @@ def pca_project(
     import numpy as np
     import pandas as pd
 
-    emb = embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
+    emb = embeddings.select("vec_id", "embedding")
 
     def partials(batches):
         n, s, ss = 0, None, None
@@ -788,11 +776,7 @@ def pca_project(
                      components=components.tolist())
 
 
-def pca_variance_audit(
-    embeddings: DataFrame,
-    rel_tol: float = 1e-4,
-    ortho_tol: float = 1e-8,
-) -> DataFrame:
+def pca_variance_audit(embeddings: DataFrame) -> DataFrame:
     """Partial oracle for the non-SQL eigensolve: PCA invariants that
     a SQL engine CAN check, as one audit row.
 
@@ -863,18 +847,18 @@ def pca_variance_audit(
     n_vec = embeddings.count()
     capture_ok = (
         float(trace) > 0
-        and abs(float(captured) - float(trace)) / float(trace) <= rel_tol
+        and abs(float(captured) - float(trace)) / float(trace) <= 1e-4
     )
     spark = embeddings.sparkSession
     return spark.createDataFrame(
         [(n_vec, d, float(trace), bool(capture_ok),
-          bool(ortho_err <= ortho_tol))],
+          bool(ortho_err <= 1e-8))],
         "n_vectors long, n_dims long, trace_var double, "
         "variance_capture_ok boolean, orthonormal_ok boolean",
     )
 
 
-def _spherical_vectors(embeddings: DataFrame, id_col: str) -> DataFrame:
+def _spherical_vectors(embeddings: DataFrame) -> DataFrame:
     """(vec_id, ev) with ev L2-normalized (zero vectors pass through
     unchanged — their cosine against anything is 0 by the kernel's
     guard). Cosine is scale-invariant, so normalizing changes NO
@@ -884,9 +868,7 @@ def _spherical_vectors(embeddings: DataFrame, id_col: str) -> DataFrame:
     from .similarity import norm
 
     return (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col("embedding").alias("raw")
-        )
+        embeddings.select("vec_id", F.col("embedding").alias("raw"))
         .withColumn("_n", norm(F.col("raw")))
         .select(
             "vec_id",
@@ -903,7 +885,6 @@ def _kmeans_rounds(
     embeddings: DataFrame,
     k: int,
     max_iter: int,
-    id_col: str = "vec_id",
 ):
     """Spherical k-means loop: returns (final scored relation
     [vec_id × centroid: all cosines of the LAST assignment round],
@@ -925,7 +906,7 @@ def _kmeans_rounds(
     # checkpoint the normalized vectors ONCE (round 13): every
     # round's assignment join re-read this subtree (scan + normalize
     # per round); the relation is |vecs| rows and feeds all rounds
-    vecs = _spherical_vectors(embeddings, id_col).localCheckpoint()
+    vecs = _spherical_vectors(embeddings).localCheckpoint()
     cents = vecs.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), F.col("ev").alias("cv")
     )
@@ -985,7 +966,6 @@ def kmeans_contract_audit(
     embeddings: DataFrame,
     k: int = 8,
     max_iter: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Hash-gated k-means contract: one row per input vector with the
     invariants a correct spherical-k-means run MUST satisfy, each a
@@ -1004,9 +984,7 @@ def kmeans_contract_audit(
     - exactly one row per vector (the partition property — the
       oracle's row set is the embeddings table itself).
     """
-    scored, assigned, objectives = _kmeans_rounds(
-        embeddings, k, max_iter, id_col
-    )
+    scored, assigned, objectives = _kmeans_rounds(embeddings, k, max_iter)
     best = scored.groupBy("vec_id").agg(F.max("cosine").alias("best"))
     per_vec = assigned.join(best, "vec_id").select(
         "vec_id",
@@ -1040,7 +1018,7 @@ def kmeans_contract_audit(
 
 
 def assign_nearest_centroid(
-    embeddings: DataFrame, num_centroids: int = 8, id_col: str = "vec_id"
+    embeddings: DataFrame, num_centroids: int = 8
 ) -> DataFrame:
     """Nearest-centroid labeling: centroids are the first
     ``num_centroids`` vectors (deterministic seed set); every vector
@@ -1048,11 +1026,11 @@ def assign_nearest_centroid(
     cosine. This is one assignment step of Lloyd's k-means — the
     building block for iterative clustering — expressed as a
     broadcast join + window argmax."""
-    cents = embeddings.where(F.col(id_col) < num_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col("embedding").alias("cv")
+    cents = embeddings.where(F.col("vec_id") < num_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
     )
     scored = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col("embedding").alias("ev")
+        "vec_id", F.col("embedding").alias("ev")
     ).join(F.broadcast(cents)).select(
         "vec_id",
         "centroid_id",

@@ -31,7 +31,7 @@ def _norm_tokens(text: Column) -> Column:
 
 # ---------------------------------------------------------------- exact
 
-def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup: group by md5 of normalized text.
 
     Returns one row per distinct content hash with the canonical
@@ -41,7 +41,7 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return (
         docs.select(
             "doc_id",
-            F.md5(parse.normalized_text(F.col(text_col))).alias("content_hash"),
+            F.md5(parse.normalized_text(F.col("text"))).alias("content_hash"),
         )
         .groupBy("content_hash")
         .agg(
@@ -81,8 +81,7 @@ def band_cap_col(max_bucket) -> Column:
 
 
 def minhash_signature(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 8,
-    keep_empty: bool = False,
+    docs: DataFrame, num_hashes: int = 8, keep_empty: bool = False,
 ) -> DataFrame:
     """MinHash signature: for seed k, h_k = min(md5(k || ':' || token)).
 
@@ -103,7 +102,7 @@ def minhash_signature(
     # one row per doc per partition before the shuffle.
     ex = F.explode_outer if keep_empty else F.explode
     toks = docs.select(
-        "doc_id", ex(_norm_tokens(F.col(text_col))).alias("tok")
+        "doc_id", ex(_norm_tokens(F.col("text"))).alias("tok")
     )
     return toks.groupBy("doc_id").agg(
         *[
@@ -115,7 +114,6 @@ def minhash_signature(
 
 def minhash_buckets(
     docs: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
     band_size: int = 2,
     sigs: DataFrame | None = None,
@@ -128,7 +126,7 @@ def minhash_buckets(
     ``keep_empty`` keeps zero-token docs as NULL-bh rows (see
     minhash_signature)."""
     if sigs is None:
-        sigs = minhash_signature(docs, text_col, num_hashes,
+        sigs = minhash_signature(docs, num_hashes=num_hashes,
                                  keep_empty=keep_empty)
     n_bands = num_hashes // band_size
     bands = []
@@ -144,7 +142,6 @@ def minhash_buckets(
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
     band_size: int = 2,
     max_bucket: int | dict = 50,
@@ -159,7 +156,8 @@ def minhash_lsh_candidates(
     at 100 TB the signature scan is the dominant cost and must not
     run twice.
     """
-    buckets = minhash_buckets(docs, text_col, num_hashes, band_size, sigs)
+    buckets = minhash_buckets(
+        docs, num_hashes=num_hashes, band_size=band_size, sigs=sigs)
     # Cap degenerate buckets BEFORE pairing, via a count + join — never
     # collect a bucket into one row (a hot bucket at 100 TB would be an
     # OOM row under collect_list). The count aggregates map-side; the
@@ -185,7 +183,6 @@ def minhash_lsh_candidates(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
     band_size: int = 2,
     max_bucket: int | dict = 50,
@@ -205,10 +202,11 @@ def ngram_jaccard_pairs(
     downstream threshold (band planner, accuracy calibration, the
     ≥0.5 pair artifact) derives from by filter."""
     cands = minhash_lsh_candidates(
-        docs, text_col, num_hashes, band_size, max_bucket, sigs=sigs
+        docs, num_hashes=num_hashes, band_size=band_size,
+        max_bucket=max_bucket, sigs=sigs,
     )
     toks = docs.select(
-        "doc_id", _norm_tokens(F.col(text_col)).alias("tokens")
+        "doc_id", _norm_tokens(F.col("text")).alias("tokens")
     )
     joined = (
         cands.join(toks.withColumnsRenamed({"doc_id": "doc_a", "tokens": "ta"}), "doc_a")
@@ -226,14 +224,7 @@ def ngram_jaccard_pairs(
 
 
 def containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: int | dict = 50,
-    threshold: float = 0.8,
-    sigs: DataFrame | None = None,
-    cands: DataFrame | None = None,
+    docs: DataFrame, cands: DataFrame, threshold: float = 0.8,
 ) -> DataFrame:
     """Asymmetric containment verification of LSH candidates (Broder's
     containment measure): c(A⊂B) = |T(A)∩T(B)| / |T(A)|. Symmetric
@@ -247,19 +238,12 @@ def containment_pairs(
     directions reported. Runs only on the capped LSH candidate set
     (recall caveat: very asymmetric sizes also depress the minhash
     band-collision probability — candidates from exact shingle-join
-    pipelines can be substituted via the same verification). Pass
-    ``sigs`` (the standing signature artifact) to skip the
-    tokenize+hash scan the candidate stage would otherwise re-run,
-    or ``cands`` (a precomputed (doc_a, doc_b) relation — e.g. the
-    standing verified-candidate artifact) to skip candidate
-    generation entirely."""
-    if cands is None:
-        cands = minhash_lsh_candidates(
-            docs, text_col, num_hashes, band_size, max_bucket, sigs=sigs
-        )
+    pipelines can be substituted via the same verification).
+    ``cands`` is the (doc_a, doc_b) candidate relation, e.g. the
+    standing verified-candidate artifact."""
     cands = cands.select("doc_a", "doc_b")
     toks = docs.select(
-        "doc_id", _norm_tokens(F.col(text_col)).alias("tokens")
+        "doc_id", _norm_tokens(F.col("text")).alias("tokens")
     )
     joined = (
         cands.join(
@@ -287,35 +271,22 @@ def containment_pairs(
 
 
 def edit_distance_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: int | dict = 50,
-    prefix: int = 80,
-    max_dist: int = 20,
-    sigs: DataFrame | None = None,
-    cands: DataFrame | None = None,
+    docs: DataFrame, cands: DataFrame, max_dist: int = 20,
 ) -> DataFrame:
-    """Edit-distance verification of LSH candidates: Levenshtein on a
-    fixed text prefix — the character-level near-dup check that
+    """Edit-distance verification of LSH candidates: Levenshtein on
+    the first 80 characters — the character-level near-dup check that
     catches small in-place edits token-set Jaccard misses.
 
     Levenshtein is O(prefix²) per pair, so it runs only on the capped
     candidate set, never all pairs; the prefix bound keeps the DP
     matrix constant-size regardless of document length. The built-in
     is JVM-side codegen (both engines implement the classic
-    unit-cost DP, so distances match exactly). Pass ``sigs`` (the
-    standing signature artifact) to skip the tokenize+hash scan, or
-    ``cands`` (a precomputed (doc_a, doc_b) relation — the standing
-    verified-candidate artifact) to skip candidate generation."""
-    if cands is None:
-        cands = minhash_lsh_candidates(
-            docs, text_col, num_hashes, band_size, max_bucket, sigs=sigs
-        )
+    unit-cost DP, so distances match exactly). ``cands`` is the
+    (doc_a, doc_b) candidate relation, e.g. the standing
+    verified-candidate artifact."""
     cands = cands.select("doc_a", "doc_b")
     pfx = docs.select(
-        "doc_id", F.substring(F.col(text_col), 1, prefix).alias("p")
+        "doc_id", F.substring(F.col("text"), 1, 80).alias("p")
     )
     joined = (
         cands.join(
@@ -347,13 +318,13 @@ SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # byte-wide bands: 256 values/band keeps buckets small
 
 
-def _hexbits(c: Column, bits: int = SIMHASH_BITS) -> Column:
-    """First ``bits`` bits of md5 as a long (via base-16 conv)."""
-    return F.conv(F.substring(F.md5(c), 1, bits // 4), 16, 10).cast("long")
+def _hexbits(c: Column) -> Column:
+    """First SIMHASH_BITS bits of md5 as a long (via base-16 conv)."""
+    return F.conv(
+        F.substring(F.md5(c), 1, SIMHASH_BITS // 4), 16, 10).cast("long")
 
 
-def simhash_signature(docs: DataFrame, text_col: str = "text",
-                      bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash_signature(docs: DataFrame) -> DataFrame:
     """SimHash: per-token md5-derived value votes per bit position;
     signature bit b = majority vote (Charikar 2002).
 
@@ -361,24 +332,23 @@ def simhash_signature(docs: DataFrame, text_col: str = "text",
     instead of interpreted aggregate() passes over the token array.
     """
     toks = docs.select(
-        "doc_id", F.explode(_norm_tokens(F.col(text_col))).alias("tok")
-    ).withColumn("hv", _hexbits(F.col("tok"), bits))
+        "doc_id", F.explode(_norm_tokens(F.col("text"))).alias("tok")
+    ).withColumn("hv", _hexbits(F.col("tok")))
     votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.shiftright("hv", b).bitwiseAND(F.lit(1)) * 2 - 1
             ).alias(f"v{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     sig = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         sig = sig + F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
     return votes.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_buckets(docs: DataFrame, text_col: str = "text",
-                    materialize: bool = False,
+def simhash_buckets(docs: DataFrame, materialize: bool = False,
                     sigs: DataFrame | None = None) -> DataFrame:
     """Simhash band membership: (doc_id, simhash, band, bv) with bv =
     the signature's byte for that band. Shared by the pair generator
@@ -394,7 +364,7 @@ def simhash_buckets(docs: DataFrame, text_col: str = "text",
     ONCE instead of per reference — the band explode left downstream
     is 4 rows per doc, trivial to recompute."""
     if sigs is None:
-        sigs = simhash_signature(docs, text_col)
+        sigs = simhash_signature(docs)
         if materialize:
             sigs = sigs.localCheckpoint()
     return sigs.select(
@@ -413,8 +383,7 @@ def simhash_buckets(docs: DataFrame, text_col: str = "text",
     ).select("doc_id", "simhash", "e.band", "e.bv")
 
 
-def simhash_pairs(docs: DataFrame, text_col: str = "text",
-                  max_hamming: int = 3,
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                   max_bucket: int | dict = 200,
                   sigs: DataFrame | None = None) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
@@ -447,7 +416,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
     # the bucket relation is consumed three times below (cap counts +
     # both self-join sides): take the standing signature artifact when
     # provided, else materialize the signature pass once
-    bands = simhash_buckets(docs, text_col, materialize=True, sigs=sigs)
+    bands = simhash_buckets(docs, materialize=True, sigs=sigs)
     counts = (
         bands.groupBy("band", "bv")
         .agg(F.count("*").alias("n"))
@@ -498,7 +467,6 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
 def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
     block_size: int = 2048,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold).
@@ -516,9 +484,9 @@ def embedding_near_dup(
     import pandas as pd
 
     emb = embeddings.select(
-        F.col(id_col).alias("vid"),
+        F.col("vec_id").alias("vid"),
         "embedding",
-        F.floor(F.col(id_col) / F.lit(block_size)).cast("long").alias("block"),
+        F.floor(F.col("vec_id") / F.lit(block_size)).cast("long").alias("block"),
     )
     blocks = emb.groupBy("block").agg(
         F.collect_list("vid").alias("ids"),
@@ -573,12 +541,7 @@ def embedding_near_dup(
 
 # ------------------------------------------------- dedup clustering
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond") — the
     extreme-scale alternative to plain min-label propagation: rounds
@@ -596,7 +559,7 @@ def connected_components_star(
     # pair-generation lineage — measured 257s at sf0.1 vs ~5s with
     # the checkpoint (the rounds themselves are ~1s each)
     edges = init_edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
@@ -620,7 +583,7 @@ def connected_components_star(
     converged = False
     prev_edges = edges
     prev_sig = _sig(edges)
-    for _ in range(max_iter):
+    for _ in range(20):
         # large-star: reduce at v over the FULL neighborhood Γ(v);
         # m = min(Γ(v) ∪ {v}); emit (u, m) for u ∈ Γ(v), u > v.
         sym = (
@@ -667,8 +630,8 @@ def connected_components_star(
         prev_edges = edges
     if not converged:
         raise RuntimeError(
-            f"connected_components_star: edge set not stable after "
-            f"{max_iter} rounds — raise max_iter (rounds are O(log² n))"
+            "connected_components_star: edge set not stable after 20 "
+            "rounds (rounds are O(log² n))"
         )
     # vertices derive from the CHECKPOINTED initial edge set, not from
     # `pairs` — re-reading pairs would re-run the whole candidate
@@ -689,12 +652,7 @@ def connected_components_star(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id,
     component_id) with component_id = min doc_id in the component
     (the canonical-document finisher after pair generation).
@@ -705,8 +663,8 @@ def connected_components(
     extreme scale swap in the large-star/small-star variant
     (Kiveris et al. 2014), same DataFrame shape.
     """
-    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    rev = pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    rev = pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     edges = fwd.union(rev).distinct().cache()
     labels = (
         edges.select(F.col("a").alias("id"))
@@ -769,7 +727,6 @@ def connected_components(
 def incremental_lsh_matches(
     batch: DataFrame,
     corpus: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
     band_size: int = 2,
     max_bucket: int | dict = 50,
@@ -788,8 +745,8 @@ def incremental_lsh_matches(
 
     Returns one row per batch doc: (doc_id, is_dup, first_match_doc)
     with first_match_doc = min matching corpus doc (-1 if none)."""
-    bb = minhash_buckets(batch, text_col, num_hashes, band_size)
-    cb = minhash_buckets(corpus, text_col, num_hashes, band_size)
+    bb = minhash_buckets(batch, num_hashes=num_hashes, band_size=band_size)
+    cb = minhash_buckets(corpus, num_hashes=num_hashes, band_size=band_size)
     return lsh_flag_against_index(
         batch.select("doc_id"), bb, cb, max_bucket
     )
@@ -928,7 +885,6 @@ def semdedup_keep(
     embeddings: DataFrame,
     num_centroids: int | None = None,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
     materialize: bool | None = None,
 ) -> DataFrame:
     """SemDeDup: cluster-scoped semantic near-duplicate removal over
@@ -963,7 +919,7 @@ def semdedup_keep(
         if materialize is None:
             materialize = n >= SEMDEDUP_MATERIALIZE_MIN
     assign = assign_nearest_centroid(
-        embeddings, num_centroids=num_centroids, id_col=id_col
+        embeddings, num_centroids=num_centroids
     ).select("vec_id", "centroid_id")
     # (vec_id, centroid_id, embedding) feeds both pair sides and the
     # final verdict frame; without materialization the centroid-scoring
@@ -973,7 +929,7 @@ def semdedup_keep(
     # SEMDEDUP_MATERIALIZE_MIN vectors where the scoring scan
     # dominates; below it recompute beats the checkpoint round-trip.
     vecs = assign.join(
-        embeddings.select(F.col(id_col).alias("vec_id"), "embedding"),
+        embeddings.select("vec_id", "embedding"),
         "vec_id",
     )
     if materialize:
@@ -1007,9 +963,7 @@ def semdedup_keep(
     )
 
 
-def span_dedup_profile(
-    docs: DataFrame, k: int = 12, text_col: str = "text"
-) -> DataFrame:
+def span_dedup_profile(docs: DataFrame, k: int = 12) -> DataFrame:
     """Exact-substring duplication profile at k-token granularity
     (Lee et al. 2021 suffix-array dedup, re-expressed as the
     distributable rolling-hash formulation): hash every k-token
@@ -1032,7 +986,7 @@ def span_dedup_profile(
     """
     toks = docs.select(
         "doc_id",
-        parse.raw_tokens(text_col).alias("tk"),
+        parse.raw_tokens("text").alias("tk"),
     )
     base = toks.select(
         "doc_id",
@@ -1110,9 +1064,7 @@ def span_dedup_profile(
     )
 
 
-def span_longest_match(
-    docs: DataFrame, k: int = 12, text_col: str = "text"
-) -> DataFrame:
+def span_longest_match(docs: DataFrame, k: int = 12) -> DataFrame:
     """Longest-duplicated-span profile — the suffix-array companion to
     span_dedup_profile: per document, the length (tokens) of the
     LONGEST span all of whose k-token windows occur >= 2 times
@@ -1133,7 +1085,7 @@ def span_longest_match(
 
     toks = docs.select(
         "doc_id",
-        parse.raw_tokens(text_col).alias("tk"),
+        parse.raw_tokens("text").alias("tk"),
     )
     base = toks.select(
         "doc_id",
@@ -1623,13 +1575,7 @@ def setsim_prefix_join(
 
 
 def setsim_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold_num: int = 3,
-    threshold_den: int = 5,
-    shingle_n: int = 3,
-    materialize: bool = True,
-    suffix_buckets: int = 128,
+    docs: DataFrame, threshold_num: int = 3, threshold_den: int = 5,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """The standing similarity-join index: (shingles, prefixes,
     suffix-histograms, term-arrays) — the four corpus-linear
@@ -1641,21 +1587,16 @@ def setsim_index(
     bounded verification — no corpus-wide shingle/df/rank/signature/
     array pass per ingest."""
     sh, pref = _shingle_prefixes(
-        docs, text_col, threshold_num, threshold_den, shingle_n,
-        materialize,
+        docs, "text", threshold_num, threshold_den, 3, True
     )
-    return sh, pref, suffix_histograms(sh, suffix_buckets), \
-        doc_term_arrays(sh)
+    return sh, pref, suffix_histograms(sh), doc_term_arrays(sh)
 
 
 def setsim_incremental_pairs(
     docs: DataFrame,
     batch_col: str = "is_batch",
-    text_col: str = "text",
     threshold_num: int = 3,
     threshold_den: int = 5,
-    shingle_n: int = 3,
-    materialize: bool = True,
     precomputed: tuple[DataFrame, DataFrame] | None = None,
     scoped=None,
 ) -> DataFrame:
@@ -1702,8 +1643,7 @@ def setsim_incremental_pairs(
     if scoped is not None:
         batch_terms = [
             r[0] for r in
-            _shingles(docs.where(F.col(batch_col)), text_col,
-                      shingle_n)
+            _shingles(docs.where(F.col(batch_col)), "text", 3)
             .select("term").distinct().collect()
         ]
         # one scoped posting read feeds the batch side, the corpus
@@ -1717,9 +1657,7 @@ def setsim_incremental_pairs(
         else:
             sh, pref = precomputed
     else:
-        sh, pref = _shingle_prefixes(
-            docs, text_col, num, den, shingle_n, materialize
-        )
+        sh, pref = _shingle_prefixes(docs, "text", num, den, 3, True)
     flags = docs.select("doc_id", F.col(batch_col).alias("_fb"))
     preff = pref.join(flags, "doc_id")
     a = preff.where(F.col("_fb")).select(

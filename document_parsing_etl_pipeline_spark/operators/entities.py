@@ -83,7 +83,6 @@ def entity_counts(df: DataFrame, text_col: str = "text_content") -> DataFrame:
 def gazetteer_join_entities(
     docs: DataFrame,
     gazetteer: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """Dictionary NER via broadcast join: tokens ⋈ gazetteer(term,
     entity_type) → per-doc hit counts per type.
@@ -95,7 +94,7 @@ def gazetteer_join_entities(
     """
     toks = docs.select(
         "doc_id",
-        F.explode(parse.tokens(text_col)).alias("term"),
+        F.explode(parse.tokens("text")).alias("term"),
     )
     return (
         toks.join(F.broadcast(gazetteer), "term")

@@ -26,17 +26,15 @@ PPM = 1_000_000
 def pagerank_integer(
     edges: DataFrame,
     iterations: int = 3,
-    damping_ppm: int = 850_000,
     materialize: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank on a directed edge list
     (columns ``src``, ``dst``) in integer micro-rank units.
 
     Ranks start at 1_000_000 per node (average-1 convention); each
-    iteration sets
+    iteration sets, with damping d = 850_000 ppm (0.85),
 
-        r_v  =  (PPM - damping_ppm)  +  Σ_{u→v} (r_u · damping_ppm)
-                                         div (PPM · deg_u)
+        r_v  =  (PPM - d)  +  Σ_{u→v} (r_u · d) div (PPM · deg_u)
 
     with truncating integer division (identical in Spark ``div`` and
     DuckDB ``//`` — both truncate toward zero). Nodes are everything
@@ -44,7 +42,7 @@ def pagerank_integer(
     evaporates, the plain power-iteration-without-dangling-patch
     convention, replayed identically by the oracle).
     """
-    base = PPM - damping_ppm
+    base = PPM - 850_000
     nodes = (
         edges.select(F.col("src").alias("ent"))
         .unionAll(edges.select(F.col("dst").alias("ent")))
@@ -58,7 +56,7 @@ def pagerank_integer(
             .join(deg, "src")
             .select(
                 "dst",
-                F.expr(f"(r * {damping_ppm}) div ({PPM} * deg)").alias("c"),
+                F.expr(f"(r * 850000) div ({PPM} * deg)").alias("c"),
             )
         )
         inflow = contrib.groupBy("dst").agg(

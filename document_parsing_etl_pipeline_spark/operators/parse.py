@@ -53,7 +53,6 @@ def normalized_text(c: Column | str) -> Column:
 def doc_terms(
     docs: DataFrame,
     *keys: str,
-    text_col: str = "text",
     tokenize=tokens,
     term: str = "term",
     count: str = "tf",
@@ -72,7 +71,7 @@ def doc_terms(
     set keeps them equal, so every branch reads ONE ``ReusedExchange``
     and the tokenize runs once per query instead of once per
     consumer."""
-    toks = docs.select(*keys, F.explode(tokenize(text_col)).alias(term))
+    toks = docs.select(*keys, F.explode(tokenize("text")).alias(term))
     guard = reduce(
         lambda a, b: a & b, [F.col(k).isNotNull() for k in (*keys, term)]
     )
@@ -81,27 +80,27 @@ def doc_terms(
     )
 
 
-def normalize_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_documents(docs: DataFrame) -> DataFrame:
     """Whitespace-normalize + lowercase → `norm_text`."""
-    return docs.withColumn("norm_text", normalized_text(F.col(text_col)))
+    return docs.withColumn("norm_text", normalized_text(F.col("text")))
 
 
-def document_metadata(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def document_metadata(docs: DataFrame) -> DataFrame:
     """Per-document metadata projection.
 
     char_count/word_count/size_bucket mirror the reference watcher's
     metadata dict (page_count/file_size analogs for a text corpus).
     """
-    word_count = F.size(raw_tokens(F.col(text_col)))
+    word_count = F.size(raw_tokens(F.col("text")))
     return docs.select(
         "doc_id",
         "source",
         "lang",
-        F.length(F.col(text_col)).alias("char_count"),
+        F.length(F.col("text")).alias("char_count"),
         word_count.alias("word_count"),
-        (F.size(F.split(F.col(text_col), r"\n")) ).alias("line_count"),
-        F.when(F.length(F.col(text_col)) < 200, F.lit("small"))
-        .when(F.length(F.col(text_col)) < 400, F.lit("medium"))
+        (F.size(F.split(F.col("text"), r"\n")) ).alias("line_count"),
+        F.when(F.length(F.col("text")) < 200, F.lit("small"))
+        .when(F.length(F.col("text")) < 400, F.lit("medium"))
         .otherwise(F.lit("large"))
         .alias("size_bucket"),
     )

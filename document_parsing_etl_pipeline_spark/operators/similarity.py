@@ -78,7 +78,6 @@ def knn_brute_cosine(
     embeddings: DataFrame,
     num_queries: int = 5,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``num_queries``
     vectors (vec_id < num_queries) against the whole table.
@@ -86,12 +85,10 @@ def knn_brute_cosine(
     The tiny query side is broadcast → no shuffle of the big side;
     ranking is a per-query window (partition count = num_queries).
     """
-    queries = embeddings.where(F.col(id_col) < num_queries).select(
-        F.col(id_col).alias("query_id"), F.col("embedding").alias("qv")
+    queries = embeddings.where(F.col("vec_id") < num_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    cand = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col("embedding").alias("cv")
-    )
+    cand = embeddings.select("vec_id", F.col("embedding").alias("cv"))
     from pyspark.sql.window import Window
 
     scored = (
@@ -116,7 +113,6 @@ def knn_all_topk(
     embeddings: DataFrame,
     k: int = 3,
     block_size: int = 2048,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k neighbors for EVERY vector via block matmul.
 
@@ -134,9 +130,9 @@ def knn_all_topk(
     from pyspark.sql.window import Window
 
     emb = embeddings.select(
-        F.col(id_col).alias("vid"),
+        F.col("vec_id").alias("vid"),
         "embedding",
-        F.floor(F.col(id_col) / F.lit(block_size)).cast("long").alias("block"),
+        F.floor(F.col("vec_id") / F.lit(block_size)).cast("long").alias("block"),
     )
     blocks = emb.groupBy("block").agg(
         F.collect_list("vid").alias("ids"),
@@ -210,11 +206,11 @@ def knn_all_topk(
     )
 
 
-def sign_bucket(v: Column, dims: int = 4) -> Column:
-    """IVF-style coarse bucket: sign bits of the first ``dims``
-    components → int in [0, 2^dims)."""
+def sign_bucket(v: Column) -> Column:
+    """IVF-style coarse bucket: sign bits of the first 4 components →
+    int in [0, 16)."""
     b = F.lit(0)
-    for i in range(dims):
+    for i in range(4):
         b = b + F.when(F.element_at(v, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return b
 
@@ -225,7 +221,6 @@ def knn_ivf_probe(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """True IVF (inverted-file) ANN: every vector is assigned to its
     nearest coarse centroid (the posting list); a query scans only the
@@ -246,7 +241,7 @@ def knn_ivf_probe(
     from pyspark.sql.window import Window
 
     cand = ivf_probe_candidates(
-        embeddings, num_queries, num_centroids, nprobe, id_col
+        embeddings, num_queries, num_centroids, nprobe
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
@@ -263,7 +258,6 @@ def ivf_probe_candidates(
     num_queries: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
     with_probe_rank: bool = False,
 ) -> DataFrame:
     """The IVF probe's SCANNED candidate relation (query_id, vec_id,
@@ -279,12 +273,12 @@ def ivf_probe_candidates(
     whole nprobe curve instead of one pass per point."""
     from pyspark.sql.window import Window
 
-    cents = embeddings.where(F.col(id_col) < num_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col("embedding").alias("cv")
+    cents = embeddings.where(F.col("vec_id") < num_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
     )
     scored = (
         embeddings.select(
-            F.col(id_col).alias("vid"), F.col("embedding").alias("ev")
+            F.col("vec_id").alias("vid"), F.col("embedding").alias("ev")
         )
         .join(F.broadcast(cents))
         .select(
@@ -314,10 +308,7 @@ def ivf_probe_candidates(
         probes.join(assign, "centroid_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .join(
-            embeddings.select(
-                F.col(id_col).alias("vec_id"),
-                F.col("embedding").alias("cv"),
-            ),
+            embeddings.select("vec_id", F.col("embedding").alias("cv")),
             "vec_id",
         )
         .select(*out_cols)
@@ -325,24 +316,20 @@ def ivf_probe_candidates(
 
 
 def knn_ivf_bucketed(
-    embeddings: DataFrame,
-    num_queries: int = 5,
-    k: int = 5,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
+    embeddings: DataFrame, num_queries: int = 5, k: int = 5,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign
     bucket. The bucket column is the partition/prune key at scale."""
     with_bucket = embeddings.withColumn(
-        "bucket", sign_bucket(F.col("embedding"), bucket_dims)
+        "bucket", sign_bucket(F.col("embedding"))
     )
-    queries = with_bucket.where(F.col(id_col) < num_queries).select(
-        F.col(id_col).alias("query_id"),
+    queries = with_bucket.where(F.col("vec_id") < num_queries).select(
+        F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
         F.col("bucket"),
     )
     cand = with_bucket.select(
-        F.col(id_col).alias("vec_id"), F.col("embedding").alias("cv"), "bucket"
+        "vec_id", F.col("embedding").alias("cv"), "bucket"
     )
     from pyspark.sql.window import Window
 

@@ -17,7 +17,6 @@ def salt_plan(
     df: DataFrame,
     key: str,
     target_rows_per_task: int,
-    top: int = 50,
 ) -> DataFrame:
     """Measured salting: derive each hot key's salt fanout from the
     ACTUAL key distribution instead of a fixed constant — the
@@ -25,13 +24,13 @@ def salt_plan(
     tune. Returns (key, n_salts) for the top-k keys whose row count
     exceeds ``target_rows_per_task`` (n_salts = ceil(n/target), so
     each sub-key carries ~target rows); keys not in the plan default
-    to fanout 1 in salted_join_profiled. The plan is ≤ top rows —
+    to fanout 1 in salted_join_profiled. The plan is ≤ 50 rows —
     broadcastable at any data scale."""
     return (
         df.groupBy(key)
         .agg(F.count("*").alias("n_rows"))
         .orderBy(F.col("n_rows").desc(), F.col(key))
-        .limit(top)
+        .limit(50)
         .select(
             key,
             F.ceil(F.col("n_rows") / F.lit(target_rows_per_task))
@@ -43,7 +42,7 @@ def salt_plan(
 
 
 def _plan_map(plan: DataFrame):
-    """Collect the (key, n_salts) plan — ≤ top rows by construction —
+    """Collect the (key, n_salts) plan — ≤ 50 rows by construction —
     into a literal map expression. One tiny driver job at plan-build;
     the lookup then runs as codegen inside the scan, so the big side
     pays NO join for its salt (a DataFrame-join formulation evaluates
@@ -76,7 +75,6 @@ def salted_join_profiled(
     small: DataFrame,
     key: str,
     plan: DataFrame,
-    how: str = "inner",
 ) -> DataFrame:
     """Join with the big side salted per key by a measured salt_plan
     (_salt_big): only the keys the profile flagged pay any duplication
@@ -84,7 +82,7 @@ def salted_join_profiled(
     Result is identical to the plain join."""
     m = _plan_map(plan)
     if m is None:  # nothing hot — plain join
-        return big.join(small, key, how)
+        return big.join(small, key)
     big_s = _salt_big(big, m, key)
     small_s = (
         small.withColumn(
@@ -97,7 +95,7 @@ def salted_join_profiled(
             ),
         )
     )
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
+    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
 
 
 def key_skew_profile(df: DataFrame, key: str, top: int = 20) -> DataFrame:

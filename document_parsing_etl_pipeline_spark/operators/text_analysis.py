@@ -36,13 +36,13 @@ def _stopword_hits(c: Column, lang: str) -> Column:
     return _count_matches(c, pat)
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-ratio language ID: argmax over per-language hit counts.
 
     Deterministic tie-break on language code order (en < es < de < fr
     by score, then alphabetical).
     """
-    c = F.lower(F.col(text_col))
+    c = F.lower(F.col("text"))
     scored = docs.select(
         "doc_id",
         "lang",
@@ -58,13 +58,13 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.withColumn("pred_lang", pred)
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword / lexical-diversity signals.
 
     All ratios rounded to 4 decimals so float formatting is stable
     across engines.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     words = parse.raw_tokens(c)
     word_count = F.size(words)
     uniq = F.size(F.array_distinct(words))
@@ -87,9 +87,9 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens per document."""
-    c = F.col(text_col)
+    c = F.col("text")
     ws_tokens = F.size(parse.raw_tokens(c))
     return docs.select(
         "doc_id",
@@ -104,13 +104,13 @@ RE_PHONE = r"\+?[0-9][0-9()\- ]{7,}[0-9]"
 RE_SSN = r"[0-9]{3}-[0-9]{2}-[0-9]{4}"
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII scrub: emails/phones/SSN-shaped spans → typed placeholders.
 
     The standard pre-training privacy pass; pure regexp_replace chain,
     per-row, codegen'd.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     # priority order SSN > email > phone; counts are the spans each
     # stage actually redacts (an SSN also matches the phone shape, so
     # phone counts run on the SSN/email-redacted text)
@@ -127,11 +127,10 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def top_bigrams(docs: DataFrame, text_col: str = "text",
-                top_k: int = 20) -> DataFrame:
+def top_bigrams(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Corpus-wide top-k bigrams (explode positions → codegen'd
     concat → count, map-side partial; ties broken by bigram)."""
-    words = parse.tokens(text_col)
+    words = parse.tokens("text")
     base = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= 2)
@@ -152,12 +151,11 @@ def top_bigrams(docs: DataFrame, text_col: str = "text",
     )
 
 
-def top_ngrams(docs: DataFrame, text_col: str = "text", n: int = 3,
-               top_k: int = 20) -> DataFrame:
+def top_ngrams(docs: DataFrame, n: int = 3, top_k: int = 20) -> DataFrame:
     """Corpus-wide top-k word n-grams (the language-model count table
     builder). Same shape as top_bigrams: position explode → one
     slice+concat per n-gram, codegen'd, map-side partial agg."""
-    words = parse.tokens(text_col)
+    words = parse.tokens("text")
     base = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= n)
@@ -178,15 +176,14 @@ def top_ngrams(docs: DataFrame, text_col: str = "text", n: int = 3,
     )
 
 
-def repetition_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_ratio(docs: DataFrame) -> DataFrame:
     """Top-token-fraction repetition signal: max term frequency over
     total tokens per doc — the cheap boilerplate/spam detector in
     LLM quality filtering (high ratio = one token dominates).
 
     Two aggregations, both with map-side combine; the per-doc shuffle
     key is doc_id (already the natural partitioning)."""
-    tf = parse.doc_terms(docs, "doc_id", text_col=text_col, term="t",
-                         count="c")
+    tf = parse.doc_terms(docs, "doc_id", term="t", count="c")
     agg = tf.groupBy("doc_id").agg(
         F.max("c").alias("max_tf"), F.sum("c").alias("n_tokens")
     )
@@ -198,7 +195,7 @@ def repetition_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", n: int = 4) -> DataFrame:
+def fingerprint(docs: DataFrame, n: int = 4) -> DataFrame:
     """Winnowing-style document fingerprint: min md5 over word n-gram
     shingles (Schleimer et al. 2003 'winnowing' simplified to a global
     min — a stable content fingerprint robust to word appends).
@@ -208,7 +205,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text", n: int = 4) -> DataFram
     partial aggregation instead of an interpreted array transform.
     """
     lt = docs.select(
-        "doc_id", F.trim(F.lower(F.col(text_col))).alias("lt")
+        "doc_id", F.trim(F.lower(F.col("text"))).alias("lt")
     ).select(
         "doc_id", "lt",
         parse.raw_tokens("lt").alias("words"),
@@ -235,7 +232,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text", n: int = 4) -> DataFram
     )
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher-rules quality gate (Rae et al. 2021, App. A heuristics):
     word-count bounds, mean-word-length window, symbol-to-word ratio,
     alphabetic-word fraction, bullet/ellipsis line ratios → per-doc
@@ -247,7 +244,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     boundary decisions are engine-identical (rounded values are the
     hash-checked ones).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_words = F.size(parse.raw_tokens(t))
     nw = F.greatest(n_words, F.lit(1)).cast("double")
     # sum of token lengths == chars left after removing all whitespace

@@ -73,9 +73,9 @@ def _dec(c) -> F.Column:
     return c.cast("decimal(18,6)")
 
 
-def _money(c, scale: int = 2) -> F.Column:
-    """Exact decimal sum → double → round (engine-identical)."""
-    return F.round(F.sum(_dec(c)).cast("double"), scale)
+def _money(c) -> F.Column:
+    """Exact decimal sum → double → round to cents (engine-identical)."""
+    return F.round(F.sum(_dec(c)).cast("double"), 2)
 
 
 # ===================================================================
@@ -908,9 +908,9 @@ def _components_scan_keys(spark, sf_dir, doc_ids):
     )
 
 
-def _simhash_sql(bits: int = dedup.SIMHASH_BITS, p: str = "") -> str:
+def _simhash_sql(p: str = "") -> str:
     votes = []
-    for b in range(bits):
+    for b in range(dedup.SIMHASH_BITS):
         votes.append(
             f"CASE WHEN list_sum(list_transform(vals, "
             f"v -> CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END)) > 0 "
@@ -926,7 +926,7 @@ def _simhash_sql(bits: int = dedup.SIMHASH_BITS, p: str = "") -> str:
 ), {p}vals_t AS (
     SELECT doc_id,
            list_transform(tokens,
-               t -> ('0x' || substr(md5(t), 1, {bits // 4}))::BIGINT) AS vals
+               t -> ('0x' || substr(md5(t), 1, {dedup.SIMHASH_BITS // 4}))::BIGINT) AS vals
     FROM {p}toks
     WHERE len(tokens) > 0
 ), {p}sigs AS (

@@ -65,40 +65,36 @@ def exists(root: str) -> bool:
     return bool(tf._versions(root))
 
 
-def fingerprint_parts(
-    sf_dir: str, params: str,
-    source_tables: Sequence[str] = ("documents",),
-) -> list[str]:
+def fingerprint_parts(sf_dir: str, params: str) -> list[str]:
     """The per-file stat lines an artifact's fingerprint (_digest)
-    hashes: one line per DATA file of every source table (size +
-    mtime_ns) plus the build-parameter line. Metadata files
+    hashes: one line per DATA file of the source ``documents`` table
+    (size + mtime_ns) plus the build-parameter line. Metadata files
     (_SUCCESS, .crc, ...) are excluded — they carry no row identity,
     and a writer touching _SUCCESS on an append would otherwise make
     every append look like an in-place rewrite and defeat append
     detection (round 13)."""
     parts = [f"params={params}"]
-    for t in source_tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            # recursive walk: a partitioned table (key=val subdirs)
-            # regenerated in place changes file stats INSIDE the
-            # subdirectories while the top-level entry list stays
-            # identical — a flat listdir would keep the stale
-            # fingerprint and serve a stale artifact
-            for dirpath, dirs, files in os.walk(path):
-                dirs.sort()
-                rel = os.path.relpath(dirpath, path)
-                for fn in sorted(files):
-                    if fn.startswith(("_", ".")):
-                        continue
-                    st = os.stat(os.path.join(dirpath, fn))
-                    parts.append(
-                        f"{t}/{rel}/{fn}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(path):
-            st = os.stat(path)
-            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-        else:
-            parts.append(f"{t}:absent")
+    path = os.path.join(sf_dir, "documents.parquet")
+    if os.path.isdir(path):
+        # recursive walk: a partitioned table (key=val subdirs)
+        # regenerated in place changes file stats INSIDE the
+        # subdirectories while the top-level entry list stays
+        # identical — a flat listdir would keep the stale
+        # fingerprint and serve a stale artifact
+        for dirpath, dirs, files in os.walk(path):
+            dirs.sort()
+            rel = os.path.relpath(dirpath, path)
+            for fn in sorted(files):
+                if fn.startswith(("_", ".")):
+                    continue
+                st = os.stat(os.path.join(dirpath, fn))
+                parts.append(
+                    f"documents/{rel}/{fn}:{st.st_size}:{st.st_mtime_ns}")
+    elif os.path.exists(path):
+        st = os.stat(path)
+        parts.append(f"documents:{st.st_size}:{st.st_mtime_ns}")
+    else:
+        parts.append("documents:absent")
     return parts
 
 
@@ -269,7 +265,6 @@ def load_or_build(
     memo: dict,
     memo_key: tuple,
     params: str = "",
-    source_tables: Sequence[str] = ("documents",),
     refresher: Callable | None = None,
 ) -> DataFrame:
     """The artifact access path shared by the plans-layer memo
@@ -287,7 +282,7 @@ def load_or_build(
         memo[memo_key] = builder().localCheckpoint()
         return memo[memo_key]
     root = table_root(base, sf_dir, name)
-    parts = fingerprint_parts(sf_dir, params, source_tables)
+    parts = fingerprint_parts(sf_dir, params)
     _ensure_table(
         spark, root, builder,
         _digest(parts),
@@ -304,7 +299,6 @@ def _ensure_group(
     names: Sequence[str],
     builder_all: Callable[[], tuple[DataFrame, ...]],
     params: str,
-    source_tables: Sequence[str],
     cluster: Sequence[str] = (),
     refresher: Callable | None = None,
 ) -> list[str]:
@@ -322,7 +316,7 @@ def _ensure_group(
     at deployment the partition count is the table layout planner's
     job, locally it is the session shuffle parallelism). Returns the
     member roots."""
-    parts = fingerprint_parts(sf_dir, params, source_tables)
+    parts = fingerprint_parts(sf_dir, params)
     fp = _digest(parts)
     meta = {"artifact_fingerprint": fp, "artifact_sources": parts}
     roots = [table_root(base, sf_dir, n) for n in names]
@@ -384,7 +378,6 @@ def load_or_build_many(
     memo: dict,
     memo_key: tuple,
     params: str = "",
-    source_tables: Sequence[str] = ("documents",),
     cluster: Sequence[str] = (),
     refresher: Callable | None = None,
 ) -> tuple[DataFrame, ...]:
@@ -399,8 +392,8 @@ def load_or_build_many(
             df.localCheckpoint() for df in builder_all())
         return memo[memo_key]
     roots = _ensure_group(
-        spark, base, sf_dir, names, builder_all, params,
-        source_tables, cluster, refresher,
+        spark, base, sf_dir, names, builder_all, params, cluster,
+        refresher,
     )
     memo[memo_key] = tuple(tf.read(spark, r) for r in roots)
     return memo[memo_key]
@@ -417,7 +410,6 @@ def scan_member_keys(
     col: str,
     keys: Sequence,
     params: str = "",
-    source_tables: Sequence[str] = ("documents",),
     cluster: Sequence[str] = (),
     refresher: Callable | None = None,
 ) -> DataFrame:
@@ -436,14 +428,13 @@ def scan_member_keys(
     base = artifacts_root()
     if base is None:
         tup = load_or_build_many(
-            spark, sf_dir, names, builder_all, memo, memo_key,
-            params, source_tables,
+            spark, sf_dir, names, builder_all, memo, memo_key, params,
         )
         df = tup[list(names).index(member)]
         return df.where(df[col].isin(keys))
     roots = _ensure_group(
-        spark, base, sf_dir, names, builder_all, params,
-        source_tables, cluster, refresher,
+        spark, base, sf_dir, names, builder_all, params, cluster,
+        refresher,
     )
     root = roots[list(names).index(member)]
     pruned, _read, _total = tf.scan_keys(spark, root, col, keys)
@@ -460,7 +451,6 @@ def scan_artifact_keys(
     col: str,
     keys: Sequence,
     params: str = "",
-    source_tables: Sequence[str] = ("documents",),
     cluster: bool = False,
     refresher: Callable | None = None,
 ) -> DataFrame:
@@ -480,12 +470,11 @@ def scan_artifact_keys(
     base = artifacts_root()
     if base is None:
         df = load_or_build(
-            spark, sf_dir, name, builder, memo, memo_key,
-            params, source_tables,
+            spark, sf_dir, name, builder, memo, memo_key, params,
         )
         return df.where(df[col].isin(keys))
     root = table_root(base, sf_dir, name)
-    parts = fingerprint_parts(sf_dir, params, source_tables)
+    parts = fingerprint_parts(sf_dir, params)
     _ensure_table(
         spark, root, builder,
         _digest(parts),

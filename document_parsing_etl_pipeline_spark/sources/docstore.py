@@ -56,6 +56,7 @@ the next request of every processor reads the new files.
 
 from __future__ import annotations
 
+import fcntl
 import operator
 import os
 import shutil
@@ -90,8 +91,8 @@ UPDATE_BUMP = "INTERVAL 1 DAY"
 STORE_TABLES = ("documents", "chunks", "charts")
 
 
-def _ingest_ts(id_col: str = "doc_id"):
-    return F.timestamp_seconds(F.lit(INGEST_EPOCH_S) + F.col(id_col))
+def _ingest_ts():
+    return F.timestamp_seconds(F.lit(INGEST_EPOCH_S) + F.col("doc_id"))
 
 
 def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
@@ -416,18 +417,22 @@ def rewrite_document(spark: SparkSession, root: str, name: str,
     the old checksum.
 
     The find, reads, writes and swaps run under a lock keyed on the
-    table's absolute path, so two mutations of one table in this
-    process run one after the other: each starts from the bytes the
-    other swapped in, and none is lost. Mutations of different tables
-    (a delete's chunks and charts) still run at the same time. Only
-    this process is covered: a rewrite by another process (no
-    cross-process file lock is taken) can still start from old bytes
-    and lose the other's write."""
+    table's absolute path and then under an exclusive ``fcntl.flock``
+    on ``root/.<name>.lock``, so two mutations of one table run one
+    after the other, whether they come from one process or from two
+    processes on one host: each starts from the bytes the other
+    swapped in, and none is lost. The lock file sits outside the table
+    directory, so ``catalog._file_version`` never lists it and taking
+    it shows readers no new version. Mutations of different tables (a
+    delete's chunks and charts) still run at the same time. Not
+    covered: hosts that share the store over a file system whose
+    ``flock`` does not reach across them."""
     path = os.path.join(root, name)
     key = os.path.abspath(path)
     with _REWRITE_LOCKS_GUARD:
         lock = _REWRITE_LOCKS.setdefault(key, threading.Lock())
-    with lock:
+    with lock, open(os.path.join(root, f".{name}.lock"), "a") as lock_file:
+        fcntl.flock(lock_file, fcntl.LOCK_EX)
         held = _SNAPSHOTS.get((spark.sparkContext.applicationId, key))
         table = (spark.read.schema(held[1].schema) if held
                  else spark.read).parquet(path)

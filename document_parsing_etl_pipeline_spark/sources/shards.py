@@ -20,14 +20,13 @@ def shard_assignments(
     docs: DataFrame,
     shard_tokens: int = 2048,
     bucket_size: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document shard ids: (doc_id, n_tokens, shard_id) where
     shard_id = floor(tokens-before-this-doc / shard_tokens) in doc_id
     order — the two-level prefix-sum plan (see module docstring)."""
     toks = docs.select(
         "doc_id",
-        F.size(parse.tokens(text_col)).cast("long").alias("n_tokens"),
+        F.size(parse.tokens("text")).cast("long").alias("n_tokens"),
         F.expr(f"doc_id div {int(bucket_size)}").alias("bucket"),
     )
     w_in = (

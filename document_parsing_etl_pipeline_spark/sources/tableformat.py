@@ -575,13 +575,12 @@ def read(
 
 def scan(
     spark: SparkSession, root: str, col: str, lo, hi,
-    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Manifest-pruned range scan: only files whose [min,max] stats
     intersect [lo,hi] are read; returns (df, files_read, files_total).
     The df still carries the filter — stats pruning is an I/O
     optimization, not the predicate."""
-    m = _load_manifest(root, version or _versions(root)[-1])
+    m = _load_manifest(root, _versions(root)[-1])
     # missing stats for col (mixed stats_cols history) → conservative
     # keep: the file is read and the row filter below decides
     keep = [
@@ -593,7 +592,7 @@ def scan(
         )
     ]
     if not keep:
-        empty = read(spark, root, version).limit(0)
+        empty = read(spark, root).limit(0)
         return empty.where(F.col(col).between(lo, hi)), 0, len(m["files"])
     df = _read_files(spark, root, keep)
     return df.where(F.col(col).between(lo, hi)), len(keep), len(m["files"])
@@ -601,7 +600,6 @@ def scan(
 
 def scan_keys(
     spark: SparkSession, root: str, col: str, keys: list,
-    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Manifest-pruned KEY-SET scan (the IN-list pushdown): only
     files whose [min,max] stats contain at least one of ``keys`` are
@@ -612,7 +610,7 @@ def scan_keys(
     index appends sorted by bucket hash), a probe whose key set is
     small relative to the table prunes to O(|keys|) files instead of
     scanning the whole snapshot."""
-    m = _load_manifest(root, version or _versions(root)[-1])
+    m = _load_manifest(root, _versions(root)[-1])
     ks = sorted(keys)
     import bisect
 
@@ -648,13 +646,12 @@ def scan_keys(
 
     keep = [e for e in m["files"] if _hit(e)]
     if not keep:
-        return read(spark, root, version).limit(0), 0, len(m["files"])
+        return read(spark, root).limit(0), 0, len(m["files"])
     return _read_files(spark, root, keep), len(keep), len(m["files"])
 
 
 def scan_membership(
     spark: SparkSession, root: str, col: str, keys: list,
-    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Manifest-pruned scan by BLOOM membership alone: only files
     whose per-file bloom says "might contain one of ``keys``" are
@@ -668,7 +665,7 @@ def scan_membership(
     O(index) data reads per batch to ~zero this way. Files without a
     bloom for ``col`` are conservatively read (range stats, when
     present, still apply first)."""
-    m = _load_manifest(root, version or _versions(root)[-1])
+    m = _load_manifest(root, _versions(root)[-1])
     ks = sorted(k for k in keys if k is not None)
     has_null = any(k is None for k in keys)
     probe = _lazy_bloom_probe(keys)
@@ -696,7 +693,7 @@ def scan_membership(
         )
     ]
     if not keep:
-        return read(spark, root, version).limit(0), 0, len(m["files"])
+        return read(spark, root).limit(0), 0, len(m["files"])
     return _read_files(spark, root, keep), len(keep), len(m["files"])
 
 

@@ -33,14 +33,14 @@ def read_event_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
     return df.withColumn("event_time", F.to_timestamp("ts"))
 
 
-def windowed_counts(events: DataFrame, window: str = "5 minutes",
-                    watermark: str = "10 minutes") -> DataFrame:
-    """Tumbling event-time windows with a watermark: late events
-    inside the watermark update their window; older ones are dropped
-    — the streaming upgrade of q_events_windowed."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 5-minute event-time windows with a 10-minute
+    watermark: late events inside the watermark update their window;
+    older ones are dropped — the streaming upgrade of
+    q_events_windowed."""
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window), "event_type")
+        events.withWatermark("event_time", "10 minutes")
+        .groupBy(F.window("event_time", "5 minutes"), "event_type")
         .agg(F.count("*").alias("n_events"),
              F.sum("value").alias("sum_value"))
         .select(

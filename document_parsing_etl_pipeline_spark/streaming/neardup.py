@@ -90,9 +90,6 @@ def ingest_batch(
     index_root: str,
     flags_root: str,
     batch_id: int,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: int = 50,
     validate_new_ids: bool = True,
     optimize_cadence: bool = True,
 ) -> bool:
@@ -112,8 +109,7 @@ def ingest_batch(
     with _aqe_disabled(spark):
         return _ingest_batch_run(
             spark, batch_df, index_root, flags_root, batch_id,
-            num_hashes, band_size, max_bucket, validate_new_ids,
-            optimize_cadence,
+            validate_new_ids, optimize_cadence,
         )
 
 
@@ -180,9 +176,6 @@ def _ingest_batch_run(
     index_root: str,
     flags_root: str,
     batch_id: int,
-    num_hashes: int,
-    band_size: int,
-    max_bucket: int | dict,
     validate_new_ids: bool,
     optimize_cadence: bool,
 ) -> bool:
@@ -208,7 +201,7 @@ def _ingest_batch_run(
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),
         ),
-        num_hashes=num_hashes, band_size=band_size, keep_empty=True,
+        keep_empty=True,
     ).localCheckpoint()
     bb = bb_all.where(F.col("bh").isNotNull())
     # the id spine: band 0 holds exactly one row per batch doc
@@ -272,7 +265,7 @@ def _ingest_batch_run(
     # job), replacing the fixed 4-files-per-batch constant. Pre-bloom
     # indexes keep the bh-clustered append (range stats are their
     # only pruning axis).
-    n_files = index_files_for(got["cnt"] * (num_hashes // band_size))
+    n_files = index_files_for(got["cnt"] * 4)  # 8 hashes, bands of 2
     if has_bh_bloom:
         buckets_out = bb.coalesce(n_files)
     else:
@@ -344,9 +337,7 @@ def _ingest_batch_run(
         # actions + reconciliation join into a single action; round
         # 12 cut its plan from 7 exchanges to 2 — the leg's cost is
         # fixed per-stage latency, not data volume)
-        flags = lsh_flag_ingest(
-            batch_ids, bb, index, max_bucket
-        )
+        flags = lsh_flag_ingest(batch_ids, bb, index)
         # index update is an APPEND, not a MERGE (round-8 throughput
         # fix): ingest doc_ids are new by contract — ENFORCED by
         # _assert_ids_new's stats-pruned check above — and replays
@@ -481,15 +472,13 @@ OPT_MIN_FILE_SAVING = 24
 def maybe_optimize_index(
     spark: SparkSession,
     index_root: str,
-    target_file_rows: int = OPT_TARGET_FILE_ROWS,
-    ftre: int = OPT_FTRE,
-    horizon: int = OPT_PAYBACK_HORIZON,
     min_file_saving: int = OPT_MIN_FILE_SAVING,
 ) -> bool:
     """Re-cluster the standing index on bh iff the planner rule says
-    the rewrite pays back: file_saving = n_files - ceil(rows/target),
-    payback_batches = ceil(rows / (file_saving * ftre)); OPTIMIZE
-    when file_saving >= min_file_saving AND payback <= horizon. The
+    the rewrite pays back: file_saving = n_files -
+    ceil(rows / OPT_TARGET_FILE_ROWS), payback_batches =
+    ceil(rows / (file_saving * OPT_FTRE)); OPTIMIZE when
+    file_saving >= min_file_saving AND payback <= OPT_PAYBACK_HORIZON. The
     min-saving floor is what makes this a CADENCE rather than churn:
     without it the payback test alone fires on every batch of a
     small index (fixed per-file cost dominates tiny row counts) and
@@ -509,15 +498,15 @@ def maybe_optimize_index(
     rows = sum(e["rows"] for e in head["files"])
     if rows == 0:
         return False
-    opt_files = -(-rows // target_file_rows)
+    opt_files = -(-rows // OPT_TARGET_FILE_ROWS)
     saving = n_files - opt_files
     if saving < min_file_saving:
         return False
-    payback = -(-rows // (saving * ftre))
-    if payback > horizon:
+    payback = -(-rows // (saving * OPT_FTRE))
+    if payback > OPT_PAYBACK_HORIZON:
         return False
     tf.optimize_table(
-        spark, index_root, target_file_rows, cluster_by="bh"
+        spark, index_root, OPT_TARGET_FILE_ROWS, cluster_by="bh"
     )
     return True
 
@@ -543,16 +532,11 @@ def stream_neardup_ingest(
     index_root: str,
     flags_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: int = 50,
-    validate_new_ids: bool = True,
-    optimize_cadence: bool = True,
 ):
     """Start the foreachBatch near-dup ingest over a document stream
-    (needs doc_id + text columns). The index table must exist
-    (create_index). Returns the StreamingQuery.
+    (needs doc_id + text columns), run with an available-now trigger.
+    The index table must exist (create_index). Returns the
+    StreamingQuery.
 
     Flags-path read contract: a flag partition at
     ``flags_root/batch_id=N`` is AUTHORITATIVE only for
@@ -564,17 +548,11 @@ def stream_neardup_ingest(
     commit), so watermark-honoring readers never see it either way."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(
-            spark, batch_df, index_root, flags_root, batch_id,
-            num_hashes=num_hashes, band_size=band_size,
-            max_bucket=max_bucket, validate_new_ids=validate_new_ids,
-            optimize_cadence=optimize_cadence,
-        )
+        ingest_batch(spark, batch_df, index_root, flags_root, batch_id)
 
-    writer = (
+    return (
         doc_stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -122,11 +122,7 @@ def _estimate(hist: dict[str, int], n: int, q: float, b: int) -> float:
 
 
 def quantile_stream(
-    stream: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value",
-    b: int = DEFAULT_B,
-    max_buckets: int = 512,
+    stream: DataFrame, max_buckets: int = 512,
 ) -> DataFrame:
     """Per-key streaming p50/p95/p99 with bounded histogram state.
 
@@ -143,10 +139,10 @@ def quantile_stream(
             hist_s, n, b_eff, seq = state.get
             hist = {k: int(v) for k, v in json.loads(hist_s).items()}
         else:
-            hist, n, b_eff, seq = {}, 0, b, 0
+            hist, n, b_eff, seq = {}, 0, DEFAULT_B, 0
         added = 0
         for pdf in pdfs:
-            for v in pdf[value_col]:
+            for v in pdf["value"]:
                 tok = _bucket_token(float(v), b_eff)
                 hist[tok] = hist.get(tok, 0) + 1
                 added += 1
@@ -175,7 +171,7 @@ def quantile_stream(
             ],
         )
 
-    return stream.groupBy(key_col).applyInPandasWithState(
+    return stream.groupBy("key").applyInPandasWithState(
         fold_fn,
         outputStructType=QUANTILE_OUT_SCHEMA,
         stateStructType=QUANTILE_STATE_SCHEMA,

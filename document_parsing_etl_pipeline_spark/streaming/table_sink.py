@@ -77,20 +77,19 @@ def stream_merge_into_table(
     key: str,
     seq_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start a foreachBatch writer that MERGEs each micro-batch into
-    the table at ``root`` exactly once (idempotent under checkpoint
-    replay). The table must exist (create_table) with stats on
-    ``key``. Returns the StreamingQuery."""
+    """Start a foreachBatch writer, with an available-now trigger,
+    that MERGEs each micro-batch into the table at ``root`` exactly
+    once (idempotent under checkpoint replay). The table must exist
+    (create_table) with stats on ``key``. Returns the
+    StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch(spark, batch_df, root, key, seq_col, batch_id)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

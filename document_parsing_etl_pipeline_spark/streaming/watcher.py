@@ -32,7 +32,6 @@ DOC_SCHEMA = StructType([
 
 
 def watch_documents(spark: SparkSession, watch_dir: str,
-                    fmt: str = "json",
                     max_files_per_trigger: int = 16) -> DataFrame:
     """readStream over a drop directory (one JSON doc per line).
 
@@ -43,7 +42,7 @@ def watch_documents(spark: SparkSession, watch_dir: str,
     the raw parse+chunk+write rate, smaller ones cut per-doc
     latency."""
     return (
-        spark.readStream.format(fmt)
+        spark.readStream.format("json")
         .schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(watch_dir)

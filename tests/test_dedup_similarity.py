@@ -153,7 +153,8 @@ def test_edit_distance_pairs_on_lsh_candidates(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     df = _docs(spark, base, base.replace("dog", "cat"),
                "zz yy xx ww vv uu tt ss")
-    pairs = dedup.edit_distance_pairs(df, max_dist=20).collect()
+    pairs = dedup.edit_distance_pairs(
+        df, cands=dedup.minhash_lsh_candidates(df), max_dist=20).collect()
     assert {(p.doc_a, p.doc_b) for p in pairs} == {(0, 1)}
     assert pairs[0].edit_dist == 3  # dog -> cat: 3 substitutions
 
@@ -187,7 +188,8 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     # the test (the default banding trades recall for precision)
     got = {(r.doc_a, r.doc_b): r
            for r in dedup.containment_pairs(
-               df, band_size=1, threshold=0.9
+               df, cands=dedup.minhash_lsh_candidates(df, band_size=1),
+               threshold=0.9,
            ).collect()}
     assert (0, 1) in got
     r = got[(0, 1)]

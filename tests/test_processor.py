@@ -556,7 +556,9 @@ def test_mutations_persist_for_open_and_fresh_processors(spark, tmp_path):
     processor that made them, one opened and warmed before them and a
     fresh one all read the change in documents, chunks and charts. The
     other documents read as before, the chunks file stays sorted on
-    (doc_id, chunk_index) and no scratch directory is left behind."""
+    (doc_id, chunk_index) and no scratch directory is left behind: the
+    store root holds the tables and the rewrite lock file of each
+    table a mutation touched."""
     import glob
     import os
 
@@ -585,7 +587,9 @@ def test_mutations_persist_for_open_and_fresh_processors(spark, tmp_path):
         keys = [(r["doc_id"], r["chunk_index"]) for r in pq.read_table(
             path, columns=["doc_id", "chunk_index"]).to_pylist()]
         assert keys == sorted(keys)
-    assert sorted(os.listdir(root)) == ["charts", "chunks", "documents"]
+    assert sorted(os.listdir(root)) == [
+        ".charts.lock", ".chunks.lock", ".documents.lock",
+        "charts", "chunks", "documents"]
 
 
 def test_mutations_read_with_the_snapshot_schema(spark, tmp_path):
@@ -774,3 +778,52 @@ def test_concurrent_mutations_of_one_file_lose_nothing(spark, tmp_path):
     assert not {deleted for _, deleted in trials} & set(langs)
     assert all(fresh.get_document_chunks(deleted).count() == 0
                for _, deleted in trials)
+
+
+_HOLD_TABLE_LOCK = """
+import fcntl, os, sys, time
+lock, path = sys.argv[1], sys.argv[2]
+with open(lock, "a") as f:
+    fcntl.flock(f, fcntl.LOCK_EX)
+    before = os.stat(path)
+    print("locked", flush=True)
+    time.sleep(2)
+    after = os.stat(path)
+    print(time.time(), (before.st_ino, before.st_mtime_ns)
+          == (after.st_ino, after.st_mtime_ns), flush=True)
+"""
+
+
+def test_mutation_waits_for_another_process_holding_the_table_lock(
+        spark, tmp_path):
+    """A plain-Python process holds the documents table's file lock for
+    2 s: an update in this process does not swap the table's file while
+    the other holds it, and lands once it lets go."""
+    import subprocess
+    import sys
+    import time
+
+    from conftest import SF_DIR
+    from document_parsing_etl_pipeline_spark.catalog import load_table
+
+    root = tmp_path / "store"
+    proc = DocumentProcessor(spark, store_root=str(root))
+    proc.process_documents(load_table(spark, SF_DIR, "documents"))
+    doc_id = proc.get_documents(limit=1).collect()[0].doc_id
+    (file,) = (root / "documents").glob("*.parquet")
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _HOLD_TABLE_LOCK,
+         str(root / ".documents.lock"), str(file)],
+        stdout=subprocess.PIPE, text=True)
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        proc.update_document(doc_id, {"lang": "zz"})
+        landed = time.time()
+        out, _ = holder.communicate(timeout=60)
+    finally:
+        holder.kill()
+    released, unchanged = out.split()
+    assert unchanged == "True"
+    assert landed >= float(released)
+    fresh = DocumentProcessor(spark, store_root=str(root))
+    assert fresh.get_documents(limit=1).collect()[0].lang == "zz"

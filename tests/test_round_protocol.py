@@ -614,26 +614,20 @@ def _public(tree: ast.Module) -> dict[str, ast.stmt]:
     return {k: v for k, v in out.items() if not k.startswith("_")}
 
 
-def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
-    """Public top-level functions and upper-case constants of the
-    package that no product module uses, as
-    ``<path in the package>:<name>``. A use of
-    ``name`` from module ``m`` is ``<alias>.name`` where the alias
-    names ``m`` (``from <pkg> import m [as alias]``, ``import m as
-    alias``, also when star-imported from the module that binds it);
-    ``from m import name``; a bare ``name`` in ``m`` outside the
-    statement that defines it, or in a module that does
-    ``from m import *``; or an ``@register`` decorator on the function
-    (the query registry calls what it registers)."""
-    paths = _product_modules(root)
+def _imports(root: pathlib.Path, paths: list[pathlib.Path]):
+    """Parse ``paths``; return (trees, aliases, stars, names), each
+    keyed on the dotted module: its module aliases (``from <pkg> import
+    m [as alias]``, ``import m as alias``), its star-imported modules,
+    and its other imported names (``from m import name [as local]``)
+    as ``local -> (m, name)``."""
     trees = {_dotted(root, p): ast.parse(p.read_text()) for p in paths}
-    aliases, stars, used = {}, {}, set()
+    aliases, stars, names = {}, {}, {}
     for path in paths:
         mod = _dotted(root, path)
         package = mod.split(".")
         if path.stem != "__init__":
             package.pop()
-        aliases[mod], stars[mod] = {}, []
+        aliases[mod], stars[mod], names[mod] = {}, [], {}
         for node in ast.walk(trees[mod]):
             if isinstance(node, ast.Import):
                 aliases[mod].update((a.asname, a.name) for a in node.names
@@ -650,19 +644,36 @@ def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
                     elif f"{base}.{a.name}" in trees:
                         aliases[mod][a.asname or a.name] = f"{base}.{a.name}"
                     else:
-                        used.add((base, a.name))
+                        names[mod][a.asname or a.name] = (base, a.name)
+    return trees, aliases, stars, names
 
-    def seen(mod, done=()):
-        """(alias map, star-imported modules) visible in ``mod``."""
-        amap, mods = dict(aliases[mod]), list(stars[mod])
-        for s in stars[mod]:
-            if s in trees and s not in done:
-                a, m = seen(s, (*done, mod))
-                amap, mods = {**a, **amap}, mods + m
-        return amap, mods
 
+def _seen(mod, aliases, stars, trees, done=()):
+    """(alias map, star-imported modules) visible in ``mod``."""
+    amap, mods = dict(aliases[mod]), list(stars[mod])
+    for s in stars[mod]:
+        if s in trees and s not in done:
+            a, m = _seen(s, aliases, stars, trees, (*done, mod))
+            amap, mods = {**a, **amap}, mods + m
+    return amap, mods
+
+
+def uncalled_functions(root: pathlib.Path = _PKG.parent) -> list[str]:
+    """Public top-level functions and upper-case constants of the
+    package that no product module uses, as
+    ``<path in the package>:<name>``. A use of
+    ``name`` from module ``m`` is ``<alias>.name`` where the alias
+    names ``m`` (``from <pkg> import m [as alias]``, ``import m as
+    alias``, also when star-imported from the module that binds it);
+    ``from m import name``; a bare ``name`` in ``m`` outside the
+    statement that defines it, or in a module that does
+    ``from m import *``; or an ``@register`` decorator on the function
+    (the query registry calls what it registers)."""
+    paths = _product_modules(root)
+    trees, aliases, stars, names = _imports(root, paths)
+    used = {v for m in names.values() for v in m.values()}
     for mod, tree in trees.items():
-        amap, mods = seen(mod)
+        amap, mods = _seen(mod, aliases, stars, trees)
         for n in ast.walk(tree):
             if (isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
                     and n.value.id in amap):
@@ -747,6 +758,145 @@ def test_caller_lint_catches_a_planted_copy(tmp_path):
         "sources/docstore.py:upsert", "sources/docstore.py:write_bucketed",
         "sources/tableformat.py:history",
         "streaming/events.py:sessionize"]
+
+
+# ------------------------------------------------- options have a setter
+
+def _defaults(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """``fn``'s parameters with a default, as (position, name); a
+    keyword-only parameter has no position."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [(i, p.arg) for i, p in enumerate(pos) if i >= first] + [
+        (None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None]
+
+
+def unset_options(root: pathlib.Path = _PKG.parent) -> list[str]:
+    """Parameters with a default, of the package's functions and
+    methods (nested ones too), that no call sets, as
+    ``<path in the package>:<qualified name>:<parameter>``. Calls are
+    read from the product modules and ``tests/``. A call sets a
+    parameter when it passes it by keyword or by position, or passes
+    ``*args`` / ``**kwargs`` (which set every parameter);
+    ``functools.partial(f, ...)`` sets what it binds of ``f``. A call
+    resolves through the aliases and imports ``uncalled_functions``
+    reads (a class resolves to its ``__init__``); a call that does not
+    resolve (a method call, a local name) sets the parameters of every
+    package function or method of that name."""
+    paths = _product_modules(root) + sorted((root / "tests").rglob("*.py"))
+    trees, aliases, stars, names = _imports(root, paths)
+    top, by_name, offset, where = {}, {}, {}, []
+
+    def collect(node, mod, rel, prefix, in_class):
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, ast.ClassDef):
+                collect(n, mod, rel, f"{prefix}{n.name}.", True)
+                init = [m for m in n.body if isinstance(m, ast.FunctionDef)
+                        and m.name == "__init__"]
+                if init:
+                    by_name.setdefault(n.name, []).append(init[0])
+                    if not prefix:
+                        top[(mod, n.name)] = init[0]
+            elif isinstance(n, ast.FunctionDef):
+                offset[n] = int(in_class and not any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in n.decorator_list))
+                by_name.setdefault(n.name, []).append(n)
+                if not prefix:
+                    top[(mod, n.name)] = n
+                where.append((rel, prefix + n.name, n))
+                collect(n, mod, rel, f"{prefix}{n.name}.", False)
+            else:
+                collect(n, mod, rel, prefix, in_class)
+
+    for path in paths:
+        if path.relative_to(root).parts[0] == _PKG.name:
+            mod = _dotted(root, path)
+            rel = path.relative_to(root / _PKG.name).as_posix()
+            collect(trees[mod], mod, rel, "", False)
+
+    def targets(mod, func, amap, mods):
+        if isinstance(func, ast.Name):
+            keys = [names[mod].get(func.id), (mod, func.id),
+                    *((m, func.id) for m in mods)]
+        elif isinstance(func, ast.Attribute):
+            value = func.value.id if isinstance(func.value, ast.Name) else None
+            keys = [(amap[value], func.attr)] if value in amap else []
+        else:
+            return []
+        key = next((k for k in keys if k in top), None)
+        if key:
+            return [top[key]]
+        return by_name.get(func.id if isinstance(func, ast.Name)
+                           else func.attr, [])
+
+    set_ = set()
+    for mod, tree in trees.items():
+        amap, mods = _seen(mod, aliases, stars, trees)
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = call.func, call.args
+            if (getattr(func, "id", None) or getattr(func, "attr", None)) \
+                    == "partial" and args:
+                func, args = args[0], args[1:]
+            kw = {k.arg for k in call.keywords}
+            star = None in kw or any(isinstance(a, ast.Starred) for a in args)
+            for fn in targets(mod, func, amap, mods):
+                set_.update((fn, name) for i, name in _defaults(fn)
+                            if star or name in kw or (
+                                i is not None and i < len(args) + offset[fn]))
+    return [f"{rel}:{qual}:{name}" for rel, qual, fn in where
+            for _, name in _defaults(fn) if (fn, name) not in set_]
+
+
+def test_package_options_are_set_by_a_caller():
+    """Every parameter with a default of the package's functions and
+    methods is set by some call: an option no call sets is a
+    constant."""
+    assert unset_options() == []
+
+
+def test_option_lint_catches_each_spelling(tmp_path):
+    pkg = tmp_path / _PKG.name
+    pkg.mkdir()
+    (tmp_path / "scripts").mkdir()
+    (tmp_path / "tests").mkdir()
+    (pkg / "ops.py").write_text(
+        "def kw(df, a=1, b=2):\n    pass\n"
+        "def pos(df, a=1, b=2):\n    pass\n"
+        "def star(df, a=1, b=2):\n    pass\n"
+        "def dstar(df, *, a=1):\n    pass\n"
+        "def part(df, a=1, b=2):\n    pass\n"
+        "def inner(df, n=64, m=3):\n    pass\n"
+        "def wrapper(df, n=64):\n    return inner(df, n=n)\n"
+        "class Store:\n"
+        "    def __init__(self, root, cache=True):\n        pass\n"
+        "    def read(self, key, limit=10):\n        pass\n"
+        "    def write(self, key, mode='a'):\n        pass\n"
+        "def outer(df):\n"
+        "    def one(x, k=3):\n        pass\n"
+        "    return one(df)\n")
+    (tmp_path / "scripts" / "probe.py").write_text(
+        "import functools\n"
+        "from document_parsing_etl_pipeline_spark import ops as o\n"
+        "from document_parsing_etl_pipeline_spark.ops import pos, Store\n"
+        "o.kw(df, b=3)\n"
+        "pos(df, 5)\n"
+        "o.star(df, *args)\n"
+        "o.dstar(df, **opts)\n"
+        "f = functools.partial(o.part, b=4)\n"
+        "o.wrapper(df)\n"
+        "Store('r', cache=False).read('k', 5)\n")
+    (tmp_path / "tests" / "test_ops.py").write_text(
+        "from document_parsing_etl_pipeline_spark import ops\n"
+        "ops.kw(None, a=2)\n")
+    assert unset_options(tmp_path) == [
+        "ops.py:pos:b", "ops.py:part:a", "ops.py:inner:m",
+        "ops.py:wrapper:n", "ops.py:Store.write:mode",
+        "ops.py:outer.one:k"]
 
 
 # ------------------------------------------------- exhaustive tier names
