@@ -270,9 +270,11 @@ def containment_pairs(
     )
 
 
-def edit_distance_pairs(
-    docs: DataFrame, cands: DataFrame, max_dist: int = 20,
-) -> DataFrame:
+# largest kept edit distance over the 80-character prefixes
+EDIT_MAX_DIST = 20
+
+
+def edit_distance_pairs(docs: DataFrame, cands: DataFrame) -> DataFrame:
     """Edit-distance verification of LSH candidates: Levenshtein on
     the first 80 characters — the character-level near-dup check that
     catches small in-place edits token-set Jaccard misses.
@@ -297,18 +299,19 @@ def edit_distance_pairs(
         )
     )
     # bounded DP: levenshtein with a threshold computes the exact
-    # distance for pairs within max_dist and returns -1 beyond it, in
-    # O(max_dist·prefix) per pair instead of O(prefix²) — the -1 rows
-    # are exactly the rows the <= max_dist filter discards, so the
+    # distance for pairs within EDIT_MAX_DIST and returns -1 beyond
+    # it, in O(EDIT_MAX_DIST·prefix) per pair instead of O(prefix²) —
+    # the -1 rows are exactly the rows the <= EDIT_MAX_DIST filter
+    # discards, so the
     # kept output is identical to the unbounded form (the oracle
     # keeps the full DP; parity is on kept rows only, by construction)
     return (
         joined.select(
             "doc_a", "doc_b",
-            F.levenshtein("pa", "pb", max_dist).cast("long")
+            F.levenshtein("pa", "pb", EDIT_MAX_DIST).cast("long")
             .alias("edit_dist"),
         )
-        .where(F.col("edit_dist").between(0, max_dist))
+        .where(F.col("edit_dist").between(0, EDIT_MAX_DIST))
     )
 
 
@@ -464,10 +467,13 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
 
 # ---------------------------------------------------- embedding near-dup
 
+# vectors per id-range block of the embedding all-pairs grid
+EMBED_BLOCK_SIZE = 2048
+
+
 def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    block_size: int = 2048,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold).
 
@@ -475,7 +481,7 @@ def embedding_near_dup(
     grouped into id-range blocks, block pairs (a ≤ b) are
     cross-joined, and each block pair is one vectorized numpy matmul
     inside mapInPandas. Each task touches two blocks (bounded memory:
-    2 × block_size × dim floats) — the pattern that carries exact
+    2 × EMBED_BLOCK_SIZE × dim floats) — the pattern that carries exact
     all-pairs verification at cluster scale; for sub-quadratic
     scaling use LSH (minhash) or the IVF-bucketed path in
     similarity.py.
@@ -486,7 +492,8 @@ def embedding_near_dup(
     emb = embeddings.select(
         F.col("vec_id").alias("vid"),
         "embedding",
-        F.floor(F.col("vec_id") / F.lit(block_size)).cast("long").alias("block"),
+        F.floor(F.col("vec_id") / F.lit(EMBED_BLOCK_SIZE))
+        .cast("long").alias("block"),
     )
     blocks = emb.groupBy("block").agg(
         F.collect_list("vid").alias("ids"),
@@ -797,11 +804,14 @@ def lsh_flag_against_index(
     )
 
 
+# per-source bucket cap of the streaming ingest's flag join
+INGEST_MAX_BUCKET = 50
+
+
 def lsh_flag_ingest(
     batch_ids: DataFrame,
     batch_buckets: DataFrame,
     index_buckets: DataFrame,
-    max_bucket: int | dict = 50,
 ) -> DataFrame:
     """One-pass ingest flagging: each batch doc against the STANDING
     index AND against its own batch's smaller-id docs, in a single
@@ -829,7 +839,7 @@ def lsh_flag_ingest(
     from pyspark.sql.window import Window
 
     wkey = Window.partitionBy("band", "bh")
-    cap = band_cap_col(max_bucket)
+    cap = band_cap_col(INGEST_MAX_BUCKET)
     both = (
         index_buckets.select(
             "band", "bh", "doc_id", F.lit(False).alias("own"))
@@ -883,7 +893,6 @@ SEMDEDUP_MATERIALIZE_MIN = 100_000
 
 def semdedup_keep(
     embeddings: DataFrame,
-    num_centroids: int | None = None,
     threshold: float = 0.3,
     materialize: bool | None = None,
 ) -> DataFrame:
@@ -900,7 +909,7 @@ def semdedup_keep(
 
     Scale shape: the centroid assignment is a broadcast join + window
     argmax (corpus.assign_nearest_centroid); pairing shuffles once on
-    centroid_id. ``num_centroids=None`` (the default) DERIVES
+    centroid_id. The centroid count is DERIVED,
     k = ceil(n / SEMDEDUP_TARGET_POP) from the corpus size, so the
     expected cluster population is a constant and total pair work is
     O(n · pop) — exactly the SemDeDup recipe; a fixed k would let
@@ -912,12 +921,10 @@ def semdedup_keep(
     from .corpus import assign_nearest_centroid
     from .similarity import cosine_sim
 
-    if num_centroids is None or materialize is None:
-        n = embeddings.count()
-        if num_centroids is None:
-            num_centroids = max(1, -(-n // SEMDEDUP_TARGET_POP))
-        if materialize is None:
-            materialize = n >= SEMDEDUP_MATERIALIZE_MIN
+    n = embeddings.count()
+    num_centroids = max(1, -(-n // SEMDEDUP_TARGET_POP))
+    if materialize is None:
+        materialize = n >= SEMDEDUP_MATERIALIZE_MIN
     assign = assign_nearest_centroid(
         embeddings, num_centroids=num_centroids
     ).select("vec_id", "centroid_id")
@@ -1143,14 +1150,15 @@ def span_longest_match(docs: DataFrame, k: int = 12) -> DataFrame:
     )
 
 
+# word n-gram width of the set-similarity join's shingles
+SETSIM_SHINGLE_N = 3
+
+
 def _shingles(
     docs: DataFrame, text_col: str, shingle_n: int,
 ) -> DataFrame:
     """The distinct (doc_id, term) word-shingle relation — the base
-    of every AllPairs derivation, split out so the scoped incremental
-    path can shingle JUST the ingest batch (batch-linear) to learn
-    which posting lists to probe, without touching the standing
-    index."""
+    of every AllPairs derivation."""
     toks = docs.select(
         "doc_id",
         parse.tokens(text_col).alias("ws"),
@@ -1197,13 +1205,8 @@ def _shingle_prefixes(
 def prefixes_from_shingles(
     sh: DataFrame, num: int, den: int,
 ) -> DataFrame:
-    """The df-ranked prefix relation DERIVED from an existing shingle
-    table — split out (round 13) because this is the one index member
-    that must recompute on corpus growth (global df ranks drift, so
-    old docs' prefixes change), and deriving it from the
-    incrementally-APPENDED shingle relation skips the text
-    re-tokenize/explode pass entirely: one df group-agg + per-doc
-    windows over (doc_id, term) rows."""
+    """The df-ranked prefix relation of a shingle table: one df
+    group-agg + per-doc windows over (doc_id, term) rows."""
     from pyspark.sql.window import Window
 
     dfreq = sh.groupBy("term").agg(F.count("*").cast("long").alias("df"))
@@ -1465,16 +1468,14 @@ def _verify_pairs(
 
 def setsim_prefix_join(
     docs: DataFrame,
-    text_col: str = "text",
     threshold_num: int = 3,
     threshold_den: int = 5,
-    shingle_n: int = 3,
     materialize: bool = True,
     suffix_buckets: int | None = 128,
 ) -> DataFrame:
     """EXACT all-pairs set-similarity join via prefix filtering
     (AllPairs, Bayardo et al. 2007; PPJoin length filter, Xiao et
-    al. 2008): every document pair whose word ``shingle_n``-gram
+    al. 2008): every document pair whose word SETSIM_SHINGLE_N-gram
     Jaccard >= threshold_num/threshold_den — ZERO recall loss,
     unlike the capped-LSH pipelines (minhash/simhash), yet never the
     all-pairs product either.
@@ -1505,7 +1506,7 @@ def setsim_prefix_join(
     """
     num, den = threshold_num, threshold_den
     sh, pref = _shingle_prefixes(
-        docs, text_col, num, den, shingle_n, materialize
+        docs, "text", num, den, SETSIM_SHINGLE_N, materialize
     )
     a = pref.select(
         "term", F.col("doc_id").alias("doc_a"),
@@ -1587,7 +1588,7 @@ def setsim_index(
     bounded verification — no corpus-wide shingle/df/rank/signature/
     array pass per ingest."""
     sh, pref = _shingle_prefixes(
-        docs, "text", threshold_num, threshold_den, 3, True
+        docs, "text", threshold_num, threshold_den, SETSIM_SHINGLE_N, True
     )
     return sh, pref, suffix_histograms(sh), doc_term_arrays(sh)
 
@@ -1598,7 +1599,6 @@ def setsim_incremental_pairs(
     threshold_num: int = 3,
     threshold_den: int = 5,
     precomputed: tuple[DataFrame, DataFrame] | None = None,
-    scoped=None,
 ) -> DataFrame:
     """EXACT similarity pairs with at least one side in the ingest
     BATCH (``batch_col`` boolean on ``docs``): the quadratic half of
@@ -1621,43 +1621,17 @@ def setsim_incremental_pairs(
     this call's cost the true per-ingest work (batch posting join +
     filter probes + candidate-bounded verification); omitting it
     rebuilds everything inline (identical result, measured ~2x the
-    wall at sf0.1).
-
-    ``scoped``: a key-scoped index reader ``(member, col, keys) ->
-    DataFrame`` over the standing index's persisted members ('pref' /
-    'hist' / 'arrays'), rows exactly filtered to ``keys`` — the
-    round-13 100 TB read path (plans layer wires it to
-    artifacts.scan_member_keys when the index is an artifact-table
-    store). When provided it REPLACES ``precomputed``: the batch is
-    shingled batch-side (batch-linear, no index read) to learn its
-    term set, ONE term-scoped posting read serves both join sides
-    (batch prefix rows are a subset of it — every batch prefix term
-    is a batch shingle), and the signature/array probes are scoped to
-    the surviving candidates' doc_ids. File pruning happens in the
-    reader (manifest range stats on the clustered lead column +
-    membership bloom); row-exactness is the reader's contract, so the
-    pair set is identical to the unscoped path — which is what the
-    parity test asserts."""
+    wall at sf0.1)."""
     num, den = threshold_num, threshold_den
     hist = docsets = None
-    if scoped is not None:
-        batch_terms = [
-            r[0] for r in
-            _shingles(docs.where(F.col(batch_col)), "text", 3)
-            .select("term").distinct().collect()
-        ]
-        # one scoped posting read feeds the batch side, the corpus
-        # side, and (via the join) the candidate relation — checkpoint
-        # it so the pruned read runs once, not per reference
-        pref = scoped("pref", "term", batch_terms).localCheckpoint()
-        sh = None
-    elif precomputed is not None:
+    if precomputed is not None:
         if len(precomputed) == 4:
             sh, pref, hist, docsets = precomputed
         else:
             sh, pref = precomputed
     else:
-        sh, pref = _shingle_prefixes(docs, "text", num, den, 3, True)
+        sh, pref = _shingle_prefixes(
+            docs, "text", num, den, SETSIM_SHINGLE_N, True)
     flags = docs.select("doc_id", F.col(batch_col).alias("_fb"))
     preff = pref.join(flags, "doc_id")
     a = preff.where(F.col("_fb")).select(
@@ -1695,37 +1669,12 @@ def setsim_incremental_pairs(
         )
     )
     cands = _positional_bound_filter(joined, num, den)
-    if scoped is not None:
-        # candidate doc_ids bound the signature/array probes: the
-        # checkpoint makes the posting join run once (the collect and
-        # the downstream filter both consume it), and the id lists
-        # are candidate-linear — the batch×bucket fanout the prefix
-        # filter already bounded, never corpus-linear
-        cands = cands.localCheckpoint()
-        ids = [
-            int(r[0]) for r in cands.select(
-                F.explode(F.array("doc_a", "doc_b")).alias("d")
-            ).distinct().collect()
-        ]
-        cands = _suffix_histogram_filter(
-            cands, None, num, den,
-            hist=scoped("hist", "doc_id", ids),
-        ).localCheckpoint()
-        ids2 = [
-            int(r[0]) for r in cands.select(
-                F.explode(F.array("doc_a", "doc_b")).alias("d")
-            ).distinct().collect()
-        ]
-        return _verify_pairs(
-            cands, None, num, den,
-            docsets=scoped("arrays", "doc_id", ids2),
-        )
     cands = _suffix_histogram_filter(cands, sh, num, den, hist=hist)
     return _verify_pairs(cands, sh, num, den, docsets=docsets)
 
 
 def incremental_components(
-    standing_pairs: DataFrame | None,
+    standing_pairs: DataFrame,
     batch_pairs: DataFrame,
     max_iter: int = 20,
     standing_components: DataFrame | None = None,
@@ -1749,15 +1698,7 @@ def incremental_components(
     relations plus one broadcast-ish join against the map. Pass
     ``standing_components`` (the map from the previous snapshot) to
     skip recomputing it — the production call shape; when omitted it
-    is derived from standing_pairs here. With standing_components
-    given, ``standing_pairs`` may be None (the artifact-refresh call
-    shape, round 13): the standing vertex set is then the map's own
-    doc_ids — exactly the standing pairs' endpoint set, because a
-    component map covers precisely the docs its pair relation
-    mentions."""
-    if standing_pairs is None and standing_components is None:
-        raise ValueError(
-            "need standing_pairs or standing_components")
+    is derived from standing_pairs here."""
     comps0 = (
         standing_components
         if standing_components is not None
@@ -1824,14 +1765,9 @@ def incremental_components(
         )
     # expand: every vertex v maps through node(v) = standing label or
     # itself, then through the contracted result if present
-    standing_verts = (
-        comps0.select("doc_id")
-        if standing_pairs is None
-        else standing_pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(standing_pairs.select(F.col("doc_b").alias("doc_id")))
-    )
     verts = (
-        standing_verts
+        standing_pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(standing_pairs.select(F.col("doc_b").alias("doc_id")))
         .unionByName(batch_pairs.select(F.col("doc_a").alias("doc_id")))
         .unionByName(batch_pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()

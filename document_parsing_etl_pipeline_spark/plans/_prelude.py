@@ -44,7 +44,7 @@ from ..catalog import load_table, spread_scan
 from ..operators import charts as charts_op
 from ..operators import chunking, corpus, dedup, entities, parse, similarity
 from ..operators import text_analysis as ta
-from ..sources import artifacts, docstore
+from ..sources import docstore
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -350,7 +350,25 @@ SELECT id AS doc_id, min(label) AS component_id FROM walk GROUP BY id
 """
 
 
+# The standing dedup relations (signatures, verified candidates,
+# pairs, components, the setsim index): each is built once per
+# (session, corpus) and every consumer reads the same localCheckpoint.
 _NEARDUP_MEMO: dict = {}
+
+
+def _standing(spark, sf_dir, name, build):
+    """``build()`` localCheckpointed (each member of a tuple on its
+    own), memoized per (name, applicationId, sf_dir): the one access
+    path of the standing dedup relations. A new session rebuilds
+    them."""
+    key = (name, spark.sparkContext.applicationId, sf_dir)
+    if key not in _NEARDUP_MEMO:
+        out = build()
+        _NEARDUP_MEMO[key] = (
+            tuple(df.localCheckpoint() for df in out)
+            if isinstance(out, tuple) else out.localCheckpoint()
+        )
+    return _NEARDUP_MEMO[key]
 
 
 def _minhash_sigs(spark, sf_dir):
@@ -358,62 +376,14 @@ def _minhash_sigs(spark, sf_dir):
     mh0..mh7) — the round-10 twin of _simhash_sigs: every minhash
     consumer (LSH candidates, jaccard pairs, bucket stats, cap/
     optimize/bloom planners, accuracy calibration) previously paid
-    its own tokenize + 8-seed md5 scan; a deployment computes
-    signatures once per corpus snapshot and shares them. Memoized
-    per (session, corpus), or a fingerprinted table with
-    SPARK_GRAFT_ARTIFACTS set. bench.py records the one-time build
-    in the standing-artifact leg."""
-    key = ("minhash_sigs", spark.sparkContext.applicationId, sf_dir)
-
-    def _refresh(old, appended):
-        # signatures are per-doc independent: an append-only corpus
-        # delta appends exactly its own signature rows (round 14)
-        return ("append", dedup.minhash_signature(
-            appended, num_hashes=_MH_K))
-
-    return artifacts.load_or_build(
+    its own tokenize + 8-seed md5 scan; now the signatures are
+    computed once per (session, corpus) and shared. bench.py records
+    the one-time build in the standing-artifact leg."""
+    return _standing(
         spark, sf_dir, "minhash_sigs",
         lambda: dedup.minhash_signature(
             spread_scan(load_table(spark, sf_dir, "documents")),
             num_hashes=_MH_K),
-        _NEARDUP_MEMO, key,
-        params=f"minhash.k{_MH_K}",
-        refresher=_refresh,
-    )
-
-
-def _minhash_index_scan(spark, sf_dir, bhs):
-    """Key-scoped read of the standing minhash LSH bucket INDEX
-    (bh, band, doc_id — minhash_buckets over the full corpus,
-    clustered and bloomed on bh): the batch-ingest dedup's corpus
-    side at 100 TB — the batch's bucket-hash key set prunes the index
-    scan to the files that can hold a touched bucket (manifest range
-    on the bh-clustered layout + membership bloom) BEFORE any data is
-    read, exactly the probe the streaming ingest already runs against
-    its own index table. Artifact-store mode only (q_incremental_dedup
-    falls back to the inline bucket derivation the driver's
-    correctness and bench runs exercise; mode parity + measured
-    pruning pinned by tests/test_dedup_similarity.py)."""
-    key = ("minhash_index", spark.sparkContext.applicationId, sf_dir)
-
-    def _refresh(old, appended):
-        # minhash buckets are per-doc independent, so an append-only
-        # corpus delta appends exactly its own bucket rows — the same
-        # append the streaming ingest commits per micro-batch
-        return ("append", dedup.minhash_buckets(
-            appended, num_hashes=_MH_K, band_size=_MH_BAND,
-        ).select("bh", "band", "doc_id"))
-
-    return artifacts.scan_artifact_keys(
-        spark, sf_dir, "minhash_index",
-        lambda: dedup.minhash_buckets(
-            load_table(spark, sf_dir, "documents"),
-            num_hashes=_MH_K, band_size=_MH_BAND,
-            sigs=_minhash_sigs(spark, sf_dir),
-        ).select("bh", "band", "doc_id"),
-        _NEARDUP_MEMO, key, col="bh", keys=bhs,
-        params=f"mhindex.mh{_MH_K}.band{_MH_BAND}.cl1",
-        cluster=True, refresher=_refresh,
     )
 
 
@@ -497,314 +467,71 @@ def _lsh_caps(spark, sf_dir, method: str) -> dict:
     return caps
 
 
-def _caps_tag(caps: dict) -> str:
-    """Cap mapping serialized for artifact params strings — the
-    fingerprint ingredient that makes a standing pair/component
-    artifact stale (and rebuilt) when the data-derived caps change."""
-    return "b" + "-".join(f"{b}x{caps[b]}" for b in sorted(caps))
-
-
 def _verified_candidates(spark, sf_dir):
     """The exact-Jaccard-VERIFIED engaged-caps candidate relation —
     every capped LSH candidate pair with its exact token-set jaccard
     (threshold=None: no filter; null jaccard kept for empty-token
-    degenerates) — computed ONCE per (session, corpus snapshot) and
-    keyed by the engaged caps (_caps_tag). This is the one relation
-    every jaccard threshold derives from by FILTER: the ≥0.5 pair
-    artifact (_jaccard_pairs), the band planner's S-curve input
-    (threshold 0.0 ≡ jaccard not null), and the minhash accuracy
-    calibration (all candidates). Before round 12 the band planner
-    re-ran the full verification per query — a 3× idle regression
-    once the engaged caps grew the candidate family 5.7×; now the
-    verification is paid once per corpus snapshot like every other
-    standing artifact. At 100 TB it is a snapshot table written by
-    the dedup pass (SPARK_GRAFT_ARTIFACTS), locally a localCheckpoint
-    memo."""
-    key = ("verified_cands", spark.sparkContext.applicationId, sf_dir)
+    degenerates) — computed ONCE per (session, corpus). This is the
+    one relation every jaccard threshold derives from by FILTER: the
+    ≥0.5 pair relation (_jaccard_pairs), the band planner's S-curve
+    input (threshold 0.0 ≡ jaccard not null), and the minhash
+    accuracy calibration (all candidates). Before round 12 the band
+    planner re-ran the full verification per query — a 3× idle
+    regression once the engaged caps grew the candidate family 5.7×;
+    now the verification is paid once like every other standing
+    relation."""
     caps = _lsh_caps(spark, sf_dir, "minhash")
-
-    def _build():
-        return dedup.ngram_jaccard_pairs(
+    return _standing(
+        spark, sf_dir, "verified_cands",
+        lambda: dedup.ngram_jaccard_pairs(
             spread_scan(load_table(spark, sf_dir, "documents")),
             num_hashes=_MH_K, band_size=_MH_BAND, max_bucket=caps,
             threshold=None, sigs=_minhash_sigs(spark, sf_dir),
-        )
-
-    def _refresh(old, appended):
-        # Append-refresh under the CAP-STABILITY GATE (round 14,
-        # r13 verdict item 9). Caps themselves are already gated by
-        # the params fingerprint (_caps_tag — any cap drift forces
-        # the full rebuild before this runs). What params CANNOT see
-        # is bucket-size drift: growth can push a previously pairable
-        # bucket (2 <= n_old <= cap) OVER its cap, which INVALIDATES
-        # the old bucket's pairs (from-scratch would drop the whole
-        # bucket) — appending can never remove rows, so any such
-        # crossing falls back to the full re-verification, written as
-        # a replace. When no pairable bucket crosses, old ∪ delta is
-        # EXACTLY the from-scratch capped candidate set:
-        #   - bucket n_new <= cap: old pairs are the old×old pairs,
-        #     the delta adds every pair with >=1 appended side;
-        #   - bucket n_new > cap: it had n_old > cap (excluded on
-        #     both sides) or n_old < 2 (no old pairs, delta excluded
-        #     by the n_new cap filter) — the crossing case is gated.
-        # The delta's pair fanout is bounded by cap × touched
-        # buckets; verification tokenizes only the delta's
-        # participants via the pair join.
-        docs = load_table(spark, sf_dir, "documents")
-        sigs = _minhash_sigs(spark, sf_dir)  # itself append-refreshed
-        all_b = dedup.minhash_buckets(
-            docs, num_hashes=_MH_K, band_size=_MH_BAND, sigs=sigs)
-        batch_ids = appended.select("doc_id").distinct()
-        # no broadcast hint: a backfill-sized append must not be
-        # forced through the driver — the planner/AQE picks
-        memb = all_b.join(
-            batch_ids.withColumn("_new", F.lit(1)), "doc_id", "left")
-        sized = memb.groupBy("band", "bh").agg(
-            F.count("*").alias("n_new"),
-            F.sum(F.coalesce("_new", F.lit(0))).alias("n_b"),
-        ).withColumn("n_old", F.col("n_new") - F.col("n_b"))
-        cap = dedup.band_cap_col(caps)
-        crossing = sized.where(
-            (F.col("n_b") > 0)
-            & (F.col("n_old").between(2, cap))
-            & (F.col("n_new") > cap)
-        ).limit(1).count()
-        if crossing:
-            return ("replace", _build())
-        eligible = sized.where(
-            (F.col("n_b") > 0) & (F.col("n_new").between(2, cap))
-        ).select("band", "bh")
-        in_bucket = memb.join(eligible, ["band", "bh"])
-        a = in_bucket.select(
-            "band", "bh", F.col("doc_id").alias("doc_a"),
-            F.col("_new").alias("_na"))
-        b = in_bucket.select(
-            "band", "bh", F.col("doc_id").alias("doc_b"),
-            F.col("_new").alias("_nb"))
-        cands = (
-            a.join(b, ["band", "bh"])
-            .where(
-                (F.col("doc_a") < F.col("doc_b"))
-                & (F.col("_na").isNotNull() | F.col("_nb").isNotNull())
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        toks = docs.select(
-            "doc_id", dedup._norm_tokens(F.col("text")).alias("tokens"))
-        joined = (
-            cands.join(toks.withColumnsRenamed(
-                {"doc_id": "doc_a", "tokens": "ta"}), "doc_a")
-            .join(toks.withColumnsRenamed(
-                {"doc_id": "doc_b", "tokens": "tb"}), "doc_b")
-        )
-        jac = F.round(
-            F.size(F.array_intersect("ta", "tb"))
-            / F.size(F.array_union("ta", "tb")), 4)
-        return ("append", joined.select(
-            "doc_a", "doc_b", jac.alias("jaccard")))
-
-    return artifacts.load_or_build(
-        spark, sf_dir, "neardup_verified",
-        _build,
-        _NEARDUP_MEMO, key,
-        # _caps_tag in the params: a corpus change that moves the
-        # engaged caps re-fingerprints the artifact — the refresher
-        # above then only has to gate BUCKET-SIZE drift
-        params=f"jaccard.mh{_MH_K}.band{_MH_BAND}"
-               f".maxb{_caps_tag(caps)}.tall",
-        refresher=_refresh,
+        ),
     )
 
 
 def _jaccard_pairs(spark, sf_dir):
     """Verified near-dup pairs (jaccard ≥ 0.5), computed ONCE per
-    (session, corpus snapshot) and shared by every consumer
-    (components, components-star, materialize, cluster sizes). Since
-    round 12 it is a FILTER of the standing verified-candidate
-    relation (_verified_candidates) rather than an independent
-    verification pass — one exact-Jaccard job per corpus snapshot
-    serves every threshold. At 100 TB the pair relation and its
-    components are materialized artifacts of a corpus snapshot —
-    written once by the dedup pass, read by every downstream query —
-    not recomputed per query. Locally that is a localCheckpoint memo
-    keyed by (applicationId, sf_dir); with SPARK_GRAFT_ARTIFACTS set
-    the artifact is a table-format snapshot table that survives
-    session restart (sources/artifacts.py — the deployment story,
-    executed)."""
-    key = ("pairs", spark.sparkContext.applicationId, sf_dir)
-    caps = _lsh_caps(spark, sf_dir, "minhash")
-    return artifacts.load_or_build(
-        spark, sf_dir, "neardup_pairs",
+    (session, corpus) and shared by every consumer (components,
+    components-star, materialize, cluster sizes). Since round 12 it
+    is a FILTER of the standing verified-candidate relation
+    (_verified_candidates) rather than an independent verification
+    pass — one exact-Jaccard job per corpus serves every
+    threshold."""
+    return _standing(
+        spark, sf_dir, "pairs",
         lambda: _verified_candidates(spark, sf_dir)
         .where(F.col("jaccard") >= 0.5),
-        _NEARDUP_MEMO, key,
-        params=f"jaccard.mh{_MH_K}.band{_MH_BAND}"
-               f".maxb{_caps_tag(caps)}.t0.5",
     )
-
-
-def _setsim_refresh_bp_key(spark, sf_dir):
-    """Memo key for the batch-pair relation an append-refresh of the
-    pairs artifact computes — the components refresher consumes it so
-    one incremental join serves both artifacts."""
-    return ("setsim_refresh_bp",
-            spark.sparkContext.applicationId, sf_dir)
 
 
 def _standing_setsim_pairs(spark, sf_dir):
     """EXACT prefix-filter pairs WITHIN the standing 80% of the
-    corpus (doc_id % 5 != 0) — the previous snapshot's materialized
-    artifact in the incremental-components story, so like
-    _corpus_components it is computed once per (session, corpus) and
-    shared; q_incremental_components then measures only the true
-    per-ingest work (batch pairs + contraction).
-
-    Round 13: under APPEND-ONLY corpus growth the artifact REFRESHES
-    incrementally instead of re-pairing the corpus — new pairs are
-    the batch×corpus incremental join only (≥1 side among the
-    appended docs; the prefix filter stays lossless under any
-    consistent term order, so old ∪ batch ≡ from-scratch — the
-    equality q_incremental_components' oracle proves), committed as
-    a table APPEND whose cost scales with the batch. Any non-append
-    staleness keeps the full rebuild."""
-    key = ("setsim_standing", spark.sparkContext.applicationId, sf_dir)
-
-    def _refresh(old_pairs, appended):
-        docs = load_table(spark, sf_dir, "documents").where(
-            F.expr("doc_id % 5 != 0"))
-        flags = appended.select("doc_id").where(
-            F.expr("doc_id % 5 != 0")).withColumn("_b", F.lit(True))
-        flagged = (
-            docs.join(flags, "doc_id", "left")
-            .withColumn("is_batch", F.coalesce("_b", F.lit(False)))
-            .drop("_b")
-        )
-        # ride the standing INDEX artifact (itself append-refreshed —
-        # _setsim_index_refresh) instead of re-shingling the corpus
-        # text inline: the index's full-corpus df order is A
-        # consistent global order, which is all the prefix filter's
-        # losslessness needs, and the flags join restricts both sides
-        # to the 80% universe — so the pair set is unchanged while
-        # the refresh cost drops to the batch posting join + the
-        # index's own batch-linear appends
-        bp = dedup.setsim_incremental_pairs(
-            flagged, batch_col="is_batch",
-            threshold_num=3, threshold_den=5,
-            precomputed=_standing_setsim_index(spark, sf_dir),
-        ).localCheckpoint()
-        _NEARDUP_MEMO[_setsim_refresh_bp_key(spark, sf_dir)] = bp
-        return ("append", bp)
-
-    return artifacts.load_or_build(
-        spark, sf_dir, "setsim_pairs",
+    corpus (doc_id % 5 != 0) — the previous snapshot's state in the
+    incremental-components story, so like _corpus_components it is
+    computed once per (session, corpus) and shared;
+    q_incremental_components then measures only the true per-ingest
+    work (batch pairs + contraction)."""
+    return _standing(
+        spark, sf_dir, "setsim_standing",
         lambda: dedup.setsim_prefix_join(
             spread_scan(load_table(spark, sf_dir, "documents")
                         .where(F.expr("doc_id % 5 != 0"))),
             threshold_num=3, threshold_den=5,
         ),
-        _NEARDUP_MEMO, key,
-        params="setsim.t3-5.standing-mod5",
-        refresher=_refresh,
     )
 
 
 def _standing_setsim_components(spark, sf_dir):
     """The standing corpus's component MAP (the other half of the
-    previous snapshot's materialized state): connected components
-    over _standing_setsim_pairs, computed once per session (or read
-    from the artifact table — see _jaccard_pairs).
-
-    Round 13: on append-only growth the map refreshes through the
-    PROVEN incremental algebra (dedup.incremental_components —
-    contract batch-pair endpoints through the old map, components
-    over the contracted batch edges only, expand) instead of
-    re-running components over the corpus; the pairs artifact's
-    refresh supplies the batch pairs via the shared memo. Labels can
-    merge across old components, so this is a REPLACE commit (unlike
-    the pairs' append)."""
-    key = ("setsim_comps", spark.sparkContext.applicationId, sf_dir)
-
-    def _refresh(old_comps, appended):
-        # the pairs artifact is the dependency: ensuring it under the
-        # same appended corpus either populates the batch-pair memo
-        # (append path) or full-rebuilds (non-append staleness)
-        _standing_setsim_pairs(spark, sf_dir)
-        bp = _NEARDUP_MEMO.get(_setsim_refresh_bp_key(spark, sf_dir))
-        if bp is None:
-            return ("replace", dedup.connected_components(
-                _standing_setsim_pairs(spark, sf_dir), max_iter=30))
-        return ("replace", dedup.incremental_components(
-            None, bp, max_iter=30, standing_components=old_comps))
-
-    return artifacts.load_or_build(
-        spark, sf_dir, "setsim_components",
+    previous snapshot's state): connected components over
+    _standing_setsim_pairs, computed once per (session, corpus)."""
+    return _standing(
+        spark, sf_dir, "setsim_comps",
         lambda: dedup.connected_components(
             _standing_setsim_pairs(spark, sf_dir), max_iter=30
         ),
-        _NEARDUP_MEMO, key,
-        params="cc30.over.setsim.t3-5.standing-mod5",
-        refresher=_refresh,
-    )
-
-
-# The standing setsim INDEX group: four relations out of ONE
-# derivation (dedup.setsim_index). The key-serving members are
-# written CLUSTERED on their lead column (prefix postings by term,
-# signatures/arrays by doc_id) so the round-13 key-scoped reads prune
-# files by manifest range + lead bloom; the raw shingle member stays
-# as-built (no scoped consumer). Params carry the layout revision —
-# bumping it re-fingerprints (and re-clusters) pre-r13 stores.
-_SETSIM_INDEX_NAMES = (
-    "setsim_index_sh", "setsim_index_pref",
-    "setsim_index_hist", "setsim_index_arrays",
-)
-_SETSIM_INDEX_CLUSTER = (
-    "setsim_index_pref", "setsim_index_hist", "setsim_index_arrays",
-)
-_SETSIM_INDEX_PARAMS = "setsimindex.t3-5.sh3.sb128.cl1"
-_SETSIM_MEMBER = {
-    "pref": "setsim_index_pref",
-    "hist": "setsim_index_hist",
-    "arrays": "setsim_index_arrays",
-}
-
-
-def _setsim_index_key(spark, sf_dir):
-    return ("setsim_index", spark.sparkContext.applicationId, sf_dir)
-
-
-def _setsim_index_build(spark, sf_dir):
-    def _build():
-        return dedup.setsim_index(
-            spread_scan(load_table(spark, sf_dir, "documents")),
-            threshold_num=3, threshold_den=5,
-        )
-    return _build
-
-
-def _setsim_index_refresh(old, appended):
-    """Group refresher for the standing setsim index under
-    append-only corpus growth (round 13): the shingle, signature, and
-    term-array members are PER-DOC relations, so the appended docs'
-    rows are exactly the delta — three batch-linear appends, no text
-    re-tokenize of the standing corpus. Only the df-ranked prefix
-    member must recompute (global df ranks drift, so OLD docs'
-    prefixes change — an append there would silently break the
-    lossless-prefix guarantee, which requires both sides of a pair
-    ranked under ONE order): it re-derives from the grown SHINGLE
-    table (dedup.prefixes_from_shingles — one group-agg + windows
-    over (doc_id, term) rows), skipping the regex/explode text pass
-    that dominates the from-scratch build."""
-    sh_old = old[0]
-    sh_new = dedup._shingles(appended, "text", 3).localCheckpoint()
-    pref = dedup.prefixes_from_shingles(
-        sh_old.unionByName(sh_new), 3, 5)
-    return (
-        ("append", sh_new),
-        ("replace", pref),
-        ("append", dedup.suffix_histograms(sh_new, 128)),
-        ("append", dedup.doc_term_arrays(sh_new)),
     )
 
 
@@ -812,100 +539,41 @@ def _standing_setsim_index(spark, sf_dir):
     """The standing similarity-join INDEX over the full corpus —
     shingles, df-ranked prefixes, suffix-filter histogram signatures,
     and verification term arrays (dedup.setsim_index) — the third
-    piece of the previous snapshot's materialized state: a continuous
-    -ingest deployment appends each batch to these four corpus-linear
+    piece of the previous snapshot's state: a continuous-ingest
+    deployment appends each batch to these four corpus-linear
     relations rather than re-deriving them per ingest, so the honest
     per-ingest cost is the batch posting join + filter probes +
-    candidate-bounded verification only. Memoized like the pair/
-    component artifacts; bench.py records its one-time build in the
-    standing-artifact leg."""
-    # ONE _build() serves all four relations whichever mode runs —
-    # in artifact mode load_or_build_many writes every member table
-    # from the same derivation (the shingle pass runs once, and the
-    # persisted relations are mutually consistent by construction)
-    return artifacts.load_or_build_many(
-        spark, sf_dir, _SETSIM_INDEX_NAMES,
-        _setsim_index_build(spark, sf_dir), _NEARDUP_MEMO,
-        _setsim_index_key(spark, sf_dir),
-        params=_SETSIM_INDEX_PARAMS,
-        cluster=_SETSIM_INDEX_CLUSTER,
-        refresher=_setsim_index_refresh,
+    candidate-bounded verification only. One derivation builds all
+    four (the shingle pass runs once); each is checkpointed on its
+    own. bench.py records the one-time build in the standing-artifact
+    leg."""
+    return _standing(
+        spark, sf_dir, "setsim_index",
+        lambda: dedup.setsim_index(
+            spread_scan(load_table(spark, sf_dir, "documents")),
+            threshold_num=3, threshold_den=5,
+        ),
     )
-
-
-def _setsim_scoped(spark, sf_dir):
-    """Key-scoped reader over the standing setsim index's persisted
-    members — the round-13 incremental-ingest read path: returns
-    ``(member, col, keys) -> DataFrame`` backed by
-    artifacts.scan_member_keys (manifest range stats on the clustered
-    lead column + membership bloom prune the file list BEFORE any
-    data is read; rows exactly filtered), or None when no artifact
-    store is configured — the memo-mode consumers then keep the
-    whole-relation localCheckpoint path the driver's correctness and
-    bench runs exercise. Mode parity (identical pair rows) and the
-    measured pruning are pinned by tests/test_dedup_similarity.py."""
-    if artifacts.artifacts_root() is None:
-        return None
-    build = _setsim_index_build(spark, sf_dir)
-    key = _setsim_index_key(spark, sf_dir)
-
-    def reader(member: str, col: str, keys):
-        return artifacts.scan_member_keys(
-            spark, sf_dir, _SETSIM_INDEX_NAMES, build, _NEARDUP_MEMO,
-            key, _SETSIM_MEMBER[member], col, keys,
-            params=_SETSIM_INDEX_PARAMS,
-            cluster=_SETSIM_INDEX_CLUSTER,
-            refresher=_setsim_index_refresh,
-        )
-
-    return reader
 
 
 def _corpus_components(spark, sf_dir):
     """The near-dup component map (doc_id -> component_id), computed
-    once per corpus snapshot and shared — the materialize-once design
-    for the relation that q_neardup_materialize, dedup_components,
-    and q_dedup_cluster_sizes all consume. The iterative CC runs a
-    single time per session; consumers read the checkpointed rows
-    (or the artifact table — see _jaccard_pairs)."""
-    key = ("comps", spark.sparkContext.applicationId, sf_dir)
-    caps = _lsh_caps(spark, sf_dir, "minhash")
-    return artifacts.load_or_build(
-        spark, sf_dir, "neardup_components",
+    once per (session, corpus) and shared — the materialize-once
+    design for the relation that q_neardup_materialize,
+    dedup_components, q_component_lookup and q_dedup_cluster_sizes
+    all consume. The iterative CC runs a single time per session;
+    consumers read the checkpointed rows."""
+    return _standing(
+        spark, sf_dir, "comps",
         lambda: dedup.connected_components(
             _jaccard_pairs(spark, sf_dir), max_iter=30
         ),
-        _NEARDUP_MEMO, key,
-        params=f"cc30.over.jaccard.mh{_MH_K}.band{_MH_BAND}"
-               f".maxb{_caps_tag(caps)}.t0.5",
     )
 
 
-# fixed probe ids for the key-scoped component lookup (exist at every
-# driver SF — sf0.001 already has doc_ids 0..499)
+# fixed probe ids for the component lookup (exist at every driver
+# SF — sf0.001 already has doc_ids 0..499)
 _LOOKUP_DOC_IDS = [1, 2, 3, 5, 8, 13, 21, 34, 55, 89]
-
-
-def _components_scan_keys(spark, sf_dir, doc_ids):
-    """KEY-SCOPED read of the standing component artifact — the same
-    builder/params/memo as _corpus_components, accessed through
-    artifacts.scan_artifact_keys: with SPARK_GRAFT_ARTIFACTS set the
-    artifact table's manifest stats + lead-column bloom prune the
-    file list to the files that can hold a probed doc_id (O(keys)
-    files, not O(artifact) — the 100 TB lookup path); in memo mode
-    it is the identical exact filter over the session-memoized map
-    (what the driver's correctness runs exercise)."""
-    caps = _lsh_caps(spark, sf_dir, "minhash")
-    key = ("comps", spark.sparkContext.applicationId, sf_dir)
-    return artifacts.scan_artifact_keys(
-        spark, sf_dir, "neardup_components",
-        lambda: dedup.connected_components(
-            _jaccard_pairs(spark, sf_dir), max_iter=30
-        ),
-        _NEARDUP_MEMO, key, col="doc_id", keys=doc_ids,
-        params=f"cc30.over.jaccard.mh{_MH_K}.band{_MH_BAND}"
-               f".maxb{_caps_tag(caps)}.t0.5",
-    )
 
 
 def _simhash_sql(p: str = "") -> str:
@@ -958,19 +626,14 @@ WHERE a.doc_id < b.doc_id
 def _simhash_sigs(spark, sf_dir):
     """The standing per-corpus simhash SIGNATURE relation (doc_id,
     simhash) — the simhash index: like the jaccard pair/setsim
-    artifacts, a deployment computes signatures once per corpus
-    snapshot and every consumer (pair join, bucket-load stats, method
+    relations, the signatures are computed once per (session, corpus)
+    and every consumer (pair join, bucket-load stats, method
     agreement, recall capture) reuses them; bench.py records the
-    one-time build in the standing-artifact leg. Memoized per
-    (session, corpus), or a fingerprinted table with
-    SPARK_GRAFT_ARTIFACTS set."""
-    key = ("simhash_sigs", spark.sparkContext.applicationId, sf_dir)
-    return artifacts.load_or_build(
+    one-time build in the standing-artifact leg."""
+    return _standing(
         spark, sf_dir, "simhash_sigs",
         lambda: dedup.simhash_signature(
             spread_scan(load_table(spark, sf_dir, "documents"))),
-        _NEARDUP_MEMO, key,
-        params=f"simhash.bits{dedup.SIMHASH_BITS}",
     )
 
 
@@ -1302,14 +965,6 @@ _BLOOM_SEEDS_SQL = "(SELECT unnest([0, 1, 2]) AS seed)"
 
 
 _INC_MOD = 10  # batch = doc_id ≡ 0 (mod 10); corpus = the rest
-
-# Hard bound on the incremental-ingest bucket-hash DRIVER collect
-# (artifact mode): past this many distinct probe keys the key-scoped
-# index read degrades to ~full-file-list anyway, so q_incremental_dedup
-# falls back to the inline derivation instead of shipping an unbounded
-# key list to the driver. 64Ki keys ≈ a few MB collected — far under
-# maxResultSize, and isin/bloom probe lists stay planner-friendly.
-_INC_KEY_CAP = 65536
 
 
 _CONT_TAU = 0.8

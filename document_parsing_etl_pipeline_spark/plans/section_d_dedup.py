@@ -420,7 +420,7 @@ def q_semdedup(spark, sf_dir):
     what makes embedding dedup tractable at training-corpus scale
     (k grows with the corpus, per-cluster population stays bounded).
     One row per vector with a deterministic keep-first survivor flag.
-    num_centroids=None derives k = ceil(n/64) from the corpus size —
+    semdedup_keep derives k = ceil(n/64) from the corpus size —
     the oracle's scalar subquery computes the identical k.
     operators/dedup.py:semdedup_keep."""
     return dedup.semdedup_keep(
@@ -513,39 +513,13 @@ def q_incremental_dedup(spark, sf_dir):
     broadcasts and semi-join-prunes the corpus bucket scan; fanout is
     batch×bucket bounded by the corpus-side cap. At 100 TB the corpus
     buckets are a materialized standing LSH index (minhash_buckets IS
-    the index schema) appended per ingest — with an artifact store
-    configured (round 13) that is literally how this query reads
-    them: the batch's bucket-hash set key-scopes the index scan
-    through manifest + bloom file pruning (_minhash_index_scan)
-    before the same capped flag join runs; mode parity and measured
-    pruning are pinned by test. operators/dedup.py:
-    incremental_lsh_matches / lsh_flag_against_index."""
+    the index schema) appended per ingest — the streaming near-dup
+    ingest keeps exactly that index (streaming/neardup.py).
+    operators/dedup.py: incremental_lsh_matches /
+    lsh_flag_against_index."""
     docs = load_table(spark, sf_dir, "documents")
     caps = _lsh_caps(spark, sf_dir, "minhash")
     batch = docs.where(F.col("doc_id") % _INC_MOD == 0)
-    if artifacts.artifacts_root() is not None:
-        sigs = _minhash_sigs(spark, sf_dir)
-        bb = dedup.minhash_buckets(
-            batch, num_hashes=_MH_K, band_size=_MH_BAND,
-            sigs=sigs.where(F.col("doc_id") % _INC_MOD == 0),
-        ).localCheckpoint()
-        # The bucket-hash probe is a DRIVER collect: bounded by
-        # |batch| x n_bands in principle, but a 100 TB-era mega-batch
-        # must not ship an unbounded key list to the driver (r13
-        # verdict item 10). Cap it: collect at most _INC_KEY_CAP + 1
-        # distinct hashes; beyond the cap the key-scoped index read
-        # stops paying anyway (keys touch ~every file), so fall back
-        # to the inline derivation — results identical (mode parity
-        # is test-pinned), only the read path differs.
-        probe = bb.select("bh").distinct().limit(_INC_KEY_CAP + 1).collect()
-        if len(probe) <= _INC_KEY_CAP:
-            bhs = [r[0] for r in probe]
-            cb = _minhash_index_scan(spark, sf_dir, bhs).where(
-                F.col("doc_id") % _INC_MOD != 0
-            )
-            return dedup.lsh_flag_against_index(
-                batch.select("doc_id"), bb, cb, caps
-            )
     return dedup.incremental_lsh_matches(
         batch,
         docs.where(F.col("doc_id") % _INC_MOD != 0),
@@ -603,19 +577,16 @@ def q_component_lookup(spark, sf_dir):
     the doc-store-shaped consumer of the dedup pipeline's output
     ("which cluster is this document in, and who is its canonical?")
     that at 100 TB must NOT read the corpus-sized component map per
-    query. The read goes through the key-scoped artifact path
-    (_components_scan_keys → artifacts.scan_artifact_keys): in
-    artifact-table mode the manifest range stats + the lead-column
-    membership bloom prune the scan to the files that can hold a
-    probed doc_id BEFORE any data is read (pruning measured in
-    tests/test_dedup_similarity.py); in memo mode the identical
-    filter runs over the session-memoized map. Output is
-    probe-sized; the probe set is a fixed 10-id list shared with the
-    oracle."""
+    query. It filters the session's checkpointed map
+    (_corpus_components) to the probed doc_ids, so the map is built
+    once per session and shared with every other component consumer.
+    Output is probe-sized; the probe set is a fixed 10-id list shared
+    with the oracle."""
     probe = spark.createDataFrame(
         [(i,) for i in _LOOKUP_DOC_IDS], "doc_id long")
-    comps = _components_scan_keys(
-        spark, sf_dir, _LOOKUP_DOC_IDS
+    comps = _corpus_components(spark, sf_dir)
+    comps = comps.where(
+        comps["doc_id"].isin(_LOOKUP_DOC_IDS)
     ).withColumnRenamed("component_id", "cid")
     return (
         probe.join(comps, "doc_id", "left")
@@ -815,19 +786,10 @@ def q_incremental_components(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     flagged = docs.withColumn("is_batch", F.expr("doc_id % 5 = 0"))
     standing_pairs = _standing_setsim_pairs(spark, sf_dir)
-    # round 13: with an artifact store configured the index members
-    # are read KEY-SCOPED (_setsim_scoped — posting lists by the
-    # batch's shingle terms, signatures/arrays by surviving candidate
-    # ids, files pruned by manifest range + lead bloom); memo mode
-    # keeps the whole-relation localCheckpoint path the driver runs
-    scoped = _setsim_scoped(spark, sf_dir)
     batch_pairs = dedup.setsim_incremental_pairs(
         flagged, batch_col="is_batch",
         threshold_num=3, threshold_den=5,
-        precomputed=(
-            None if scoped else _standing_setsim_index(spark, sf_dir)
-        ),
-        scoped=scoped,
+        precomputed=_standing_setsim_index(spark, sf_dir),
     )
     return dedup.incremental_components(
         standing_pairs, batch_pairs, max_iter=30,

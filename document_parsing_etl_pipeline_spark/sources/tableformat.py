@@ -6,8 +6,8 @@ its mutable tables. This module implements the minimal open-table-format
 design on plain parquet + JSON manifests, so the repo's semantics match
 what the at-scale swap would provide. Its callers are the streaming
 sinks (``streaming/table_sink``; ``streaming/neardup``, which commits
-through write-audit-publish stages), the artifact store
-(``sources/artifacts``) and ``bench.py``'s streaming merge leg:
+through write-audit-publish stages) and ``bench.py``'s streaming merge
+leg:
 
 - a table is ``root/data/*.parquet`` plus ``root/_manifests/v{N}.json``;
   a manifest is the COMPLETE file list of that snapshot with per-file
@@ -419,7 +419,7 @@ def _write_files(
 
 def create_table(
     spark: SparkSession, df: DataFrame, root: str,
-    stats_cols: list[str], extra_meta: dict | None = None,
+    stats_cols: list[str],
     bloom_cols: list[str] | None = None,
 ) -> int:
     """v1 snapshot of ``df`` with stats on ``stats_cols``; columns in
@@ -436,66 +436,17 @@ def create_table(
         "operation": "create", "stats_cols": stats_cols, "files": entries,
         "schema": df.schema.json(),
         **({"bloom_cols": bloom_cols} if bloom_cols else {}),
-        **(extra_meta or {}),
     })
 
 
-def replace(
-    spark: SparkSession, df: DataFrame, root: str,
-    extra_meta: dict | None = None,
-    stats_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
-) -> int:
-    """REPLACE TABLE: a new snapshot whose live file set is ONLY the
-    new files (Iceberg's replace semantics). Prior snapshots stay
-    readable via time travel. ``stats_cols`` /
-    ``bloom_cols`` override the table's layout config for the new
-    snapshot (round 13, advice: a full rebuild is the one commit that
-    may legitimately UPGRADE the layout — an artifact table created
-    before blooms existed gains them here instead of never); None
-    keeps the prior head's config as before."""
-    head = _load_manifest(root, _versions(root)[-1])
-    stats = stats_cols if stats_cols is not None else head["stats_cols"]
-    bcols = tuple(bloom_cols) if bloom_cols is not None else _bcols(head)
-    if bloom_cols is not None:
-        _check_bloom_cols(df, bloom_cols)
-    tag = f"v{head['version'] + 1}"
-    entries = _write_files(spark, df, root, tag, stats, bcols)
-    carried = {
-        k: head[k] for k in ("stream_batch_id",) if k in head
-    }
-    if bcols:
-        carried["bloom_cols"] = list(bcols)
-    return _commit(root, {
-        "operation": "replace", "stats_cols": stats,
-        "files": entries,
-        "schema": df.schema.json(),
-        **carried,
-        **(extra_meta or {}),
-    })
-
-
-def _carry_meta(head: dict, row_preserving: bool = False) -> dict:
+def _carry_meta(head: dict) -> dict:
     """Manifest metadata every commit must propagate from its parent:
     the table schema, the streaming sink's exactly-once watermark
-    (stream_batch_id), and — for ROW-PRESERVING maintenance commits
-    only (OPTIMIZE) — the artifact-store
-    source fingerprint. Without the watermark, a merge or optimize
-    commit would drop the last recorded batch id and let a checkpoint
-    replay re-apply a batch; without
-    the fingerprint, an OPTIMIZE of an artifact table would falsely
-    mark it stale and trigger a rebuild (sources/artifacts.py). A
-    ROW-MUTATING commit (append / merge) must DROP the
-    fingerprint: the table's rows no longer equal the builder's
-    output, so artifacts._ensure_table has to read it as stale and
-    rebuild rather than silently serve mutated rows. A mutating
-    caller that legitimately refreshes the artifact (the store's own
-    replace path) passes the new fingerprint via extra_meta, which
-    merges after this and wins. bloom_cols is table CONFIG (like
-    stats_cols) and rides every commit."""
+    (stream_batch_id) and the bloom columns. Without the watermark, a
+    merge or optimize commit would drop the last recorded batch id and
+    let a checkpoint replay re-apply a batch. bloom_cols is table
+    CONFIG (like stats_cols) and rides every commit."""
     keys = ("schema", "stream_batch_id", "bloom_cols")
-    if row_preserving:
-        keys += ("artifact_fingerprint",)
     return {k: head[k] for k in keys if k in head}
 
 
@@ -519,24 +470,6 @@ def _merged_schema_json(head: dict, df: DataFrame) -> str:
         prior.fields + [f for f in df.schema.fields if f.name not in have]
     )
     return merged.json()
-
-
-def append(
-    spark: SparkSession, df: DataFrame, root: str,
-    extra_meta: dict | None = None,
-) -> int:
-    head = _load_manifest(root, _versions(root)[-1])
-    tag = f"v{head['version'] + 1}"
-    entries = _write_files(
-        spark, df, root, tag, head["stats_cols"], _bcols(head)
-    )
-    return _commit(root, {
-        "operation": "append", "stats_cols": head["stats_cols"],
-        "files": head["files"] + entries,
-        **_carry_meta(head),
-        "schema": _merged_schema_json(head, df),
-        **(extra_meta or {}),
-    })
 
 
 def _read_files(
@@ -935,5 +868,5 @@ def optimize_table(
     return _commit(root, {
         "operation": "optimize", "stats_cols": stats_cols,
         "files": entries,
-        **_carry_meta(head, row_preserving=True),
+        **_carry_meta(head),
     })

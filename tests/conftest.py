@@ -12,7 +12,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # Test tiers (round 14): the full suite runs ~60 min serial, which
 # overflows the driver's per-round pytest budget (VERIFY_r13 shows the
 # run truncated mid-suite at ~81% — a red gate with zero failing
-# tests). The multi-minute table-format/streaming/artifact tests below
+# tests). The multi-minute table-format/streaming tests below
 # (every test ≥20s in the committed duration run, 40 of 381, ~74% of
 # suite wall) form the EXHAUSTIVE tier: skipped in a default run,
 # executed each round with SPARK_GRAFT_FULL_TESTS=1. A test leaves
@@ -23,11 +23,6 @@ SF_DIR = "/root/testdata/sf0.001"
 # per round (scripts/validate.py -> VALIDATION.json).
 # tests/test_round_protocol.py checks that every name here is a test.
 _EXHAUSTIVE = {
-    "test_artifact_fingerprint_invalidation",
-    "test_artifact_refresh_on_append_is_incremental_and_exact",
-    "test_artifact_tables_survive_session_restart",
-    "test_incremental_setsim_scoped_reads_match_and_prune",
-    "test_setsim_index_group_build_consistency",
     "test_all_queries_no_rowbased_python_udf",
     "test_cc_star_equals_propagation_on_random_graphs",
     "test_incremental_components_equals_from_scratch",
@@ -37,14 +32,12 @@ _EXHAUSTIVE = {
     "test_neardup_optimize_cadence_preserves_flags_and_replay",
     "test_neardup_replay_discards_orphaned_stage",
     "test_blooms_maintained_across_append_merge_optimize",
-    "test_fingerprint_dropped_by_mutating_kept_by_maintenance",
     "test_merge_into_empty_table_uses_recorded_schema",
     "test_merge_rewrites_only_hit_files",
     "test_optimize_compacts_small_files",
     "test_scan_degrades_to_full_read_without_stats",
     "test_stream_batch_id_survives_maintenance_commits",
     "test_write_audit_publish_flow",
-    "test_verified_candidates_refresh_on_append_stable_caps",
 }
 
 
@@ -80,3 +73,13 @@ def jobs_in_group(spark, group: str, fn):
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def append_published(spark, df, root, extra_meta=None):
+    """Append ``df`` to the table-format table at ``root`` the way the
+    streaming near-dup ingest commits: stage it, then publish the
+    stage. Returns the new version."""
+    from document_parsing_etl_pipeline_spark.sources import tableformat as tf
+
+    tf.stage_append(spark, df, root, "append", extra_meta=extra_meta)
+    return tf.publish_stage(root, "append")

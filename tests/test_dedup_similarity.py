@@ -94,9 +94,10 @@ def test_knn_all_topk_multiblock_matches_single_block(spark):
     assert a == b and len(a) == 40 * 3
 
 
-def test_embedding_near_dup_multiblock(spark):
+def test_embedding_near_dup_multiblock(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "EMBED_BLOCK_SIZE", 2)
     df = _emb(spark, [[1, 0], [0.999, 0.01], [0, 1], [0.998, 0.02]])
-    pairs = dedup.embedding_near_dup(df, threshold=0.99, block_size=2)
+    pairs = dedup.embedding_near_dup(df, threshold=0.99)
     got = {(p.id_a, p.id_b) for p in pairs.collect()}
     assert got == {(0, 1), (0, 3), (1, 3)}  # cross-block pair (0,3) found
 
@@ -154,7 +155,7 @@ def test_edit_distance_pairs_on_lsh_candidates(spark):
     df = _docs(spark, base, base.replace("dog", "cat"),
                "zz yy xx ww vv uu tt ss")
     pairs = dedup.edit_distance_pairs(
-        df, cands=dedup.minhash_lsh_candidates(df), max_dist=20).collect()
+        df, cands=dedup.minhash_lsh_candidates(df)).collect()
     assert {(p.doc_a, p.doc_b) for p in pairs} == {(0, 1)}
     assert pairs[0].edit_dist == 3  # dog -> cat: 3 substitutions
 
@@ -489,79 +490,23 @@ def test_setsim_suffix_filter_is_lossless_for_any_bucket_count(spark):
     assert pairs(suffix_buckets=4) == base
 
 
-def test_artifact_tables_survive_session_restart(spark, tmp_path, monkeypatch):
-    """With SPARK_GRAFT_ARTIFACTS set, the standing dedup artifacts
-    (pairs, components, setsim index) materialize as table-format
-    snapshot tables: the first call commits them, a 'restarted'
-    session (cleared in-memory memo) READS the committed snapshot
-    instead of recomputing — no new manifest versions — and every
-    consumer query returns identical rows in both modes (round-8
-    verdict item: execute the deployment story, don't just document
-    it)."""
-    import os
-
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    # reference results from the default (memo) mode
-    Q._NEARDUP_MEMO.clear()
-    want_inc = rows(Q.QUERIES["q_incremental_components"](spark, sf))
-    want_comp = rows(Q.QUERIES["dedup_components"](spark, sf))
-
-    store = str(tmp_path / "artifacts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    got_inc = rows(Q.QUERIES["q_incremental_components"](spark, sf))
-    got_comp = rows(Q.QUERIES["dedup_components"](spark, sf))
-    assert got_inc == want_inc and got_comp == want_comp
-
-    names = ["setsim_pairs", "setsim_components", "setsim_index_sh",
-             "setsim_index_pref", "neardup_pairs", "neardup_components",
-             "minhash_sigs",  # round 10: the pairs build consumes it
-             "neardup_verified"]  # round 12: pairs = filter(verified)
-    roots = {n: artifacts.table_root(store, sf, n) for n in names}
-    vers = {n: tf._versions(r) for n, r in roots.items()}
-    assert all(v == [1] for v in vers.values()), vers
-
-    # "session restart": drop the in-memory memo; the artifact tables
-    # must be READ (version count unchanged), results identical
-    Q._NEARDUP_MEMO.clear()
-    again_inc = rows(Q.QUERIES["q_incremental_components"](spark, sf))
-    again_comp = rows(Q.QUERIES["dedup_components"](spark, sf))
-    assert again_inc == want_inc and again_comp == want_comp
-    assert {n: tf._versions(r) for n, r in roots.items()} == vers
-
-    # the artifact is a real table: snapshot maintenance applies
-    tf.optimize_table(spark, roots["neardup_components"],
-                      target_file_rows=1_000_000)
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["dedup_components"](spark, sf)) == want_comp
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACTS")
-    Q._NEARDUP_MEMO.clear()
-
-
-def test_lsh_flag_ingest_equals_two_call_composition(spark, tmp_path):
+def test_lsh_flag_ingest_equals_two_call_composition(
+    spark, tmp_path, monkeypatch,
+):
     """The fused one-pass ingest flagging (round-8 streaming
     throughput fix) must produce EXACTLY the output of the original
     two lsh_flag_against_index calls (vs index; vs own batch
     restricted to smaller ids) reconciled — per-source cap semantics
     included — across incremental batches of a dup-dense corpus."""
-    import os
-
     from pyspark.sql import functions as F
 
     from document_parsing_etl_pipeline_spark.catalog import load_table
+    from document_parsing_etl_pipeline_spark.operators import dedup
     from document_parsing_etl_pipeline_spark.operators.dedup import (
         lsh_flag_against_index, lsh_flag_ingest, minhash_buckets,
     )
+    from conftest import append_published
+
     from document_parsing_etl_pipeline_spark.sources import (
         tableformat as tf,
     )
@@ -579,6 +524,7 @@ def test_lsh_flag_ingest_equals_two_call_composition(spark, tmp_path):
             .localCheckpoint()
         index = tf.read(spark, idx)
         for cap in (3, 50):
+            monkeypatch.setattr(dedup, "INGEST_MAX_BUCKET", cap)
             vs_index = lsh_flag_against_index(
                 b.select("doc_id"), bb, index, cap)
             vs_batch = lsh_flag_against_index(
@@ -611,225 +557,10 @@ def test_lsh_flag_ingest_equals_two_call_composition(spark, tmp_path):
                     .cast("long").alias("first_match_doc"),
                 )
             )
-            new = lsh_flag_ingest(b.select("doc_id"), bb, index, cap)
+            new = lsh_flag_ingest(b.select("doc_id"), bb, index)
             assert sorted(map(tuple, new.collect())) == \
                 sorted(map(tuple, old.collect())), f"batch {i} cap {cap}"
-        tf.append(spark, bb, idx, extra_meta={"stream_batch_id": i})
-
-
-def test_artifact_fingerprint_invalidation(spark, tmp_path, monkeypatch):
-    """Round-9 ADVICE item: artifact tables are keyed by a SOURCE
-    FINGERPRINT (file stats of the tables the builder reads + the
-    build-parameter string), not just the sf_dir slug. Regenerating
-    the corpus in place must trigger a REPLACE rebuild that serves the
-    new corpus; a pre-fingerprint table counts as stale; snapshot
-    maintenance (optimize) must NOT trigger a rebuild."""
-    import os
-    import shutil
-
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents",
-              "embeddings"):
-        shutil.copyfile(f"/root/testdata/sf0.001/{t}.parquet",
-                        str(corpus / f"{t}.parquet"))
-    sf = str(corpus)
-    store = str(tmp_path / "store")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    Q._NEARDUP_MEMO.clear()
-    first = rows(Q.QUERIES["dedup_components"](spark, sf))
-    root = artifacts.table_root(store, sf, "neardup_components")
-    assert tf._versions(root) == [1]
-    assert artifacts._stored_fingerprint(root)
-
-    # unchanged corpus, new "session": read-only, no new version
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["dedup_components"](spark, sf)) == first
-    assert tf._versions(root) == [1]
-
-    # snapshot maintenance must carry the fingerprint (no rebuild)
-    tf.optimize_table(spark, root, target_file_rows=1_000_000)
-    n_after_opt = len(tf._versions(root))
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["dedup_components"](spark, sf)) == first
-    assert len(tf._versions(root)) == n_after_opt
-
-    # regenerate the corpus IN PLACE (half the docs): the fingerprint
-    # flips, the next access REPLACES the artifact, and the served
-    # rows match a from-scratch memo-mode run on the new corpus
-    docs = spark.read.parquet(f"{sf}/documents.parquet") \
-        .where("doc_id % 2 = 0").localCheckpoint()
-    pdf = docs.toPandas()
-    os.remove(f"{sf}/documents.parquet")
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                   f"{sf}/documents.parquet")
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACTS")
-    Q._NEARDUP_MEMO.clear()
-    want_new = rows(Q.QUERIES["dedup_components"](spark, sf))
-    assert want_new != first
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    got_new = rows(Q.QUERIES["dedup_components"](spark, sf))
-    assert got_new == want_new
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head["operation"] == "replace"
-
-    # a pre-fingerprint table (written before round 9) counts as
-    # stale: strip the fingerprint, next access rebuilds
-    head.pop("artifact_fingerprint")
-    import json as _json
-    with open(tf._manifest_path(root, head["version"]), "w") as f:
-        _json.dump(head, f)
-    n_before = len(tf._versions(root))
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["dedup_components"](spark, sf)) == want_new
-    assert len(tf._versions(root)) == n_before + 1
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACTS")
-    Q._NEARDUP_MEMO.clear()
-
-
-def test_artifact_mutation_via_merge_triggers_rebuild(
-    spark, tmp_path, monkeypatch
-):
-    """Round-11 (r10 verdict item 7): MUTATING a standing artifact
-    table through the table format's own merge path must poison it.
-    merge_into is row-mutating, so _carry_meta DROPS the
-    artifact_fingerprint — this test closes the loop end-to-end: the
-    next _ensure_table access detects the missing fingerprint,
-    REBUILDS, and serves builder-true rows (the injected row is gone),
-    rather than silently serving mutated rows to hash-gated queries."""
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    store = str(tmp_path / "store")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    Q._NEARDUP_MEMO.clear()
-    clean = rows(Q._minhash_sigs(spark, sf))
-    root = artifacts.table_root(store, sf, "minhash_sigs")
-    assert artifacts._stored_fingerprint(root)
-
-    # mutate the standing artifact: inject a row that no builder run
-    # would produce
-    poison = spark.createDataFrame(
-        [tuple([-12345] + ["deadbeef"] * (len(clean[0]) - 1))],
-        Q._minhash_sigs(spark, sf).schema,
-    )
-    tf.merge_into(spark, poison, root, key="doc_id")
-    # the mutating commit dropped the fingerprint...
-    assert artifacts._stored_fingerprint(root) is None
-    # ...and the mutated rows ARE on disk right now
-    assert tf.read(spark, root).where("doc_id = -12345").count() == 1
-
-    # next access (fresh "session"): rebuild, not stale serve
-    Q._NEARDUP_MEMO.clear()
-    got = rows(Q._minhash_sigs(spark, sf))
-    assert got == clean
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head["operation"] == "replace"
-    assert head.get("artifact_fingerprint")
-    assert tf.read(spark, root).where("doc_id = -12345").count() == 0
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACTS")
-    Q._NEARDUP_MEMO.clear()
-
-
-def test_setsim_index_group_build_consistency(spark, tmp_path,
-                                              monkeypatch):
-    """The four setsim-index artifact tables must come from ONE build
-    (round-9 ADVICE item): deleting one member and re-accessing must
-    rewrite the WHOLE group from a single derivation (every member
-    gains a version), and the artifact-mode incremental-components
-    result must equal memo mode exactly."""
-    import shutil
-
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    store = str(tmp_path / "store")
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    Q._NEARDUP_MEMO.clear()
-    want = rows(Q.QUERIES["q_incremental_components"](spark, sf))
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["q_incremental_components"](spark, sf)) == want
-
-    names = ["setsim_index_sh", "setsim_index_pref",
-             "setsim_index_hist", "setsim_index_arrays"]
-    roots = {n: artifacts.table_root(store, sf, n) for n in names}
-    assert all(tf._versions(r) == [1] for r in roots.values())
-
-    # drop one member: the whole group rebuilds from one derivation
-    shutil.rmtree(roots["setsim_index_hist"])
-    Q._NEARDUP_MEMO.clear()
-    assert rows(Q.QUERIES["q_incremental_components"](spark, sf)) == want
-    assert tf._versions(roots["setsim_index_hist"]) == [1]
-    for n in names:
-        if n != "setsim_index_hist":
-            assert tf._versions(roots[n]) == [1, 2], n
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACTS")
-    Q._NEARDUP_MEMO.clear()
-
-
-def test_fingerprint_walks_partitioned_source_recursively(tmp_path):
-    """Round-10 (r09 advisory): a partitioned source table (key=val
-    subdirectories) regenerated IN PLACE changes file stats only
-    inside the subdirectories — the fingerprint must see that (a flat
-    top-level listdir kept the stale fingerprint and served a stale
-    artifact)."""
-    import os
-
-    from document_parsing_etl_pipeline_spark.sources import artifacts
-
-    sf = tmp_path / "corpus"
-    part = sf / "documents.parquet" / "lang=en"
-    part.mkdir(parents=True)
-    inner = part / "part-000.parquet"
-    inner.write_bytes(b"AAAA")
-
-    def fingerprint(params):
-        return artifacts._digest(artifacts.fingerprint_parts(str(sf), params))
-
-    fp0 = fingerprint("p")
-    # same-size in-place rewrite: bump mtime only (the subdir's entry
-    # list and sizes are unchanged — exactly the flat-listdir blind
-    # spot)
-    st = os.stat(inner)
-    os.utime(inner, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    assert fingerprint("p") != fp0
-
-    # a NEW file deeper in the tree flips it too
-    (part / "part-001.parquet").write_bytes(b"BBBB")
-    assert fingerprint("p") not in (fp0, fingerprint("q"))
+        append_published(spark, bb, idx, extra_meta={"stream_batch_id": i})
 
 
 def test_verify_pairs_slicing_is_result_invariant(spark):
@@ -984,348 +715,31 @@ def test_ngram_jaccard_pairs_threshold_none_keeps_all_candidates(spark):
     assert got == want
 
 
-def test_component_lookup_scans_pruned_artifact(spark, tmp_path, monkeypatch):
-    """q_component_lookup's key-scoped artifact read: identical rows
-    in memo and artifact-table modes, the artifact table carries the
-    lead-column bloom, and after a doc_id re-cluster the probe's
-    scan_keys path reads a strict SUBSET of the files (manifest+bloom
-    pruning measured, not assumed)."""
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    Q._NEARDUP_MEMO.clear()
-    want = sorted(map(tuple,
-                      Q.QUERIES["q_component_lookup"](spark, sf).collect()))
-    assert len(want) == len(Q._LOOKUP_DOC_IDS)
-
-    store = str(tmp_path / "artifacts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    got = sorted(map(tuple,
-                     Q.QUERIES["q_component_lookup"](spark, sf).collect()))
-    assert got == want
-
-    root = artifacts.table_root(store, sf, "neardup_components")
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head.get("bloom_cols") == ["doc_id"]
-
-    # deployment maintenance: re-cluster the artifact on doc_id so
-    # per-file ranges are narrow, then MEASURE the probe's pruning
-    total = tf.read(spark, root).count()
-    tf.optimize_table(spark, root, target_file_rows=max(1, total // 8),
-                      cluster_by="doc_id")
-    pruned, files_read, files_total = tf.scan_keys(
-        spark, root, "doc_id", list(Q._LOOKUP_DOC_IDS))
-    assert files_total >= 8
-    assert files_read < files_total, (files_read, files_total)
-    # the query still returns exact rows through the pruned path
-    Q._NEARDUP_MEMO.clear()
-    again = sorted(map(tuple,
-                       Q.QUERIES["q_component_lookup"](spark, sf).collect()))
-    assert again == want
-
-
-def test_artifact_stale_rebuild_upgrades_prebloom_layout(
-    spark, tmp_path, monkeypatch,
+def test_standing_component_map_is_built_once_per_session(
+    spark, monkeypatch,
 ):
-    """Round-13 advice: an artifact table created WITHOUT the lead
-    bloom (pre-round-12 store) must gain it on the fingerprint-stale
-    full rebuild — tf.replace used to carry the prior head's (empty)
-    bloom config, so old stores never picked up the round-12 layout
-    and key-scoped scans stayed range-stats-only forever."""
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    store = str(tmp_path / "arts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    root = artifacts.table_root(store, sf, "up_demo")
-
-    def build():
-        return spark.range(0, 50).selectExpr(
-            "id AS doc_id", "id * 2 AS payload"
-        )
-
-    # simulate the pre-bloom store: create directly, no bloom_cols,
-    # and a fingerprint that will read as stale
-    tf.create_table(spark, build(), root, stats_cols=["doc_id"],
-                    extra_meta={"artifact_fingerprint": "old"})
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert "bloom_cols" not in head
-
-    memo: dict = {}
-    artifacts.load_or_build(
-        spark, sf, "up_demo", build, memo, ("k",), params="p1",
-    )
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head["operation"] == "replace"
-    assert head.get("bloom_cols") == ["doc_id"]
-    assert all(
-        "nbits" in e["blooms"]["doc_id"] for e in head["files"]
-    )
-    # the upgraded layout actually serves key-scoped scans
-    _, fr, ft = tf.scan_keys(spark, root, "doc_id", [3])
-    assert fr <= ft
-    got = artifacts.scan_artifact_keys(
-        spark, sf, "up_demo", build, memo, ("k2",),
-        col="doc_id", keys=[3], params="p1",
-    )
-    assert [r.payload for r in got.collect()] == [6]
-
-
-def test_incremental_setsim_scoped_reads_match_and_prune(
-    spark, tmp_path, monkeypatch,
-):
-    """Round-13 lead item: with an artifact store configured,
-    q_incremental_components reads the standing setsim INDEX members
-    key-scoped (posting lists by the batch's shingle terms,
-    signatures/arrays by candidate ids) through manifest+bloom file
-    pruning — identical component rows to memo mode, and the pruning
-    is MEASURED on the clustered posting member, not assumed."""
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    Q._NEARDUP_MEMO.clear()
-    want = sorted(map(tuple,
-                      Q.QUERIES["q_incremental_components"](
-                          spark, sf).collect()))
-    assert want
-
-    store = str(tmp_path / "arts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    got = sorted(map(tuple,
-                     Q.QUERIES["q_incremental_components"](
-                         spark, sf).collect()))
-    assert got == want
-
-    # the posting member is clustered+bloomed on term, and a
-    # few-term probe reads a strict subset of its files
-    root = artifacts.table_root(store, sf, "setsim_index_pref")
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head.get("bloom_cols") == ["term"]
-    some = [r.term for r in
-            tf.read(spark, root).select("term").limit(3).collect()]
-    pruned, fr, ft = tf.scan_keys(spark, root, "term", some)
-    assert ft > 4 and 1 <= fr < ft, (fr, ft)
-    # reader contract: rows exactly key-filtered
-    reader = Q._setsim_scoped(spark, sf)
-    got_rows = sorted(map(tuple,
-                          reader("pref", "term", some).collect()))
-    full = tf.read(spark, root)
-    want_rows = sorted(map(tuple,
-                           full.where(full["term"].isin(some))
-                           .collect()))
-    assert got_rows == want_rows
-
-
-def test_incremental_dedup_scoped_index_matches_and_prunes(
-    spark, tmp_path, monkeypatch,
-):
-    """q_incremental_dedup's artifact-mode path: the batch's bucket
-    hashes key-scope the standing minhash bucket INDEX (bh-clustered
-    and bloomed) — identical flag rows to memo mode, measured file
-    pruning for a small probe."""
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    Q._NEARDUP_MEMO.clear()
-    want = sorted(map(tuple,
-                      Q.QUERIES["q_incremental_dedup"](
-                          spark, sf).collect()))
-    assert want
-
-    store = str(tmp_path / "arts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    got = sorted(map(tuple,
-                     Q.QUERIES["q_incremental_dedup"](
-                         spark, sf).collect()))
-    assert got == want
-
-    root = artifacts.table_root(store, sf, "minhash_index")
-    head = tf._load_manifest(root, tf._versions(root)[-1])
-    assert head.get("bloom_cols") == ["bh"]
-    some = [r.bh for r in
-            tf.read(spark, root).select("bh").limit(2).collect()]
-    _, fr, ft = tf.scan_keys(spark, root, "bh", some)
-    assert ft > 4 and 1 <= fr < ft, (fr, ft)
-
-
-def test_artifact_refresh_on_append_is_incremental_and_exact(
-    spark, tmp_path, monkeypatch,
-):
-    """Round-13 verdict #3: when the corpus grows APPEND-ONLY (old
-    files byte-identical, new files added), the standing setsim
-    pair/component artifacts refresh through the proven incremental
-    path — batch×corpus pairs committed as a table APPEND, the
-    component map updated by contraction — instead of re-shingling
-    and re-pairing the corpus. Rows must be identical to a full
-    rebuild (the exactness q_incremental_components' oracle proves),
-    and any non-append mutation must fall back to the rebuild."""
-    import os
-
+    """The standing near-dup component map is built once per session
+    and shared: after dedup_components built it, q_component_lookup
+    reads its checkpoint (Scan ExistingRDD) and runs no
+    connected-components iteration of its own."""
     from document_parsing_etl_pipeline_spark.operators import dedup
     from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
 
-    src = str(tmp_path / "corpus")
-    docs_dir = os.path.join(src, "documents.parquet")
-    base = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    base.where("doc_id < 400").repartition(4).write.parquet(docs_dir)
+    calls = []
+    real = dedup.connected_components
 
-    store = str(tmp_path / "arts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", counted)
+    sf = "/root/testdata/sf0.001"
     Q._NEARDUP_MEMO.clear()
-    artifacts.REFRESH_EVENTS.clear()
-    p1 = Q._standing_setsim_pairs(spark, src).count()
-    Q._standing_setsim_components(spark, src).count()
-    Q._standing_setsim_index(spark, src)  # the standing index too
-    modes = {e["name"]: e["mode"] for e in artifacts.REFRESH_EVENTS}
-    assert modes["setsim_pairs"] == "create"
-    assert modes["setsim_components"] == "create"
+    assert Q.QUERIES["dedup_components"](spark, sf).count() > 0
+    assert len(calls) == 1
 
-    # append-only growth: new doc files land, old files untouched
-    base.where("doc_id >= 400").repartition(2).write.mode(
-        "append").parquet(docs_dir)
-    Q._NEARDUP_MEMO.clear()
-    artifacts.REFRESH_EVENTS.clear()
-    comps2 = sorted(map(tuple,
-                        Q._standing_setsim_components(
-                            spark, src).collect()))
-    pairs2 = sorted(map(tuple,
-                        Q._standing_setsim_pairs(spark, src)
-                        .collect()))
-    modes = {e["name"]: e["mode"] for e in artifacts.REFRESH_EVENTS}
-    assert modes["setsim_pairs"] == "refresh", modes
-    assert modes["setsim_components"] == "refresh", modes
-    # the index group refreshed too: per-doc members APPEND their
-    # delta, only the df-ranked prefix member replaced
-    assert modes["setsim_index_sh"] == "refresh", modes
-    iroot = artifacts.table_root(store, src, "setsim_index_sh")
-    ihead = tf._load_manifest(iroot, tf._versions(iroot)[-1])
-    assert ihead["operation"] == "append"
-    proot_pref = artifacts.table_root(store, src, "setsim_index_pref")
-    phead = tf._load_manifest(
-        proot_pref, tf._versions(proot_pref)[-1])
-    assert phead["operation"] == "replace"
-    # the pairs refresh committed an APPEND (delta-sized), not a
-    # table rewrite
-    proot = artifacts.table_root(store, src, "setsim_pairs")
-    head = tf._load_manifest(proot, tf._versions(proot)[-1])
-    assert head["operation"] == "append"
-
-    # exactness: refreshed artifacts == from-scratch over the grown
-    # corpus
-    grown = spark.read.parquet(docs_dir).where("doc_id % 5 != 0")
-    want_pairs = sorted(map(tuple, dedup.setsim_prefix_join(
-        grown, threshold_num=3, threshold_den=5).collect()))
-    assert pairs2 == want_pairs
-    assert len(pairs2) > p1  # the append really added pairs
-    wp = dedup.setsim_prefix_join(
-        grown, threshold_num=3, threshold_den=5)
-    want_comps = sorted(map(tuple, dedup.connected_components(
-        wp, max_iter=30).collect()))
-    assert comps2 == want_comps
-
-    # NON-append mutation (rewrite a file in place) falls back to the
-    # full rebuild — never serves an incremental guess
-    import glob as _glob
-    victim = sorted(_glob.glob(os.path.join(docs_dir, "part-*")))[0]
-    os.utime(victim, ns=(1, 1))
-    Q._NEARDUP_MEMO.clear()
-    artifacts.REFRESH_EVENTS.clear()
-    pairs3 = sorted(map(tuple,
-                        Q._standing_setsim_pairs(spark, src)
-                        .collect()))
-    modes = {e["name"]: e["mode"] for e in artifacts.REFRESH_EVENTS}
-    assert modes["setsim_pairs"] == "rebuild", modes
-    assert pairs3 == want_pairs
-
-
-def test_verified_candidates_refresh_on_append_stable_caps(
-    spark, tmp_path, monkeypatch,
-):
-    """Round-14 (r13 verdict item 9): the capped-LSH verified-candidate
-    artifact — previously excluded from append-refresh because caps
-    drift under growth — refreshes incrementally when the CAP-STABILITY
-    gate passes: engaged caps unchanged (params fingerprint) AND no
-    previously-pairable bucket pushed over its cap by the appended
-    docs (checked inside the refresher). The refreshed rows must equal
-    a from-scratch verification over the grown corpus, and the
-    ≥0.5-pair consumer must equal the same filter of it."""
-    import os
-
-    from document_parsing_etl_pipeline_spark.operators import dedup
-    from document_parsing_etl_pipeline_spark.plans import queries as Q
-    from document_parsing_etl_pipeline_spark.plans import _prelude as P
-    from document_parsing_etl_pipeline_spark.sources import (
-        artifacts, tableformat as tf,
-    )
-
-    src = str(tmp_path / "corpus")
-    docs_dir = os.path.join(src, "documents.parquet")
-    base = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    base.where("doc_id < 400").repartition(4).write.parquet(docs_dir)
-
-    store = str(tmp_path / "arts")
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", store)
-    Q._NEARDUP_MEMO.clear()
-    artifacts.REFRESH_EVENTS.clear()
-    caps_before = P._caps_tag(P._lsh_caps(spark, src, "minhash"))
-    n1 = P._verified_candidates(spark, src).count()
-    modes = {e["name"]: e["mode"] for e in artifacts.REFRESH_EVENTS}
-    assert modes["neardup_verified"] == "create"
-
-    # append-only growth: new doc files land, old files untouched
-    base.where("doc_id >= 400").repartition(2).write.mode(
-        "append").parquet(docs_dir)
-    Q._NEARDUP_MEMO.clear()
-    artifacts.REFRESH_EVENTS.clear()
-    caps_after = P._caps_tag(P._lsh_caps(spark, src, "minhash"))
-    # the stable-cap premise of this test's corpus split — if the
-    # generator ever changes and this trips, pick a split where the
-    # engaged caps stay put (the drifted-caps path is the rebuild,
-    # already covered by the params fingerprint)
-    assert caps_after == caps_before
-    got = sorted(map(tuple,
-                     P._verified_candidates(spark, src).collect()))
-    modes = {e["name"]: e["mode"] for e in artifacts.REFRESH_EVENTS}
-    assert modes["neardup_verified"] == "refresh", modes
-    assert modes.get("minhash_sigs") == "refresh", modes
-    vroot = artifacts.table_root(store, src, "neardup_verified")
-    head = tf._load_manifest(vroot, tf._versions(vroot)[-1])
-    assert head["operation"] == "append"  # gate passed: no crossing
-
-    # exactness: refreshed artifact == from-scratch verification of
-    # the grown corpus at the same (stable) caps
-    grown = spark.read.parquet(docs_dir)
-    caps = P._lsh_caps(spark, src, "minhash")
-    want = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        grown, num_hashes=P._MH_K, band_size=P._MH_BAND,
-        max_bucket=caps, threshold=None,
-    ).collect()))
-    assert got == want
-    assert len(got) > n1  # the append really added candidates
-
-    # the >=0.5 pair consumer derives by filter from the refreshed
-    # artifact (its own builder reads the refreshed table)
-    Q._NEARDUP_MEMO.clear()
-    pairs = sorted(map(tuple, P._jaccard_pairs(spark, src).collect()))
-    want_pairs = sorted(t for t in want
-                        if t[2] is not None and t[2] >= 0.5)
-    assert pairs == want_pairs
+    lookup = Q.QUERIES["q_component_lookup"](spark, sf)
+    assert len(lookup.collect()) == len(Q._LOOKUP_DOC_IDS)
+    assert len(calls) == 1
+    plan = lookup._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan, plan

@@ -282,7 +282,7 @@ def test_semdedup_derives_k_from_corpus_size(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
     expect_k = max(1, -(-n // SEMDEDUP_TARGET_POP))
-    out = semdedup_keep(emb)  # num_centroids=None → derived
+    out = semdedup_keep(emb)
     cents = {r["centroid_id"] for r in
              out.select("centroid_id").distinct().collect()}
     # every assigned centroid id comes from the derived seed set, and
@@ -291,15 +291,18 @@ def test_semdedup_derives_k_from_corpus_size(spark):
     assert out.count() == n
 
 
-def test_semdedup_drop_rule_matches_numpy_recompute(spark):
+def test_semdedup_drop_rule_matches_numpy_recompute(spark, monkeypatch):
     import numpy as np
 
+    from document_parsing_etl_pipeline_spark.operators import dedup
     from document_parsing_etl_pipeline_spark.operators.dedup import (
         semdedup_keep,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    out = semdedup_keep(emb, num_centroids=4, threshold=0.3).collect()
+    # four clusters: a population target of ceil(n / 4)
+    monkeypatch.setattr(dedup, "SEMDEDUP_TARGET_POP", -(-emb.count() // 4))
+    out = semdedup_keep(emb, threshold=0.3).collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
 
@@ -380,16 +383,19 @@ def test_dsir_targets_score_higher_on_average(spark):
 # training-shard writer sink
 # -------------------------------------------------------------------
 
-def test_semdedup_materialized_matches_default(spark):
+def test_semdedup_materialized_matches_default(spark, monkeypatch):
+    from document_parsing_etl_pipeline_spark.operators import dedup
     from document_parsing_etl_pipeline_spark.operators.dedup import (
         semdedup_keep,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
+    # four clusters: a population target of ceil(n / 4)
+    monkeypatch.setattr(dedup, "SEMDEDUP_TARGET_POP", -(-emb.count() // 4))
     base = {(r["vec_id"], r["centroid_id"], r["keep"])
-            for r in semdedup_keep(emb, 4, 0.3).collect()}
+            for r in semdedup_keep(emb, 0.3).collect()}
     mat = {(r["vec_id"], r["centroid_id"], r["keep"])
-           for r in semdedup_keep(emb, 4, 0.3, materialize=True).collect()}
+           for r in semdedup_keep(emb, 0.3, materialize=True).collect()}
     assert base == mat and len(base) > 0
 
 

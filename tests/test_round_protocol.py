@@ -493,6 +493,57 @@ def test_thread_helper_lint_catches_a_planted_copy(tmp_path):
         "m.py:1", "m.py:4", "m.py:5", "session.py:8"]
 
 
+# ------------------------------------------------- environment reads
+
+_ENV_NAMES = ("environ", "environb", "getenv", "getenvb")
+
+
+def environ_reads(root: pathlib.Path = _PKG) -> list[str]:
+    """Reads of the process environment (``os.environ``,
+    ``os.getenv``, also imported by name from ``os``) in any package
+    module but session.py, which holds the deployment settings."""
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        lines = set()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute):
+                hit = node.attr in _ENV_NAMES
+            elif isinstance(node, ast.ImportFrom):
+                hit = node.module == "os" and any(
+                    a.name in _ENV_NAMES for a in node.names)
+            else:
+                continue
+            if hit:
+                lines.add(node.lineno)
+        sites += [f"{path.relative_to(root)}:{n}" for n in sorted(lines)]
+    return sites
+
+
+def test_environment_is_read_only_in_session():
+    """Only session.py reads environment variables (memory, CPUs,
+    JAVA_HOME, the cache directory): a package option selected by an
+    environment variable fails here."""
+    assert environ_reads() == []
+
+
+def test_environ_lint_catches_each_spelling(tmp_path):
+    (tmp_path / "session.py").write_text(
+        "import os\ncpus = os.environ.get('SPARK_GRAFT_CPUS')\n")
+    (tmp_path / "m.py").write_text(
+        "import os\n"
+        "import os as o\n"
+        "from os import environ\n"
+        "from os import getenv as g\n"
+        "a = os.environ.get('A')\n"
+        "b = o.environ['B']\n"
+        "c = os.getenv('C')\n"
+        "d = os.path.join('x', 'y')\n")
+    assert environ_reads(tmp_path) == [
+        "m.py:3", "m.py:4", "m.py:5", "m.py:6", "m.py:7"]
+
+
 # ------------------------------------------------- point-read keys
 
 # Column methods that compare their column with their arguments.

@@ -644,9 +644,9 @@ def test_neardup_index_pushdown_prunes_and_matches_full_read(
 
     full = tf.read(spark, idx)
     want = sorted(map(tuple, lsh_flag_ingest(
-        probe.select("doc_id"), pb, full, 50).collect()))
+        probe.select("doc_id"), pb, full).collect()))
     got = sorted(map(tuple, lsh_flag_ingest(
-        probe.select("doc_id"), pb, pruned, 50).collect()))
+        probe.select("doc_id"), pb, pruned).collect()))
     assert got == want
     # the probes are true dups of indexed docs: flagged unless every
     # shared bucket was cap-dropped (cap semantics allow that)

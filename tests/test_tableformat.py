@@ -2,6 +2,8 @@ import os
 
 import pytest
 
+from conftest import append_published
+
 from document_parsing_etl_pipeline_spark.sources import tableformat as tf
 
 
@@ -20,7 +22,7 @@ def test_create_append_and_time_travel(spark, table):
     more = spark.range(100, 150).selectExpr(
         "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
     )
-    v2 = tf.append(spark, more, table)
+    v2 = append_published(spark, more, table)
     assert tf.read(spark, table).count() == 150
     # old snapshot still intact
     assert tf.read(spark, table, version=1).count() == 100
@@ -82,7 +84,7 @@ def test_schema_evolution_append_new_column(spark, table):
         "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp",
         "cast(id AS double) / 1000 AS quality",
     )
-    tf.append(spark, evolved, table)
+    append_published(spark, evolved, table)
     head = tf.read(spark, table)
     assert "quality" in head.columns
     rows = {r.doc_id: r.quality for r in head.collect()}
@@ -168,7 +170,7 @@ def test_stream_batch_id_survives_maintenance_commits(spark, table):
     more = spark.range(500, 510).selectExpr(
         "id AS doc_id", "concat('t', id) AS text", "id % 7 AS grp"
     )
-    tf.append(spark, more, table)
+    append_published(spark, more, table)
     assert ts.last_committed_batch(table) == 7
     # a checkpoint replay of batch 7 is still skipped
     assert ts.merge_batch(spark, upd, table, "doc_id", "grp", 7) is False
@@ -182,7 +184,7 @@ def test_scan_merges_schemas_across_evolution(spark, tmp_path):
     evolved = spark.range(100, 200).selectExpr(
         "id AS doc_id", "id * 2 AS v", "cast(id AS double) AS quality"
     ).repartitionByRange(4, "doc_id")
-    tf.append(spark, evolved, root)
+    append_published(spark, evolved, root)
     # a scan spanning pre- and post-evolution files must surface the
     # evolved column (NULL for old files), same as read()
     out, files_read, _ = tf.scan(spark, root, "doc_id", 90, 110)
@@ -199,7 +201,7 @@ def test_append_narrower_df_does_not_narrow_recorded_schema(spark, table):
     narrow = spark.range(300, 310).selectExpr(
         "id AS doc_id", "concat('t', id) AS text"
     )
-    tf.append(spark, narrow, table)
+    append_published(spark, narrow, table)
     head = tf._load_manifest(table, tf._versions(table)[-1])
     import json as _json
     names = [f["name"] for f in _json.loads(head["schema"])["fields"]]
@@ -265,7 +267,7 @@ def test_publish_refuses_on_base_drift_and_discard_removes_files(
     )
     tf.stage_append(spark, staged, table, stage="wap")
     # main advances underneath the stage
-    tf.append(spark, spark.createDataFrame(
+    append_published(spark, spark.createDataFrame(
         [(701, "interleaved", 2)], "doc_id long, text string, grp long"
     ), table)
     with _pytest.raises(RuntimeError, match="re-stage"):
@@ -305,41 +307,6 @@ def test_scan_keys_prunes_on_clustered_table(spark, tmp_path):
     # keys spanning several ranges read only the covering files
     _, frm, _ = tf.scan_keys(spark, root, "k", [10, 990])
     assert frm == 2
-
-
-def test_fingerprint_dropped_by_mutating_kept_by_maintenance(
-    spark, tmp_path,
-):
-    """Round-10 (r09 advisory): artifact_fingerprint must survive
-    ROW-PRESERVING maintenance (optimize) but be DROPPED by any
-    row-mutating commit (append/merge/delete) — a mutated artifact
-    table no longer equals the builder's output and has to read as
-    stale so artifacts._ensure_table rebuilds instead of serving it."""
-    root = str(tmp_path / "t")
-    df = spark.range(0, 50).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"
-    ).repartition(2, "doc_id")
-    tf.create_table(spark, df, root, stats_cols=["doc_id"],
-                    extra_meta={"artifact_fingerprint": "fp0"})
-
-    def head():
-        return tf._load_manifest(root, tf._versions(root)[-1])
-
-    tf.optimize_table(spark, root, target_file_rows=25)
-    assert head().get("artifact_fingerprint") == "fp0"
-
-    tf.append(spark, spark.range(50, 60).selectExpr(
-        "id AS doc_id", "concat('t', id) AS text"), root)
-    assert "artifact_fingerprint" not in head()
-
-    # rebuild the fingerprint via the store's replace path, then check
-    # each other mutating commit type drops it again
-    tf.replace(spark, df, root,
-               extra_meta={"artifact_fingerprint": "fp1"})
-    assert head().get("artifact_fingerprint") == "fp1"
-    tf.merge_into(spark, spark.createDataFrame(
-        [(3, "u")], "doc_id long, text string"), root, "doc_id")
-    assert "artifact_fingerprint" not in head()
 
 
 def test_scan_degrades_to_full_read_without_stats(spark, tmp_path):
@@ -499,7 +466,7 @@ def test_blooms_maintained_across_append_merge_optimize(spark, bloom_table):
     more = spark.range(1000, 1050).selectExpr(
         "id AS doc_id", "md5(cast(id AS string)) AS bh"
     )
-    tf.append(spark, more, bloom_table)
+    append_published(spark, more, bloom_table)
     _, fr, _ = tf.scan_membership(spark, bloom_table, "doc_id", [1025])
     assert fr >= 1
     # merge rewrites keep blooms on rewritten + new files
@@ -689,7 +656,7 @@ def test_stage_json_write_is_atomic_and_exclusive(spark, table):
     # re-staging the same tag from a NEW base (different data dir, so
     # only the manifest link can collide) raises instead of clobbering
     # the in-flight stage's manifest
-    tf.append(spark, more.limit(1), table)
+    append_published(spark, more.limit(1), table)
     with pytest.raises(FileExistsError):
         tf.stage_append(spark, more, table, "s1")
     assert sorted(os.listdir(sdir)) == ["s1.json"]  # tmp cleaned up
