@@ -1154,61 +1154,37 @@ def span_longest_match(docs: DataFrame, k: int = 12) -> DataFrame:
 SETSIM_SHINGLE_N = 3
 
 
-def _shingles(
-    docs: DataFrame, text_col: str, shingle_n: int,
-) -> DataFrame:
-    """The distinct (doc_id, term) word-shingle relation — the base
-    of every AllPairs derivation."""
-    toks = docs.select(
-        "doc_id",
-        parse.tokens(text_col).alias("ws"),
-    )
-    parts = [F.expr(f"ws[i + {j}]") for j in range(shingle_n)]
-    return (
-        toks.where(F.size("ws") >= shingle_n)
+def _shingle_prefixes(
+    docs: DataFrame, num: int, den: int, materialize: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared AllPairs machinery: (sh, pref) where ``sh`` is the
+    distinct (doc_id, term) word-shingle relation of the ``text``
+    column and ``pref`` is each document's prefix — its
+    |s| - ceil(t|s|) + 1 globally-rarest shingles, with set size
+    ``n`` and within-doc global rank ``rn``. The (df, term) order is
+    computed over the WHOLE input relation; any consistent global
+    order keeps the prefix filter lossless, which is what lets the
+    incremental variant reuse this unchanged.
+    """
+    from pyspark.sql.window import Window
+
+    k = SETSIM_SHINGLE_N
+    toks = docs.select("doc_id", parse.tokens("text").alias("ws"))
+    parts = [F.expr(f"ws[i + {j}]") for j in range(k)]
+    sh = (
+        toks.where(F.size("ws") >= k)
         .select(
             "doc_id", "ws",
-            F.explode(
-                F.sequence(F.lit(0), F.size("ws") - shingle_n)
-            ).alias("i"),
+            F.explode(F.sequence(F.lit(0), F.size("ws") - k)).alias("i"),
         )
         .select("doc_id", F.concat_ws(" ", *parts).alias("term"))
         .distinct()
     )
-
-
-def _shingle_prefixes(
-    docs: DataFrame,
-    text_col: str,
-    num: int,
-    den: int,
-    shingle_n: int,
-    materialize: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared AllPairs machinery: (sh, pref) where ``sh`` is the
-    distinct (doc_id, term) shingle relation and ``pref`` is each
-    document's prefix — its |s| - ceil(t|s|) + 1 globally-rarest
-    shingles, with set size ``n`` and within-doc global rank ``rn``.
-    The (df, term) order is computed over the WHOLE input relation;
-    any consistent global order keeps the prefix filter lossless,
-    which is what lets the incremental variant reuse this unchanged.
-    """
-    sh = _shingles(docs, text_col, shingle_n)
     if materialize:
         # sh feeds df-counting, prefix ranking, AND both verification
         # sides (4 references) — checkpoint the shingle relation once
         # instead of re-running the explode+distinct per reference
         sh = sh.localCheckpoint()
-    return sh, prefixes_from_shingles(sh, num, den)
-
-
-def prefixes_from_shingles(
-    sh: DataFrame, num: int, den: int,
-) -> DataFrame:
-    """The df-ranked prefix relation of a shingle table: one df
-    group-agg + per-doc windows over (doc_id, term) rows."""
-    from pyspark.sql.window import Window
-
     dfreq = sh.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     per_doc = Window.partitionBy("doc_id")
     ranked = (
@@ -1220,10 +1196,11 @@ def prefixes_from_shingles(
         )
     )
     # prefix length p = n - ceil(t*n) + 1, all-integer
-    return ranked.where(
+    pref = ranked.where(
         F.col("rn")
         <= F.col("n") - F.expr(f"(n * {num} + {den - 1}) div {den}") + 1
     ).select("term", "doc_id", "n", "rn")
+    return sh, pref
 
 
 # shingle rows per partition for the pair-expanded positional stage:
@@ -1505,9 +1482,7 @@ def setsim_prefix_join(
     for jaccard >= t, doc_a < doc_b.
     """
     num, den = threshold_num, threshold_den
-    sh, pref = _shingle_prefixes(
-        docs, "text", num, den, SETSIM_SHINGLE_N, materialize
-    )
+    sh, pref = _shingle_prefixes(docs, num, den, materialize)
     a = pref.select(
         "term", F.col("doc_id").alias("doc_a"),
         F.col("n").alias("na"), F.col("rn").alias("ia"),
@@ -1587,9 +1562,7 @@ def setsim_index(
     is ONLY the batch posting join + filter probes + candidate-
     bounded verification — no corpus-wide shingle/df/rank/signature/
     array pass per ingest."""
-    sh, pref = _shingle_prefixes(
-        docs, "text", threshold_num, threshold_den, SETSIM_SHINGLE_N, True
-    )
+    sh, pref = _shingle_prefixes(docs, threshold_num, threshold_den, True)
     return sh, pref, suffix_histograms(sh), doc_term_arrays(sh)
 
 
@@ -1630,8 +1603,7 @@ def setsim_incremental_pairs(
         else:
             sh, pref = precomputed
     else:
-        sh, pref = _shingle_prefixes(
-            docs, "text", num, den, SETSIM_SHINGLE_N, True)
+        sh, pref = _shingle_prefixes(docs, num, den, True)
     flags = docs.select("doc_id", F.col(batch_col).alias("_fb"))
     preff = pref.join(flags, "doc_id")
     a = preff.where(F.col("_fb")).select(

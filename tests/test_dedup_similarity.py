@@ -580,8 +580,8 @@ def test_verify_pairs_slicing_is_result_invariant(spark):
     from pyspark.sql import functions as F
 
     df = _docs(spark, *texts)
-    num, den, n = 3, 5, 3
-    sh, pref = dedup._shingle_prefixes(df, "text", num, den, n, True)
+    num, den = 3, 5
+    sh, pref = dedup._shingle_prefixes(df, num, den, True)
     a = pref.select(
         "term", F.col("doc_id").alias("doc_a"),
         F.col("n").alias("na"), F.col("rn").alias("ia"),
