@@ -722,6 +722,8 @@ def test_standing_component_map_is_built_once_per_session(
     and shared: after dedup_components built it, q_component_lookup
     reads its checkpoint (Scan ExistingRDD) and runs no
     connected-components iteration of its own."""
+    from conftest import SF_DIR
+
     from document_parsing_etl_pipeline_spark.operators import dedup
     from document_parsing_etl_pipeline_spark.plans import queries as Q
 
@@ -733,7 +735,7 @@ def test_standing_component_map_is_built_once_per_session(
         return real(*args, **kwargs)
 
     monkeypatch.setattr(dedup, "connected_components", counted)
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
     Q._NEARDUP_MEMO.clear()
     assert Q.QUERIES["dedup_components"](spark, sf).count() > 0
     assert len(calls) == 1
